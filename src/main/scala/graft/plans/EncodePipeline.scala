@@ -742,7 +742,7 @@ object EncodePipeline {
     * committed part directory). Falls back to part-level committed-set
     * filtering for metadata written before the file-path column existed. */
   def readData(spark: SparkSession, outDir: String): DataFrame =
-    readDataWithMeta(spark, outDir, readMeta(spark, outDir))
+    readDataWithMeta(spark, outDir, manifestView(spark, outDir, None))
 
   /** time travel: the table as of generation `gen` — per part, the rows of
     * the highest generation ≤ gen (a part compacted past `gen` reads its
@@ -750,10 +750,11 @@ object EncodePipeline {
     * history, exactly like Iceberg's expire-snapshots. Tables never
     * compacted have a single generation 0. */
   def readDataAt(spark: SparkSession, outDir: String, gen: Int): DataFrame =
-    readDataWithMeta(spark, outDir, readMetaAt(spark, outDir, Some(gen)))
+    readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)))
 
   private def readDataWithMeta(spark: SparkSession, outDir: String,
-                               meta: DataFrame, keepFile: Boolean = false): DataFrame = {
+                               meta: ManifestView, keepFile: Boolean = false): DataFrame = {
+    import spark.implicits._
     // input_file_name() must sit directly above the single data relation
     // (Spark rejects it over a multi-source join). The "__part=p/name"
     // suffix is what delete vectors key on — the BASENAME alone is NOT
@@ -763,37 +764,35 @@ object EncodePipeline {
       if (keepFile) df.withColumn("__fname",
         regexp_extract(input_file_name(), "[^/]+/[^/]+$", 0))
       else df
-    if (!meta.columns.contains("data_files")) {
+    if (!meta.tracksFiles) {
       // pure pre-data_files metadata: part-level committed-set filtering
-      val committed = meta.select("__part").distinct()
       return withName(readDataDir(spark, outDir))
-        .join(broadcast(committed), Seq("__part"), "left_semi")
+        .join(broadcast(meta.parts.toSeq.toDF("__part")), Seq("__part"), "left_semi")
     }
     // MIXED metadata (a pre-data_files directory resumed by this version)
     // is handled PER ROW: parts committed by the old version carry null
     // data_files and must fall back to part-level filtering — exploding
     // their null lists away would silently drop every old-wave part.
-    val oldParts = meta.filter(col("data_files").isNull).select("__part").distinct()
-    val files = meta.filter(col("data_files").isNotNull)
-      // a part in BOTH eras (re-commit anomaly): part-level wins (superset)
-      .join(broadcast(oldParts), Seq("__part"), "left_anti")
-      .select(explode(col("data_files")).as("__file")).distinct()
+    val oldParts = meta.untrackedParts.toSet
+    // a part in BOTH eras (re-commit anomaly): part-level wins (superset)
+    val files = meta.trackedFiles.collect { case (p, f) if !oldParts(p) => f }.distinct
     // mergeSchema: parts written before a column was added lack its e_/r_
     // fields; the union schema carries them as null (schema evolution)
     val data = readDataDir(spark, outDir)
     val byFile = withName(data)
       .withColumn("__file", input_file_name())
-      .join(broadcast(files), Seq("__file"), "left_semi")
+      .join(broadcast(files.toDF("__file")), Seq("__file"), "left_semi")
       .drop("__file")
     if (oldParts.isEmpty) byFile
-    else byFile.unionByName(withName(data).join(broadcast(oldParts), Seq("__part"), "left_semi"))
+    else byFile.unionByName(withName(data)
+      .join(broadcast(oldParts.toSeq.toDF("__part")), Seq("__part"), "left_semi"))
   }
 
   /** [[readData]] with the data-file "__part=p/name" id attached as
     * `__fname` — the form [[decodeEx]] needs for delete-vector application
     * and lineage */
   private[plans] def readDataKeepFile(spark: SparkSession, outDir: String): DataFrame =
-    readDataWithMeta(spark, outDir, readMeta(spark, outDir), keepFile = true)
+    readDataWithMeta(spark, outDir, manifestView(spark, outDir, None), keepFile = true)
 
   // ---------------- batch append (streaming-grade commits) ----------------
 
@@ -938,12 +937,9 @@ object EncodePipeline {
     // snapshots) both sides computed 1+max from the same pre-commit
     // manifest and share one generation. A table CREATED by this commit
     // (rawMeta empty) stays the gen-less base, exactly as run() writes it.
-    rawMeta.foreach { m =>
-      val nextGen = 1 + (if (m.columns.contains("gen"))
-        m.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0) else 0)
-      rows = rows.withColumn("gen", lit(nextGen))
+    if (rawMeta.nonEmpty)
+      rows = rows.withColumn("gen", lit(nextGenOf(spark, outDir)))
         .withColumn("additive", lit(true))
-    }
     // branch commits carry their ref: invisible to main readers until a
     // publish marker covers this generation ([[fastForward]])
     ref.foreach(b => rows = rows.withColumn("ref", lit(b)))
@@ -1024,8 +1020,7 @@ object EncodePipeline {
     require(raw.columns.contains("data_files"),
       s"replaceCommit($outDir): this table predates file-tracked metadata " +
         "(no data_files column) — overwrite it with the legacy delete+run path")
-    val maxG = if (raw.columns.contains("gen"))
-      raw.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0) else 0
+    val maxG = currentGen(spark, outDir)
     val nextGen = maxG + 1
     val partsBefore = readMeta(spark, outDir).filter(col("__part") >= 0)
       .select("__part").distinct().collect().map(_.getInt(0)).toSeq
@@ -1555,7 +1550,8 @@ object EncodePipeline {
     * INSERT as a tracked batch append. `updates` must carry the table's
     * schema and be unique by `key`. Returns (rows replaced, rows inserted).
     *
-    * Idempotent by `batchId` (default: next after the manifest's highest):
+    * Idempotent by `batchId` (default: [[nextBatchId]], one past every id
+    * the raw manifest holds, copy-on-write rewrites included):
     * a replayed call whose batch already committed is a no-op, and a crash
     * between the delete phase and the append resumes cleanly on retry with
     * the SAME batchId — the matched keys are already gone (delete no-op)
@@ -1574,9 +1570,7 @@ object EncodePipeline {
     val t0 = System.currentTimeMillis()
     val meta = readMeta(spark, outDir)
     val hasGen = meta.columns.contains("gen")
-    val bid = if (batchId >= 0) batchId
-      else if (!meta.columns.contains("batch_id")) 0L
-      else meta.agg(max(coalesce(col("batch_id"), lit(-1L)))).head().getLong(0) + 1
+    val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
     if (meta.columns.contains("batch_id") &&
         !meta.filter(col("batch_id") === bid).isEmpty) return (0L, 0L)
     val dicts = (try loadDicts(spark, outDir)
@@ -1743,7 +1737,7 @@ object EncodePipeline {
     * batch's rows. A crash anywhere before that one append leaves the
     * table byte-for-byte unchanged (orphan data files and inert vectors;
     * [[vacuum]] reclaims both); after it, the update is fully visible.
-    * Idempotent by `batchId` (default: next after the manifest's highest).
+    * Idempotent by `batchId` (default: [[nextBatchId]]).
     * Returns the number of rows updated. */
   def updateWhereLazy(spark: SparkSession, outDir: String,
                       sourceSchema: StructType, key: String, pred: Column,
@@ -1755,10 +1749,7 @@ object EncodePipeline {
     val badCols = set.keySet.diff(sourceSchema.fieldNames.toSet)
     require(badCols.isEmpty,
       s"updateWhereLazy assigns unknown columns: ${badCols.mkString(", ")}")
-    val meta0 = readMeta(spark, outDir)
-    val bid = if (batchId >= 0) batchId
-      else if (!meta0.columns.contains("batch_id")) 0L
-      else meta0.agg(max(coalesce(col("batch_id"), lit(-1L)))).head().getLong(0) + 1
+    val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
     val hit = coalesce(pred, lit(false))
     val updated = decodeShared(spark, outDir, sourceSchema)
       .filter(hit)
@@ -1800,10 +1791,7 @@ object EncodePipeline {
     val nSrc = aligned.count()
     require(aligned.select(col(key)).distinct().count() == nSrc,
       s"mergeByKeyLazy updates must be unique by '$key'")
-    val meta0 = readMeta(spark, outDir)
-    val bid = if (batchId >= 0) batchId
-      else if (!meta0.columns.contains("batch_id")) 0L
-      else meta0.agg(max(coalesce(col("batch_id"), lit(-1L)))).head().getLong(0) + 1
+    val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
     // stage the matched originals' vectors FIRST (inert until committed):
     // a left-semi join on the key against the source — the table may hold
     // several rows per key (appends); all of them are replaced
@@ -1847,59 +1835,21 @@ object EncodePipeline {
       .withColumn("txn", txn.map(lit(_)).getOrElse(lit(null).cast("string")))
   }
 
-  /** txns whose snapshot markers are committed in the manifest at
-    * generations ≤ maxGen — the visibility gate for transaction-tagged
-    * delete vectors ([[stageDeletes]]). Reads the RAW manifest (markers
-    * are cumulative facts; generation supersede does not apply to them).
-    * Cached per (outDir, manifest listing signature): the manifest is
-    * append-only, so a new commit changes the listing and invalidates —
-    * one cheap listStatus replaces a parquet read on every loadDeletes. */
-  private val txnCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, (Map[String, Int], Seq[(Int, Int)], Seq[Int]))]()
-
-  /** manifest FACTS read raw (generation supersede does not apply to them),
-    * cached per manifest listing signature: committed-txn → gen map,
-    * rollback markers as (marker gen N, rollback target T), and the
-    * generations at which [[materializeDeletes]] folded/expired vector
-    * history (fold markers). */
-  private def manifestFacts(spark: SparkSession, outDir: String)
-      : (Map[String, Int], Seq[(Int, Int)], Seq[Int]) = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/meta")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // no manifest at all = a table that has never committed = no committed
-    // txns — the ONLY case that legitimately answers empty. Any other
-    // failure must PROPAGATE: swallowing a transient manifest-read error
-    // into Map.empty would silently resurrect every txn-tagged deleted row.
-    if (!fs.exists(p)) return (Map.empty, Nil, Nil)
-    val sig = fs.listStatus(p).filter(_.isFile)
-      .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      .sorted.mkString("|")
-    val hit = txnCache.get(outDir)
-    if (hit != null && hit._1 == sig) return hit._2
-    val meta = rawManifest(spark, outDir)
-    val txns: Map[String, Int] =
-      if (!meta.columns.contains("txn")) Map.empty
-      else meta.filter(col("txn").isNotNull)
-        .select(col("txn"),
-          if (meta.columns.contains("gen")) coalesce(col("gen"), lit(0)) else lit(0))
-        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
-    val markers: Seq[(Int, Int)] =
-      if (!meta.columns.contains("rollback_to")) Nil
-      else meta.filter(col("rollback_to").isNotNull)
-        .select(coalesce(col("gen"), lit(0)), col("rollback_to"))
-        .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq.sortBy(_._1)
-    val folds: Seq[Int] =
-      if (!meta.columns.contains("dv_folded")) Nil
-      else meta.filter(col("dv_folded") === true)
-        .select(coalesce(col("gen"), lit(0)))
-        .collect().map(_.getInt(0)).toSeq.sorted
-    val facts = (txns, markers, folds)
-    txnCache.put(outDir, (sig, facts))
-    facts
-  }
-
+  /** txns whose snapshot markers are committed in the manifest, with their
+    * generations — the visibility gate for transaction-tagged delete
+    * vectors ([[stageDeletes]]). Markers are cumulative facts read from the
+    * RAW manifest (generation supersede does not apply to them). No
+    * manifest at all = a table that has never committed = no committed
+    * txns — the ONLY case that legitimately answers empty. Any other
+    * failure must PROPAGATE: swallowing a transient manifest-read error
+    * into Map.empty would silently resurrect every txn-tagged deleted row. */
   private def committedTxnGens(spark: SparkSession, outDir: String): Map[String, Int] =
-    manifestFacts(spark, outDir)._1
+    if (!hasManifest(spark, outDir)) Map.empty else manifestOf(spark, outDir).txnGens
+
+  private def hasManifest(spark: SparkSession, outDir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(s"$outDir/meta")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
 
   /** rollback markers (marker gen N, target T) in commit order — a marker
     * abandons every merge-on-read delete vector committed strictly inside
@@ -1908,7 +1858,7 @@ object EncodePipeline {
     * resurrect its deletes — the same one-way street as Iceberg after
     * snapshot expiration). */
   private def rollbackMarkers(spark: SparkSession, outDir: String): Seq[(Int, Int)] =
-    manifestFacts(spark, outDir)._2
+    if (!hasManifest(spark, outDir)) Nil else manifestOf(spark, outDir).rollbackMarkers
 
   private def committedTxns(spark: SparkSession, outDir: String,
                             maxGen: Int): Set[String] =
@@ -1925,12 +1875,6 @@ object EncodePipeline {
   /** `maxGen` scopes time travel: only vectors committed at generations
     * ≤ maxGen apply (vectors written before gen tagging read as gen 0) */
   def loadDeletes(spark: SparkSession, outDir: String,
-                  maxGen: Int): Map[(String, Int), Array[Byte]] =
-    memoized(spark, outDir, s"dv:$maxGen") {
-      loadDeletesUncached(spark, outDir, maxGen)
-    }
-
-  private def loadDeletesUncached(spark: SparkSession, outDir: String,
                   maxGen: Int): Map[(String, Int), Array[Byte]] = {
     val p = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1940,38 +1884,31 @@ object EncodePipeline {
     if (!fs.listStatus(p).exists(s => s.isFile &&
         s.getPath.getName.endsWith(".parquet") && !s.getPath.getName.startsWith(".")))
       return Map.empty
-    val raw = readCachedDir(spark, s"$outDir/deletes")
-    val genScoped0 =
-      if (!raw.columns.contains("gen")) raw
-      else raw.filter(coalesce(col("gen"), lit(0)) <= maxGen)
+    val d = dirRows(spark, s"$outDir/deletes")
+    def at(c: String) = d.schema.fieldNames.indexOf(c)
+    val (iGen, iTxn, iFile, iBlock, iBm) =
+      (at("gen"), at("txn"), at("file"), at("block"), at("bitmap"))
     // rollback abandonment: a marker (N → T) visible at this read (N ≤
     // maxGen) abandons every vector committed strictly inside (T, N) —
     // [[rollbackTo]] undid those deletes. Reads BELOW the marker (time
     // travel) ignore it and still see the pre-rollback history.
     val rbMarkers = rollbackMarkers(spark, outDir).filter(_._1 <= maxGen)
-    val genScoped =
-      if (rbMarkers.isEmpty || !genScoped0.columns.contains("gen")) genScoped0
-      else {
-        val g = coalesce(col("gen"), lit(0))
-        val abandoned = rbMarkers.map { case (n, t) => g > t && g < n }.reduce(_ || _)
-        genScoped0.filter(!abandoned)
-      }
+    def genScoped(r: org.apache.spark.sql.Row): Boolean = iGen < 0 || {
+      val g = if (r.isNullAt(iGen)) 0 else r.getInt(iGen)
+      g <= maxGen && !rbMarkers.exists { case (n, t) => g > t && g < n }
+    }
     // transaction gate: a txn-tagged vector applies ONLY once its snapshot
     // marker is committed in the manifest — vectors staged by an atomic
     // delta commit that crashed before its single manifest append are
     // permanently inert (vacuum reclaims them). Legacy rows (null txn)
     // apply by generation alone.
-    val scoped =
-      if (!genScoped.columns.contains("txn")) genScoped
-      else {
-        val committed = committedTxns(spark, outDir, maxGen)
-        genScoped.filter(col("txn").isNull ||
-          (if (committed.isEmpty) lit(false) else col("txn").isin(committed.toSeq: _*)))
-      }
-    scoped.select("file", "block", "bitmap").collect()
-      .groupBy(r => (r.getString(0), r.getInt(1)))
+    lazy val committed = committedTxns(spark, outDir, maxGen)
+    def txnCommitted(r: org.apache.spark.sql.Row): Boolean =
+      iTxn < 0 || r.isNullAt(iTxn) || committed.contains(r.getString(iTxn))
+    d.rows.toSeq.filter(r => genScoped(r) && txnCommitted(r))
+      .groupBy(r => (r.getString(iFile), r.getInt(iBlock)))
       .map { case (k, rows) =>
-        k -> rows.map(_.getAs[Array[Byte]](2)).reduce(orBitmaps)
+        k -> rows.map(_.getAs[Array[Byte]](iBm)).reduce(orBitmaps)
       }
   }
 
@@ -1989,11 +1926,7 @@ object EncodePipeline {
   private def liveDeletes(spark: SparkSession, outDir: String): Map[(String, Int), Array[Byte]] = {
     val dv = loadDeletes(spark, outDir)
     if (dv.isEmpty) return dv
-    val meta = readMeta(spark, outDir)
-    if (!meta.columns.contains("data_files")) return Map.empty
-    val current = meta.filter(col("data_files").isNotNull)
-      .select(explode(col("data_files")).as("f")).distinct()
-      .collect().map(r => fileSuffix(r.getString(0))).toSet
+    val current = manifestView(spark, outDir, None).fileSuffixes
     dv.filter { case ((f, _), _) => current.contains(f) }
   }
 
@@ -2047,10 +1980,7 @@ object EncodePipeline {
         s.isFile && s.getPath.getName.endsWith(".parquet") &&
           !s.getPath.getName.startsWith("."))
       if (hadVectors) {
-        val meta0 = readMeta(spark, outDir)
-        val ng = 1 + (if (meta0.columns.contains("gen"))
-          meta0.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0) else 0)
-        genMarker(spark, ng)
+        genMarker(spark, nextGenOf(spark, outDir))
           .withColumn("column", lit("__fold_marker"))
           .withColumn("dv_folded", lit(true))
           .coalesce(1).write.mode("append").parquet(s"$outDir/meta")
@@ -2177,8 +2107,7 @@ object EncodePipeline {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
       s"tag names are [A-Za-z0-9._-]+, got: $name")
     val raw = rawManifest(spark, outDir)
-    val maxG = if (raw.columns.contains("gen"))
-      raw.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0) else 0
+    val maxG = currentGen(spark, outDir)
     val g = if (gen < 0) maxG else gen
     require(g <= maxG, s"createTag($name): generation $g does not exist (max $maxG)")
     if (raw.columns.contains("data_files")) {
@@ -2338,8 +2267,7 @@ object EncodePipeline {
   def readDataBranch(spark: SparkSession, outDir: String,
                      branch: String): DataFrame = {
     branchBase(spark, outDir, branch) // loud on unknown branches
-    readDataWithMeta(spark, outDir,
-      readMetaAt(spark, outDir, None, Some(branch)))
+    readDataWithMeta(spark, outDir, manifestView(spark, outDir, None, Some(branch)))
   }
 
   /** the generation a tag pins, failing loudly on unknown names */
@@ -2573,7 +2501,7 @@ object EncodePipeline {
     if (!raw.columns.contains("gen")) return 0 // single-generation table
     require(raw.columns.contains("data_files"),
       "rollbackTo needs file-tracked metadata; this table predates data_files")
-    val maxG = raw.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0)
+    val maxG = currentGen(spark, outDir)
     if (gen >= maxG) return maxG
     val t0 = System.currentTimeMillis()
     val target = readMetaAt(spark, outDir, Some(gen)).filter(col("__part") >= 0)
@@ -2601,7 +2529,8 @@ object EncodePipeline {
     // resurrecting its rows. Exceptions: txns a fold at f ∈ (g, gen] baked
     // into the files current at `gen`, and txns a rollback marker visible
     // at `gen` abandons anyway (their absence cannot change the result).
-    val (txns, rbM, folds) = manifestFacts(spark, outDir)
+    val facts = manifestOf(spark, outDir)
+    val (txns, rbM, folds) = (facts.txnGens, facts.rollbackMarkers, facts.foldGens)
     if (txns.nonEmpty) {
       val delPath = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
       val present: Set[String] =
@@ -2743,30 +2672,14 @@ object EncodePipeline {
     * visible part predates file tracking — those cannot be diffed by file.
     * g = -1 reads as "before the table existed" (empty inventory). */
   private[graft] def fileInventoryAt(spark: SparkSession, outDir: String,
-                                     g: Int): Option[Map[String, String]] = {
-    if (g < 0) return Some(Map.empty)
-    memoized(spark, outDir, s"inv:$g") { fileInventoryAtUncached(spark, outDir, g) }
-  }
-
-  private def fileInventoryAtUncached(spark: SparkSession, outDir: String,
-                                      g: Int): Option[Map[String, String]] = {
-    val m = readMetaAt(spark, outDir, Some(g)).filter(col("__part") >= 0)
-    if (!m.columns.contains("data_files")) return None
-    if (!m.filter(col("data_files").isNull).isEmpty) return None
-    Some(m.filter(col("data_files").isNotNull)
-      .select(explode(col("data_files")).as("f")).distinct()
-      .collect().map(r => fileSuffix(r.getString(0)) -> r.getString(0)).toMap)
-  }
+                                     g: Int): Option[Map[String, String]] =
+    if (g < 0) Some(Map.empty) else manifestView(spark, outDir, Some(g)).inventory
 
   /** the table's current (maximum committed) generation — 0 on tables that
-    * predate generation tagging. One manifest aggregate; the streaming
-    * change feed polls this as its latest offset. */
+    * predate generation tagging. The streaming change feed polls this as
+    * its latest offset. */
   def currentGen(spark: SparkSession, outDir: String): Int =
-    memoized(spark, outDir, "currentGen") {
-      val raw = rawManifest(spark, outDir)
-      if (!raw.columns.contains("gen")) 0
-      else raw.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0)
-    }
+    manifestOf(spark, outDir).currentGen
 
   /** one data file's slice of a streaming change-feed micro-batch:
     * `deletes` = position bitmaps to EXCLUDE (insert files read at the
@@ -2858,7 +2771,7 @@ object EncodePipeline {
   def currentFiles(spark: SparkSession, outDir: String,
                    gen: Option[Int] = None,
                    branch: Option[String] = None): Seq[(Int, String)] = {
-    val meta = readMetaAt(spark, outDir, gen, branch)
+    val view = manifestView(spark, outDir, gen, branch)
     val conf = spark.sparkContext.hadoopConfiguration
     def listPartDir(p: Int): Seq[(Int, String)] = {
       val dir = new org.apache.hadoop.fs.Path(s"$outDir/data/__part=$p")
@@ -2868,19 +2781,7 @@ object EncodePipeline {
         .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
         .map(s => p -> s.getPath.toString)
     }
-    val out: Seq[(Int, String)] =
-      if (!meta.columns.contains("data_files")) {
-        meta.select("__part").distinct().collect().toSeq
-          .flatMap(r => listPartDir(r.getInt(0)))
-      } else {
-        val tracked = meta.filter(col("data_files").isNotNull)
-          .select(col("__part"), explode(col("data_files")).as("f")).distinct()
-          .collect().toSeq.map(r => (r.getInt(0), r.getString(1)))
-        val untracked = meta.filter(col("data_files").isNull)
-          .select("__part").distinct().collect().toSeq
-          .flatMap(r => listPartDir(r.getInt(0)))
-        tracked ++ untracked
-      }
+    val out = view.trackedFiles ++ view.untrackedParts.flatMap(listPartDir)
     // defensive dedupe by suffix (a dir-listed file that is also tracked
     // must plan once). NB: .values first — mapping the Map to (part, path)
     // tuples would re-key by part id and collapse to one file per part.
@@ -2892,11 +2793,7 @@ object EncodePipeline {
     * .Append, SQL INSERT INTO) use it; replay-keyed callers (streaming)
     * pass their own ids instead. */
   def nextBatchId(spark: SparkSession, outDir: String): Long =
-    memoized(spark, outDir, "nextBatchId") {
-      val m = rawManifest(spark, outDir)
-      if (!m.columns.contains("batch_id")) 0L
-      else m.agg(max(coalesce(col("batch_id"), lit(-1L)))).head().getLong(0) + 1L
-    }
+    manifestOf(spark, outDir).nextBatchId
 
   /** the table's commit history, one row per generation — the Iceberg
     * `history`/`snapshots` metadata-table surface, derived entirely from
@@ -2955,7 +2852,7 @@ object EncodePipeline {
     val times = commitTimes(spark, outDir)
     val whenC: Column =
       if (times.isEmpty) lit(null).cast("timestamp")
-      else element_at(
+      else try_element_at( // a generation without a recorded instant reads NULL
         map(times.toSeq.sortBy(_._1).flatMap { case (g, ms) =>
           Seq(lit(g), lit(new java.sql.Timestamp(ms))) }: _*),
         col("__g"))
@@ -2991,11 +2888,7 @@ object EncodePipeline {
     * filesystem that rewrites mtimes (copy-based restore) shifts history;
     * generation pins and tags stay exact. */
   def commitTimes(spark: SparkSession, outDir: String): Map[Int, Long] = {
-    val m = readCachedDirEx(spark, s"$outDir/meta", withSrcFile = true)
-    val g = if (m.columns.contains("gen")) coalesce(col("gen"), lit(0)) else lit(0)
-    val genOfFile = m.withColumn("__f", col("__src_file"))
-      .groupBy(col("__f")).agg(max(g).as("__g"))
-      .collect().map(r => r.getString(0) -> r.getInt(1))
+    val genOfFile = manifestOf(spark, outDir).genOfSrcFile
     val metaDir = new org.apache.hadoop.fs.Path(s"$outDir/meta")
     val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // normalize both sides to bare paths: input_file_name says
@@ -3295,28 +3188,40 @@ object EncodePipeline {
       try loadDicts(spark, outDir)
       catch { case _: Exception => Map.empty[Long, Codecs.DictTable] }
     val deletes = loadDeletes(spark, outDir, gen)
-    val rd = readDataWithMeta(spark, outDir, readMetaAt(spark, outDir, Some(gen)),
+    val rd = readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)),
       keepFile = deletes.nonEmpty)
     decodeEx(rd, sourceSchema,
       if (dicts.isEmpty) None else Some(dicts),
       keepPart = false, lineage = false, deletes)
   }
 
-  // ---------------- driver-side metadata-directory cache (r6) ----------------
-  // r5 verdict item 7: one resolved-manifest snapshot reused across a query's
-  // planner hooks and DML passes instead of re-reading parquet per call. The
-  // manifest / deletes / dicts side structures are tiny commit-grain parquet
+  // ---------------- driver-side metadata-directory cache ----------------
+  // The manifest / deletes side structures are small commit-grain parquet
   // directories, but every spark.read.parquet of one costs a listing + a
-  // mergeSchema footer job + a scan job (~0.1-0.3 s of pure fixed overhead),
-  // and one DML lifecycle issues dozens. The cache keys on the directory's
-  // listing signature (name:len:mtime of every file) — ANY commit, rewrite,
-  // vacuum, rollback or fold changes the visible file set and invalidates
-  // naturally — and serves the exact rows + merged schema the parquet read
-  // would produce, as a driver-local relation. This is planning-metadata
-  // caching (the Iceberg model: manifests are driver-resident), NOT result
-  // caching: all data reads still scan the data files on every call.
-  private val smallDirCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, StructType, Array[org.apache.spark.sql.Row])]()
+  // mergeSchema footer job + a scan job (~0.1-0.3 s of fixed overhead), and
+  // one DML lifecycle or query plan consults them dozens of times. The
+  // cache keys on the directory's listing signature (name:len:mtime of
+  // every file) — ANY commit, rewrite, vacuum, rollback or fold changes the
+  // visible file set and invalidates naturally — and holds what the
+  // parquet read would produce: a meta directory as its [[Manifest]]
+  // snapshot, from which planning reads answer without Spark jobs, other
+  // directories as their exact rows + merged schema. This is
+  // planning-metadata caching (the Iceberg model: manifests are
+  // driver-resident), NOT result caching: all data reads still scan the
+  // data files on every call. The cache is bounded by an estimate of the
+  // driver-heap bytes its entries hold (least recently used entries leave
+  // first); a directory larger than the whole budget is read on every call
+  // and never cached.
+  private final class DirRows(val schema: StructType, val rows: Array[org.apache.spark.sql.Row])
+  private final class CachedDir(val sig: String, val value: AnyRef, val bytes: Long)
+
+  private val dirCache =
+    new java.util.LinkedHashMap[String, CachedDir](16, 0.75f, /* access order */ true)
+  private var dirCacheBytes = 0L // guarded by dirCache
+
+  /** the metadata-directory cache's budget in estimated driver-heap bytes:
+    * a sixteenth of the driver's maximum heap */
+  @volatile private[graft] var metaCacheBudget: Long = Runtime.getRuntime.maxMemory / 16
 
   private def listingSig(fs: org.apache.hadoop.fs.FileSystem,
                          p: org.apache.hadoop.fs.Path): String =
@@ -3324,69 +3229,59 @@ object EncodePipeline {
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .sorted.mkString("|")
 
-  /** cached mergeSchema read of a small metadata directory. Rows carry a
-    * `__src_file` column (the file each row was read from — [[commitTimes]]
-    * derives snapshot instants from it); all other callers get it dropped.
+  /** a small metadata directory, read (mergeSchema, with a
+    * [[Manifest.SrcFile]] column naming each row's file) and turned into
+    * `T` by `build`, which also returns the result's estimated heap bytes.
     * Missing/empty directories throw exactly as spark.read.parquet would. */
-  private def readCachedDirEx(spark: SparkSession, dir: String,
-                              withSrcFile: Boolean): DataFrame = {
+  private def cachedDir[T <: AnyRef](spark: SparkSession, dir: String)(
+      build: (StructType, Array[org.apache.spark.sql.Row]) => (T, Long))(
+      implicit tag: scala.reflect.ClassTag[T]): T = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = listingSig(fs, p) // FileNotFoundException when absent, like spark.read
-    val hit = smallDirCache.get(dir)
-    val (schema, rows) =
-      if (hit != null && hit._1 == sig) (hit._2, hit._3)
-      else {
-        val df = spark.read.option("mergeSchema", "true").parquet(dir)
-          .withColumn("__src_file", input_file_name())
-        val collected = df.collect()
-        if (smallDirCache.size > 512) smallDirCache.clear() // temp-table churn bound
-        smallDirCache.put(dir, (sig, df.schema, collected))
-        (df.schema, collected)
+    val hit = dirCache.synchronized(dirCache.get(dir))
+    if (hit != null && hit.sig == sig) hit.value match {
+      case t: T => return t
+      case _ =>
+    }
+    val df = spark.read.option("mergeSchema", "true").parquet(dir)
+      .withColumn(Manifest.SrcFile, input_file_name())
+    val (value, bytes) = build(df.schema, df.collect())
+    val budget = metaCacheBudget
+    dirCache.synchronized {
+      Option(dirCache.remove(dir)).foreach(e => dirCacheBytes -= e.bytes)
+      if (bytes <= budget) {
+        val eldest = dirCache.values.iterator
+        while (dirCacheBytes + bytes > budget && eldest.hasNext) {
+          dirCacheBytes -= eldest.next().bytes
+          eldest.remove()
+        }
+        dirCache.put(dir, new CachedDir(sig, value, bytes))
+        dirCacheBytes += bytes
       }
-    val local = spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), schema)
-    if (withSrcFile) local else local.drop("__src_file")
+    }
+    value
+  }
+
+  private def dirRows(spark: SparkSession, dir: String): DirRows =
+    cachedDir(spark, dir)((schema, rows) =>
+      (new DirRows(schema, rows), rows.iterator.map(Manifest.approxBytes).sum))
+
+  /** whether the metadata-directory cache currently holds `dir` */
+  private[graft] def dirCached(dir: String): Boolean =
+    dirCache.synchronized(dirCache.containsKey(dir))
+
+  /** cached read of a small metadata directory as a driver-local relation;
+    * `withSrcFile` keeps the [[Manifest.SrcFile]] column */
+  private def readCachedDirEx(spark: SparkSession, dir: String,
+                              withSrcFile: Boolean): DataFrame = {
+    val e = dirRows(spark, dir)
+    val local = spark.createDataFrame(java.util.Arrays.asList(e.rows: _*), e.schema)
+    if (withSrcFile) local else local.drop(Manifest.SrcFile)
   }
 
   private[graft] def readCachedDir(spark: SparkSession, dir: String): DataFrame =
     readCachedDirEx(spark, dir, withSrcFile = false)
-
-  /** driver-side memo for point-in-time planning facts (current generation,
-    * file inventories, delete-vector maps): keyed on the table's combined
-    * metadata state signature (meta + deletes listings, refs.json stat), so
-    * any commit/vacuum/rollback/ref change invalidates. Values must be
-    * immutable snapshots. Streaming polls and multi-pass DML hit these
-    * once per micro-batch/pass; a hit costs two listStatus calls instead
-    * of a (local) Spark job. */
-  private val driverMemo = new java.util.concurrent.ConcurrentHashMap[String, Any]()
-
-  private def tableStateSig(spark: SparkSession, outDir: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sig(sub: String): String = {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/$sub")
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) "-"
-      else {
-        val st = fs.getFileStatus(p)
-        if (st.isFile) s"${st.getLen}:${st.getModificationTime}"
-        else listingSig(fs, p)
-      }
-    }
-    sig("meta") + "#" + sig("deletes") + "#" + sig("refs.json")
-  }
-
-  private def memoized[T](spark: SparkSession, outDir: String, key: String)(f: => T): T = {
-    val k = s"$outDir|$key|${tableStateSig(spark, outDir)}"
-    val hit = driverMemo.get(k)
-    if (hit != null) hit.asInstanceOf[T]
-    else {
-      val v = f
-      if (driverMemo.size > 4096) driverMemo.clear()
-      driverMemo.put(k, v)
-      v
-    }
-  }
 
   /** cached data-directory RELATION (a plan, not rows): a parquet relation
     * pins the exact file set + merged schema discovered at creation, so it
@@ -3425,25 +3320,41 @@ object EncodePipeline {
     try readDataDir(spark, outDir).columns.toSeq
     catch { case _: Exception => Nil }
 
-  /** the raw (unresolved) manifest — the cached stand-in for
+  /** the table's manifest snapshot — the cached stand-in for
     * `spark.read.option("mergeSchema", "true").parquet(outDir/meta)`.
     * Self-heals a crashed [[rewriteManifests]] swap: if the meta directory
     * is missing but the rename-aside `.meta_rw_old` exists, the original
     * manifest is restored before reading (r5 advice durability hole). */
-  private[graft] def rawManifest(spark: SparkSession, outDir: String): DataFrame = {
+  private[graft] def manifestOf(spark: SparkSession, outDir: String): Manifest = {
     val metaP = new org.apache.hadoop.fs.Path(s"$outDir/meta")
     val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(metaP)) {
       val old = new org.apache.hadoop.fs.Path(s"$outDir/.meta_rw_old")
       if (fs.exists(old)) fs.rename(old, metaP)
     }
-    readCachedDir(spark, s"$outDir/meta")
+    cachedDir(spark, s"$outDir/meta") { (schema, rows) =>
+      val m = Manifest.fromDir(schema, rows)
+      (m, m.approxBytes)
+    }
   }
 
-  /** metadata read with schema merge across metadata-version eras: a resumed
-    * pre-upgrade directory holds meta files missing the newer columns
-    * (data_files/str_lo/...); without mergeSchema the read schema would be
-    * file-order dependent and newer columns could vanish entirely. */
+  /** the manifest rows visible at generation `upTo` (None = latest), on
+    * main or on `branch` ([[Manifest.view]] resolves them) */
+  private[graft] def manifestView(spark: SparkSession, outDir: String, upTo: Option[Int],
+                                  branch: Option[String] = None): ManifestView =
+    manifestOf(spark, outDir).view(upTo,
+      branch.map(b => b -> readBranches(spark, outDir).getOrElse(b, Int.MaxValue)))
+
+  /** the raw (unresolved) manifest as a driver-local relation */
+  private[graft] def rawManifest(spark: SparkSession, outDir: String): DataFrame = {
+    val m = manifestOf(spark, outDir)
+    m.toDF(spark, m.raw)
+  }
+
+  /** the current generation-resolved manifest, with the schema merged
+    * across metadata-version eras: a resumed pre-upgrade directory holds
+    * meta files missing the newer columns (data_files/str_lo/...), which
+    * read as null. */
   private[graft] def readMeta(spark: SparkSession, outDir: String): DataFrame =
     readMetaAt(spark, outDir, None)
 
@@ -3451,79 +3362,11 @@ object EncodePipeline {
                          upTo: Option[Int]): DataFrame =
     readMetaAt(spark, outDir, upTo, None)
 
+  /** the manifest as of generation `upTo` on main or `branch`, as a
+    * driver-local relation; resolution rule: [[Manifest.view]] */
   private[graft] def readMetaAt(spark: SparkSession, outDir: String,
-                         upTo: Option[Int], branch: Option[String]): DataFrame = {
-    val m = rawManifest(spark, outDir)
-    if (!m.columns.contains("gen")) return m // never compacted: zero overhead
-    // generation resolution. Commits come in two kinds:
-    //   REPLACING (compaction, COW DML, tombstones, rollback — no
-    //   `additive` column or additive=false): the commit re-lists the
-    //   part's ENTIRE file set, so per part only the highest replacing
-    //   generation ≤ upTo (the part's "floor") is current;
-    //   ADDITIVE (appendCommit / commitDelta inserts, additive=true): the
-    //   commit adds files on top of whatever is current, so its rows stay
-    //   visible at every read generation in [its gen, the next replacing
-    //   commit). Pre-gen rows read as gen 0 replacing; legacy appends
-    //   (written before the additive flag, sharing the floor's gen) read
-    //   as replacing AT the floor, which is the same visible set — the
-    //   rule degrades to the old per-part-max-gen resolution on legacy
-    //   tables. Multiple SAME-gen rows per part (multi-wave runs) all
-    //   stay current, exactly as before generations existed.
-    val withGen = m.withColumn("gen", coalesce(col("gen"), lit(0)))
-      .withColumn("__add",
-        if (m.columns.contains("additive")) coalesce(col("additive"), lit(false))
-        else lit(false))
-    val visible1 = upTo.map(g => withGen.filter(col("gen") <= g)).getOrElse(withGen)
-    // branch visibility (write-audit-publish, Iceberg branch refs): rows
-    // committed to a BRANCH carry ref = <name> and stay invisible to main
-    // readers until a publish marker (ref = <name>, publish_from exclusive,
-    // publish_to inclusive — [[fastForward]]) covers their generation.
-    // Markers are cumulative facts: matched here regardless of the floor
-    // rule (a later part -1 replacing marker must not unpublish), but
-    // scoped to gen ≤ upTo so time travel below a publish hides the branch
-    // and [[rollbackTo]] across one unpublishes via the re-commit floor.
-    // Marker rows themselves never surface as content. Tables without a
-    // ref column (never branch-written) skip all of this.
-    val visible0 =
-      if (!m.columns.contains("ref")) visible1
-      else {
-        val hasPub = m.columns.contains("publish_to")
-        val mainRows = visible1.filter(col("ref").isNull)
-        val bRows = visible1.filter(col("ref").isNotNull &&
-          (if (hasPub) col("publish_to").isNull else lit(true)))
-        if (!hasPub && branch.isEmpty) mainRows
-        else {
-          val pubs =
-            if (!hasPub) bRows.limit(0).select(col("ref").as("__pref"),
-              lit(-1).as("__pfrom"), lit(-1).as("__pto"))
-            else visible1.filter(col("publish_to").isNotNull)
-              .select(col("ref").as("__pref"),
-                coalesce(col("publish_from"), lit(-1)).as("__pfrom"),
-                col("publish_to").as("__pto")).distinct()
-          val cond = col("ref") === col("__pref") &&
-            col("gen") > col("__pfrom") && col("gen") <= col("__pto")
-          val published = bRows.join(broadcast(pubs), cond, "left_semi")
-          val ownUnpublished = branch.map { b =>
-            // scope to the REGISTERED branch's window (gen > base): rows a
-            // dropped incarnation of the same name left behind are
-            // permanently invisible (dropBranch's contract — their files
-            // may be vacuumed) and must not resurrect under a reused name
-            val base = readBranches(spark, outDir).getOrElse(b, Int.MaxValue)
-            bRows.filter(col("ref") === b && col("gen") > base)
-              .join(broadcast(pubs), cond, "left_anti")
-          }
-          (Seq(published) ++ ownUnpublished).foldLeft(mainRows)(_ union _)
-        }
-      }
-    // the part's floor: its highest replacing generation ≤ upTo (a part
-    // born from appends alone has none — floor 0 via the left-join null)
-    val floor = visible0.filter(!col("__add"))
-      .groupBy(col("__part")).agg(max(col("gen")).as("__floor"))
-    visible0.join(broadcast(floor), Seq("__part"), "left")
-      .filter(col("gen") >= coalesce(col("__floor"), lit(0)) &&
-              (col("__add") || col("gen") === coalesce(col("__floor"), lit(0))))
-      .drop("__add", "__floor")
-  }
+                         upTo: Option[Int], branch: Option[String]): DataFrame =
+    manifestView(spark, outDir, upTo, branch).toDF(spark)
 
   /** null out branch provenance on manifest rows a REPLACING commit carries
     * forward verbatim ([[rollbackTo]], [[compactSmallFiles]]; [[analyzeTable]]
@@ -3652,28 +3495,9 @@ object EncodePipeline {
     * are never opened (Iceberg null_value_counts manifest skipping).
     * Old-era rows (count not recorded) are conservatively kept. */
   def readDataPrunedIsNull(spark: SparkSession, outDir: String, column: String): DataFrame = {
-    val meta = readMeta(spark, outDir)
-    scanParts(spark, outDir, meta, isNullSurvivors(meta, column))
-  }
-
-  /** parts that may hold nulls for `column`: everything except parts
-    * PROVABLY null-free — rows for the column exist, cover every row of
-    * the part (schema evolution: a commit that predates the column is
-    * all-null for it and has no row to say so), and all recorded
-    * null_value_counts are 0. */
-  private def isNullSurvivors(meta: DataFrame, column: String): DataFrame = {
-    val all = meta.select("__part").distinct()
-    if (!meta.columns.contains("null_value_count")) return all
-    val perCol = meta.groupBy(col("__part"), col("column")).agg(
-      sum(col("rows")).as("r"),
-      sum(when(col("null_value_count").isNull, 1).otherwise(0)).as("unk"),
-      sum(coalesce(col("null_value_count"), lit(0L))).as("nulls"))
-    val totals = perCol.groupBy(col("__part")).agg(max(col("r")).as("total"))
-    val proved = perCol.filter(col("column") === column)
-      .join(totals, Seq("__part"))
-      .filter(col("unk") === 0 && col("nulls") === 0 && col("r") === col("total"))
-      .select("__part")
-    all.join(broadcast(proved), Seq("__part"), "left_anti")
+    import spark.implicits._
+    scanParts(spark, outDir, readMeta(spark, outDir),
+      survivingPartsIsNull(spark, outDir, column).toSeq.toDF("__part"))
   }
 
   // ---- collected surviving-part sets (the ManifestPruneRule planner hook
@@ -3682,46 +3506,22 @@ object EncodePipeline {
 
   /** every committed part id */
   def allParts(spark: SparkSession, outDir: String): Array[Int] =
-    readMeta(spark, outDir).select("__part").distinct().collect().map(_.getInt(0)).sorted
+    manifestView(spark, outDir, None).parts
 
   /** parts whose [value_lo, value_hi] zone maps intersect [lo, hi] */
   def survivingPartsLong(spark: SparkSession, outDir: String,
-                         column: String, lo: Long, hi: Long): Array[Int] = {
-    val meta = readMeta(spark, outDir)
-    val isOldRow =
-      if (meta.columns.contains("data_files")) col("data_files").isNull else lit(true)
-    // prefer the EXACT attained stats (value_min/value_max, r5) over the
-    // representable codec-domain bounds (value_lo/value_hi): a raw/delta
-    // blob's representable span covers nearly everything, the attained span
-    // only what is actually there. Deletes only shrink a blob's value set,
-    // so attained bounds stay valid supersets. Pre-stats rows fall back.
-    val hasStats = meta.columns.contains("value_min")
-    val loB = if (hasStats) coalesce(col("value_min"), col("value_lo")) else col("value_lo")
-    val hiB = if (hasStats) coalesce(col("value_max"), col("value_hi")) else col("value_hi")
-    meta.filter(col("column") === column &&
-        (isOldRow || (loB <= hi && hiB >= lo)))
-      .select("__part").distinct().collect().map(_.getInt(0)).sorted
-  }
+                         column: String, lo: Long, hi: Long): Array[Int] =
+    manifestView(spark, outDir, None).survivingLong(column, lo, hi)
 
   /** parts whose truncated string zone maps intersect [lo, hi]
     * (unsigned-lexicographic; a null bound = unbounded on that side) */
   def survivingPartsStr(spark: SparkSession, outDir: String, column: String,
-                        lo: Array[Byte], hi: Array[Byte]): Array[Int] = {
-    val meta = readMeta(spark, outDir)
-    val isOldRow =
-      if (meta.columns.contains("data_files")) col("data_files").isNull else lit(true)
-    val admits = col("str_lo").isNotNull &&
-      (if (hi == null) lit(true) else col("str_lo") <= lit(hi)) &&
-      (col("str_hi").isNull || (if (lo == null) lit(true) else col("str_hi") >= lit(lo)))
-    meta.filter(col("column") === column && (isOldRow || admits))
-      .select("__part").distinct().collect().map(_.getInt(0)).sorted
-  }
+                        lo: Array[Byte], hi: Array[Byte]): Array[Int] =
+    manifestView(spark, outDir, None).survivingStr(column, lo, hi)
 
   /** parts whose manifest null_value_count admits null rows */
-  def survivingPartsIsNull(spark: SparkSession, outDir: String, column: String): Array[Int] = {
-    val meta = readMeta(spark, outDir)
-    isNullSurvivors(meta, column).collect().map(_.getInt(0)).sorted
-  }
+  def survivingPartsIsNull(spark: SparkSession, outDir: String, column: String): Array[Int] =
+    manifestView(spark, outDir, None).survivingIsNull(column)
 
   /** ANALYZE TABLE (the Iceberg compute-table-stats / rewrite-manifests
     * upgrade pattern): re-derive every manifest statistics column — zone-map
@@ -3756,8 +3556,7 @@ object EncodePipeline {
     val schema = readSchemaFile(spark, outDir).getOrElse(throw new IllegalStateException(
       s"analyzeTable($outDir): no schema.json — only self-describing tables analyze"))
     val raw = rawManifest(spark, outDir)
-    val maxG = if (raw.columns.contains("gen"))
-      raw.agg(max(coalesce(col("gen"), lit(0)))).head().getInt(0) else 0
+    val maxG = currentGen(spark, outDir)
     if (!raw.columns.contains("data_files")) return maxG // nothing tracked
     val t0 = System.currentTimeMillis()
     val cur = readMeta(spark, outDir).filter(col("__part") >= 0)
@@ -3835,81 +3634,37 @@ object EncodePipeline {
     if (loadDeletes(spark, outDir).nonEmpty)
       throw new IllegalStateException(
         "tableStats: live merge-on-read delete vectors make manifest stats stale; run materializeDeletes() first")
-    val meta = readMeta(spark, outDir)
-    if (!meta.columns.contains("null_value_count"))
+    val m = manifestOf(spark, outDir)
+    if (!m.has("null_value_count"))
       throw new IllegalStateException(
         "tableStats: manifest predates null_value_counts; compact() to upgrade")
-    val hasStats = meta.columns.contains("value_sum")
-    val perPC = meta.groupBy(col("__part"), col("column")).agg(
-      sum(col("rows")).as("r"),
-      sum(when(col("null_value_count").isNull, 1L).otherwise(0L)).as("unk"),
-      sum(coalesce(col("null_value_count"), lit(0L))).as("nulls"),
-      (if (hasStats) min(col("value_min")) else lit(null).cast(LongType)).as("v_min"),
-      (if (hasStats) max(col("value_max")) else lit(null).cast(LongType)).as("v_max"),
-      // a commit with values but null sum = unknown (block/part overflow);
-      // sum() would skip it and serve a WRONG total — poison instead
-      (if (hasStats)
-        when(max((coalesce(col("value_count"), lit(0L)) > 0 &&
-            col("value_sum").isNull).cast("int")) === 1, lit(null).cast(LongType))
-          .otherwise(try_sum(col("value_sum")))
-       else lit(null).cast(LongType)).as("v_sum"),
-      (if (hasStats) sum(coalesce(col("value_count"), lit(0L)))
-       else lit(null).cast(LongType)).as("v_cnt")
-    ).collect()
-    // table-wide NDV: union the per-(part, column) KMV sketches. A null
-    // sketch row (unenumerable blocks, or rows carried forward from before
-    // the sketch era) poisons its column — unknown must never undercount.
-    // Absent-era rows (schema evolution) decode as all-null and contribute
-    // zero distinct values, so merging only the rows that exist is exact.
-    val ndvByCol: Map[String, (Long, Boolean)] =
-      if (!meta.columns.contains("ndv_sketch")) Map.empty
-      else meta.filter(col("column").isNotNull).groupBy(col("column"))
-        .agg(graft.functions.KmvMerge.of(
-          coalesce(col("ndv_sketch"), lit(graft.core.Kmv.poison))).as("sk"))
-        .collect().flatMap { r =>
-          Option(graft.core.Kmv.estimate(r.getAs[Array[Byte]]("sk")))
-            .map(e => r.getString(0) -> e)
-        }.toMap
+    val view = manifestView(spark, outDir, None)
+    val totals = view.columnTotals(_ => true)
     // totals per part: the widest column's row count (schema evolution can
     // leave a later-added column covering only a suffix of a part's commits)
-    val partTotal = perPC.groupBy(_.getInt(0)).view.mapValues(_.map(_.getLong(2)).max).toMap
-    val totalRows = partTotal.values.sum
+    val totalRows = view.partTotals.valuesIterator.map(_._1).sum
     val plans = plan(sourceSchema)
     val out = plans.map { p =>
-      val rows = perPC.filter(_.getString(1) == p.name)
-      val covered = rows.map(_.getLong(2)).sum
-      if (rows.exists(_.getLong(3) > 0))
+      val t = totals.getOrElse(p.name, Manifest.NoRows)
+      if (!t.nullsKnown)
         throw new IllegalStateException(
           s"tableStats: column ${p.name} has manifest rows without null counts (pre-upgrade era); compact() first")
-      val nulls = rows.map(_.getLong(4)).sum
-      val nullsTotal = (totalRows - covered) + nulls // absent-era rows decode as null
-      val nValues = covered - nulls
+      val nullsTotal = (totalRows - t.rows) + t.nulls // absent-era rows decode as null
+      val nValues = t.rows - t.nulls
       val (vMin, vMax, vSum): (Any, Any, Any) =
         if (p.kind != 'l' || nValues == 0L) (null, null, null)
         else {
-          val vCnt = rows.map(r => if (r.isNullAt(8)) 0L else r.getLong(8)).sum
-          if (vCnt != nValues)
+          if (t.vCount != nValues)
             throw new IllegalStateException(
               s"tableStats: column ${p.name} has manifest rows without exact value stats (pre-upgrade era); compact() first")
-          (rows.flatMap(r => if (r.isNullAt(5)) None else Some(r.getLong(5))).min,
-           rows.flatMap(r => if (r.isNullAt(6)) None else Some(r.getLong(6))).max,
-           // exact cross-part total in BigInt; a part with values but no
-           // sum (overflow) or a total outside Long = unknown → null
-           {
-             val parts = rows.map { r =>
-               val cnt = if (r.isNullAt(8)) 0L else r.getLong(8)
-               if (cnt == 0L) Some(BigInt(0))
-               else if (r.isNullAt(7)) None
-               else Some(BigInt(r.getLong(7)))
-             }
-             if (parts.contains(None)) null
-             else {
-               val tot = parts.flatten.sum
-               if (tot.isValidLong) java.lang.Long.valueOf(tot.toLong) else null
-             }
-           })
+          // exact cross-part total; unknown or outside Long → null
+          (t.vMin.get, t.vMax.get,
+           t.vSum.filter(_.isValidLong).map(v => java.lang.Long.valueOf(v.toLong)).orNull)
         }
-      val (nd, ndExact): (Any, Any) = ndvByCol.get(p.name) match {
+      // Absent-era rows (schema evolution) decode as all-null and
+      // contribute zero distinct values, so merging only the rows that
+      // exist is exact
+      val (nd, ndExact): (Any, Any) = t.ndv match {
         case Some((e, ex)) => (java.lang.Long.valueOf(e), java.lang.Boolean.valueOf(ex))
         case None => (null, null)
       }
@@ -3929,7 +3684,7 @@ object EncodePipeline {
       // null = unknown (unenumerable blocks or pre-sketch-era rows)
       StructField("n_distinct", LongType, nullable = true),
       StructField("distinct_exact", BooleanType, nullable = true)))
-    spark.createDataFrame(spark.sparkContext.parallelize(out, 1), schema)
+    spark.createDataFrame(java.util.Arrays.asList(out: _*), schema)
   }
 
   /** join-based bit-identical verification (SURVEY.md §3.4 step 4): returns

@@ -1,0 +1,353 @@
+package graft.plans
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.core.Kmv
+
+/** An immutable driver-side snapshot of one table's manifest: every row of
+  * `outDir/meta` as read, built once per listing signature of that
+  * directory (see [[EncodePipeline]]'s metadata-directory cache). Planning
+  * facts — the generation-resolved row set, surviving parts, current files,
+  * generation and batch counters, table statistics — are answered here in
+  * plain Scala, so planning a read starts no Spark job (the Iceberg model:
+  * manifests are driver-resident).
+  *
+  * `rows` are the stored rows, `srcFiles(i)` the manifest file row i came
+  * from (commit instants derive from it). Columns absent from older
+  * manifest eras read as null. */
+final class Manifest(val schema: StructType, rows: Array[Row], srcFiles: Array[String]) {
+  private val index: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
+  def has(c: String): Boolean = index.contains(c)
+  private[plans] def at(c: String): Int = index.getOrElse(c, -1)
+
+  private[plans] val iPart = at("__part")
+  private[plans] val iCol = at("column")
+  private[plans] val iFiles = at("data_files")
+  private val iGen = at("gen")
+  private val iAdd = at("additive")
+  private val iRef = at("ref")
+  private val iPubFrom = at("publish_from")
+  private val iPubTo = at("publish_to")
+
+  @inline private[plans] def isNull(r: Row, i: Int): Boolean = i < 0 || r.isNullAt(i)
+  private def intOr(r: Row, i: Int, dflt: Int): Int = if (isNull(r, i)) dflt else r.getInt(i)
+  /** a numeric cell as a long; None when null or absent */
+  private[plans] def longAt(r: Row, i: Int): Option[Long] =
+    if (isNull(r, i)) None else Some(r.get(i).asInstanceOf[Number].longValue)
+  private[plans] def part(r: Row): Int = r.getInt(iPart)
+  private[plans] def column(r: Row): String = if (isNull(r, iCol)) null else r.getString(iCol)
+  /** the row's generation: pre-generation (null) rows read as 0 */
+  private def genOf(r: Row): Int = intOr(r, iGen, 0)
+  private def additive(r: Row): Boolean = !isNull(r, iAdd) && r.getBoolean(iAdd)
+
+  /** the stored rows, unresolved (the raw manifest) */
+  val raw: IndexedSeq[Row] = scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)
+
+  /** the table's highest committed generation (0 before generation tagging) */
+  lazy val currentGen: Int = if (rows.isEmpty) 0 else rows.iterator.map(genOf).max
+
+  /** next free append batch id: max committed + 1, 0 when none is tracked */
+  lazy val nextBatchId: Long =
+    if (!has("batch_id")) 0L
+    else raw.map(longAt(_, at("batch_id")).getOrElse(-1L)).foldLeft(-1L)(math.max) + 1L
+
+  /** committed transaction → the generation of its snapshot marker */
+  lazy val txnGens: Map[String, Int] = {
+    val i = at("txn")
+    rows.iterator.filterNot(isNull(_, i)).map(r => r.getString(i) -> genOf(r)).toMap
+  }
+
+  /** rollback markers (marker gen N, target T), in commit order */
+  lazy val rollbackMarkers: Seq[(Int, Int)] = {
+    val i = at("rollback_to")
+    raw.filterNot(isNull(_, i)).map(r => (genOf(r), r.getInt(i))).sortBy(_._1)
+  }
+
+  /** generations at which delete-vector history was folded */
+  lazy val foldGens: Seq[Int] = {
+    val i = at("dv_folded")
+    raw.filter(r => !isNull(r, i) && r.getBoolean(i)).map(genOf).sorted
+  }
+
+  /** manifest file → the highest generation it holds */
+  lazy val genOfSrcFile: Map[String, Int] =
+    srcFiles.indices.groupBy(srcFiles(_)).map { case (f, is) => f -> is.map(i => genOf(rows(i))).max }
+
+  /** the current main view, which planning reads on every query */
+  private lazy val latest = new ManifestView(this, resolve(None, None))
+
+  /** the rows visible at generation `upTo` (None = latest) on main, or on
+    * `branch` = (name, creation base generation) — see [[resolve]]. Only
+    * the current main view is kept; time-travel and branch views are
+    * resolved on each call, so the snapshot's footprint does not grow with
+    * the number of read points. */
+  def view(upTo: Option[Int], branch: Option[(String, Int)]): ManifestView =
+    if (branch.isEmpty && upTo.forall(_ >= currentGen)) latest
+    else new ManifestView(this, resolve(upTo, branch))
+
+  /** rough driver-heap footprint: the stored rows and their source files,
+    * plus as much again for the kept current view (rows with a null
+    * generation re-emitted as 0, its file lists and per-part sums) */
+  lazy val approxBytes: Long =
+    2 * rows.iterator.map(Manifest.approxBytes).sum + srcFiles.iterator.map(Manifest.approxBytes).sum
+
+  /** Generation resolution — the one statement of the rule. Commits come
+    * in two kinds:
+    *   - REPLACING (compaction, copy-on-write DML, tombstones, rollback —
+    *     no `additive` column or additive=false): the commit re-lists the
+    *     part's ENTIRE file set, so per part only the highest replacing
+    *     generation ≤ upTo (the part's "floor") is current;
+    *   - ADDITIVE (appendCommit / commitDelta inserts, additive=true): the
+    *     commit adds files on top of whatever is current, so its rows stay
+    *     visible at every read generation in [its gen, the next replacing
+    *     commit).
+    * Pre-generation rows read as gen 0 replacing; legacy appends (written
+    * before the additive flag, sharing the floor's gen) read as replacing
+    * AT the floor, which is the same visible set. Several rows of the same
+    * generation per part (multi-wave runs) all stay current. A manifest
+    * without a `gen` column (never compacted) is returned as stored.
+    *
+    * Branch visibility (write-audit-publish, Iceberg branch refs): rows
+    * committed to a BRANCH carry ref = <name> and stay invisible to main
+    * readers until a publish marker (ref = <name>, publish_from exclusive,
+    * publish_to inclusive — [[EncodePipeline.fastForward]]) covers their
+    * generation. Markers are cumulative facts, matched regardless of the
+    * floor rule but scoped to gen ≤ upTo, so time travel below a publish
+    * hides the branch and a rollback across one unpublishes it. A branch
+    * read also sees its own rows inside its registered window (gen > base);
+    * rows a dropped incarnation of the same name left behind stay
+    * invisible. Marker rows never surface as content. */
+  private def resolve(upTo: Option[Int], branch: Option[(String, Int)]): IndexedSeq[Row] = {
+    if (iGen < 0) return raw
+    val inRange = upTo.fold(raw)(g => raw.filter(genOf(_) <= g))
+    val visible =
+      if (iRef < 0) inRange
+      else {
+        def isMain(r: Row) = r.isNullAt(iRef)
+        if (iPubTo < 0 && branch.isEmpty) inRange.filter(isMain)
+        else {
+          val pubs: Seq[(String, Int, Int)] =
+            if (iPubTo < 0) Nil
+            else inRange.filterNot(isNull(_, iPubTo)).map(r =>
+              (if (r.isNullAt(iRef)) null else r.getString(iRef),
+                intOr(r, iPubFrom, -1), r.getInt(iPubTo))).distinct
+          def content(r: Row) = !r.isNullAt(iRef) && isNull(r, iPubTo)
+          def published(r: Row) = {
+            val (ref, g) = (r.getString(iRef), genOf(r))
+            pubs.exists { case (p, from, to) => p == ref && g > from && g <= to }
+          }
+          def own(r: Row) = branch.exists { case (b, base) =>
+            r.getString(iRef) == b && genOf(r) > base }
+          inRange.filter(r => isMain(r) || (content(r) && (published(r) || own(r))))
+        }
+      }
+    // the part's floor: its highest replacing generation (a part born from
+    // appends alone has none — floor 0)
+    val floor = scala.collection.mutable.HashMap.empty[Int, Int]
+    visible.foreach { r =>
+      if (!additive(r)) {
+        val p = part(r)
+        val g = genOf(r)
+        if (floor.get(p).forall(_ < g)) floor(p) = g
+      }
+    }
+    visible.filter { r =>
+      val f = floor.getOrElse(part(r), 0)
+      val g = genOf(r)
+      g >= f && (additive(r) || g == f)
+    }.map(r => // pre-generation rows are emitted with generation 0
+      if (r.isNullAt(iGen)) Row.fromSeq(r.toSeq.updated(iGen, 0)) else r)
+  }
+
+  /** `rs` (rows of this manifest) as a driver-local relation */
+  def toDF(spark: SparkSession, rs: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+}
+
+object Manifest {
+  /** the per-row source-file column the metadata-directory reader attaches */
+  val SrcFile = "__src_file"
+
+  /** a manifest from rows read with a [[SrcFile]] column */
+  def fromDir(schema: StructType, rows: Array[Row]): Manifest = {
+    val i = schema.fieldIndex(SrcFile)
+    val keep = schema.fields.indices.filter(_ != i)
+    new Manifest(StructType(keep.map(schema.fields(_))),
+      rows.map(r => Row.fromSeq(keep.map(r.get))),
+      rows.map(_.getString(i)))
+  }
+
+  /** rough driver-heap footprint of a cell value */
+  def approxBytes(v: Any): Long = v match {
+    case null => 8L
+    case s: String => 40L + 2L * s.length
+    case b: Array[Byte] => 16L + b.length
+    case r: Row => 16L + r.toSeq.iterator.map(approxBytes).sum
+    case s: scala.collection.Seq[_] => 32L + s.iterator.map(approxBytes).sum
+    case _ => 16L
+  }
+
+  /** per-(part, column) sums over a view's rows, the grain table
+    * statistics and scan estimates merge from */
+  final case class PartColumn(part: Int, column: String, rows: Long, rawBytes: Long,
+                              unknownNulls: Long, nulls: Long,
+                              vMin: Option[Long], vMax: Option[Long],
+                              // None = unknown: some commit with values has
+                              // no recorded sum, or the total overflows
+                              vSum: Option[Long], vCount: Long,
+                              // merged KMV sketch (poison = unknown); null
+                              // when the manifest predates sketches
+                              sketch: Array[Byte])
+
+  /** one column's totals over a set of parts: the rule by which manifest
+    * sums become column statistics ([[ManifestView.columnTotals]]) */
+  final case class ColumnTotal(rows: Long, nulls: Long,
+                               // every row recorded its null count
+                               nullsKnown: Boolean,
+                               vMin: Option[Long], vMax: Option[Long], vCount: Long,
+                               // exact total; None when a part with values
+                               // has no recorded sum
+                               vSum: Option[BigInt],
+                               // merged-sketch NDV estimate (count, exact);
+                               // None when unknown
+                               ndv: Option[(Long, Boolean)])
+
+  /** the totals of a column without manifest rows */
+  val NoRows: ColumnTotal = ColumnTotal(0L, 0L, nullsKnown = true, None, None, 0L,
+    Some(BigInt(0)), None)
+}
+
+/** the manifest rows visible at one (generation, branch) read point, and the
+  * planning facts derived from them */
+final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row]) {
+  import Manifest._
+
+  def toDF(spark: SparkSession): DataFrame = m.toDF(spark, rows)
+
+  /** every committed part id (marker rows included), ascending */
+  lazy val parts: Array[Int] = rows.map(m.part).distinct.sorted.toArray
+
+  /** whether this manifest era records data-file lists at all */
+  def tracksFiles: Boolean = m.iFiles >= 0
+
+  /** rows written before data-file tracking or zone maps: bounds unknown */
+  private def oldRow(r: Row): Boolean = m.isNull(r, m.iFiles)
+
+  private def partsWhere(column: String)(admits: Row => Boolean): Array[Int] =
+    rows.iterator.filter(r => m.column(r) == column && (oldRow(r) || admits(r)))
+      .map(m.part).toSeq.distinct.sorted.toArray
+
+  /** parts whose long zone maps intersect [lo, hi]. The exact attained
+    * stats (value_min/value_max) win over the representable codec-domain
+    * bounds (value_lo/value_hi); deletes only shrink a blob's value set, so
+    * attained bounds stay valid supersets. Pre-stats rows fall back. */
+  def survivingLong(column: String, lo: Long, hi: Long): Array[Int] = {
+    val (iMin, iMax, iLo, iHi) = (m.at("value_min"), m.at("value_max"),
+      m.at("value_lo"), m.at("value_hi"))
+    if (iLo < 0 && iMin < 0) return partsWhere(column)(_ => true) // no zone maps at all
+    partsWhere(column) { r =>
+      val l = m.longAt(r, iMin).orElse(m.longAt(r, iLo))
+      val h = m.longAt(r, iMax).orElse(m.longAt(r, iHi))
+      l.exists(_ <= hi) && h.exists(_ >= lo)
+    }
+  }
+
+  /** parts whose truncated string zone maps intersect [lo, hi]
+    * (unsigned-lexicographic; a null probe bound = unbounded on that side,
+    * a null str_hi = unbounded above). A part with str_lo null holds no
+    * values for the column and is skipped. */
+  def survivingStr(column: String, lo: Array[Byte], hi: Array[Byte]): Array[Int] = {
+    val (iLo, iHi) = (m.at("str_lo"), m.at("str_hi"))
+    if (iLo < 0) return partsWhere(column)(_ => true)
+    // unsigned-lexicographic: Spark's BINARY ordering
+    def cmp(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
+    partsWhere(column) { r =>
+      !r.isNullAt(iLo) && (hi == null || cmp(r.getAs[Array[Byte]](iLo), hi) <= 0) &&
+        (m.isNull(r, iHi) || lo == null || cmp(r.getAs[Array[Byte]](iHi), lo) >= 0)
+    }
+  }
+
+  /** parts that may hold nulls for `column`: every part except those
+    * PROVABLY null-free — rows for the column exist, cover every row of the
+    * part (a commit that predates the column is all-null for it and has no
+    * row to say so), and all recorded null_value_counts are 0 */
+  def survivingIsNull(column: String): Array[Int] = {
+    if (!m.has("null_value_count")) return parts
+    val proved = partColumns.filter(pc => pc.column == column && pc.unknownNulls == 0 &&
+      pc.nulls == 0 && pc.rows == partTotals(pc.part)._1).map(_.part).toSet
+    parts.filterNot(proved)
+  }
+
+  /** (part, file path) of every file the tracked rows list, and the parts of
+    * rows from before file tracking (read by listing their directory) */
+  lazy val (trackedFiles, untrackedParts): (Seq[(Int, String)], Seq[Int]) =
+    if (!tracksFiles) (Nil, parts.toSeq)
+    else {
+      val (old, tracked) = rows.partition(oldRow)
+      (tracked.flatMap(r => r.getSeq[String](m.iFiles).map(m.part(r) -> _)).distinct,
+        old.map(m.part).distinct)
+    }
+
+  /** suffixes ("__part=p/name") of every tracked data file */
+  lazy val fileSuffixes: Set[String] =
+    trackedFiles.iterator.map(f => EncodePipeline.fileSuffix(f._2)).toSet
+
+  /** per-(part, column) sums and sketch merges (no particular order) */
+  lazy val partColumns: Seq[PartColumn] = {
+    val (iNulls, iMin, iMax, iSum, iCnt, iSk) = (m.at("null_value_count"),
+      m.at("value_min"), m.at("value_max"), m.at("value_sum"), m.at("value_count"),
+      m.at("ndv_sketch"))
+    val (iRows, iRaw) = (m.at("rows"), m.at("raw_bytes"))
+    rows.groupBy(r => (m.part(r), m.column(r))).toSeq.map { case ((p, c), rs) =>
+      def sumOf(i: Int) = rs.iterator.map(m.longAt(_, i).getOrElse(0L)).sum
+      def present(i: Int) = rs.flatMap(m.longAt(_, i))
+      val sums = present(iSum)
+      // a commit with values but no recorded sum is unknown; so is a total
+      // that overflows a long
+      val sum =
+        if (sums.isEmpty || rs.exists(r => m.longAt(r, iCnt).exists(_ > 0) && m.isNull(r, iSum))) None
+        else sums.foldLeft(Option(0L))((acc, v) =>
+          acc.flatMap(a => scala.util.Try(Math.addExact(a, v)).toOption))
+      val sketch =
+        if (iSk < 0) null
+        else rs.foldLeft(Kmv.empty)((acc, r) =>
+          Kmv.merge(acc, if (r.isNullAt(iSk)) Kmv.poison else r.getAs[Array[Byte]](iSk)))
+      PartColumn(p, c, sumOf(iRows), sumOf(iRaw),
+        rs.count(m.isNull(_, iNulls)), sumOf(iNulls),
+        present(iMin).minOption, present(iMax).maxOption, sum, sumOf(iCnt), sketch)
+    }
+  }
+
+  /** per-column totals over the parts `keepPart` admits. A column's NDV
+    * unions its KMV sketches; a null sketch (unenumerable blocks, rows
+    * from before the sketch era) poisons it, since unknown must never
+    * undercount. */
+  def columnTotals(keepPart: Int => Boolean): Map[String, ColumnTotal] =
+    partColumns.filter(pc => pc.column != null && keepPart(pc.part)).groupBy(_.column)
+      .map { case (c, pcs) =>
+        val sums = pcs.map(pc => if (pc.vCount == 0L) Some(BigInt(0)) else pc.vSum.map(BigInt(_)))
+        c -> ColumnTotal(pcs.map(_.rows).sum, pcs.map(_.nulls).sum,
+          pcs.forall(_.unknownNulls == 0),
+          pcs.flatMap(_.vMin).minOption, pcs.flatMap(_.vMax).maxOption, pcs.map(_.vCount).sum,
+          if (sums.contains(None)) None else Some(sums.flatten.sum),
+          if (pcs.exists(_.sketch == null)) None
+          else Option(Kmv.estimate(pcs.map(_.sketch).foldLeft(Kmv.empty)(Kmv.merge))))
+      }
+
+  /** per part: (rows = its widest column's row count, raw bytes summed over
+    * columns) — the scan's size estimate */
+  lazy val partTotals: Map[Int, (Long, Long)] =
+    partColumns.groupBy(_.part).map { case (p, cs) =>
+      p -> (cs.map(_.rows).max, cs.map(_.rawBytes).sum)
+    }
+
+  /** file inventory (suffix → path) of the data parts; None when any part
+    * predates file tracking (it cannot be diffed by file) */
+  lazy val inventory: Option[Map[String, String]] = {
+    val data = rows.filter(m.part(_) >= 0)
+    if (!tracksFiles || data.exists(oldRow)) None
+    else Some(data.flatMap(_.getSeq[String](m.iFiles))
+      .map(f => EncodePipeline.fileSuffix(f) -> f).toMap)
+  }
+}

@@ -1179,9 +1179,6 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
   override def filter(filters: Array[Filter]): Unit = {
     val kinds = EncodePipeline.plan(tableSchema).map(p => p.name -> p).toMap
     val sets = filters.flatMap(f => GraftPruning.survivorsOf(spark, outDir, kinds, f))
-    if (sys.env.contains("GRAFT_RF_DEBUG"))
-      println(s"[graft-rf-debug] filters=${filters.mkString(" ; ")} " +
-        s"sets=${sets.map(_.toSeq.sorted).mkString("|")} planned=${plannedParts.map(_.part).toSeq.sorted}")
     if (sets.nonEmpty) {
       val s = sets.reduce(_ intersect _)
       runtimeSurvivors = Some(s)
@@ -1285,30 +1282,26 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
     * minus live delete-vector positions */
   override def estimateStatistics(): Statistics = {
     try {
-      val meta = EncodePipeline.readMetaAt(spark, outDir, gen, branch)
-      import org.apache.spark.sql.functions.{col, sum, max}
-      val perPart = meta.groupBy(col("__part"), col("column"))
-        .agg(sum(col("rows")).as("r"), sum(col("raw_bytes")).as("b"))
-        .groupBy(col("__part")).agg(max(col("r")).as("r"), sum(col("b")).as("b"))
-        .collect()
-      val live = perPart.filter(r => survivors.forall(_.contains(r.getInt(0))))
+      val view = EncodePipeline.manifestView(spark, outDir, gen, branch)
+      val live = view.partTotals.filter { case (p, _) => survivors.forall(_.contains(p)) }
       val deleted = (gen match {
         case Some(g) => EncodePipeline.loadDeletes(spark, outDir, g)
         case None => EncodePipeline.loadDeletes(spark, outDir)
       }).valuesIterator.map(_.foldLeft(0L)((s, x) => s + java.lang.Integer.bitCount(x & 0xff))).sum
-      val rows = live.map(_.getLong(1)).sum - deleted
-      val bytes = live.map(_.getLong(2)).sum
+      val liveRows = live.valuesIterator.map(_._1).sum
+      val rows = liveRows - deleted
+      val bytes = live.valuesIterator.map(_._2).sum
       // column-level CBO statistics (SPARK-41378 V2 column stats): NDV from
       // the manifest's KMV sketches (Iceberg Puffin parity), null counts and
       // long min/max from the exact per-part stats columns. Only computed
-      // when the optimizer will actually read them (spark.sql.cbo.enabled) —
-      // planning stays one collect() otherwise. Live delete vectors make
-      // these slight over-counts; CBO stats are estimates by contract.
+      // when the optimizer will actually read them (spark.sql.cbo.enabled).
+      // Live delete vectors make these slight over-counts; CBO stats are
+      // estimates by contract.
       val colStats: java.util.Map[NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics] =
         if (!spark.conf.get("spark.sql.cbo.enabled", "false").toBoolean)
           java.util.Collections.emptyMap()
-        else buildColumnStats(meta, live.map(_.getLong(1)).sum)
+        else buildColumnStats(view, liveRows)
       new Statistics {
         override def sizeInBytes(): OptionalLong = OptionalLong.of(math.max(bytes, 1L))
         override def numRows(): OptionalLong = OptionalLong.of(math.max(rows, 0L))
@@ -1323,52 +1316,30 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
     }
   }
 
-  /** per-column Statistics.columnStats() from the manifest alone: one grouped
-    * aggregation over the (plan-time-surviving) manifest rows. A column whose
-    * sketch merged to poison reports no distinctCount; a column with
-    * unknown-era null counts reports no nullCount; min/max only for long-kind
-    * columns (Catalyst long-backed types — Long/Timestamp/Date internals). */
-  private def buildColumnStats(meta: org.apache.spark.sql.DataFrame, liveRows: Long):
+  /** per-column Statistics.columnStats() from the manifest alone, merged
+    * from the (plan-time-surviving) parts' per-column sums and sketches. A
+    * column whose sketch merged to poison reports no distinctCount; a
+    * column with unknown-era null counts reports no nullCount; min/max only
+    * for long-kind columns (Catalyst long-backed types — Long/Timestamp/Date
+    * internals). */
+  private def buildColumnStats(view: graft.plans.ManifestView, liveRows: Long):
       java.util.Map[NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = {
-    import org.apache.spark.sql.functions.{col, sum, min, max, when, coalesce, lit}
-    val metaLive = survivors match {
-      case Some(s) => meta.filter(col("__part").isin(s.toSeq: _*))
-      case None => meta
-    }
-    val hasNulls = meta.columns.contains("null_value_count")
-    val hasStats = meta.columns.contains("value_min")
-    val hasNdv = meta.columns.contains("ndv_sketch")
-    val nullL = lit(null).cast(LongType)
-    val rowsArr = metaLive.filter(col("column").isNotNull).groupBy(col("column")).agg(
-      sum(col("rows")).as("covered"),
-      (if (hasNulls) sum(when(col("null_value_count").isNull, 1L).otherwise(0L)) else lit(1L)).as("unk"),
-      (if (hasNulls) sum(coalesce(col("null_value_count"), lit(0L))) else nullL).as("nulls"),
-      (if (hasStats) min(col("value_min")) else nullL).as("vmin"),
-      (if (hasStats) max(col("value_max")) else nullL).as("vmax"),
-      (if (hasNdv)
-        graft.functions.KmvMerge.of(coalesce(col("ndv_sketch"), lit(graft.core.Kmv.poison)))
-       else lit(null).cast(BinaryType)).as("sk")
-    ).collect()
-    val kinds = EncodePipeline.plan(tableSchema).map(p => p.name -> p.kind).toMap
-    val srcTypes = EncodePipeline.plan(tableSchema).map(p => p.name -> p.sourceType).toMap
+    val plans = EncodePipeline.plan(tableSchema).map(p => p.name -> p).toMap
     val out = new java.util.HashMap[NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
-    rowsArr.foreach { r =>
-      val name = r.getString(0)
-      if (kinds.contains(name)) {
-        val covered = r.getLong(1)
-        val ndvEst = Option(graft.core.Kmv.estimate(r.getAs[Array[Byte]]("sk")))
+    view.columnTotals(p => survivors.forall(_.contains(p)))
+      .filter { case (name, _) => plans.contains(name) }.foreach { case (name, t) =>
         val nullCnt: Option[Long] =
-          if (r.getLong(2) == 0L) Some(r.getLong(3) + (liveRows - covered)) else None
-        val isLong = kinds(name) == 'l'
+          if (t.nullsKnown) Some(t.nulls + (liveRows - t.rows)) else None
+        val isLong = plans(name).kind == 'l'
         // manifest value_min/value_max live in the CANONICAL long domain;
         // report them to the CBO only where that domain IS the column's
         // Catalyst-internal domain (r5 advice: double/float bits and their
         // unordered-bits min/max would skew selectivity estimates). Dates
         // decode to their internal day count; timestamps' micros ARE the
         // internal long.
-        def domain(v: Long): Option[Object] = srcTypes.get(name).flatMap {
+        def domain(v: Long): Option[Object] = plans(name).sourceType match {
           case LongType => Some(java.lang.Long.valueOf(v): Object)
           case TimestampType | TimestampNTZType => Some(java.lang.Long.valueOf(v): Object)
           case IntegerType => Some(java.lang.Integer.valueOf(v.toInt): Object)
@@ -1377,13 +1348,13 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
           case ByteType => Some(java.lang.Byte.valueOf(v.toByte): Object)
           case _ => None // double/float: bits order != numeric order
         }
-        val vMin = if (isLong && !r.isNullAt(4)) domain(r.getLong(4)) else None
-        val vMax = if (isLong && !r.isNullAt(5)) domain(r.getLong(5)) else None
-        if (ndvEst.nonEmpty || nullCnt.nonEmpty || vMin.nonEmpty)
+        val vMin = if (isLong) t.vMin.flatMap(domain) else None
+        val vMax = if (isLong) t.vMax.flatMap(domain) else None
+        if (t.ndv.nonEmpty || nullCnt.nonEmpty || vMin.nonEmpty)
           out.put(Expressions.column(name),
             new org.apache.spark.sql.connector.read.colstats.ColumnStatistics {
               override def distinctCount(): OptionalLong =
-                ndvEst.map(e => OptionalLong.of(e._1)).getOrElse(OptionalLong.empty())
+                t.ndv.map(e => OptionalLong.of(e._1)).getOrElse(OptionalLong.empty())
               override def nullCount(): OptionalLong =
                 nullCnt.map(OptionalLong.of).getOrElse(OptionalLong.empty())
               override def min(): java.util.Optional[Object] =
@@ -1392,7 +1363,6 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
                 vMax.map(v => java.util.Optional.of(v)).getOrElse(java.util.Optional.empty[Object]())
             })
       }
-    }
     out
   }
 }

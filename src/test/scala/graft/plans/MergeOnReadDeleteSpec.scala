@@ -188,4 +188,37 @@ class MergeOnReadDeleteSpec extends SparkTestBase {
       survivors.unionByName(extra.filter(length(col("text")) % 4 =!= 2)))
     assert(sortedRows(EncodePipeline.decodeShared(spark, out, docs.schema)) === expect)
   }
+
+  test("the fold marker of an empty materializeDeletes takes a generation above an unpublished branch") {
+    val docs = WebDocGen.dataset(spark, 300, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64) // gen 0
+    assert(EncodePipeline.deleteWhereLazy(spark, out, docs.schema,
+      length(col("text")) % 4 === 1) > 0)
+    // rolling back below the delete abandons its vectors: the deletes
+    // directory keeps files, but none of them is live
+    EncodePipeline.rollbackTo(spark, out, 0)
+    val base = EncodePipeline.createBranch(spark, out, "audit")
+    import spark.implicits._
+    val staged = spark.range(9000, 9020).map(i => WebDocGen.make(i)).toDF()
+    assert(EncodePipeline.appendToBranch(staged, "url", out, 4, "audit",
+      blockSize = 64, batchId = 1L))
+    val raw = EncodePipeline.rawManifest(spark, out)
+    val branchGen = raw.filter(col("ref") === "audit").agg(max(col("gen"))).head().getInt(0)
+    assert(branchGen > base)
+    assert(EncodePipeline.materializeDeletes(spark, out, docs.schema, "url") === 0L)
+    val foldGens = EncodePipeline.rawManifest(spark, out)
+      .filter(col("dv_folded") === true).select("gen").collect().map(_.getInt(0))
+    assert(foldGens.length === 1 && foldGens.head > branchGen)
+    // main still hides the branch, at every generation, until it is
+    // published; then it shows it
+    val n = docs.count()
+    for (g <- 0 to EncodePipeline.currentGen(spark, out))
+      assert(spark.read.format("graft").option("gen", g.toString).load(out).count() === n)
+    val pub = EncodePipeline.fastForward(spark, out, "audit", allowDivergence = true)
+    assert(pub > foldGens.head)
+    assert(spark.read.format("graft").load(out).count() === n + 20)
+    assert(spark.read.format("graft").option("gen", (pub - 1).toString).load(out)
+      .count() === n)
+  }
 }

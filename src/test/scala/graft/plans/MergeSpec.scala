@@ -169,4 +169,35 @@ class MergeSpec extends SparkTestBase {
     assert(EncodePipeline.vacuum(spark, out) > 0)
     assert(sortedRows(EncodePipeline.decodeShared(spark, out, docs.schema)) === expect)
   }
+
+  test("default batch ids stay fresh after copy-on-write rewrites") {
+    import spark.implicits._
+    val docs = WebDocGen.dataset(spark, 3000, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 256)
+    val urls = docs.select("url").orderBy("url").collect().map(_.getString(0))
+    def fresh(from: Long, n: Int) = spark.range(from, from + n).map(i => WebDocGen.make(i)).toDF()
+    def count() = EncodePipeline.decodeShared(spark, out, docs.schema).count()
+    assert(EncodePipeline.appendCommit(fresh(100000, 100), "url", out, 4, 256))
+    assert(EncodePipeline.deleteWhere(spark, out, docs.schema, "url",
+      col("url").isin(urls.slice(0, 50).toSeq: _*), blockSize = 256) === 50L)
+    assert(EncodePipeline.updateWhere(spark, out, docs.schema, "url",
+      col("url").isin(urls.slice(50, 100).toSeq: _*), Map("lang" -> lit("xx")),
+      blockSize = 256) === 50L)
+    // each default batch id is one the raw manifest has never held, so
+    // none of these calls is mistaken for a replay
+    val updates = docs.filter(col("url").isin(urls.slice(100, 130).toSeq: _*))
+      .withColumn("lang", lit("yy")).unionByName(fresh(200000, 30))
+    assert(EncodePipeline.mergeByKey(spark, out, docs.schema, "url", updates,
+      partitions = 4, blockSize = 256) === ((30L, 30L)))
+    assert(count() === 3080L)
+    assert(EncodePipeline.updateWhereLazy(spark, out, docs.schema, "url",
+      col("url").isin(urls.slice(130, 150).toSeq: _*), Map("lang" -> lit("zz")),
+      partitions = 4, blockSize = 256) === 20L)
+    val lazyUpdates = docs.filter(col("url").isin(urls.slice(150, 160).toSeq: _*))
+      .unionByName(fresh(300000, 10))
+    assert(EncodePipeline.mergeByKeyLazy(spark, out, docs.schema, "url", lazyUpdates,
+      partitions = 4, blockSize = 256) === ((10L, 10L)))
+    assert(count() === 3090L)
+  }
 }

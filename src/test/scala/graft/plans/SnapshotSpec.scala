@@ -177,4 +177,30 @@ class SnapshotSpec extends SparkTestBase {
     assert(sortedRows(ch.filter(col("_change_type") === "insert")
       .drop("_change_type")) === sortedRows(expIns))
   }
+
+  test("snapshots() under ANSI mode: a generation without a commit instant reads NULL") {
+    val all = WebDocGen.dataset(spark, 300, 4).toDF()
+    val b0 = all.filter(pmod(xxhash64(col("url")), lit(3)) === 0)
+    val b1 = all.filter(pmod(xxhash64(col("url")), lit(3)) === 1)
+    val b2 = all.filter(pmod(xxhash64(col("url")), lit(3)) === 2)
+    val out = tmpDir()
+    EncodePipeline.run(b0, "url", out, partitions = 4, blockSize = 64) // gen 0
+    assert(EncodePipeline.appendCommit(b1, "url", out, 4, 64, batchId = 1L)) // gen 1
+    assert(EncodePipeline.appendCommit(b2, "url", out, 4, 64, batchId = 2L)) // gen 2
+    // one manifest file now holds every generation, and without the
+    // instants the rewrite persisted, only its newest generation has one
+    assert(EncodePipeline.rewriteManifests(spark, out) > 0)
+    assert(new java.io.File(s"$out/commit_times.json").delete())
+    val prior = spark.conf.getOption("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      val at = EncodePipeline.snapshots(spark, out).select("gen", "committed_at")
+        .collect().map(r => r.getInt(0) -> Option(r.getTimestamp(1))).toMap
+      assert(at.keySet === Set(0, 1, 2))
+      assert(at(0).isEmpty && at(1).isEmpty && at(2).nonEmpty)
+    } finally prior match {
+      case Some(v) => spark.conf.set("spark.sql.ansi.enabled", v)
+      case None => spark.conf.unset("spark.sql.ansi.enabled")
+    }
+  }
 }
