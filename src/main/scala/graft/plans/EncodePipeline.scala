@@ -674,10 +674,9 @@ object EncodePipeline {
             files carry a per-block bm_<col> Bloom filter for point-lookup
             block skipping (Parquet bloom-filter parity); ~2 bytes/value */): Unit = {
     val spark = df.sparkSession
-    val committed: Set[Int] = try {
-      rawManifest(spark, outDir).select("__part").distinct()
-        .collect().map(_.getInt(0)).toSet
-    } catch { case _: Exception => Set.empty }
+    val committed: Set[Int] =
+      if (!hasManifest(spark, outDir)) Set.empty
+      else { val m = manifestOf(spark, outDir); m.raw.map(m.part).toSet }
 
     val partExpr = customPart.getOrElse(
       if (useHostPartitioner) saltedHostPart(key, partitions, salts) else hashPart(key, partitions))
@@ -721,13 +720,11 @@ object EncodePipeline {
       // Iceberg-manifest parity: record the data files each part committed —
       // readers open exactly the recorded files (orphans from a crashed
       // attempt are invisible even inside a committed part directory)
-      metadataEx(written, df.schema, withFiles = true)
-        .withColumn("wave", lit(w))
-        .withColumn("wall_millis", lit(System.currentTimeMillis() - waveStart))
-        .withColumn("attempt", lit(1))
-        // one file per wave commit: a torn multi-file append could record
-        // some of a part's columns without the rest, confusing resume
-        .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+      commit(spark, outDir, Txn(base = true, rows = Seq(
+        metadataEx(written, df.schema, withFiles = true)
+          .withColumn("wave", lit(w))
+          .withColumn("wall_millis", lit(System.currentTimeMillis() - waveStart))
+          .withColumn("attempt", lit(1)))))
       w += 1
     }
     writeSchemaFile(spark, outDir, df.schema)
@@ -800,8 +797,9 @@ object EncodePipeline {
     * files beside the existing ones, then commit ONE manifest append
     * recording exactly this batch's files under `wave = batchId`.
     *
-    * Exactly-once by batchId: if the manifest already carries rows for this
-    * batch the call is a no-op and returns false — the foreachBatch replay
+    * Exactly-once by batchId: if a live manifest row already holds this
+    * batch ([[Manifest.holdsBatch]]) the call is a no-op and returns false,
+    * checked before anything is written — the foreachBatch replay
     * contract (Structured Streaming re-runs a failed micro-batch with the
     * same id). A crash between the data write and the manifest append
     * leaves only invisible orphans ([[vacuum]] reclaims them); committed
@@ -811,50 +809,28 @@ object EncodePipeline {
     * superseded by older compactions. */
   def appendCommit(df: DataFrame, key: String, outDir: String, partitions: Int,
                    blockSize: Int = 4096, batchId: Long = 0L,
-                   extraMeta: Option[DataFrame] = None /* rows unioned into
-                     the SAME single-file manifest append — [[updateWhereLazy]]
-                     passes its delete-snapshot marker here so append + delete
-                     commit as ONE atomic snapshot */,
                    ref: Option[String] = None /* commit to a BRANCH: rows
                      stay invisible to main readers until [[fastForward]]
                      publishes them — [[appendToBranch]] */): Boolean = {
-    val spark = df.sparkSession
-    val t0 = System.currentTimeMillis()
-    val rawMeta = try {
-      Some(rawManifest(spark, outDir))
-    } catch { case _: Exception => None }
-    require(ref.isEmpty || rawMeta.nonEmpty,
-      s"branch commit (${ref.getOrElse("")}) needs an existing table at $outDir")
     // replay detection keys on a DEDICATED batch_id column — run()'s wave
     // numbering also starts at 0, so keying on wave would silently drop
-    // batch 0 appended to a batch-written table. Rows a DROPPED branch left
-    // behind are permanently invisible (their files may be vacuumed): their
-    // batch_id must not block a re-stage of the corrected batch — only rows
-    // that are live (main, registered-branch window, or published) replay.
-    val replayed = rawMeta.exists { m =>
-      if (!m.columns.contains("batch_id")) false
-      else {
-        val hits = m.filter(col("batch_id") === batchId)
-        if (hits.isEmpty) false
-        else if (!m.columns.contains("ref")) true
-        else {
-          val g = coalesce(col("gen"), lit(0))
-          val live = liveBranchCond(spark, outDir)
-            .foldLeft(col("ref").isNull)(_ || _)
-          val pubCovered =
-            if (!m.columns.contains("publish_to")) lit(false)
-            else m.filter(col("publish_to").isNotNull && col("ref").isNotNull)
-              .select(col("ref"), coalesce(col("publish_from"), lit(-1)),
-                col("publish_to"))
-              .collect().map(r => col("ref") === r.getString(0) &&
-                g > r.getInt(1) && g <= r.getInt(2))
-              .foldLeft(lit(false))(_ || _)
-          !hits.filter(live || pubCovered).isEmpty
-        }
-      }
-    }
-    if (replayed) return false
+    // batch 0 appended to a batch-written table
+    if (batchCommitted(df.sparkSession, outDir, batchId)) false
+    else appendBatch(df, key, outDir, partitions, blockSize, batchId, ref, deletes = None)
+  }
 
+  /** the body of [[appendCommit]] after its replay check: land `df` as new
+    * data files, then commit their manifest rows together with the staged
+    * `deletes` vectors as ONE transaction — data files are invisible
+    * orphans until it lands. A batch that writes no file commits the
+    * vectors alone. Returns whether anything committed. */
+  private def appendBatch(df: DataFrame, key: String, outDir: String, partitions: Int,
+                          blockSize: Int, batchId: Long, ref: Option[String],
+                          deletes: Option[DataFrame]): Boolean = {
+    val spark = df.sparkSession
+    val t0 = System.currentTimeMillis()
+    require(ref.isEmpty || hasManifest(spark, outDir),
+      s"branch commit (${ref.getOrElse("")}) needs an existing table at $outDir")
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def snapshot(): Map[String, Set[String]] = {
@@ -893,100 +869,59 @@ object EncodePipeline {
       (names -- before.getOrElse(dir, Set.empty)).toSeq.sorted
         .map(n => s"$outDir/data/$dir/$n")
     }
-    if (newPaths.isEmpty) { // empty batch: still commit any snapshot marker
-      extraMeta.foreach(_.coalesce(1).write.mode("append").parquet(s"$outDir/meta"))
-      return extraMeta.nonEmpty
+    if (newPaths.isEmpty) { // empty batch: still commit any staged vectors
+      deletes.foreach(d => commit(spark, outDir, Txn(deletes = Some(d))))
+      return deletes.nonEmpty
     }
-    // ONE single-file manifest append = the commit point: data files above
-    // are invisible orphans and any extraMeta delete vectors are inert
-    // until this rename lands, so the whole snapshot is atomic
-    commitBatchMeta(spark, outDir, df.schema, newPaths, batchId, t0, rawMeta,
-      extraMeta, ref)
-    // a table CREATED by appendCommit (streaming first batch) records its
-    // placement. Only when this commit created the table: a pre-spec-era
-    // table's placement is unknown (host/custom), so stamping "hash" on it
-    // would lie to the storage-partitioned-join machinery.
-    if (rawMeta.isEmpty && spec.isEmpty)
+    val gen = commit(spark, outDir, Txn(deletes = deletes,
+      appends = Seq(batchRows(spark, outDir, df.schema, newPaths, batchId, t0, ref))))
+    writeSchemaFile(spark, outDir, df.schema)
+    // a table CREATED by this commit (gen-less, see [[commit]]) records its
+    // placement. Only then: a pre-spec-era table's placement is unknown
+    // (host/custom), so stamping "hash" on it would lie to the
+    // storage-partitioned-join machinery.
+    if (gen == 0 && spec.isEmpty)
       writePartSpec(spark, outDir, PartSpec("hash", key, partitions, salts = 4))
     true
   }
 
-
-  /** shared tail of [[appendCommit]] and [[commitDelta]]: build the manifest
-    * rows describing freshly written data files (file lists, stats, batch
-    * id, current generation per part) and commit them — plus any snapshot
-    * marker rows — as ONE single-file manifest append (the atomic commit
-    * point). Kept in one place so the two callers cannot drift. */
-  private def commitBatchMeta(spark: SparkSession, outDir: String,
-      schema: StructType, files: Seq[String], batchId: Long, t0: Long,
-      rawMeta: Option[DataFrame], extraMeta: Option[DataFrame],
-      ref: Option[String] = None): Unit = {
+  /** manifest rows describing freshly written data files as a tracked batch
+    * (file lists, stats, batch id) — shared by [[appendBatch]] and
+    * [[commitDelta]] so the two cannot drift. Branch commits carry their
+    * ref: invisible to main readers until a publish marker covers their
+    * generation ([[fastForward]]). */
+  private def batchRows(spark: SparkSession, outDir: String, schema: StructType,
+                        files: Seq[String], batchId: Long, t0: Long,
+                        ref: Option[String] = None): DataFrame = {
     val written = spark.read.option("basePath", s"$outDir/data")
       .parquet(files: _*)
-    var rows = metadataEx(written, schema, withFiles = true)
+    val rows = metadataEx(written, schema, withFiles = true)
       .withColumn("wave", lit(batchId.toInt))
       .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
       .withColumn("attempt", lit(1))
       .withColumn("batch_id", lit(batchId))
-    // every append is its own SNAPSHOT: the batch commits at the table's
-    // next generation tagged additive=true, so [[readMetaAt]] keeps it
-    // visible above the part's replacing floor (a past compaction cannot
-    // supersede it) AND time travel below its generation excludes it —
-    // decodeSharedAt(g) now cuts exactly between commits. When the batch
-    // rides with a delete marker (updateWhereLazy / commitDelta atomic
-    // snapshots) both sides computed 1+max from the same pre-commit
-    // manifest and share one generation. A table CREATED by this commit
-    // (rawMeta empty) stays the gen-less base, exactly as run() writes it.
-    if (rawMeta.nonEmpty)
-      rows = rows.withColumn("gen", lit(nextGenOf(spark, outDir)))
-        .withColumn("additive", lit(true))
-    // branch commits carry their ref: invisible to main readers until a
-    // publish marker covers this generation ([[fastForward]])
-    ref.foreach(b => rows = rows.withColumn("ref", lit(b)))
-    extraMeta.map(m => rows.unionByName(m, allowMissingColumns = true))
-      .getOrElse(rows)
-      // repartition (not coalesce): a 1-way coalesce would serialize the
-      // whole upstream metadata aggregation into one task; the rows are a
-      // few KB, so the exchange is free and the append stays one file
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
-    writeSchemaFile(spark, outDir, schema)
+    ref.fold(rows)(b => rows.withColumn("ref", lit(b)))
   }
 
   /** driver-side commit for SQL row-level (delta) writes — the tail ends of
     * [[appendCommit]] and [[deleteWhereLazy]] replayed over files/bitmaps
     * the executors produced: `insertedFiles` (already under `data/__part=p/`)
-    * manifest-append as a tracked batch, `deletes` land as txn-tagged
-    * positional vectors plus a snapshot marker. The whole delta is ONE
-    * ATOMIC SNAPSHOT: vectors are staged inert first, then the insert
-    * manifest rows and the delete marker land in a single one-file
-    * manifest append — a crash before it leaves only invisible orphans
-    * (untracked data files, inert vectors; [[vacuum]] reclaims both). */
+    * commit as a tracked batch and `deletes` as positional vectors, in ONE
+    * transaction ([[commit]]) — a crash before it lands leaves only
+    * invisible orphans (untracked data files, inert vectors; [[vacuum]]
+    * reclaims both). */
   def commitDelta(spark: SparkSession, outDir: String, sourceSchema: StructType,
                   insertedFiles: Seq[String],
                   deletes: Seq[(String, Int, Array[Byte])],
                   batchId: Long): Unit = {
-    // phase 1: stage the delete vectors (inert until their marker commits)
-    val marker: Option[DataFrame] = if (deletes.nonEmpty) {
-      val txn = java.util.UUID.randomUUID().toString
-      val nextGen = nextGenOf(spark, outDir)
-      val spark2 = spark
-      import spark2.implicits._
-      deletes.toDF("file", "block", "bitmap").withColumn("gen", lit(nextGen))
-        .withColumn("txn", lit(txn))
-        .write.mode("append").parquet(s"$outDir/deletes")
-      Some(genMarker(spark, nextGen, Some(txn)))
-    } else None
-    // phase 2 (the commit point): one single-file manifest append carries
-    // the insert rows AND the delete marker
-    if (insertedFiles.nonEmpty) {
-      val rawMeta = try {
-        Some(rawManifest(spark, outDir))
-      } catch { case _: Exception => None }
-      commitBatchMeta(spark, outDir, sourceSchema, insertedFiles, batchId,
-        System.currentTimeMillis(), rawMeta, marker)
-    } else {
-      marker.foreach(_.coalesce(1).write.mode("append").parquet(s"$outDir/meta"))
-    }
+    if (insertedFiles.isEmpty && deletes.isEmpty) return
+    import spark.implicits._
+    commit(spark, outDir, Txn(
+      appends = if (insertedFiles.isEmpty) Nil
+        else Seq(batchRows(spark, outDir, sourceSchema, insertedFiles, batchId,
+          System.currentTimeMillis())),
+      deletes = if (deletes.isEmpty) None else Some(deletes.toDF("file", "block", "bitmap"))))
+    if (insertedFiles.nonEmpty) writeSchemaFile(spark, outDir, sourceSchema)
   }
 
   /** OVERWRITE as a snapshot (Iceberg INSERT OVERWRITE parity): replace the
@@ -1020,8 +955,6 @@ object EncodePipeline {
     require(raw.columns.contains("data_files"),
       s"replaceCommit($outDir): this table predates file-tracked metadata " +
         "(no data_files column) — overwrite it with the legacy delete+run path")
-    val maxG = currentGen(spark, outDir)
-    val nextGen = maxG + 1
     val partsBefore = readMeta(spark, outDir).filter(col("__part") >= 0)
       .select("__part").distinct().collect().map(_.getInt(0)).toSeq
 
@@ -1048,27 +981,24 @@ object EncodePipeline {
           .filter(c => enc0.columns.contains(s"e_$c"))
           .foldLeft(enc0)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
         Some(landAndDescribe(spark, outDir, df.schema, enc, 0 until p, t0)
-          .withColumn("gen", lit(nextGen))
           .withColumn("additive", lit(false))
           .withColumn("overwrite", lit(true)))
       }
     val newParts: Set[Int] = newRows.map(_.select("__part").distinct()
       .collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
     val tombs = tombstoneRows(readMeta(spark, outDir),
-        partsBefore.filterNot(newParts), nextGen, t0)
+        partsBefore.filterNot(newParts), t0)
       .map(_.withColumn("overwrite", lit(true)))
     // overwrite of an already-empty table by an empty df: still advance the
     // generation (the user asked for a snapshot) via a zero-file marker
     val marker = if (newRows.isEmpty && tombs.isEmpty)
-      Some(genMarker(spark, nextGen).withColumn("overwrite", lit(true)))
+      Some(genMarker(spark).withColumn("overwrite", lit(true)))
     else None
-    Seq(newRows, tombs, marker).flatten
-      .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+    val gen = commit(spark, outDir, Txn(rows = Seq(newRows, tombs, marker).flatten))
     writeSchemaFile(spark, outDir, df.schema)
     if (spec.isEmpty && newRows.nonEmpty)
       writePartSpec(spark, outDir, PartSpec("hash", key, partitions, salts = 4))
-    nextGen
+    gen
   }
 
   // ---------------- compaction (manifest generations) ----------------
@@ -1095,7 +1025,6 @@ object EncodePipeline {
     val t0 = System.currentTimeMillis()
     val meta = readMeta(spark, outDir)
     if (!meta.columns.contains("data_files")) return Nil
-    val hasGen = meta.columns.contains("gen")
     // a part's manifest rows are (column × commit)-grained: total files is
     // the DISTINCT union across commits, total blocks the per-column sum
     val perCol = meta.groupBy(col("__part"), col("column")).agg(
@@ -1115,12 +1044,9 @@ object EncodePipeline {
         (coalesce(col("nfiles"), lit(0L)) >= minFiles || col("over") === 1))
       .select("__part").collect().map(_.getInt(0)).sorted
     if (cands.isEmpty) return Nil
-    val nextGen = nextGenOf(spark, outDir)
     val enc = readData(spark, outDir).filter(col("__part").isin(cands.toSeq: _*))
-    rewriteBlocks(spark, outDir, sourceSchema, enc, cands.toSeq, blockSize, t0)
-      .withColumn("gen", lit(nextGen))
-      // one-file append = atomic generation flip (no torn snapshots)
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+    commit(spark, outDir, Txn(rows = Seq(
+      rewriteBlocks(spark, outDir, sourceSchema, enc, cands.toSeq, blockSize, t0))))
     cands.toSeq
   }
 
@@ -1234,7 +1160,6 @@ object EncodePipeline {
     val t0 = System.currentTimeMillis()
     val meta = readMeta(spark, outDir)
     if (!meta.columns.contains("data_files")) return Nil
-    val hasGen = meta.columns.contains("gen")
     val tracked = meta.filter(col("data_files").isNotNull)
     // commit grain: one append's manifest rows share a data_files list per
     // part (rows is per-column but identical across a commit's columns;
@@ -1259,7 +1184,6 @@ object EncodePipeline {
       .select("__part").collect().map(_.getInt(0))
       .filterNot(partLevel).sorted.toSeq
     if (cands.isEmpty) return Nil
-    val nextGen = nextGenOf(spark, outDir)
 
     val smallSets = commits
       .filter(isSmall && col("__part").isin(cands: _*))
@@ -1276,15 +1200,12 @@ object EncodePipeline {
       .option("basePath", s"$outDir/data").parquet(smallPaths: _*)
     val newRows = rewriteBlocks(spark, outDir, sourceSchema, enc, cands,
         blockSize, t0, maxBlk)
-      .withColumn("gen", lit(nextGen))
     // untouched commits carry forward verbatim at the new generation: same
     // files, same stats, same batch_id (streaming replay detection keeps
     // working); only the packed-away small commits are superseded
     val kept = demoteRef(tracked.filter(col("__part").isin(cands: _*))
       .join(smallSets, Seq("__part", "data_files"), "left_anti"))
-      .withColumn("gen", lit(nextGen))
-    newRows.unionByName(kept, allowMissingColumns = true)
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+    commit(spark, outDir, Txn(rows = Seq(newRows, kept)))
     cands
   }
 
@@ -1306,7 +1227,6 @@ object EncodePipeline {
     requireNoLiveDeletes(spark, outDir, "deleteWhere")
     val t0 = System.currentTimeMillis()
     val meta = readMeta(spark, outDir)
-    val hasGen = meta.columns.contains("gen")
     val dicts = (try loadDicts(spark, outDir)
                  catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
     // `parts` scopes the ENCODED read so parquet partition pruning keeps
@@ -1324,26 +1244,16 @@ object EncodePipeline {
     if (byPart.isEmpty) return 0L
     val cands = byPart.map(_._1).toSeq.sorted
     requireFileTracked(meta, cands, "deleteWhere")
-    val nextGen = nextGenOf(spark, outDir)
-    val nDeleted = byPart.map(_._2).sum
     val fullParts = byPart.filter(t => t._2 == t._3).map(_._1).toSeq.sorted
     val liveParts = cands.filterNot(fullParts.toSet)
     val newRows = if (liveParts.isEmpty) None else {
       val survivors = decoded(liveParts).filter(!hit)
       val encOut = encode(survivors, key, math.max(1, liveParts.length),
         blockSize, partExpr = Some(col("__part")))
-      Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0)
-        .withColumn("gen", lit(nextGen)))
+      Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
     }
-    val tombstones = tombstoneRows(meta, fullParts, nextGen, t0)
-    val manifest = (newRows, tombstones) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case _                  => return 0L
-    }
-    manifest.repartition(1).write.mode("append").parquet(s"$outDir/meta")
-    nDeleted
+    commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(meta, fullParts, t0)))
+    byPart.map(_._2).sum
   }
 
   /** a part whose every row was removed must still advance generation, or
@@ -1351,7 +1261,7 @@ object EncodePipeline {
     * file list (explode reads them as zero files; vacuum reclaims the
     * directory) */
   private def tombstoneRows(meta: DataFrame, fullParts: Seq[Int],
-                            nextGen: Int, t0: Long): Option[DataFrame] =
+                            t0: Long): Option[DataFrame] =
     if (fullParts.isEmpty) None else Some(
       meta.filter(col("data_files").isNotNull && col("__part").isin(fullParts: _*))
         .select(col("__part"), col("column")).distinct()
@@ -1368,8 +1278,7 @@ object EncodePipeline {
         .withColumn("data_files", array().cast("array<string>"))
         .withColumn("wave", lit(-1))
         .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
-        .withColumn("attempt", lit(1))
-        .withColumn("gen", lit(nextGen)))
+        .withColumn("attempt", lit(1)))
 
   /** copy-on-write row-level UPDATE (Iceberg COW parity): rewrite ONLY the
     * parts containing matching rows — every row of an affected part
@@ -1394,7 +1303,6 @@ object EncodePipeline {
     requireNoLiveDeletes(spark, outDir, "updateWhere")
     val t0 = System.currentTimeMillis()
     val meta = readMeta(spark, outDir)
-    val hasGen = meta.columns.contains("gen")
     val dicts = (try loadDicts(spark, outDir)
                  catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
     // `parts` scopes the ENCODED read so parquet partition pruning keeps
@@ -1412,7 +1320,6 @@ object EncodePipeline {
     if (byPart.isEmpty) return 0L
     val cands = byPart.map(_._1).toSeq.sorted
     requireFileTracked(meta, cands, "updateWhere")
-    val nextGen = nextGenOf(spark, outDir)
     val rewritten = decoded(cands)
       .select(col("__part") +: sourceSchema.fields.toSeq.map { f =>
         set.get(f.name) match {
@@ -1422,9 +1329,8 @@ object EncodePipeline {
       }: _*)
     val encOut = encode(rewritten, key, math.max(1, cands.length),
       blockSize, partExpr = Some(col("__part")))
-    landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0)
-      .withColumn("gen", lit(nextGen))
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+    commit(spark, outDir, Txn(rows = Seq(
+      landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0))))
     byPart.map(_._2).sum
   }
 
@@ -1447,7 +1353,6 @@ object EncodePipeline {
     requireNoLiveDeletes(spark, outDir, "rewriteSorted")
     val t0 = System.currentTimeMillis()
     val meta = readMeta(spark, outDir)
-    val hasGen = meta.columns.contains("gen")
     // tombstoned (empty-file-list) parts have nothing to re-cluster and
     // would make the rewrite 'wrote no files' — skip them, like compact
     val cands = meta.filter(col("__part") >= 0 &&
@@ -1456,7 +1361,6 @@ object EncodePipeline {
       .collect().map(_.getInt(0)).toSeq.sorted
     if (cands.isEmpty) return Nil
     requireFileTracked(meta, cands, "rewriteSorted")
-    val nextGen = nextGenOf(spark, outDir)
     val dicts = (try loadDicts(spark, outDir)
                  catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
     val dec = decode(readData(spark, outDir), sourceSchema,
@@ -1473,9 +1377,8 @@ object EncodePipeline {
     } catch { case _: Exception => Nil }
     val encOut = inheritedBloom.filter(c => enc0.columns.contains(s"e_$c"))
       .foldLeft(enc0)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
-    landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0)
-      .withColumn("gen", lit(nextGen))
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+    commit(spark, outDir, Txn(rows = Seq(
+      landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0))))
     cands
   }
 
@@ -1568,11 +1471,9 @@ object EncodePipeline {
       s"mergeByKey updates must be unique by '$key'")
     requireNoLiveDeletes(spark, outDir, "mergeByKey")
     val t0 = System.currentTimeMillis()
-    val meta = readMeta(spark, outDir)
-    val hasGen = meta.columns.contains("gen")
     val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
-    if (meta.columns.contains("batch_id") &&
-        !meta.filter(col("batch_id") === bid).isEmpty) return (0L, 0L)
+    if (batchCommitted(spark, outDir, bid)) return (0L, 0L)
+    val meta = readMeta(spark, outDir)
     val dicts = (try loadDicts(spark, outDir)
                  catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
     // `parts` scopes the ENCODED read so parquet partition pruning keeps
@@ -1597,7 +1498,6 @@ object EncodePipeline {
       else upKeys.join(decoded(cands).select(col(key)), Seq(key), "left_semi").count()
     if (byPart.nonEmpty) {
       requireFileTracked(meta, cands, "mergeByKey")
-      val nextGen = nextGenOf(spark, outDir)
       val survivors = decoded(cands)
         .join(upKeys, Seq(key), "left_anti")
         // anti-join reorders the lead column; restore canonical order
@@ -1609,19 +1509,13 @@ object EncodePipeline {
       val newRows = if (liveParts.isEmpty) None else {
         val encOut = encode(survivors, key, math.max(1, liveParts.length),
           blockSize, partExpr = Some(col("__part")))
-        Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0)
-          .withColumn("gen", lit(nextGen)))
+        Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
       }
-      val tombstones = tombstoneRows(meta, fullParts, nextGen, t0)
-      val manifest = (newRows, tombstones) match {
-        case (Some(a), Some(b)) => Some(a.unionByName(b, allowMissingColumns = true))
-        case (a, b)             => a.orElse(b)
-      }
-      manifest.foreach(_.repartition(1).write.mode("append").parquet(s"$outDir/meta"))
+      commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(meta, fullParts, t0)))
       survivors.unpersist()
     }
-    appendCommit(updates.select(sourceSchema.fieldNames.map(col).toSeq: _*),
-      key, outDir, partitions, blockSize, bid)
+    appendBatch(updates.select(sourceSchema.fieldNames.map(col).toSeq: _*),
+      key, outDir, partitions, blockSize, bid, ref = None, deletes = None)
     (nReplaced, nUp - matchedKeys)
   }
 
@@ -1658,35 +1552,26 @@ object EncodePipeline {
   def deleteWhereLazy(spark: SparkSession, outDir: String,
                       sourceSchema: StructType, pred: Column,
                       excludeFiles: Set[String]): Long = {
-    val (nDel, marker) = stageDeletes(spark, outDir, sourceSchema, pred, excludeFiles)
-    // commit point: ONE single-file manifest append (an atomic rename on
-    // the committer side) activates the staged vectors
-    marker.foreach(_.coalesce(1).write.mode("append").parquet(s"$outDir/meta"))
+    val (nDel, dv) = deleteVectors(predicateHits(spark, outDir, sourceSchema, pred, excludeFiles))
+    try if (nDel > 0) commit(spark, outDir, Txn(deletes = Some(dv)))
+    finally dv.unpersist()
     nDel
   }
 
-  /** phase 1 of a merge-on-read delete: compute the positional vectors and
-    * write them to `deletes/` tagged with a fresh transaction token — they
-    * are INERT ([[loadDeletes]] ignores txns without committed markers)
-    * until the returned snapshot-marker row lands in the manifest. Callers
-    * commit the marker alone ([[deleteWhereLazy]]) or union it into the
-    * same manifest append as other commit rows for an atomic multi-part
-    * snapshot ([[updateWhereLazy]], [[commitDelta]]). Returns (rows
-    * deleted, marker to append — None when nothing matched). */
-  private def stageDeletes(spark: SparkSession, outDir: String,
-                           sourceSchema: StructType, pred: Column,
-                           excludeFiles: Set[String]): (Long, Option[DataFrame]) = {
-    val dec = decodeLineage(spark, outDir, sourceSchema)
-    val hits = dec.filter(coalesce(pred, lit(false)) &&
+  /** lineage coordinates (__file, __block, __pos) of the live rows where
+    * `pred` is TRUE, outside `excludeFiles` */
+  private def predicateHits(spark: SparkSession, outDir: String,
+                            sourceSchema: StructType, pred: Column,
+                            excludeFiles: Set[String]): DataFrame =
+    decodeLineage(spark, outDir, sourceSchema)
+      .filter(coalesce(pred, lit(false)) &&
         (if (excludeFiles.isEmpty) lit(true)
          else !col("__file").isin(excludeFiles.toSeq: _*)))
       .select(col("__file"), col("__block"), col("__pos"))
-    stageDeleteHits(spark, outDir, hits)
-  }
 
   /** the table decoded with row lineage (__file/__block/__pos), committed
     * delete vectors applied — the input both predicate- and join-shaped
-    * delete stagings filter */
+    * deletes filter */
   private def decodeLineage(spark: SparkSession, outDir: String,
                             sourceSchema: StructType): DataFrame = {
     val dicts = (try loadDicts(spark, outDir)
@@ -1696,48 +1581,34 @@ object EncodePipeline {
       keepPart = false, lineage = true, loadDeletes(spark, outDir))
   }
 
-  /** shared staging tail: turn lineage-coordinates `hits` (__file, __block,
-    * __pos) into inert txn-tagged position bitmaps on disk and return the
-    * snapshot marker that commits them. */
-  private def stageDeleteHits(spark: SparkSession, outDir: String,
-                              hits: DataFrame): (Long, Option[DataFrame]) = {
-    val perBlock = hits
+  /** the position bitmaps (file, block, bitmap, n) of lineage-coordinate
+    * `hits`, persisted, and the number of rows they delete. A [[Txn]]
+    * stages them; the caller unpersists once it committed. */
+  private def deleteVectors(hits: DataFrame): (Long, DataFrame) = {
+    val spark = hits.sparkSession
+    import spark.implicits._
+    val dv = hits
       .groupBy(col("__file").as("file"), col("__block").as("block"))
       .agg(collect_list(col("__pos")).as("positions"))
-    val spark2 = spark
-    import spark2.implicits._
-    val dv = perBlock.as[(String, Int, Seq[Int])].map { case (f, b, ps) =>
-      val bm = new Array[Byte]((ps.max >> 3) + 1)
-      ps.foreach(i => bm(i >> 3) = (bm(i >> 3) | (1 << (i & 7))).toByte)
-      (f, b, bm, ps.size.toLong)
-    }.toDF("file", "block", "bitmap", "n")
+      .as[(String, Int, Seq[Int])].map { case (f, b, ps) =>
+        val bm = new Array[Byte]((ps.max >> 3) + 1)
+        ps.foreach(i => bm(i >> 3) = (bm(i >> 3) | (1 << (i & 7))).toByte)
+        (f, b, bm, ps.size.toLong)
+      }.toDF("file", "block", "bitmap", "n")
       .persist()
-    val nDel = dv.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0)
-    val marker = if (nDel > 0) {
-      val txn = java.util.UUID.randomUUID().toString
-      val nextGen = nextGenOf(spark, outDir)
-      dv.drop("n").withColumn("gen", lit(nextGen))
-        .withColumn("txn", lit(txn))
-        .write.mode("append").parquet(s"$outDir/deletes")
-      Some(genMarker(spark, nextGen, Some(txn)))
-    } else None
-    dv.unpersist()
-    (nDel, marker)
+    (dv.agg(coalesce(sum(col("n")), lit(0L))).head().getLong(0), dv)
   }
 
   /** merge-on-read row-level UPDATE: the updated versions of the matching
     * rows APPEND as a tracked batch (assignments follow [[updateWhere]]'s
     * contract — cast to declared types, free to reference the old row, the
     * partitioning key not assignable) and the originals are vector-deleted
-    * — ZERO existing data bytes rewritten. The two sides commit as ONE
-    * ATOMIC SNAPSHOT: the delete vectors are staged first as inert
-    * txn-tagged rows ([[stageDeletes]]) — computed against the pre-update
-    * table, so no fresh-file exemption is needed — and their snapshot
-    * marker rides in the SAME single-file manifest append as the insert
-    * batch's rows. A crash anywhere before that one append leaves the
-    * table byte-for-byte unchanged (orphan data files and inert vectors;
-    * [[vacuum]] reclaims both); after it, the update is fully visible.
-    * Idempotent by `batchId` (default: [[nextBatchId]]).
+    * — ZERO existing data bytes rewritten. The vectors are computed against
+    * the pre-update table, so no fresh-file exemption is needed, and both
+    * sides commit as ONE transaction ([[commit]]): a crash anywhere before
+    * it lands leaves the table unchanged (orphan data files and inert
+    * vectors; [[vacuum]] reclaims both); after it, the update is fully
+    * visible. Idempotent by `batchId` (default: [[nextBatchId]]).
     * Returns the number of rows updated. */
   def updateWhereLazy(spark: SparkSession, outDir: String,
                       sourceSchema: StructType, key: String, pred: Column,
@@ -1750,6 +1621,7 @@ object EncodePipeline {
     require(badCols.isEmpty,
       s"updateWhereLazy assigns unknown columns: ${badCols.mkString(", ")}")
     val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
+    if (batchCommitted(spark, outDir, bid)) return 0L
     val hit = coalesce(pred, lit(false))
     val updated = decodeShared(spark, outDir, sourceSchema)
       .filter(hit)
@@ -1759,27 +1631,23 @@ object EncodePipeline {
           case None    => col(f.name)
         }
       }: _*)
-    // stage the originals' delete vectors FIRST (inert until committed);
-    // `updated` evaluates lazily inside appendCommit and still reads the
-    // pre-update snapshot — inert vectors don't apply
-    val (nDel, marker) = stageDeletes(spark, outDir, sourceSchema, pred, Set.empty)
-    val committed =
-      appendCommit(updated, key, outDir, partitions, blockSize, bid, extraMeta = marker)
-    // a batchId replay skips the whole snapshot (marker included): the
-    // staged vectors stay inert and nothing changed
-    if (committed) nDel else 0L
+    val (nDel, dv) = deleteVectors(predicateHits(spark, outDir, sourceSchema, pred, Set.empty))
+    try {
+      if (appendBatch(updated, key, outDir, partitions, blockSize, bid, ref = None,
+          deletes = Some(dv).filter(_ => nDel > 0))) nDel
+      else 0L
+    } finally dv.unpersist()
   }
 
   /** merge-on-read MERGE INTO by key (upsert): every `updates` row APPENDS
     * as a tracked batch; existing rows whose key appears in `updates` are
     * vector-deleted — ZERO existing data bytes rewritten (the Iceberg v2
     * equality-delete upsert shape, here realized as position vectors
-    * resolved at stage time). Both sides commit as ONE ATOMIC SNAPSHOT:
-    * the delete marker rides in the same single-file manifest append as
-    * the insert batch ([[updateWhereLazy]]'s discipline). `updates` must
-    * carry the table's schema and be unique by `key` (same contract as the
-    * copy-on-write [[mergeByKey]]). Idempotent by `batchId`. Returns
-    * (rows replaced, rows inserted). */
+    * resolved at stage time). Both sides commit as ONE transaction
+    * ([[updateWhereLazy]]'s discipline). `updates` must carry the table's
+    * schema and be unique by `key` (same contract as the copy-on-write
+    * [[mergeByKey]]). Idempotent by `batchId`. Returns (rows replaced,
+    * rows inserted). */
   def mergeByKeyLazy(spark: SparkSession, outDir: String,
                      sourceSchema: StructType, key: String, updates: DataFrame,
                      partitions: Int, blockSize: Int = 4096,
@@ -1792,37 +1660,90 @@ object EncodePipeline {
     require(aligned.select(col(key)).distinct().count() == nSrc,
       s"mergeByKeyLazy updates must be unique by '$key'")
     val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
-    // stage the matched originals' vectors FIRST (inert until committed):
-    // a left-semi join on the key against the source — the table may hold
-    // several rows per key (appends); all of them are replaced
+    if (batchCommitted(spark, outDir, bid)) return (0L, 0L)
+    // the matched originals' vectors: a left-semi join on the key against
+    // the source — the table may hold several rows per key (appends); all
+    // of them are replaced
     val dec = decodeLineage(spark, outDir, sourceSchema)
     val srcKeys = aligned.select(col(key)).distinct()
     val hits = dec.join(srcKeys, Seq(key), "left_semi")
       .select(col("__file"), col("__block"), col("__pos"))
-    val (nDel, marker) = stageDeleteHits(spark, outDir, hits)
-    val matchedKeys = if (nDel == 0L) 0L
-      else dec.join(srcKeys, Seq(key), "left_semi")
-        .select(col(key)).distinct().count()
-    val committed =
-      appendCommit(aligned, key, outDir, partitions, blockSize, bid, extraMeta = marker)
-    if (committed) (nDel, nSrc - matchedKeys) else (0L, 0L)
+    val (nDel, dv) = deleteVectors(hits)
+    try {
+      val matchedKeys = if (nDel == 0L) 0L
+        else dec.join(srcKeys, Seq(key), "left_semi")
+          .select(col(key)).distinct().count()
+      if (appendBatch(aligned, key, outDir, partitions, blockSize, bid, ref = None,
+          deletes = Some(dv).filter(_ => nDel > 0))) (nDel, nSrc - matchedKeys)
+      else (0L, 0L)
+    } finally dv.unpersist()
   }
 
-  /** next generation for a new commit: 1 + the RAW manifest maximum
-    * ([[currentGen]]). Allocation must NOT use the visible view
-    * ([[readMeta]]): unpublished branch commits and marker rows hold
-    * generations the view hides, and a colliding allocation would corrupt
-    * publish windows and time travel. */
-  private def nextGenOf(spark: SparkSession, outDir: String): Int =
-    1 + currentGen(spark, outDir)
+  // ---------------- the commit primitive ----------------
+
+  /** One table commit. `rows` and `appends` are the manifest row sets it
+    * lands, none carrying `gen` — [[commit]] stamps it. `appends` are
+    * additive (appended batches, publish markers) and are flagged
+    * additive = true; `rows` are everything else (replacing rewrites,
+    * tombstones, markers). `deletes` are staged position vectors (file,
+    * block, bitmap), committed under the same generation. `base` marks a
+    * wave of [[run]]'s gen-less base commit. */
+  private[plans] final case class Txn(rows: Seq[DataFrame] = Nil,
+                                      appends: Seq[DataFrame] = Nil,
+                                      deletes: Option[DataFrame] = None,
+                                      base: Boolean = false)
+
+  /** land `txn` — the only code that allocates a generation and writes to
+    * `meta/` and `deletes/`. The generation is 1 + the RAW manifest
+    * maximum ([[Manifest.currentGen]]): unpublished branch commits and
+    * marker rows hold generations the resolved view hides, so allocating
+    * from the view would collide. A commit that creates the table, and
+    * every wave of [[run]], stays gen-less (generation 0).
+    *
+    * Staged vectors land first under the generation and a fresh txn id;
+    * they stay INERT ([[loadDeletes]] ignores txns without a committed
+    * marker) until the commit point: ONE single-file manifest append of
+    * every row set plus, with vectors, the marker row that activates them.
+    * A crash before it leaves only invisible orphans. Finishes a crashed
+    * [[rewriteManifests]] swap first. Returns the generation (0 when
+    * gen-less). */
+  private[plans] def commit(spark: SparkSession, outDir: String, txn: Txn): Int = {
+    restoreManifest(spark, outDir)
+    val gen =
+      if (txn.base || !hasManifest(spark, outDir)) None
+      else Some(1 + manifestOf(spark, outDir).currentGen)
+    require(gen.nonEmpty || txn.deletes.isEmpty,
+      s"commit($outDir): delete vectors need an existing table")
+    val marker = txn.deletes.map { dv =>
+      val id = java.util.UUID.randomUUID().toString
+      dv.select(col("file"), col("block"), col("bitmap"))
+        .withColumn("gen", lit(gen.get)).withColumn("txn", lit(id))
+        .write.mode("append").parquet(s"$outDir/deletes")
+      genMarker(spark, Some(id))
+    }
+    def stamp(df: DataFrame) = gen.fold(df)(g => df.withColumn("gen", lit(g)))
+    val sets = txn.rows.map(stamp) ++
+      txn.appends.map(d => gen.fold(d)(g =>
+        d.withColumn("gen", lit(g)).withColumn("additive", lit(true)))) ++
+      marker.map(stamp)
+    require(sets.nonEmpty, s"commit($outDir): empty transaction")
+    val all = sets.reduce(_.unionByName(_, allowMissingColumns = true))
+    // one file: coalesce keeps a driver-local row set one task, while
+    // repartition keeps an aggregation over data files parallel up to the
+    // single-task write
+    val local = all.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    (if (local) all.coalesce(1) else all.repartition(1))
+      .write.mode("append").parquet(s"$outDir/meta")
+    gen.getOrElse(0)
+  }
 
   /** one zero-file manifest row that advances the table generation without
     * touching data — the snapshot marker a merge-on-read delete commits so
     * its vectors are time-travel-addressable. Part -1 never matches data;
     * the empty file list keeps every reader, vacuum, and compaction
     * indifferent to it. */
-  private def genMarker(spark: SparkSession, nextGen: Int,
-                        txn: Option[String] = None): DataFrame = {
+  private def genMarker(spark: SparkSession, txn: Option[String] = None): DataFrame = {
     import spark.implicits._
     Seq((-1, "__dv_marker", 0L, 0L, 0L, 0L))
       .toDF("__part", "column", "rows", "blocks", "raw_bytes", "encoded_bytes")
@@ -1831,13 +1752,21 @@ object EncodePipeline {
       .withColumn("wave", lit(-1))
       .withColumn("wall_millis", lit(0L))
       .withColumn("attempt", lit(1))
-      .withColumn("gen", lit(nextGen))
       .withColumn("txn", txn.map(lit(_)).getOrElse(lit(null).cast("string")))
   }
 
+  /** whether append batch `batchId` already committed — the replay rule
+    * ([[Manifest.holdsBatch]]) every replay-keyed writer checks at entry,
+    * before it writes anything. No manifest = nothing committed; any other
+    * read failure propagates. */
+  private[graft] def batchCommitted(spark: SparkSession, outDir: String,
+                                    batchId: Long): Boolean =
+    hasManifest(spark, outDir) &&
+      manifestOf(spark, outDir).holdsBatch(batchId, readBranches(spark, outDir))
+
   /** txns whose snapshot markers are committed in the manifest, with their
     * generations — the visibility gate for transaction-tagged delete
-    * vectors ([[stageDeletes]]). Markers are cumulative facts read from the
+    * vectors ([[commit]]). Markers are cumulative facts read from the
     * RAW manifest (generation supersede does not apply to them). No
     * manifest at all = a table that has never committed = no committed
     * txns — the ONLY case that legitimately answers empty. Any other
@@ -1846,9 +1775,29 @@ object EncodePipeline {
   private def committedTxnGens(spark: SparkSession, outDir: String): Map[String, Int] =
     if (!hasManifest(spark, outDir)) Map.empty else manifestOf(spark, outDir).txnGens
 
-  private def hasManifest(spark: SparkSession, outDir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/meta")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  /** whether the table has a manifest at all — the ONE test for "new
+    * table": any other manifest-read failure must propagate */
+  private[graft] def hasManifest(spark: SparkSession, outDir: String): Boolean =
+    manifestDir(spark, outDir).nonEmpty
+
+  /** the directory holding the table's manifest: `meta/`, or the
+    * `.meta_rw_old` a [[rewriteManifests]] swap moved aside before it
+    * crashed. Readers read that one in place; only [[restoreManifest]]
+    * (a writer) moves it back. */
+  private def manifestDir(spark: SparkSession,
+                          outDir: String): Option[org.apache.hadoop.fs.Path] = {
+    val meta = new org.apache.hadoop.fs.Path(s"$outDir/meta")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq(meta, new org.apache.hadoop.fs.Path(s"$outDir/.meta_rw_old")).find(fs.exists)
+  }
+
+  /** finish a [[rewriteManifests]] swap that crashed between its two
+    * renames: move the set-aside manifest back to `meta/` */
+  private def restoreManifest(spark: SparkSession, outDir: String): Unit = {
+    val meta = new org.apache.hadoop.fs.Path(s"$outDir/meta")
+    val fs = meta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    manifestDir(spark, outDir).filter(_ != meta).foreach(old =>
+      require(fs.rename(old, meta), s"cannot restore $old to $meta"))
   }
 
   /** rollback markers (marker gen N, target T) in commit order — a marker
@@ -1970,6 +1919,13 @@ object EncodePipeline {
           "still apply — drop the tag(s) first")
       }
     }
+    // fold marker: records that vector history at-or-below its generation
+    // was expired here — [[rollbackTo]] reads it to refuse rolling back
+    // INTO the folded range (the vectors a faithful restore would need are
+    // gone), while targets at or above it stay rollbackable
+    val foldMarker = genMarker(spark)
+      .withColumn("column", lit("__fold_marker"))
+      .withColumn("dv_folded", lit(true))
     val dv = liveDeletes(spark, outDir)
     if (dv.isEmpty) {
       // nothing live to fold, but the dir may hold INERT committed vectors
@@ -1979,19 +1935,13 @@ object EncodePipeline {
       val hadVectors = fs.exists(delPath) && fs.listStatus(delPath).exists(s =>
         s.isFile && s.getPath.getName.endsWith(".parquet") &&
           !s.getPath.getName.startsWith("."))
-      if (hadVectors) {
-        genMarker(spark, nextGenOf(spark, outDir))
-          .withColumn("column", lit("__fold_marker"))
-          .withColumn("dv_folded", lit(true))
-          .coalesce(1).write.mode("append").parquet(s"$outDir/meta")
-      }
+      if (hadVectors) commit(spark, outDir, Txn(rows = Seq(foldMarker)))
       fs.delete(delPath, true)
       return 0L
     }
     val nFolded = dv.valuesIterator
       .map(_.foldLeft(0L)((s, b) => s + java.lang.Integer.bitCount(b & 0xff))).sum
     val meta = readMeta(spark, outDir)
-    val hasGen = meta.columns.contains("gen")
     val targets = dv.keysIterator.map(_._1).toSet
     val cands = meta.filter(col("data_files").isNotNull)
       .select(col("__part"), explode(col("data_files")).as("f"))
@@ -2010,30 +1960,14 @@ object EncodePipeline {
     val liveParts = survivors.select("__part").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     val fullParts = cands.filterNot(liveParts.toSet)
-    val nextGen = nextGenOf(spark, outDir)
     val newRows = if (liveParts.isEmpty) None else {
       val encOut = encode(survivors, key, math.max(1, liveParts.length),
         blockSize, partExpr = Some(col("__part")))
-      Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0)
-        .withColumn("gen", lit(nextGen)))
+      Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
     }
-    val tombstones = tombstoneRows(meta, fullParts, nextGen, t0)
+    val tombstones = tombstoneRows(meta, fullParts, t0)
     survivors.unpersist()
-    // fold marker: records that vector history at-or-below this generation
-    // was expired here — [[rollbackTo]] reads it to refuse rolling back
-    // INTO the folded range (the vectors a faithful restore would need are
-    // gone), while targets at or above this generation stay rollbackable.
-    val foldMarker = genMarker(spark, nextGen)
-      .withColumn("column", lit("__fold_marker"))
-      .withColumn("dv_folded", lit(true))
-    val manifest = (newRows, tombstones) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (Some(a), None)    => a
-      case (None, Some(b))    => b
-      case _                  => return 0L
-    }
-    manifest.unionByName(foldMarker, allowMissingColumns = true)
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
+    commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstones :+ foldMarker))
     fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/deletes"), true)
     nFolded
   }
@@ -2071,17 +2005,6 @@ object EncodePipeline {
     readRefs(spark, outDir).collect {
       case (n, g) if n.startsWith("branch:") => n.stripPrefix("branch:") -> g
     }
-
-  /** rows inside a REGISTERED branch's live window (ref matches, gen > its
-    * creation base) — dropBranch's abandonment boundary. ONE place for the
-    * rule: [[vacuum]]'s file protection and [[appendCommit]]'s batch-id
-    * replay detection both resolve liveness through it. None when no
-    * branches are registered. Only bind on manifests with a `ref` column. */
-  private def liveBranchCond(spark: SparkSession, outDir: String): Option[Column] =
-    readBranches(spark, outDir)
-      .map { case (n, b) =>
-        col("ref") === n && coalesce(col("gen"), lit(0)) > b }
-      .reduceOption(_ || _)
 
   private def writeRefs(spark: SparkSession, outDir: String,
                         tags: Map[String, Int]): Unit = {
@@ -2251,15 +2174,11 @@ object EncodePipeline {
       s"fastForward($branch): main advanced past the branch's last sync " +
       s"point $divBase (additive appends); pass allowDivergence = true " +
       "to merge-publish")
-    val nextGen = maxG + 1
-    genMarker(spark, nextGen)
+    commit(spark, outDir, Txn(appends = Seq(genMarker(spark)
       .withColumn("column", lit("__publish_marker"))
-      .withColumn("additive", lit(true))
       .withColumn("ref", lit(branch))
       .withColumn("publish_from", lit(pubTo))
-      .withColumn("publish_to", lit(head))
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
-    nextGen
+      .withColumn("publish_to", lit(head)))))
   }
 
   /** the table as a BRANCH reader sees it: current main content PLUS the
@@ -2321,20 +2240,20 @@ object EncodePipeline {
     // registered branches pin their (possibly unpublished) commits' files —
     // main-invisible but readable via option("branch"). Dropped branches'
     // rows lose this protection and their files reclaim here.
-    val branchRows: Seq[DataFrame] = {
-      val raw = rawManifest(spark, outDir)
-      // scope to each branch's live window ([[liveBranchCond]]) — rows a
-      // dropped incarnation of a reused name left behind stay reclaimable
-      if (!raw.columns.contains("ref")) Nil
-      else liveBranchCond(spark, outDir).toSeq
-        .map(live => raw.filter(live).select(col("data_files")))
+    // Scoped to each branch's live window ([[Manifest.inBranchWindow]]):
+    // rows a dropped incarnation of a reused name left behind stay
+    // reclaimable.
+    val branchFiles: Iterator[String] = {
+      val m = manifestOf(spark, outDir)
+      val branches = readBranches(spark, outDir)
+      m.raw.iterator.filter(r => m.inBranchWindow(r, branches) && !m.isNull(r, m.iFiles))
+        .flatMap(_.getSeq[String](m.iFiles))
     }
-    val referenced = (Seq(meta) ++ branchRows ++
-        tagGens.map(g => readMetaAt(spark, outDir, Some(g))))
+    val referenced = (Seq(meta) ++ tagGens.map(g => readMetaAt(spark, outDir, Some(g))))
       .map(_.filter(col("data_files").isNotNull)
         .select(explode(col("data_files")).as("f")))
       .reduce(_.unionByName(_)).distinct()
-      .collect().map(r => fileSuffix(r.getString(0))).toSet
+      .collect().map(r => fileSuffix(r.getString(0))).toSet ++ branchFiles.map(fileSuffix)
     val dataPath = new org.apache.hadoop.fs.Path(s"$outDir/data")
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dataPath)) return 0
@@ -2408,14 +2327,6 @@ object EncodePipeline {
               .filter(col("any_live") === 0)
               .select("__f").collect().map(_.getString(0)).toSeq
           }
-        if (sys.props.get("graft.debug.vacuum").contains("1")) {
-          val perFile = raw.groupBy(col("__src_file")).count().collect()
-            .map(r => s"${r.getString(0)}=${r.getLong(1)}").mkString(", ")
-          System.err.println(s"[vacuum-dv] $outDir rbM=$rbM maxTag=$maxTag " +
-            s"cols=${raw.columns.mkString("/")} rowsPerFile={$perFile} " +
-            s"orphan=$orphan abandoned=$abandonedFiles " +
-            s"dvFilesOnDisk=${dvFiles.map(_.getPath.getName).mkString(",")}")
-        }
         (orphan ++ abandonedFiles).distinct.filter(_.nonEmpty).foreach { uri =>
           if (fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(uri)), false))
             deleted += 1
@@ -2548,22 +2459,17 @@ object EncodePipeline {
         s"${lost.size} snapshot(s) at or below that generation was expired " +
         "(materializeDeletes/vacuum) — a faithful restore is impossible")
     }
-    val nextGen = maxG + 1
     // parts that exist now but not at `gen` empty out at the new generation
     val born = readMeta(spark, outDir).filter(col("__part") >= 0)
       .select("__part").distinct()
       .join(target.select("__part").distinct(), Seq("__part"), "left_anti")
       .collect().map(_.getInt(0)).toSeq
-    val rows = demoteRef(target).withColumn("gen", lit(nextGen))
-      .withColumn("additive", lit(false))
-    val tomb = tombstoneRows(readMeta(spark, outDir), born, nextGen, t0)
-    val marker = genMarker(spark, nextGen)
+    val marker = genMarker(spark)
       .withColumn("column", lit("__rb_marker"))
       .withColumn("rollback_to", lit(gen))
-    Seq(tomb, Some(marker)).flatten
-      .foldLeft(rows)((a, b) => a.unionByName(b, allowMissingColumns = true))
-      .repartition(1).write.mode("append").parquet(s"$outDir/meta")
-    nextGen
+    commit(spark, outDir, Txn(rows =
+      demoteRef(target).withColumn("additive", lit(false)) +:
+        (tombstoneRows(readMeta(spark, outDir), born, t0).toSeq :+ marker)))
   }
 
   /** positions set in `now` and not in `before` (a shorter `before` reads
@@ -2889,7 +2795,8 @@ object EncodePipeline {
     * generation pins and tags stay exact. */
   def commitTimes(spark: SparkSession, outDir: String): Map[Int, Long] = {
     val genOfFile = manifestOf(spark, outDir).genOfSrcFile
-    val metaDir = new org.apache.hadoop.fs.Path(s"$outDir/meta")
+    val metaDir = manifestDir(spark, outDir)
+      .getOrElse(new org.apache.hadoop.fs.Path(s"$outDir/meta"))
     val fs = metaDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // normalize both sides to bare paths: input_file_name says
     // file:///x/y, FileStatus says file:/x/y
@@ -2956,6 +2863,7 @@ object EncodePipeline {
     * read may overlap the two-rename swap window. Returns the number of
     * manifest files removed (0 = already compact). */
   def rewriteManifests(spark: SparkSession, outDir: String): Int = {
+    restoreManifest(spark, outDir)
     val metaPath = new org.apache.hadoop.fs.Path(s"$outDir/meta")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(metaPath)) return 0
@@ -3321,18 +3229,12 @@ object EncodePipeline {
     catch { case _: Exception => Nil }
 
   /** the table's manifest snapshot — the cached stand-in for
-    * `spark.read.option("mergeSchema", "true").parquet(outDir/meta)`.
-    * Self-heals a crashed [[rewriteManifests]] swap: if the meta directory
-    * is missing but the rename-aside `.meta_rw_old` exists, the original
-    * manifest is restored before reading (r5 advice durability hole). */
+    * `spark.read.option("mergeSchema", "true").parquet(outDir/meta)`, read
+    * from wherever [[manifestDir]] finds it. Reading never changes the
+    * table. */
   private[graft] def manifestOf(spark: SparkSession, outDir: String): Manifest = {
-    val metaP = new org.apache.hadoop.fs.Path(s"$outDir/meta")
-    val fs = metaP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(metaP)) {
-      val old = new org.apache.hadoop.fs.Path(s"$outDir/.meta_rw_old")
-      if (fs.exists(old)) fs.rename(old, metaP)
-    }
-    cachedDir(spark, s"$outDir/meta") { (schema, rows) =>
+    val dir = manifestDir(spark, outDir).fold(s"$outDir/meta")(_.toString)
+    cachedDir(spark, dir) { (schema, rows) =>
       val m = Manifest.fromDir(schema, rows)
       (m, m.approxBytes)
     }
@@ -3573,7 +3475,6 @@ object EncodePipeline {
     // (ALTER TABLE ADD COLUMNS before any insert leaves no e_ column)
     val avail = written.columns.toSet
     val schemaAvail = StructType(schema.fields.filter(f => avail.contains("e_" + f.name)))
-    val nextGen = maxG + 1
     val refreshed: Option[DataFrame] = if (schemaAvail.isEmpty) None else {
       val fresh = metadata(written, schemaAvail)
       // per-part current file list = the union across the part's rows
@@ -3605,12 +3506,9 @@ object EncodePipeline {
       if (d.columns.contains(c))
         d.withColumn(c, lit(null).cast(d.schema(d.schema.fieldIndex(c)).dataType))
       else d)
-      .withColumn("gen", lit(nextGen))
       .withColumn("additive", lit(false))
       .withColumn("analyzed", lit(true))
-    // one-file append = atomic generation flip
-    combined.repartition(1).write.mode("append").parquet(s"$outDir/meta")
-    nextGen
+    commit(spark, outDir, Txn(rows = Seq(combined)))
   }
 
   /** Scan-free table statistics served ENTIRELY from the manifest — no data

@@ -74,6 +74,38 @@ final class Manifest(val schema: StructType, rows: Array[Row], srcFiles: Array[S
   lazy val genOfSrcFile: Map[String, Int] =
     srcFiles.indices.groupBy(srcFiles(_)).map { case (f, is) => f -> is.map(i => genOf(rows(i))).max }
 
+  /** publish markers among `rs`: (branch, from exclusive, to inclusive) */
+  private def publishes(rs: Iterable[Row]): Seq[(String, Int, Int)] =
+    if (iPubTo < 0) Nil
+    else rs.iterator.filterNot(isNull(_, iPubTo)).map(r =>
+      (if (r.isNullAt(iRef)) null else r.getString(iRef),
+        intOr(r, iPubFrom, -1), r.getInt(iPubTo))).toSeq.distinct
+
+  /** a branch content row that one of `pubs` publishes */
+  private def published(r: Row, pubs: Seq[(String, Int, Int)]): Boolean = {
+    val (ref, g) = (r.getString(iRef), genOf(r))
+    pubs.exists { case (p, from, to) => p == ref && g > from && g <= to }
+  }
+
+  /** whether `r` sits in a registered branch's live window: its ref names a
+    * branch of `branches` (name → creation base) and its generation is
+    * above that base. Rows a dropped incarnation of the name left behind
+    * are outside every window. */
+  private[plans] def inBranchWindow(r: Row, branches: Map[String, Int]): Boolean =
+    iRef >= 0 && !r.isNullAt(iRef) && branches.get(r.getString(iRef)).exists(genOf(r) > _)
+
+  /** whether a LIVE row holds append batch `id` — the replay rule. Live
+    * means a main row, a row in a registered branch's window (`branches`:
+    * name → creation base), or a branch row a publish marker covers. Rows
+    * a dropped branch left behind are not live, so re-staging their batch
+    * is not a replay. */
+  def holdsBatch(id: Long, branches: Map[String, Int]): Boolean = {
+    val i = at("batch_id")
+    lazy val pubs = publishes(raw)
+    raw.exists(r => longAt(r, i).contains(id) &&
+      (iRef < 0 || r.isNullAt(iRef) || inBranchWindow(r, branches) || published(r, pubs)))
+  }
+
   /** the current main view, which planning reads on every query */
   private lazy val latest = new ManifestView(this, resolve(None, None))
 
@@ -127,19 +159,10 @@ final class Manifest(val schema: StructType, rows: Array[Row], srcFiles: Array[S
         def isMain(r: Row) = r.isNullAt(iRef)
         if (iPubTo < 0 && branch.isEmpty) inRange.filter(isMain)
         else {
-          val pubs: Seq[(String, Int, Int)] =
-            if (iPubTo < 0) Nil
-            else inRange.filterNot(isNull(_, iPubTo)).map(r =>
-              (if (r.isNullAt(iRef)) null else r.getString(iRef),
-                intOr(r, iPubFrom, -1), r.getInt(iPubTo))).distinct
+          val (pubs, own) = (publishes(inRange), branch.toMap)
           def content(r: Row) = !r.isNullAt(iRef) && isNull(r, iPubTo)
-          def published(r: Row) = {
-            val (ref, g) = (r.getString(iRef), genOf(r))
-            pubs.exists { case (p, from, to) => p == ref && g > from && g <= to }
-          }
-          def own(r: Row) = branch.exists { case (b, base) =>
-            r.getString(iRef) == b && genOf(r) > base }
-          inRange.filter(r => isMain(r) || (content(r) && (published(r) || own(r))))
+          inRange.filter(r => isMain(r) || (content(r) &&
+            (published(r, pubs) || inBranchWindow(r, own))))
         }
       }
     // the part's floor: its highest replacing generation (a part born from

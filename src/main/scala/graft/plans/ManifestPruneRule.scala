@@ -21,9 +21,10 @@ import graft.functions._
   * `__part` is the table's hive-style partition column, so Catalyst's native
   * partition pruning turns the injected predicate into "never open the
   * pruned part directories" — bytes read ∝ surviving parts, with no code
-  * change in the query. The driver-side manifest lookup is a few-KB parquet
-  * read per optimized query; old-era manifest rows (no zone maps recorded)
-  * are conservatively kept, mirroring the tier-1 readers.
+  * change in the query. The lookup answers from the driver-held
+  * [[Manifest]] in plain Scala, so optimizing a query starts no Spark job;
+  * old-era manifest rows (no zone maps recorded) are conservatively kept,
+  * mirroring the tier-1 readers.
   *
   * Guards: skipped when the condition already references `__part` (also the
   * fixed-point idempotency guard), when no conjunct is a recognizable probe,
@@ -80,10 +81,8 @@ class ManifestPruneRule(spark: SparkSession) extends Rule[LogicalPlan] with Pred
   }
 
   private def hasMeta(dataPath: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(dataPath.stripSuffix("/data") + "/meta")
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    } catch { case _: Exception => false }
+    try EncodePipeline.hasManifest(spark, dataPath.stripSuffix("/data"))
+    catch { case _: Exception => false }
 }
 
 object ManifestPruneRule {

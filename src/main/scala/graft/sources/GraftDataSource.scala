@@ -89,9 +89,8 @@ object GraftDataSource {
     * the prerequisite for snapshot-preserving overwrite; pre-tracking
     * tables overwrite by physical replace */
   private[sources] def fileTracked(spark: SparkSession, outDir: String): Boolean =
-    try EncodePipeline.rawManifest(spark, outDir)
-      .columns.contains("data_files")
-    catch { case _: Exception => false }
+    EncodePipeline.hasManifest(spark, outDir) &&
+      EncodePipeline.manifestOf(spark, outDir).has("data_files")
 
   /** parse a TIMESTAMP AS OF operand: epoch millis, an ISO-8601 instant
     * (`2026-08-20T00:00:00Z`), or a session-local SQL timestamp
@@ -145,9 +144,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     // convention from the committed data schema (appendCommit)
     val bloomCols = parameters.get("bloomCols")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$outDir/meta")
-    val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val exists = fs.exists(metaPath)
+    // a manifest a crashed rewriteManifests swap set aside still counts:
+    // only an absent manifest means a new table
+    val exists = EncodePipeline.hasManifest(spark, outDir)
     import org.apache.spark.sql.SaveMode._
     if (parameters.contains("branch"))
       require(mode == Append && exists, "option(\"branch\") writes require " +
@@ -184,7 +183,8 @@ class GraftDataSource extends TableProvider with DataSourceRegister
       case Overwrite =>
         // pre-file-tracking table (or half-created dir): the legacy
         // physical replace — no history survives
-        fs.delete(new org.apache.hadoop.fs.Path(outDir), true)
+        val dir = new org.apache.hadoop.fs.Path(outDir)
+        dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
         EncodePipeline.run(data, key, outDir, partitions, blockSize,
           sharedDictCols = sharedDictCols, bloomCols = bloomCols)
       case _ => // fresh table (any mode when absent)

@@ -64,10 +64,7 @@ class GraftStreamingWrite(outDir: String, tableSchema: StructType,
     // data file exists, so every row ever written is law-placed (appends,
     // DML, and SPJ then all agree on the same partitioner)
     val spec = EncodePipeline.readPartSpec(spark, outDir).orElse {
-      val fresh = !new Path(s"$outDir/meta")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new Path(s"$outDir/meta"))
-      if (fresh) {
+      if (!EncodePipeline.hasManifest(spark, outDir)) {
         val s = EncodePipeline.PartSpec("hash", schema.fieldNames.head,
           spark.sessionState.conf.numShufflePartitions, salts = 4)
         EncodePipeline.writePartSpec(spark, outDir, s)
@@ -82,12 +79,8 @@ class GraftStreamingWrite(outDir: String, tableSchema: StructType,
     val spark = SparkSession.active
     val files = messages.collect { case m: GraftDeltaMessage => m }
       .flatMap(_.insertedFiles).toSeq.sorted
-    val replayed = try {
-      val m = EncodePipeline.rawManifest(spark, outDir)
-      m.columns.contains("batch_id") &&
-        !m.filter(org.apache.spark.sql.functions.col("batch_id") === epochId).isEmpty
-    } catch { case _: Exception => false } // no manifest yet: first commit
-    if (replayed) dropFiles(spark, files) // duplicates of an epoch already in
+    if (EncodePipeline.batchCommitted(spark, outDir, epochId))
+      dropFiles(spark, files) // duplicates of an epoch already in
     else EncodePipeline.commitDelta(spark, outDir, schema, files,
       deletes = Nil, batchId = epochId)
   }

@@ -200,4 +200,21 @@ class MergeSpec extends SparkTestBase {
       partitions = 4, blockSize = 256) === ((10L, 10L)))
     assert(count() === 3090L)
   }
+
+  test("a merge replayed after compaction is a no-op") {
+    val docs = WebDocGen.dataset(spark, 200, 2).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 2, blockSize = 64)
+    val upd = docs.limit(4).withColumn("lang", lit("qq"))
+    def merge() = EncodePipeline.mergeByKey(spark, out, docs.schema, "url",
+      upd, partitions = 2, blockSize = 64, batchId = 42L)
+    assert(merge() === ((4L, 0L)))
+    // compaction hides the batch's rows from the resolved manifest view;
+    // the replay must still see them
+    assert(EncodePipeline.compact(spark, out, docs.schema).nonEmpty)
+    assert(merge() === ((0L, 0L)))
+    val table = EncodePipeline.decodeShared(spark, out, docs.schema)
+    assert(table.count() === 200L)
+    assert(table.filter(col("lang") === "qq").count() === 4L)
+  }
 }
