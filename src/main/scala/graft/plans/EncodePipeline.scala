@@ -3119,7 +3119,8 @@ object EncodePipeline {
   // data files on every call. The cache is bounded by an estimate of the
   // driver-heap bytes its entries hold (least recently used entries leave
   // first); a directory larger than the whole budget is read on every call
-  // and never cached.
+  // and never cached. The same cache holds each data file's block Bloom
+  // filters once a point lookup has read them ([[cachedFileIndex]]).
   private final class DirRows(val schema: StructType, val rows: Array[org.apache.spark.sql.Row])
   private final class CachedDir(val sig: String, val value: AnyRef, val bytes: Long)
 
@@ -3147,35 +3148,62 @@ object EncodePipeline {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = listingSig(fs, p) // FileNotFoundException when absent, like spark.read
-    val hit = dirCache.synchronized(dirCache.get(dir))
-    if (hit != null && hit.sig == sig) hit.value match {
-      case t: T => return t
-      case _ =>
+    cacheHit[T](dir, sig).getOrElse {
+      val df = spark.read.option("mergeSchema", "true").parquet(dir)
+        .withColumn(Manifest.SrcFile, input_file_name())
+      val (value, bytes) = build(df.schema, df.collect())
+      cachePut(dir, sig, value, bytes)
+      value
     }
-    val df = spark.read.option("mergeSchema", "true").parquet(dir)
-      .withColumn(Manifest.SrcFile, input_file_name())
-    val (value, bytes) = build(df.schema, df.collect())
+  }
+
+  /** the `T` cached under `key` with signature `sig`, if any */
+  private def cacheHit[T <: AnyRef](key: String, sig: String)(
+      implicit tag: scala.reflect.ClassTag[T]): Option[T] =
+    dirCache.synchronized(Option(dirCache.get(key))).filter(_.sig == sig)
+      .map(_.value).collect { case t: T => t }
+
+  /** cache `value` under `key`, evicting least recently used entries to make
+    * room; a value larger than the whole budget is not cached. Whether it
+    * was. */
+  private def cachePut(key: String, sig: String, value: AnyRef, bytes: Long): Boolean = {
     val budget = metaCacheBudget
     dirCache.synchronized {
-      Option(dirCache.remove(dir)).foreach(e => dirCacheBytes -= e.bytes)
-      if (bytes <= budget) {
+      Option(dirCache.remove(key)).foreach(e => dirCacheBytes -= e.bytes)
+      bytes <= budget && {
         val eldest = dirCache.values.iterator
         while (dirCacheBytes + bytes > budget && eldest.hasNext) {
           dirCacheBytes -= eldest.next().bytes
           eldest.remove()
         }
-        dirCache.put(dir, new CachedDir(sig, value, bytes))
+        dirCache.put(key, new CachedDir(sig, value, bytes))
         dirCacheBytes += bytes
+        true
       }
     }
-    value
   }
+
+  /** a data file's driver-side index (the scan keeps its block Bloom
+    * filters here), held in the metadata cache under the file's path and
+    * the same byte budget. Every write path names data files uniquely per
+    * job (Spark's job UUID, or a random UUID for row-level delta files) and
+    * never rewrites one in place, so the path alone identifies the bytes: a
+    * table rebuilt at the same path writes new names. `load` runs on a miss
+    * and returns the index with its estimated heap bytes. None when the
+    * index is not cached because it is larger than the whole budget. */
+  private[graft] def cachedFileIndex[T <: AnyRef](path: String)(load: => (T, Long))(
+      implicit tag: scala.reflect.ClassTag[T]): Option[T] =
+    cacheHit[T](path, "").orElse {
+      val (value, bytes) = load
+      if (cachePut(path, "", value, bytes)) Some(value) else None
+    }
 
   private def dirRows(spark: SparkSession, dir: String): DirRows =
     cachedDir(spark, dir)((schema, rows) =>
       (new DirRows(schema, rows), rows.iterator.map(Manifest.approxBytes).sum))
 
-  /** whether the metadata-directory cache currently holds `dir` */
+  /** whether the metadata cache currently holds `dir` (or, given a data
+    * file's path, that file's index) */
   private[graft] def dirCached(dir: String): Boolean =
     dirCache.synchronized(dirCache.containsKey(dir))
 

@@ -3,13 +3,16 @@ package graft.sources
 import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, RecordReader}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -45,6 +48,9 @@ import graft.plans.EncodePipeline
   *     IN, IsNull, prefix LIKE prune whole part directories at plan time;
   *     filters stay residual (zone maps are supersets), Spark re-applies
   *     them above the scan (SupportsPushDownFilters),
+  *   - Bloom FILE elimination: pushed equality/IN conjuncts plan only the
+  *     data files some of whose block Bloom filters admit the probed values
+  *     (the driver reads and caches each file's `bm_` columns),
   *   - AGGREGATE pushdown: global MIN/MAX/COUNT/COUNT(*)/SUM over long-kind
   *     columns answer ENTIRELY from the manifest's exact stats — the scan
   *     plans ZERO input partitions and opens ZERO data files
@@ -798,6 +804,56 @@ private[sources] object GraftPruning {
     }
   }
 
+  /** one data file's block Bloom filters as the driver holds them: column →
+    * one filter per block, null where the block stores none. A column the
+    * file has no `bm_` filter column for is absent. */
+  final class FileBlooms(byCol: Map[String, Array[Array[Byte]]]) {
+    /** false PROVES no block of the file holds a value `pr` looks for (a
+      * null or absent filter makes no claim, [[graft.core.Bloom.maybe]]) */
+    def admits(pr: BloomProbe): Boolean =
+      byCol.get(pr.col).forall(_.exists(bm => pr.anyOf.exists(graft.core.Bloom.maybe(bm, _))))
+
+    def approxBytes: Long = 64L + byCol.valuesIterator.map(fs =>
+      64L + fs.iterator.map(f => 16L + (if (f == null) 0 else f.length)).sum).sum
+  }
+
+  /** `path`'s `bm_` columns, read by the driver with parquet-mr: one footer
+    * read, then only the filter column chunks, and no Spark job */
+  private def readBlooms(path: String, conf: Configuration): FileBlooms = {
+    val file = new GroupFile(new Path(path), conf)
+    try {
+      val cols = file.schema.getFields.asScala.map(_.getName).filter(_.startsWith("bm_")).toSeq
+      val blocks = cols.map(_ => Array.newBuilder[Array[Byte]])
+      if (cols.nonEmpty) {
+        file.project(cols)
+        var g = file.read()
+        while (g != null) {
+          cols.indices.foreach { i =>
+            blocks(i) += (if (g.getFieldRepetitionCount(cols(i)) > 0)
+              g.getBinary(cols(i), 0).getBytes else null)
+          }
+          g = file.read()
+        }
+      }
+      new FileBlooms(cols.map(_.stripPrefix("bm_")).zip(blocks.map(_.result())).toMap)
+    } finally file.close()
+  }
+
+  /** whether data file `path` may hold a row matching every probe, by the
+    * driver-held copy of its block Bloom filters: read on the first probe
+    * that touches the file, then kept in the metadata cache. Only a cached
+    * copy can drop a file. A file whose filters are over the cache budget,
+    * unreadable or missing stays planned, and its reader surfaces any I/O
+    * error. */
+  def fileAdmits(path: String, probes: Array[BloomProbe], conf: Configuration): Boolean = {
+    val blooms =
+      try EncodePipeline.cachedFileIndex(path) {
+        val b = readBlooms(path, conf)
+        (b, b.approxBytes)
+      } catch { case NonFatal(_) => None }
+    blooms.forall(b => probes.forall(b.admits))
+  }
+
   /** a block-skipping RANGE probe against the e_<col> blob's header-derived
     * bounds ([[Codecs.rangeOfLong]]/[[Codecs.rangeOfStr]] — representable
     * supersets, so rejection is sound). Built by intersecting a column's
@@ -1157,6 +1213,14 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
+  private lazy val kinds: Map[String, EncodePipeline.ColPlan] =
+    EncodePipeline.plan(tableSchema).map(p => p.name -> p).toMap
+
+  /** the pushed equality and In conjuncts as Bloom probes: they drop whole
+    * files at plan time ([[planned]]) and blocks inside the reader */
+  private lazy val bloomProbes: Array[GraftPruning.BloomProbe] =
+    GraftPruning.bloomProbesOf(kinds, allFilters)
+
   // ---- runtime filtering (dynamic "partition" pruning): after a join's
   // build side materializes, Spark hands its key values back as filters;
   // the manifest zone maps then prune whole part directories that were
@@ -1177,7 +1241,6 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
       .map(p => Expressions.column(p.name)).toArray
 
   override def filter(filters: Array[Filter]): Unit = {
-    val kinds = EncodePipeline.plan(tableSchema).map(p => p.name -> p).toMap
     val sets = filters.flatMap(f => GraftPruning.survivorsOf(spark, outDir, kinds, f))
     if (sets.nonEmpty) {
       val s = sets.reduce(_ intersect _)
@@ -1238,26 +1301,37 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
   override def description(): String = {
     val f = if (pushed.isEmpty) "" else s" PushedFilters: [${pushed.mkString(", ")}]"
     val l = if (limit < 0) "" else s" PushedLimit: $limit"
+    val b = if (bloomProbes.isEmpty) "" else s" BloomFiles: ${plannedParts.length}/$candidates"
     s"GraftScan $outDir${gen.map(g => s" gen=$g").getOrElse("")}" +
-      s"${branch.map(b => s" branch=$b").getOrElse("")}$f$l"
+      s"${branch.map(b => s" branch=$b").getOrElse("")}$f$l$b"
   }
 
   /** memoized: outputPartitioning() (resolved at optimization time) and
     * planInputPartitions() (physical planning) must agree on the partition
-    * count, so both read one plan of the same generation snapshot */
-  private lazy val plannedParts: Array[GraftInputPartition] = {
+    * count, so both read one plan of the same generation snapshot. The
+    * files the zone maps keep are the candidates; with Bloom probes, only
+    * those whose block filters admit every probe are planned
+    * ([[GraftPruning.fileAdmits]]). Returns (planned, candidate count). */
+  private lazy val planned: (Array[GraftInputPartition], Int) = {
     val files = EncodePipeline.currentFiles(spark, outDir, gen, branch)
       .filter { case (p, _) => survivors.forall(_.contains(p)) }
+    val conf = spark.sparkContext.hadoopConfiguration
+    val admitted =
+      if (bloomProbes.isEmpty) files
+      else files.filter { case (_, f) => GraftPruning.fileAdmits(f, bloomProbes, conf) }
     val dv: Map[(String, Int), Array[Byte]] = gen match {
       case Some(g) => EncodePipeline.loadDeletes(spark, outDir, g)
       case None => EncodePipeline.loadDeletes(spark, outDir)
     }
-    files.map { case (p, f) =>
+    val parts = admitted.map { case (p, f) =>
       val suffix = EncodePipeline.fileSuffix(f)
       val slice = dv.collect { case ((s, b), bm) if s == suffix => b -> bm }
       GraftInputPartition(f, p, slice)
     }.toArray
+    (parts, files.length)
   }
+  private def plannedParts: Array[GraftInputPartition] = planned._1
+  private def candidates: Int = planned._2
 
   override def planInputPartitions(): Array[InputPartition] = {
     val rs = runtimeSurvivors
@@ -1265,15 +1339,13 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val dicts =
-      try EncodePipeline.loadDicts(spark, outDir)
-      catch { case _: Exception => Map.empty[Long, Codecs.DictTable] }
+    // absent dicts/ reads as no dictionaries; an unreadable one fails the read
+    val dicts = EncodePipeline.loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None
                   else Some(spark.sparkContext.broadcast(dicts))
-    val kinds = EncodePipeline.plan(tableSchema).map(p => p.name -> p).toMap
     GraftReaderFactory(Bridge.hadoopConfBroadcast(spark),
       GraftScan.planWithMeta(tableSchema, required), dictsBc, limit,
-      probes = GraftPruning.bloomProbesOf(kinds, allFilters),
+      probes = bloomProbes,
       rangeProbes = GraftPruning.rangeProbesOf(kinds, allFilters),
       nullProbes = GraftPruning.nullProbesOf(kinds, allFilters))
   }
@@ -1514,6 +1586,45 @@ private[sources] final class DecodedBlock(
     val strViews: Array[Codecs.StrView], val binVals: Array[Array[Array[Byte]]],
     val allNull: Array[Boolean])
 
+/** one parquet data file opened once: its footer schema, then the records
+  * of a projection of it as example-API `Group`s, row group by row group.
+  * These are the records `ParquetReader` over `GroupReadSupport` yields,
+  * without that reader's second footer read. */
+private[sources] final class GroupFile(path: Path, conf: Configuration)
+    extends java.io.Closeable {
+  private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+    HadoopReadOptions.builder(conf, path).build())
+  val schema: MessageType = reader.getFooter.getFileMetaData.getSchema
+  private var io: MessageColumnIO = _
+  private var converter: GroupRecordConverter = _
+  private var records: RecordReader[Group] = _
+  private var left = 0L
+
+  /** read only the top-level fields `names` from here on */
+  def project(names: Seq[String]): Unit = {
+    val projection = new MessageType("graft_projection",
+      names.map(n => schema.getType(schema.getFieldIndex(n))).asJava)
+    reader.setRequestedSchema(projection)
+    io = new ColumnIOFactory(reader.getFooter.getFileMetaData.getCreatedBy)
+      .getColumnIO(projection, schema, true)
+    converter = new GroupRecordConverter(projection)
+  }
+
+  /** the next record of the projection; null at end of file */
+  def read(): Group = {
+    while (left == 0) {
+      val pages = reader.readNextRowGroup()
+      if (pages == null) return null
+      left = pages.getRowCount
+      records = io.getRecordReader(pages, converter)
+    }
+    left -= 1
+    records.read()
+  }
+
+  override def close(): Unit = reader.close()
+}
+
 /** shared machinery for the row and columnar readers over one data file:
   * parquet Group rows (one per block) → blob decode → per-block delete-
   * vector survivor index. Only the projected columns' blobs are requested
@@ -1523,14 +1634,10 @@ private[sources] abstract class GraftFileReaderBase(
 
   f.dicts.foreach(b => Codecs.registerDicts(b.value))
 
-  private val conf = new org.apache.hadoop.conf.Configuration(f.conf.value)
-  private val path = new Path(p.path)
+  private val file = new GroupFile(new Path(p.path), f.conf.value)
   // projection from the FILE's own schema (mergeSchema eras differ per file;
   // a column this file predates simply decodes as all-null)
-  private val fileSchema: MessageType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-    try r.getFooter.getFileMetaData.getSchema finally r.close()
-  }
+  private val fileSchema: MessageType = file.schema
   protected val present: Array[Boolean] =
     f.cols.map(c => c.kind != 'm' && fileSchema.containsField("e_" + c.name))
   // the part-qualified data-file id (what `_file` reports and delete
@@ -1558,15 +1665,11 @@ private[sources] abstract class GraftFileReaderBase(
   // and trivially admit
   private val activeNulls: Array[String] =
     f.nullProbes.filter(c => fileSchema.containsField("e_" + c))
-  private val projection: MessageType = {
-    val wanted = (Seq("__block", "__cnt") ++
+  try file.project((Seq("__block", "__cnt") ++
       f.cols.filter(c => fileSchema.containsField("e_" + c.name)).map("e_" + _.name) ++
       activeProbes.map(_._1) ++ activeRanges.map("e_" + _.col) ++
-      activeNulls.map("e_" + _)).distinct
-    new MessageType("graft_projection",
-      wanted.map(n => fileSchema.getType(fileSchema.getFieldIndex(n))).asJava)
-  }
-  conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
+      activeNulls.map("e_" + _)).distinct)
+  catch { case e: Throwable => file.close(); throw e }
 
   /** false = the block's bloom filters or zone bounds PROVE some pushed
     * conjunct cannot match any row of the block (all-null blocks can't
@@ -1623,21 +1726,18 @@ private[sources] abstract class GraftFileReaderBase(
     true
   }
 
-  private val reader: ParquetReader[Group] =
-    ParquetReader.builder(new GroupReadSupport(), path).withConf(conf).build()
-
-  def close(): Unit = reader.close()
+  def close(): Unit = file.close()
 
   /** decode the next block's projected blobs; null at end of file */
   protected def nextBlock(): DecodedBlock = {
     // change-feed delete partitions touch only their diff blocks
     def wanted(g: Group): Boolean =
       p.keepOnly == null || p.keepOnly.contains(g.getInteger("__block", 0))
-    var g = reader.read()
+    var g = file.read()
     while (g != null && (!wanted(g) ||
         ((activeProbes.nonEmpty || activeRanges.nonEmpty ||
           activeNulls.nonEmpty) && !blockAdmits(g))))
-      g = reader.read()
+      g = file.read()
     if (g == null) return null
     ReaderDiag.blocksDecoded.incrementAndGet()
     val n = g.getInteger("__cnt", 0)

@@ -591,4 +591,19 @@ class GraftDataSourceSpec extends SparkTestBase {
     try assert(rdr.getFileMetaData.getSchema.containsField("bm_fp"))
     finally rdr.close()
   }
+
+  test("an unreadable dicts/ fails the read; a table without dicts/ still reads") {
+    val d = docs(300)
+    val out = tmpDir()
+    EncodePipeline.run(d, "url", out, partitions = 2, blockSize = 64)
+    assert(!new java.io.File(s"$out/dicts").exists())
+    assert(spark.read.format("graft").load(out).collect().length === 300)
+    val dicts = new java.io.File(s"$out/dicts")
+    assert(dicts.mkdirs())
+    java.nio.file.Files.write(new java.io.File(dicts, "part-00000-garbage.parquet").toPath,
+      "not a parquet file".getBytes("UTF-8"))
+    val e = intercept[Exception](spark.read.format("graft").load(out).collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(chain.exists(t => String.valueOf(t.getMessage).contains("garbage")), e)
+  }
 }
