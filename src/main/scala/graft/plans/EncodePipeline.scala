@@ -230,26 +230,16 @@ object EncodePipeline {
     val p = new org.apache.hadoop.fs.Path(s"$outDir/dicts")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Map.empty
-    // built tables memoized on the directory's listing signature: the dicts
-    // dir is rewritten (new file names) whenever dictionaries change
-    val sig = listingSig(fs, p)
-    val hit = dictTableCache.get(outDir)
-    val m =
-      if (hit != null && hit._1 == sig) hit._2
-      else {
-        val built = spark.read.parquet(s"$outDir/dicts").collect().map { r =>
-          r.getLong(0) -> new Codecs.DictTable(r.getSeq[Array[Byte]](3).toArray)
-        }.toMap
-        if (dictTableCache.size > 256) dictTableCache.clear()
-        dictTableCache.put(outDir, (sig, built))
-        built
-      }
+    // built tables held in the metadata-directory cache: the dicts dir is
+    // rewritten (new file names) whenever dictionaries change
+    val m = cachedDir(spark, s"$outDir/dicts") { (schema, rows) =>
+      val (iId, iValues) = (schema.fieldIndex("dict_id"), schema.fieldIndex("values"))
+      (rows.map(r => r.getLong(iId) -> new Codecs.DictTable(r.getSeq[Array[Byte]](iValues).toArray))
+        .toMap, rows.iterator.map(Manifest.approxBytes).sum)
+    }
     Codecs.registerDicts(m)
     m
   }
-
-  private val dictTableCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Map[Long, Codecs.DictTable])]()
 
   /** encode a table into block rows (one Spark job, one shuffle).
     *
@@ -750,8 +740,14 @@ object EncodePipeline {
     readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)))
 
   private def readDataWithMeta(spark: SparkSession, outDir: String,
-                               meta: ManifestView, keepFile: Boolean = false): DataFrame = {
+                               meta: ManifestView, keepFile: Boolean = false,
+                               parts: Option[Set[Int]] = None): DataFrame = {
     import spark.implicits._
+    def keep(p: Int) = parts.forall(_(p))
+    // a part restriction is a partition filter: the other part
+    // directories are never read
+    val data = parts.fold(readDataDir(spark, outDir))(ps =>
+      readDataDir(spark, outDir).filter(col("__part").isin(ps.toSeq.sorted: _*)))
     // input_file_name() must sit directly above the single data relation
     // (Spark rejects it over a multi-source join). The "__part=p/name"
     // suffix is what delete vectors key on — the BASENAME alone is NOT
@@ -763,19 +759,18 @@ object EncodePipeline {
       else df
     if (!meta.tracksFiles) {
       // pure pre-data_files metadata: part-level committed-set filtering
-      return withName(readDataDir(spark, outDir))
-        .join(broadcast(meta.parts.toSeq.toDF("__part")), Seq("__part"), "left_semi")
+      return withName(data)
+        .join(broadcast(meta.parts.toSeq.filter(keep).toDF("__part")), Seq("__part"), "left_semi")
     }
     // MIXED metadata (a pre-data_files directory resumed by this version)
     // is handled PER ROW: parts committed by the old version carry null
     // data_files and must fall back to part-level filtering — exploding
     // their null lists away would silently drop every old-wave part.
-    val oldParts = meta.untrackedParts.toSet
+    val oldParts = meta.untrackedParts.filter(keep).toSet
     // a part in BOTH eras (re-commit anomaly): part-level wins (superset)
-    val files = meta.trackedFiles.collect { case (p, f) if !oldParts(p) => f }.distinct
-    // mergeSchema: parts written before a column was added lack its e_/r_
-    // fields; the union schema carries them as null (schema evolution)
-    val data = readDataDir(spark, outDir)
+    val files = meta.trackedFiles.collect { case (p, f) if keep(p) && !oldParts(p) => f }.distinct
+    // mergeSchema (readDataDir): parts written before a column was added
+    // lack its e_/r_ fields; the union schema carries them as null
     val byFile = withName(data)
       .withColumn("__file", input_file_name())
       .join(broadcast(files.toDF("__file")), Seq("__file"), "left_semi")
@@ -951,12 +946,10 @@ object EncodePipeline {
                     blockSize: Int = 4096, bloomCols: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
     val t0 = System.currentTimeMillis()
-    val raw = rawManifest(spark, outDir)
-    require(raw.columns.contains("data_files"),
+    require(manifestOf(spark, outDir).has("data_files"),
       s"replaceCommit($outDir): this table predates file-tracked metadata " +
         "(no data_files column) — overwrite it with the legacy delete+run path")
-    val partsBefore = readMeta(spark, outDir).filter(col("__part") >= 0)
-      .select("__part").distinct().collect().map(_.getInt(0)).toSeq
+    val before = manifestView(spark, outDir, None)
 
     // placement: reuse the persisted law when the key matches (keeps the
     // co-partitioning invariant); a re-keyed overwrite derives a fresh hash
@@ -986,8 +979,8 @@ object EncodePipeline {
       }
     val newParts: Set[Int] = newRows.map(_.select("__part").distinct()
       .collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
-    val tombs = tombstoneRows(readMeta(spark, outDir),
-        partsBefore.filterNot(newParts), t0)
+    val tombs = tombstoneRows(spark, before,
+        before.parts.toSeq.filter(p => p >= 0 && !newParts(p)), t0)
       .map(_.withColumn("overwrite", lit(true)))
     // overwrite of an already-empty table by an empty df: still advance the
     // generation (the user asked for a snapshot) via a zero-file marker
@@ -1007,7 +1000,7 @@ object EncodePipeline {
     * their manifest rows — the Iceberg rewrite-data-files pattern, kept
     * append-only: new files land beside the old ones under `data/`, the
     * commit is one parquet append of manifest rows carrying `gen`+1, and
-    * [[readMeta]] resolves every reader (plain, pruned, planner hook) to
+    * [[Manifest.view]] resolves every reader (plain, pruned, planner hook) to
     * the highest generation per part, so superseded files become invisible
     * orphans ([[vacuum]] reclaims them). Crash anywhere leaves the previous
     * generation fully readable; a re-run re-compacts idempotently.
@@ -1023,31 +1016,12 @@ object EncodePipeline {
               blockSize: Int = 4096, minFiles: Int = 2): Seq[Int] = {
     requireNoLiveDeletes(spark, outDir, "compact")
     val t0 = System.currentTimeMillis()
-    val meta = readMeta(spark, outDir)
-    if (!meta.columns.contains("data_files")) return Nil
-    // a part's manifest rows are (column × commit)-grained: total files is
-    // the DISTINCT union across commits, total blocks the per-column sum
-    val perCol = meta.groupBy(col("__part"), col("column")).agg(
-      min(col("data_files").isNotNull.cast("int")).as("tracked"),
-      sum(col("blocks")).as("blocks"),
-      sum(col("rows")).as("rows"))
-    val overBlocked = perCol
-      .withColumn("over", (col("blocks") >
-        ceil(col("rows").cast("double") / lit(blockSize.toDouble))).cast("int"))
-      .groupBy(col("__part"))
-      .agg(min(col("tracked")).as("tracked"), max(col("over")).as("over"))
-    val fileCounts = meta.filter(col("data_files").isNotNull)
-      .select(col("__part"), explode(col("data_files")).as("f")).distinct()
-      .groupBy(col("__part")).agg(count(lit(1)).as("nfiles"))
-    val cands = overBlocked.join(fileCounts, Seq("__part"), "left")
-      .filter(col("tracked") === 1 &&
-        (coalesce(col("nfiles"), lit(0L)) >= minFiles || col("over") === 1))
-      .select("__part").collect().map(_.getInt(0)).sorted
+    val cands = manifestView(spark, outDir, None).compactCandidates(blockSize, minFiles)
     if (cands.isEmpty) return Nil
-    val enc = readData(spark, outDir).filter(col("__part").isin(cands.toSeq: _*))
+    val enc = readData(spark, outDir).filter(col("__part").isin(cands: _*))
     commit(spark, outDir, Txn(rows = Seq(
-      rewriteBlocks(spark, outDir, sourceSchema, enc, cands.toSeq, blockSize, t0))))
-    cands.toSeq
+      rewriteBlocks(spark, outDir, sourceSchema, enc, cands, blockSize, t0))))
+    cands
   }
 
   /** shared rewrite core for [[compact]] and [[compactSmallFiles]]: reblock
@@ -1079,8 +1053,7 @@ object EncodePipeline {
     ) ++ plans.flatMap(p => Seq(
       StructField("e_" + p.name, BinaryType, nullable = false),
       StructField("r_" + p.name, LongType, nullable = false))))
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val dicts = loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
     val bs = blockSize
     val rdd = Bridge.toRdd(sorted).mapPartitions { it =>
@@ -1158,39 +1131,10 @@ object EncodePipeline {
                         minSmall: Int = 2, maxSmallBytes: Long = 0L): Seq[Int] = {
     requireNoLiveDeletes(spark, outDir, "compactSmallFiles")
     val t0 = System.currentTimeMillis()
-    val meta = readMeta(spark, outDir)
-    if (!meta.columns.contains("data_files")) return Nil
-    val tracked = meta.filter(col("data_files").isNotNull)
-    // commit grain: one append's manifest rows share a data_files list per
-    // part (rows is per-column but identical across a commit's columns;
-    // bytes is the commit's total across columns — null-tolerant so
-    // pre-stats-era rows neither throw nor qualify by bytes)
-    val commits = tracked.groupBy(col("__part"), col("data_files"))
-      .agg(max(col("rows")).as("rows"),
-        (if (tracked.columns.contains("encoded_bytes"))
-          sum(col("encoded_bytes")) else lit(null).cast(LongType)).as("bytes"))
-    val isSmall =
-      if (maxSmallBytes > 0L)
-        col("rows") < blockSize ||
-          (col("bytes").isNotNull && col("bytes") <= maxSmallBytes)
-      else col("rows") < blockSize
-    // same guard as [[compact]]: part-level (null data_files) parts are
-    // read as whole directories and must never be partially rewritten
-    val partLevel = meta.filter(col("data_files").isNull)
-      .select("__part").distinct().collect().map(_.getInt(0)).toSet
-    val cands = commits.filter(isSmall)
-      .groupBy(col("__part")).agg(count(lit(1)).as("nsmall"))
-      .filter(col("nsmall") >= minSmall)
-      .select("__part").collect().map(_.getInt(0))
-      .filterNot(partLevel).sorted.toSeq
+    val view = manifestView(spark, outDir, None)
+    val (cands, smallFiles, keptRows) = view.smallFilePlan(blockSize, maxSmallBytes, minSmall)
     if (cands.isEmpty) return Nil
-
-    val smallSets = commits
-      .filter(isSmall && col("__part").isin(cands: _*))
-      .select(col("__part"), col("data_files"))
-    val smallPaths = smallSets.select(explode(col("data_files")).as("f"))
-      .distinct().collect()
-      .map(r => s"$outDir/data/" + fileSuffix(r.getString(0))).toSeq
+    val smallPaths = smallFiles.map(f => s"$outDir/data/" + fileSuffix(f))
     // fresh block ids start past each part's current maximum so the rewrite
     // never collides with the ids of the files it leaves in place
     val maxBlk = readData(spark, outDir).filter(col("__part").isin(cands: _*))
@@ -1203,8 +1147,7 @@ object EncodePipeline {
     // untouched commits carry forward verbatim at the new generation: same
     // files, same stats, same batch_id (streaming replay detection keeps
     // working); only the packed-away small commits are superseded
-    val kept = demoteRef(tracked.filter(col("__part").isin(cands: _*))
-      .join(smallSets, Seq("__part", "data_files"), "left_anti"))
+    val kept = demoteRef(view.toDF(spark, keptRows))
     commit(spark, outDir, Txn(rows = Seq(newRows, kept)))
     cands
   }
@@ -1226,9 +1169,8 @@ object EncodePipeline {
                   blockSize: Int = 4096): Long = {
     requireNoLiveDeletes(spark, outDir, "deleteWhere")
     val t0 = System.currentTimeMillis()
-    val meta = readMeta(spark, outDir)
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val meta = manifestView(spark, outDir, None)
+    val dicts = loadDicts(spark, outDir)
     // `parts` scopes the ENCODED read so parquet partition pruning keeps
     // the rewrite pass from decoding untouched parts (a filter after decode
     // sits above the RDD boundary and prunes nothing)
@@ -1252,7 +1194,7 @@ object EncodePipeline {
         blockSize, partExpr = Some(col("__part")))
       Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
     }
-    commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(meta, fullParts, t0)))
+    commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(spark, meta, fullParts, t0)))
     byPart.map(_._2).sum
   }
 
@@ -1260,10 +1202,10 @@ object EncodePipeline {
     * its old rows would stay current: tombstone manifest rows with an EMPTY
     * file list (explode reads them as zero files; vacuum reclaims the
     * directory) */
-  private def tombstoneRows(meta: DataFrame, fullParts: Seq[Int],
+  private def tombstoneRows(spark: SparkSession, meta: ManifestView, fullParts: Seq[Int],
                             t0: Long): Option[DataFrame] =
     if (fullParts.isEmpty) None else Some(
-      meta.filter(col("data_files").isNotNull && col("__part").isin(fullParts: _*))
+      meta.toDF(spark).filter(col("data_files").isNotNull && col("__part").isin(fullParts: _*))
         .select(col("__part"), col("column")).distinct()
         .withColumn("rows", lit(0L))
         .withColumn("blocks", lit(0L))
@@ -1302,9 +1244,8 @@ object EncodePipeline {
     require(bad.isEmpty, s"updateWhere assigns unknown columns: ${bad.mkString(", ")}")
     requireNoLiveDeletes(spark, outDir, "updateWhere")
     val t0 = System.currentTimeMillis()
-    val meta = readMeta(spark, outDir)
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val meta = manifestView(spark, outDir, None)
+    val dicts = loadDicts(spark, outDir)
     // `parts` scopes the ENCODED read so parquet partition pruning keeps
     // the rewrite pass from decoding untouched parts (a filter after decode
     // sits above the RDD boundary and prunes nothing)
@@ -1352,17 +1293,13 @@ object EncodePipeline {
     require(sortCols.nonEmpty, "rewriteSorted needs at least one sort column")
     requireNoLiveDeletes(spark, outDir, "rewriteSorted")
     val t0 = System.currentTimeMillis()
-    val meta = readMeta(spark, outDir)
+    val meta = manifestView(spark, outDir, None)
     // tombstoned (empty-file-list) parts have nothing to re-cluster and
     // would make the rewrite 'wrote no files' — skip them, like compact
-    val cands = meta.filter(col("__part") >= 0 &&
-        col("data_files").isNotNull && size(col("data_files")) > 0)
-      .select("__part").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+    val cands = meta.trackedFiles.map(_._1).distinct.sorted
     if (cands.isEmpty) return Nil
     requireFileTracked(meta, cands, "rewriteSorted")
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val dicts = loadDicts(spark, outDir)
     val dec = decode(readData(spark, outDir), sourceSchema,
       if (dicts.isEmpty) None else Some(dicts), keepPart = true)
     val enc0 = encode(dec, key, math.max(1, cands.length), blockSize,
@@ -1408,23 +1345,8 @@ object EncodePipeline {
     // edge-saturation, never wrong order) — take them from the manifest's
     // exact attained stats without opening a data file, the tableStats
     // pattern; fall back to one aggregate scan for pre-stats-era rows
-    val meta0 = readMeta(spark, outDir).filter(col("__part") >= 0)
-    val manifestBounds: Option[(Seq[Long], Seq[Long])] =
-      if (!meta0.columns.contains("value_min")) None
-      else {
-        val rows = meta0.filter(col("column").isin(zCols: _*) && col("rows") > 0)
-          .groupBy(col("column")).agg(
-            min(col("value_min")).as("lo"), max(col("value_max")).as("hi"),
-            sum(when(col("value_min").isNull &&
-              coalesce(col("null_value_count"), lit(0)) < col("rows"), 1)
-              .otherwise(0)).as("statless"))
-          .collect().map(r => r.getString(0) -> r).toMap
-        val ok = zCols.forall(c => rows.get(c).exists(r =>
-          r.getLong(3) == 0L && !r.isNullAt(1) && !r.isNullAt(2)))
-        if (!ok) None
-        else Some((zCols.map(c => rows(c).getLong(1)), zCols.map(c => rows(c).getLong(2))))
-      }
-    val (los, his) = manifestBounds.getOrElse {
+    val manifestBounds = zCols.map(manifestView(spark, outDir, None).attainedBounds)
+    val (los, his) = if (manifestBounds.forall(_.nonEmpty)) manifestBounds.flatten.unzip else {
       val aggs = zCols.flatMap(c => Seq(min(asLong(c)), max(asLong(c))))
       val bounds = decodeShared(spark, outDir, sourceSchema)
         .agg(aggs.head, aggs.tail: _*).head()
@@ -1438,14 +1360,9 @@ object EncodePipeline {
   /** part-level (null data_files) parts are read as whole directories and
     * cannot be selectively superseded — shared guard of every copy-on-write
     * rewrite */
-  private def requireFileTracked(meta: DataFrame, cands: Seq[Int], op: String): Unit = {
-    val partLevel: Set[Int] =
-      if (!meta.columns.contains("data_files")) cands.toSet
-      else meta.filter(col("data_files").isNull).select("__part").distinct()
-        .collect().map(_.getInt(0)).toSet
-    require(!cands.exists(partLevel),
+  private def requireFileTracked(meta: ManifestView, cands: Seq[Int], op: String): Unit =
+    require(!cands.exists(meta.untrackedParts.toSet),
       s"$op requires file-tracked parts; compact() the table first")
-  }
 
   /** MERGE INTO by key (upsert): `updates` rows whose `key` matches an
     * existing row REPLACE it — a copy-on-write rewrite of exactly the parts
@@ -1473,9 +1390,8 @@ object EncodePipeline {
     val t0 = System.currentTimeMillis()
     val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
     if (batchCommitted(spark, outDir, bid)) return (0L, 0L)
-    val meta = readMeta(spark, outDir)
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val meta = manifestView(spark, outDir, None)
+    val dicts = loadDicts(spark, outDir)
     // `parts` scopes the ENCODED read so parquet partition pruning keeps
     // the rewrite pass from decoding untouched parts (a filter after decode
     // sits above the RDD boundary and prunes nothing)
@@ -1511,7 +1427,7 @@ object EncodePipeline {
           blockSize, partExpr = Some(col("__part")))
         Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
       }
-      commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(meta, fullParts, t0)))
+      commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(spark, meta, fullParts, t0)))
       survivors.unpersist()
     }
     appendBatch(updates.select(sourceSchema.fieldNames.map(col).toSeq: _*),
@@ -1574,8 +1490,7 @@ object EncodePipeline {
     * deletes filter */
   private def decodeLineage(spark: SparkSession, outDir: String,
                             sourceSchema: StructType): DataFrame = {
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val dicts = loadDicts(spark, outDir)
     decodeEx(readDataKeepFile(spark, outDir), sourceSchema,
       if (dicts.isEmpty) None else Some(dicts),
       keepPart = false, lineage = true, loadDeletes(spark, outDir))
@@ -1825,26 +1740,17 @@ object EncodePipeline {
     * ≤ maxGen apply (vectors written before gen tagging read as gen 0) */
   def loadDeletes(spark: SparkSession, outDir: String,
                   maxGen: Int): Map[(String, Int), Array[Byte]] = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    // a parquet-less directory (all vector files reclaimed) must read as
-    // "no deletes", not fail schema inference
-    if (!fs.listStatus(p).exists(s => s.isFile &&
-        s.getPath.getName.endsWith(".parquet") && !s.getPath.getName.startsWith(".")))
-      return Map.empty
-    val d = dirRows(spark, s"$outDir/deletes")
-    def at(c: String) = d.schema.fieldNames.indexOf(c)
+    val d = vectorRows(spark, outDir).getOrElse(return Map.empty)
     val (iGen, iTxn, iFile, iBlock, iBm) =
-      (at("gen"), at("txn"), at("file"), at("block"), at("bitmap"))
+      (d.at("gen"), d.at("txn"), d.at("file"), d.at("block"), d.at("bitmap"))
     // rollback abandonment: a marker (N → T) visible at this read (N ≤
     // maxGen) abandons every vector committed strictly inside (T, N) —
     // [[rollbackTo]] undid those deletes. Reads BELOW the marker (time
     // travel) ignore it and still see the pre-rollback history.
     val rbMarkers = rollbackMarkers(spark, outDir).filter(_._1 <= maxGen)
     def genScoped(r: org.apache.spark.sql.Row): Boolean = iGen < 0 || {
-      val g = if (r.isNullAt(iGen)) 0 else r.getInt(iGen)
-      g <= maxGen && !rbMarkers.exists { case (n, t) => g > t && g < n }
+      val g = vectorGen(d, r)
+      g <= maxGen && !Manifest.abandoned(rbMarkers, g)
     }
     // transaction gate: a txn-tagged vector applies ONLY once its snapshot
     // marker is committed in the manifest — vectors staged by an atomic
@@ -1859,6 +1765,27 @@ object EncodePipeline {
       .map { case (k, rows) =>
         k -> rows.map(_.getAs[Array[Byte]](iBm)).reduce(orBitmaps)
       }
+  }
+
+  /** the vector files `deletes/` holds; none when it is absent */
+  private def vectorFiles(spark: SparkSession, outDir: String): Array[org.apache.hadoop.fs.FileStatus] = {
+    val p = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Array.empty
+    else fs.listStatus(p).filter(s => s.isFile &&
+      s.getPath.getName.endsWith(".parquet") && !s.getPath.getName.startsWith("."))
+  }
+
+  /** the cached rows of `deletes/`, None when it holds no vector file (a
+    * parquet-less directory must read as "no deletes", not fail schema
+    * inference) */
+  private def vectorRows(spark: SparkSession, outDir: String): Option[DirRows] =
+    if (vectorFiles(spark, outDir).isEmpty) None else Some(dirRows(spark, s"$outDir/deletes"))
+
+  /** a vector row's generation; rows written before generation tagging read as 0 */
+  private def vectorGen(d: DirRows, r: org.apache.spark.sql.Row): Int = {
+    val i = d.at("gen")
+    if (i < 0 || r.isNullAt(i)) 0 else r.getInt(i)
   }
 
   private def orBitmaps(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
@@ -1904,20 +1831,12 @@ object EncodePipeline {
     // (drop the tag, or don't fold). Tags strictly below all vector
     // generations see no vectors and are unaffected.
     val tagged = readTags(spark, outDir)
-    if (tagged.nonEmpty) {
-      val delPath = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
-      val hasVecs = fs.exists(delPath) && fs.listStatus(delPath).exists(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet") &&
-          !s.getPath.getName.startsWith("."))
-      if (hasVecs) {
-        val raw = readCachedDir(spark, s"$outDir/deletes")
-        val minVecGen = if (!raw.columns.contains("gen")) 0
-          else raw.agg(min(coalesce(col("gen"), lit(0)))).head().getInt(0)
-        val blocking = tagged.filter(_._2 >= minVecGen)
-        require(blocking.isEmpty, "materializeDeletes would expire delete-vector " +
-          s"history that tagged snapshot(s) ${blocking.keys.toSeq.sorted.mkString(", ")} " +
-          "still apply — drop the tag(s) first")
-      }
+    if (tagged.nonEmpty) vectorRows(spark, outDir).foreach { d =>
+      val minVecGen = d.rows.iterator.map(vectorGen(d, _)).minOption.getOrElse(0)
+      val blocking = tagged.filter(_._2 >= minVecGen)
+      require(blocking.isEmpty, "materializeDeletes would expire delete-vector " +
+        s"history that tagged snapshot(s) ${blocking.keys.toSeq.sorted.mkString(", ")} " +
+        "still apply — drop the tag(s) first")
     }
     // fold marker: records that vector history at-or-below its generation
     // was expired here — [[rollbackTo]] reads it to refuse rolling back
@@ -1931,25 +1850,16 @@ object EncodePipeline {
       // nothing live to fold, but the dir may hold INERT committed vectors
       // whose target files a future rollback would make current again —
       // record the expiry so that rollback refuses instead of resurrecting
-      val delPath = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
-      val hadVectors = fs.exists(delPath) && fs.listStatus(delPath).exists(s =>
-        s.isFile && s.getPath.getName.endsWith(".parquet") &&
-          !s.getPath.getName.startsWith("."))
-      if (hadVectors) commit(spark, outDir, Txn(rows = Seq(foldMarker)))
-      fs.delete(delPath, true)
+      if (vectorFiles(spark, outDir).nonEmpty) commit(spark, outDir, Txn(rows = Seq(foldMarker)))
+      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/deletes"), true)
       return 0L
     }
     val nFolded = dv.valuesIterator
       .map(_.foldLeft(0L)((s, b) => s + java.lang.Integer.bitCount(b & 0xff))).sum
-    val meta = readMeta(spark, outDir)
-    val targets = dv.keysIterator.map(_._1).toSet
-    val cands = meta.filter(col("data_files").isNotNull)
-      .select(col("__part"), explode(col("data_files")).as("f"))
-      .collect().filter(r => targets.contains(fileSuffix(r.getString(1))))
-      .map(_.getInt(0)).distinct.toSeq.sorted
+    val meta = manifestView(spark, outDir, None)
+    val cands = meta.partsHolding(dv.keySet.map(_._1))
     require(cands.nonEmpty, "live delete vectors but no owning parts — corrupt manifest?")
-    val dicts = (try loadDicts(spark, outDir)
-                 catch { case _: Exception => Map.empty[Long, Codecs.DictTable] })
+    val dicts = loadDicts(spark, outDir)
     // scope the ENCODED read to the owning parts: partition pruning keeps
     // the fold from decoding untouched parts
     val survivors = decodeEx(
@@ -1965,7 +1875,7 @@ object EncodePipeline {
         blockSize, partExpr = Some(col("__part")))
       Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
     }
-    val tombstones = tombstoneRows(meta, fullParts, t0)
+    val tombstones = tombstoneRows(spark, meta, fullParts, t0)
     survivors.unpersist()
     commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstones :+ foldMarker))
     fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/deletes"), true)
@@ -2029,28 +1939,30 @@ object EncodePipeline {
                 gen: Int = -1): Int = {
     require(name.nonEmpty && name.forall(c => c.isLetterOrDigit || "._-".contains(c)),
       s"tag names are [A-Za-z0-9._-]+, got: $name")
-    val raw = rawManifest(spark, outDir)
     val maxG = currentGen(spark, outDir)
     val g = if (gen < 0) maxG else gen
     require(g <= maxG, s"createTag($name): generation $g does not exist (max $maxG)")
-    if (raw.columns.contains("data_files")) {
-      val fs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val needed = readMetaAt(spark, outDir, Some(g))
-        .filter(col("__part") >= 0 && col("data_files").isNotNull)
-        .select(explode(col("data_files")).as("f")).distinct()
-        .collect().map(r => fileSuffix(r.getString(0)))
-      val onDisk: Set[String] = needed.map(_.takeWhile(_ != '/')).distinct.flatMap { d =>
-        val p = new org.apache.hadoop.fs.Path(s"$outDir/data/$d")
-        if (!fs.exists(p)) Array.empty[String]
-        else fs.listStatus(p).filter(_.isFile).map(s => s"$d/${s.getPath.getName}")
-      }.toSet
-      val missing = needed.filterNot(onDisk)
-      require(missing.isEmpty, s"createTag($name): ${missing.length} data files of " +
-        s"generation $g were vacuumed (first: ${missing.headOption.getOrElse("")})")
-    }
+    requireFilesOnDisk(spark, outDir, g, s"createTag($name)")
     writeRefs(spark, outDir, readRefs(spark, outDir) + (name -> g))
     g
+  }
+
+  /** every data file the manifest lists at generation `g` must still be on
+    * disk: [[vacuum]] expires history, and pinning or restoring a
+    * generation whose files are gone would commit a lie. One listStatus per
+    * part directory, not one exists() call per file. */
+  private def requireFilesOnDisk(spark: SparkSession, outDir: String, g: Int, op: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(outDir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val needed = manifestView(spark, outDir, Some(g)).dataFiles.map(fileSuffix)
+    val onDisk: Set[String] = needed.map(_.takeWhile(_ != '/')).distinct.flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(s"$outDir/data/$d")
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.filter(_.isFile).map(s => s"$d/${s.getPath.getName}")
+    }.toSet
+    val missing = needed.filterNot(onDisk)
+    require(missing.isEmpty, s"$op: ${missing.length} data files of generation $g " +
+      s"were vacuumed (first: ${missing.headOption.getOrElse("")})")
   }
 
   /** drop a tag; its generation becomes expirable again. Returns whether
@@ -2130,55 +2042,24 @@ object EncodePipeline {
   def fastForward(spark: SparkSession, outDir: String, branch: String,
                   allowDivergence: Boolean = false): Int = {
     val base = branchBase(spark, outDir, branch) // creation base (immutable)
-    val raw = rawManifest(spark, outDir)
-    val maxG = currentGen(spark, outDir)
-    if (!raw.columns.contains("ref")) return maxG // no branch commits ever
-    val g = coalesce(col("gen"), lit(0))
-    val hasPub = raw.columns.contains("publish_to")
+    val m = manifestOf(spark, outDir)
     // the branch's sync points derive from its OWN publish markers (the
     // registry base never moves — branch + time-travel reads depend on the
-    // creation base staying put): `pubTo` = everything at or below is
-    // already published; `divBase` = the last marker's generation, where
-    // main last absorbed this branch
-    val (pubTo, divBase) =
-      if (!hasPub) (base, base)
-      else {
-        val r = raw.filter(col("ref") === branch && col("publish_to").isNotNull)
-          .agg(max(col("publish_to")), max(g)).head()
-        (if (r.isNullAt(0)) base else math.max(base, r.getInt(0)),
-         if (r.isNullAt(1)) base else math.max(base, r.getInt(1)))
-      }
-    val bRows = raw.filter(col("ref") === branch && g > pubTo &&
-      (if (hasPub) col("publish_to").isNull else lit(true)))
-    val headRow = bRows.agg(max(g)).head()
-    if (headRow.isNullAt(0)) return maxG // nothing staged: no-op
-    val head = headRow.getInt(0)
-    // divergence guard: main commits (ref-null rows, or publish markers —
-    // those changed main too) since main last matched this branch
-    val mainAfter = raw.filter(g > divBase &&
-      (col("ref").isNull ||
-        (if (hasPub) col("publish_to").isNotNull && !(col("ref") === branch)
-         else lit(false))))
-    // only commits that re-list actual content (parts >= 0) raise a floor
-    // that could hide the staged rows; a pure marker generation (part -1 —
-    // a main-side MOR delete's snapshot marker) replaces nothing the
-    // branch touches and merge-publishes safely behind allowDivergence
-    val replacing = mainAfter.filter(
-      (if (raw.columns.contains("additive")) !coalesce(col("additive"), lit(false))
-       else lit(true)) && col("__part") >= 0)
-    require(replacing.isEmpty,
+    // creation base staying put)
+    val plan = m.publishPlan(branch, base).getOrElse(return m.currentGen) // nothing staged
+    require(!plan.mainReplaced,
       s"fastForward($branch): a replacing main commit landed after the " +
-      s"branch's last sync point $divBase — its floor would hide the " +
+      s"branch's last sync point ${plan.syncPoint} — its floor would hide the " +
       "branch rows; re-create the branch from the current state")
-    require(allowDivergence || mainAfter.isEmpty,
+    require(allowDivergence || !plan.mainAdvanced,
       s"fastForward($branch): main advanced past the branch's last sync " +
-      s"point $divBase (additive appends); pass allowDivergence = true " +
+      s"point ${plan.syncPoint} (additive appends); pass allowDivergence = true " +
       "to merge-publish")
     commit(spark, outDir, Txn(appends = Seq(genMarker(spark)
       .withColumn("column", lit("__publish_marker"))
       .withColumn("ref", lit(branch))
-      .withColumn("publish_from", lit(pubTo))
-      .withColumn("publish_to", lit(head)))))
+      .withColumn("publish_from", lit(plan.from))
+      .withColumn("publish_to", lit(plan.to)))))
   }
 
   /** the table as a BRANCH reader sees it: current main content PLUS the
@@ -2205,38 +2086,17 @@ object EncodePipeline {
     * number of files deleted. Single maintenance writer assumed, like
     * [[compact]]. */
   def vacuum(spark: SparkSession, outDir: String, retainLast: Int = 1): Int = {
-    val meta = readMeta(spark, outDir)
-    if (!meta.columns.contains("data_files")) return 0
-    val untracked = meta.filter(col("data_files").isNull)
-      .select("__part").distinct().collect().map(_.getInt(0)).toSet
+    val m = manifestOf(spark, outDir)
+    val view = m.view(None, None)
+    if (!view.tracksFiles) return 0
+    val untracked = view.untrackedParts.toSet
     // tagged snapshots pin their file sets (Iceberg: refs block expiry);
-    // a retention window pins the last N generations' snapshots the same way
-    val retainedGens: Seq[Int] =
-      if (retainLast <= 1) Nil
-      else {
-        val raw = rawManifest(spark, outDir)
-        if (!raw.columns.contains("gen")) Nil
-        else {
-          // retention counts MAIN-history snapshot points only: plain main
-          // rows plus publish markers. An unpublished branch generation
-          // (raw max after appendToBranch) must not consume a retention
-          // slot — and the current generation is excluded BY VALUE, not by
-          // position (r5 advice: positional drop(1) dropped a historical
-          // generation whenever a staged branch held the raw max).
-          val mainTimeline =
-            if (!raw.columns.contains("ref")) raw
-            else if (raw.columns.contains("publish_to"))
-              raw.filter(col("ref").isNull || col("publish_to").isNotNull)
-            else raw.filter(col("ref").isNull)
-          val gens = mainTimeline.select(coalesce(col("gen"), lit(0)).as("g"))
-            .distinct().orderBy(col("g").desc).limit(retainLast + 1)
-            .collect().map(_.getInt(0)).toSeq
-          val curMain = gens.headOption.getOrElse(0)
-          gens.filter(_ != curMain).take(retainLast - 1)
-        }
-      }
-    val tagGens = (readTags(spark, outDir).values.toSeq ++ retainedGens)
-      .distinct.sorted
+    // a retention window pins the last N generations' snapshots the same
+    // way. Retention counts MAIN-history snapshot points only: an
+    // unpublished branch generation must not consume a retention slot, and
+    // the current generation is excluded by value, not by position.
+    val tagGens = (readTags(spark, outDir).values.toSeq ++
+      m.mainGens.drop(1).take(retainLast - 1)).distinct.sorted
     // registered branches pin their (possibly unpublished) commits' files —
     // main-invisible but readable via option("branch"). Dropped branches'
     // rows lose this protection and their files reclaim here.
@@ -2244,16 +2104,12 @@ object EncodePipeline {
     // rows a dropped incarnation of a reused name left behind stay
     // reclaimable.
     val branchFiles: Iterator[String] = {
-      val m = manifestOf(spark, outDir)
       val branches = readBranches(spark, outDir)
       m.raw.iterator.filter(r => m.inBranchWindow(r, branches) && !m.isNull(r, m.iFiles))
         .flatMap(_.getSeq[String](m.iFiles))
     }
-    val referenced = (Seq(meta) ++ tagGens.map(g => readMetaAt(spark, outDir, Some(g))))
-      .map(_.filter(col("data_files").isNotNull)
-        .select(explode(col("data_files")).as("f")))
-      .reduce(_.unionByName(_)).distinct()
-      .collect().map(r => fileSuffix(r.getString(0))).toSet ++ branchFiles.map(fileSuffix)
+    val referenced = (view +: tagGens.map(g => m.view(Some(g), None)))
+      .flatMap(_.dataFiles).map(fileSuffix).toSet ++ branchFiles.map(fileSuffix)
     val dataPath = new org.apache.hadoop.fs.Path(s"$outDir/data")
     val fs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dataPath)) return 0
@@ -2270,105 +2126,71 @@ object EncodePipeline {
         }
       }
     }
-    // inert delete-vector files: every row txn-tagged, no txn committed —
-    // the leftovers of atomic delta commits that crashed before their
-    // single manifest append (such vectors can never apply). AGE-GATED
-    // (Iceberg orphan-cleanup style): an in-flight updateWhereLazy /
-    // commitDelta stages its vectors minutes before the marker commits, and
-    // a vacuum racing that window must not reclaim them — only files older
-    // than `orphanDvMinAgeMs` qualify (0 in tests for determinism).
-    val delPath = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
-    if (fs.exists(delPath)) {
-      val dvFiles = fs.listStatus(delPath).filter(s => s.isFile &&
-        s.getPath.getName.endsWith(".parquet") && !s.getPath.getName.startsWith("."))
-      if (dvFiles.nonEmpty) {
-        val oldEnough: Set[String] = {
-          val cutoff = System.currentTimeMillis() - orphanDvMinAgeMs
-          dvFiles.filter(_.getModificationTime <= cutoff).map(_.getPath.getName).toSet
+    val dvFiles = vectorFiles(spark, outDir)
+    if (dvFiles.nonEmpty) {
+      def name(uri: String) = new org.apache.hadoop.fs.Path(new java.net.URI(uri)).getName
+      // the vector rows per file: __src_file (recorded at cache-fill time)
+      // names each row's vector file
+      val d = dirRows(spark, s"$outDir/deletes")
+      val iTxn = d.at("txn")
+      val byFile = d.rows.groupBy(_.getString(d.at(Manifest.SrcFile)))
+      // inert delete-vector files: every row txn-tagged, no txn committed —
+      // the leftovers of atomic delta commits that crashed before their
+      // single manifest append (such vectors can never apply). AGE-GATED
+      // (Iceberg orphan-cleanup style): an in-flight updateWhereLazy /
+      // commitDelta stages its vectors minutes before the marker commits, and
+      // a vacuum racing that window must not reclaim them — only files older
+      // than `orphanDvMinAgeMs` qualify (0 in tests for determinism).
+      val cutoff = System.currentTimeMillis() - orphanDvMinAgeMs
+      val oldEnough = dvFiles.filter(_.getModificationTime <= cutoff).map(_.getPath.getName).toSet
+      lazy val committed = committedTxns(spark, outDir, Int.MaxValue)
+      val orphan = if (iTxn < 0) Nil else byFile.collect { case (f, rs) if oldEnough(name(f)) &&
+        rs.forall(r => !r.isNullAt(iTxn) && !committed(r.getString(iTxn))) => f }
+      // vector files EVERY row of which a committed rollback marker
+      // abandoned can never apply again — reclaim without an age gate
+      // (this expires sub-marker time travel, exactly like reclaiming
+      // superseded data files above). EXCEPT rows at or below a tagged
+      // generation: a tagged read below the marker still applies them
+      // (conservative — rows ≤ maxTag are kept even when every tag's own
+      // marker view abandons them; dropping the tag releases them)
+      val rbM = rollbackMarkers(spark, outDir)
+      val maxTag = tagGens.lastOption.getOrElse(-1)
+      val abandonedFiles = byFile.collect { case (f, rs) if rs.forall { r =>
+        val g = vectorGen(d, r)
+        g > maxTag && Manifest.abandoned(rbM, g) } => f }
+      val removed = (orphan ++ abandonedFiles).toSeq.distinct.filter(_.nonEmpty)
+      removed.foreach { uri =>
+        if (fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(uri)), false))
+          deleted += 1
+      }
+      // ZERO-ROW vector files: a staging write's empty shuffle bins land
+      // as row-less parquet part files (the persisted staging Dataset
+      // pins the pre-AQE partition count, so empty tasks write empty
+      // files). They carry no vectors — they can never apply — but the
+      // per-file row grouping above never sees them, so they kept the
+      // deletes/ directory alive FOREVER once every real vector was
+      // reclaimed. Reclaimed ONLY when no row-bearing vector file remains
+      // — while live vectors exist the husks are harmless and the
+      // committed file set stays untouched (AtomicCommitSpec's equality
+      // contract). Emptiness is verified from the parquet FOOTER, not the
+      // cached rows, so a stale cache can never misclassify a live file.
+      val removedNames = removed.map(name).toSet
+      if ((byFile.keySet.map(name) -- removedNames).isEmpty) {
+        dvFiles.filterNot(st => removedNames.contains(st.getPath.getName)).foreach { st =>
+          val zeroRows = try {
+            val pf = org.apache.parquet.hadoop.ParquetFileReader.open(
+              org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+                st, spark.sparkContext.hadoopConfiguration))
+            try pf.getRecordCount == 0L finally pf.close()
+          } catch { case _: Exception => false }
+          if (zeroRows && fs.delete(st.getPath, false)) deleted += 1
         }
-        // __src_file (recorded at cache-fill time) identifies each row's
-        // vector file — input_file_name() would return "" over the cached
-        // local relation and a "" uri would resolve to the CWD
-        val raw = readCachedDirEx(spark, s"$outDir/deletes", withSrcFile = true)
-        val orphan: Seq[String] =
-          if (!raw.columns.contains("txn") || oldEnough.isEmpty) Nil
-          else {
-            val committed = committedTxns(spark, outDir, Int.MaxValue)
-            val committedCol =
-              if (committed.isEmpty) lit(false) else col("txn").isin(committed.toSeq: _*)
-            raw.withColumn("__f", col("__src_file"))
-              .groupBy(col("__f"))
-              .agg(max(col("txn").isNull.cast("int")).as("any_legacy"),
-                   max(committedCol.cast("int")).as("any_committed"))
-              .filter(col("any_legacy") === 0 && col("any_committed") === 0)
-              .select("__f").collect().map(_.getString(0)).toSeq
-              .filter(uri => oldEnough.contains(
-                new org.apache.hadoop.fs.Path(new java.net.URI(uri)).getName))
-          }
-        // vector files EVERY row of which a committed rollback marker
-        // abandoned can never apply again — reclaim without an age gate
-        // (this expires sub-marker time travel, exactly like reclaiming
-        // superseded data files above). EXCEPT rows at or below a tagged
-        // generation: a tagged read below the marker still applies them
-        // (conservative — rows ≤ maxTag are kept even when every tag's own
-        // marker view abandons them; dropping the tag releases them)
-        val rbM = rollbackMarkers(spark, outDir)
-        val maxTag = tagGens.lastOption.getOrElse(-1)
-        val abandonedFiles: Seq[String] =
-          if (rbM.isEmpty || !raw.columns.contains("gen")) Nil
-          else {
-            val g = coalesce(col("gen"), lit(0))
-            val abandonedCol =
-              rbM.map { case (n, t) => g > t && g < n }.reduce(_ || _) &&
-                g > maxTag
-            raw.withColumn("__f", col("__src_file"))
-              .groupBy(col("__f"))
-              .agg(max((!abandonedCol).cast("int")).as("any_live"))
-              .filter(col("any_live") === 0)
-              .select("__f").collect().map(_.getString(0)).toSeq
-          }
-        (orphan ++ abandonedFiles).distinct.filter(_.nonEmpty).foreach { uri =>
-          if (fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(uri)), false))
-            deleted += 1
-        }
-        // ZERO-ROW vector files: a staging write's empty shuffle bins land
-        // as row-less parquet part files (the persisted staging Dataset
-        // pins the pre-AQE partition count, so empty tasks write empty
-        // files). They carry no vectors — they can never apply — but the
-        // per-file row grouping above never sees them, so they kept the
-        // deletes/ directory alive FOREVER once every real vector was
-        // reclaimed (latent in r5: SnapshotSpec's vacuum-reclaims test
-        // flaked ~40%, whenever the 8 bitmap keys missed one of 4 bins).
-        // Reclaimed ONLY when no row-bearing vector file remains — while
-        // live vectors exist the husks are harmless and the committed file
-        // set stays untouched (AtomicCommitSpec's equality contract).
-        // Emptiness is verified from the parquet FOOTER, not the cached
-        // rows, so a stale cache can never misclassify a live file.
-        val removedNames: Set[String] = (orphan ++ abandonedFiles).filter(_.nonEmpty)
-          .map(u => new org.apache.hadoop.fs.Path(new java.net.URI(u)).getName).toSet
-        val liveRowFiles: Set[String] = raw.select(col("__src_file")).distinct()
-          .collect().map(r => new org.apache.hadoop.fs.Path(
-            new java.net.URI(r.getString(0))).getName).toSet -- removedNames
-        if (liveRowFiles.isEmpty) {
-          dvFiles.filterNot(st => removedNames.contains(st.getPath.getName)).foreach { st =>
-            val zeroRows = try {
-              val pf = org.apache.parquet.hadoop.ParquetFileReader.open(
-                org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
-                  st, spark.sparkContext.hadoopConfiguration))
-              try pf.getRecordCount == 0L finally pf.close()
-            } catch { case _: Exception => false }
-            if (zeroRows && fs.delete(st.getPath, false)) deleted += 1
-          }
-        }
-        // reclaiming the LAST vector file leaves a parquet-less directory
-        // that would fail schema inference on the next read — remove it
-        val left = fs.listStatus(delPath).exists(s => s.isFile &&
-          s.getPath.getName.endsWith(".parquet") && !s.getPath.getName.startsWith("."))
-        if (!left) fs.delete(delPath, true)
-      } else {
-        fs.delete(delPath, true) // already parquet-less: never serve it to a reader
       }
     }
+    // a parquet-less directory (the last vector file reclaimed, or none
+    // left) would fail schema inference on the next read — remove it
+    if (vectorFiles(spark, outDir).isEmpty)
+      fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/deletes"), true)
     deleted
   }
 
@@ -2408,31 +2230,15 @@ object EncodePipeline {
     * maintenance writer assumed, like [[compact]]. */
   def rollbackTo(spark: SparkSession, outDir: String, gen: Int): Int = {
     require(gen >= 0, s"rollbackTo: generation must be >= 0, got $gen")
-    val raw = rawManifest(spark, outDir)
-    if (!raw.columns.contains("gen")) return 0 // single-generation table
-    require(raw.columns.contains("data_files"),
+    val facts = manifestOf(spark, outDir)
+    if (!facts.has("gen")) return 0 // single-generation table
+    require(facts.has("data_files"),
       "rollbackTo needs file-tracked metadata; this table predates data_files")
-    val maxG = currentGen(spark, outDir)
+    val maxG = facts.currentGen
     if (gen >= maxG) return maxG
     val t0 = System.currentTimeMillis()
-    val target = readMetaAt(spark, outDir, Some(gen)).filter(col("__part") >= 0)
-    // every data file current at `gen` must still exist — vacuum expires
-    // history, and a rollback onto missing files would commit a lie. One
-    // listStatus per part directory (vacuum's pattern), not one exists()
-    // RPC per file.
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val needed = target.filter(col("data_files").isNotNull)
-      .select(explode(col("data_files")).as("f")).distinct()
-      .collect().map(r => fileSuffix(r.getString(0)))
-    val onDisk: Set[String] = needed.map(_.takeWhile(_ != '/')).distinct.flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/data/$d")
-      if (!fs.exists(p)) Array.empty[String]
-      else fs.listStatus(p).filter(_.isFile).map(s => s"$d/${s.getPath.getName}")
-    }.toSet
-    val missing = needed.filterNot(onDisk)
-    require(missing.isEmpty, s"rollbackTo($gen): ${missing.length} data files " +
-      s"of that generation were vacuumed (first: ${missing.headOption.getOrElse("")})")
+    val (now, target) = (facts.view(None, None), facts.view(Some(gen), None))
+    requireFilesOnDisk(spark, outDir, gen, s"rollbackTo($gen)")
     // ...and so must the merge-on-read vector history a faithful restore of
     // `gen` applies: a committed delete txn at g ≤ gen whose vector rows
     // are gone (materializeDeletes fold, vacuum of rollback-abandoned
@@ -2440,36 +2246,28 @@ object EncodePipeline {
     // resurrecting its rows. Exceptions: txns a fold at f ∈ (g, gen] baked
     // into the files current at `gen`, and txns a rollback marker visible
     // at `gen` abandons anyway (their absence cannot change the result).
-    val facts = manifestOf(spark, outDir)
-    val (txns, rbM, folds) = (facts.txnGens, facts.rollbackMarkers, facts.foldGens)
+    val (txns, folds) = (facts.txnGens, facts.foldGens)
+    val rbM = facts.rollbackMarkers.filter(_._1 <= gen)
     if (txns.nonEmpty) {
-      val delPath = new org.apache.hadoop.fs.Path(s"$outDir/deletes")
-      val present: Set[String] =
-        if (!fs.exists(delPath) || !fs.listStatus(delPath).exists(s => s.isFile &&
-            s.getPath.getName.endsWith(".parquet") && !s.getPath.getName.startsWith(".")))
-          Set.empty
-        else readCachedDir(spark, s"$outDir/deletes")
-          .select("txn").filter(col("txn").isNotNull).distinct()
-          .collect().map(_.getString(0)).toSet
+      val present: Set[String] = vectorRows(spark, outDir).fold(Set.empty[String]) { d =>
+        val i = d.at("txn")
+        if (i < 0) Set.empty else d.rows.iterator.filterNot(_.isNullAt(i)).map(_.getString(i)).toSet
+      }
       val lost = txns.collect { case (t, g)
-        if g <= gen && !present.contains(t) &&
-          !rbM.exists { case (n, tt) => n <= gen && g > tt && g < n } &&
+        if g <= gen && !present.contains(t) && !Manifest.abandoned(rbM, g) &&
           !folds.exists(f => f > g && f <= gen) => t }
       require(lost.isEmpty, s"rollbackTo($gen): the delete-vector history of " +
         s"${lost.size} snapshot(s) at or below that generation was expired " +
         "(materializeDeletes/vacuum) — a faithful restore is impossible")
     }
     // parts that exist now but not at `gen` empty out at the new generation
-    val born = readMeta(spark, outDir).filter(col("__part") >= 0)
-      .select("__part").distinct()
-      .join(target.select("__part").distinct(), Seq("__part"), "left_anti")
-      .collect().map(_.getInt(0)).toSeq
+    val born = now.parts.toSeq.filter(p => p >= 0 && !target.parts.contains(p))
     val marker = genMarker(spark)
       .withColumn("column", lit("__rb_marker"))
       .withColumn("rollback_to", lit(gen))
     commit(spark, outDir, Txn(rows =
-      demoteRef(target).withColumn("additive", lit(false)) +:
-        (tombstoneRows(readMeta(spark, outDir), born, t0).toSeq :+ marker)))
+      demoteRef(target.toDF(spark).filter(col("__part") >= 0)).withColumn("additive", lit(false)) +:
+        (tombstoneRows(spark, now, born, t0).toSeq :+ marker)))
   }
 
   /** positions set in `now` and not in `before` (a shorter `before` reads
@@ -2512,8 +2310,7 @@ object EncodePipeline {
                          fromGen: Int, toGen: Int): DataFrame = {
     require(fromGen >= -1 && fromGen <= toGen,
       s"readChangesBetween: need -1 <= fromGen <= toGen, got ($fromGen, $toGen)")
-    val dicts = try loadDicts(spark, outDir)
-                catch { case _: Exception => Map.empty[Long, Codecs.DictTable] }
+    val dicts = loadDicts(spark, outDir)
     val dictsOpt = if (dicts.isEmpty) None else Some(dicts)
     def empty(): DataFrame = spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sourceSchema)
@@ -2670,9 +2467,9 @@ object EncodePipeline {
   }
 
   /** the table's CURRENT data files as (part, absolute path) — generation-
-    * resolved via [[readMetaAt]]: tracked commits contribute exactly their
+    * resolved via [[manifestView]]: tracked commits contribute exactly their
     * recorded file lists (orphans invisible), pre-file-tracking parts
-    * contribute their whole directory, mirroring the scanParts read path.
+    * contribute their whole directory, mirroring [[readData]].
     * The `format("graft")` connector plans one input partition per entry. */
   def currentFiles(spark: SparkSession, outDir: String,
                    gen: Option[Int] = None,
@@ -2844,7 +2641,7 @@ object EncodePipeline {
   /** Iceberg rewrite-manifests parity: compact the manifest DIRECTORY.
     * Every commit is one atomic single-file parquet append under
     * `outDir/meta`, so a long-lived table accumulates one small file per
-    * commit — and each planning read (readMeta) pays a listing + footer
+    * commit — and each planning read ([[manifestOf]]) pays a listing + footer
     * fetch per file. At fleet scale (thousands of streaming epochs / DML
     * commits) the manifest listing itself becomes the planning bottleneck;
     * rewriteManifests re-writes the directory as ONE file holding every
@@ -3074,9 +2871,7 @@ object EncodePipeline {
     * merge-on-read delete vectors ([[deleteWhereLazy]]) at scan time. Works
     * equally on tables WITHOUT a dicts/deletes side-structure. */
   def decodeShared(spark: SparkSession, outDir: String, sourceSchema: StructType): DataFrame = {
-    val dicts =
-      try loadDicts(spark, outDir)
-      catch { case _: Exception => Map.empty[Long, Codecs.DictTable] } // no dicts/ dir
+    val dicts = loadDicts(spark, outDir)
     val deletes = loadDeletes(spark, outDir)
     val rd = if (deletes.isEmpty) readData(spark, outDir)
              else readDataKeepFile(spark, outDir)
@@ -3092,9 +2887,7 @@ object EncodePipeline {
     * expires file history. */
   def decodeSharedAt(spark: SparkSession, outDir: String,
                      sourceSchema: StructType, gen: Int): DataFrame = {
-    val dicts =
-      try loadDicts(spark, outDir)
-      catch { case _: Exception => Map.empty[Long, Codecs.DictTable] }
+    val dicts = loadDicts(spark, outDir)
     val deletes = loadDeletes(spark, outDir, gen)
     val rd = readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)),
       keepFile = deletes.nonEmpty)
@@ -3112,8 +2905,9 @@ object EncodePipeline {
   // every file) — ANY commit, rewrite, vacuum, rollback or fold changes the
   // visible file set and invalidates naturally — and holds what the
   // parquet read would produce: a meta directory as its [[Manifest]]
-  // snapshot, from which planning reads answer without Spark jobs, other
-  // directories as their exact rows + merged schema. This is
+  // snapshot, from which planning reads answer without Spark jobs, a dicts
+  // directory as its built dictionary tables, a deletes directory as its
+  // exact rows + merged schema. This is
   // planning-metadata caching (the Iceberg model: manifests are
   // driver-resident), NOT result caching: all data reads still scan the
   // data files on every call. The cache is bounded by an estimate of the
@@ -3121,7 +2915,9 @@ object EncodePipeline {
   // first); a directory larger than the whole budget is read on every call
   // and never cached. The same cache holds each data file's block Bloom
   // filters once a point lookup has read them ([[cachedFileIndex]]).
-  private final class DirRows(val schema: StructType, val rows: Array[org.apache.spark.sql.Row])
+  private final class DirRows(val schema: StructType, val rows: Array[org.apache.spark.sql.Row]) {
+    def at(c: String): Int = schema.fieldNames.indexOf(c)
+  }
   private final class CachedDir(val sig: String, val value: AnyRef, val bytes: Long)
 
   private val dirCache =
@@ -3206,18 +3002,6 @@ object EncodePipeline {
     * file's path, that file's index) */
   private[graft] def dirCached(dir: String): Boolean =
     dirCache.synchronized(dirCache.containsKey(dir))
-
-  /** cached read of a small metadata directory as a driver-local relation;
-    * `withSrcFile` keeps the [[Manifest.SrcFile]] column */
-  private def readCachedDirEx(spark: SparkSession, dir: String,
-                              withSrcFile: Boolean): DataFrame = {
-    val e = dirRows(spark, dir)
-    val local = spark.createDataFrame(java.util.Arrays.asList(e.rows: _*), e.schema)
-    if (withSrcFile) local else local.drop(Manifest.SrcFile)
-  }
-
-  private[graft] def readCachedDir(spark: SparkSession, dir: String): DataFrame =
-    readCachedDirEx(spark, dir, withSrcFile = false)
 
   /** cached data-directory RELATION (a plan, not rows): a parquet relation
     * pins the exact file set + merged schema discovered at creation, so it
@@ -3311,45 +3095,24 @@ object EncodePipeline {
         if (d.columns.contains(c)) d.withColumn(c, lit(null).cast(t)) else d
       }
 
-  /** manifest-level pruning: read only committed parts whose metadata value
-    * bounds ([value_lo, value_hi] zone maps, written at encode time) admit
-    * `value` in `column` — the Iceberg manifest-skipping pattern. Parts whose
-    * bounds miss the predicate are never opened; within surviving parts,
-    * blob_count_eq / blob_count_between skip at block level. */
-  /** partition-pruned scan of `parts`: the __part semi-join prunes whole
-    * directories (DPP). On a never-compacted table this IS the read — the
-    * pinned plan shape. Once a table carries generations, the surviving
-    * parts' rows are additionally restricted to the CURRENT manifest file
-    * lists (compaction supersede + orphan safety within kept dirs). */
-  private def scanParts(spark: SparkSession, outDir: String,
-                        meta: DataFrame, parts: DataFrame): DataFrame = {
-    val data = readDataDir(spark, outDir)
-    if (!meta.columns.contains("gen"))
-      return data.join(broadcast(parts), Seq("__part"), "left_semi")
-    val files = meta.filter(col("data_files").isNotNull)
-      .select(explode(col("data_files")).as("__file")).distinct()
-    val oldParts = meta.filter(col("data_files").isNull).select("__part").distinct()
-    // input_file_name must bind to the scan BEFORE any join lands another
-    // source in the plan (Spark: "does not support more than one source")
-    val tagged = data.withColumn("__file", input_file_name())
-    tagged.join(broadcast(files), Seq("__file"), "left_semi").drop("__file")
-      .unionByName(data.join(broadcast(oldParts), Seq("__part"), "left_semi"))
-      .join(broadcast(parts), Seq("__part"), "left_semi")
+  /** the committed blocks of the parts `surviving` picks from the current
+    * manifest view — [[readData]]'s file-list rule, restricted to those
+    * parts, so pruned and plain reads cannot disagree on which files hold
+    * the table. Pruned parts' directories are never opened. */
+  private def readSurviving(spark: SparkSession, outDir: String)(
+      surviving: ManifestView => Array[Int]): DataFrame = {
+    val view = manifestView(spark, outDir, None)
+    readDataWithMeta(spark, outDir, view, parts = Some(surviving(view).toSet))
   }
 
+  /** manifest-level pruning: read only committed parts whose zone maps
+    * admit `value` in `column` ([[ManifestView.survivingLong]]) — the
+    * Iceberg manifest-skipping pattern; within surviving parts the Bloom
+    * filters skip blocks ([[bloomFilterBlocks]]). */
   def readDataPruned(spark: SparkSession, outDir: String,
-                     column: String, value: Long): DataFrame = {
-    val meta = readMeta(spark, outDir)
-    // pre-zone-map-era rows (no value bounds recorded) are kept
-    // conservatively rather than pruned as "no values" (mixed-era resume)
-    val isOldRow =
-      if (meta.columns.contains("data_files")) col("data_files").isNull else lit(true)
-    val parts = meta
-      .filter(col("column") === column &&
-        (isOldRow || (col("value_lo") <= value && col("value_hi") >= value)))
-      .select("__part").distinct()
-    bloomFilterBlocks(scanParts(spark, outDir, meta, parts), column, lit(value))
-  }
+                     column: String, value: Long): DataFrame =
+    bloomFilterBlocks(readSurviving(spark, outDir)(_.survivingLong(column, value, value)),
+      column, lit(value))
 
   /** block-level Bloom skipping inside zone-surviving parts: when the table
     * opted `column` into bloom filters at encode time (run(bloomCols=...)),
@@ -3365,74 +3128,38 @@ object EncodePipeline {
     else df.filter(coalesce(bloom_maybe(col(s"bm_$column"), value), lit(true)))
 
   /** string-column manifest pruning: parts whose truncated byte-string zone
-    * maps ([str_lo, str_hi], unsigned-lexicographic, null str_hi = unbounded
-    * above) admit `value`. A part with str_lo null holds no values for the
-    * column at all (every block all-null) and is skipped. */
+    * maps admit `value` ([[ManifestView.survivingStr]]) */
   def readDataPruned(spark: SparkSession, outDir: String,
                      column: String, value: String): DataFrame = {
-    val vb = lit(value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val meta = readMeta(spark, outDir)
-    // str bounds landed in the same metadata version as data_files, so a
-    // null data_files row predates them: its null str_lo means "bounds
-    // unknown", NOT "no values" — such parts are conservatively kept
-    // (mixed-era resume; see readData). Rows from the current version with
-    // null str_lo really are all-null for the column and prune away.
-    val isOldRow =
-      if (meta.columns.contains("data_files")) col("data_files").isNull else lit(true)
-    val admits = col("str_lo").isNotNull &&
-      col("str_lo") <= vb && (col("str_hi").isNull || col("str_hi") >= vb)
-    val parts = meta
-      .filter(col("column") === column && (isOldRow || admits))
-      .select("__part").distinct()
-    bloomFilterBlocks(scanParts(spark, outDir, meta, parts), column, vb)
+    val vb = value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    bloomFilterBlocks(readSurviving(spark, outDir)(_.survivingStr(column, vb, vb)),
+      column, lit(vb))
   }
 
-  /** RANGE-probe pruning: parts whose manifest [value_lo, value_hi] zone
-    * maps intersect [lo, hi] — the interval counterpart of the point probe
-    * (Iceberg range-scan manifest skipping). Old-era rows kept. */
+  /** RANGE-probe pruning: parts whose zone maps intersect [lo, hi] — the
+    * interval counterpart of the point probe (Iceberg range-scan manifest
+    * skipping) */
   def readDataPrunedRange(spark: SparkSession, outDir: String,
-                          column: String, lo: Long, hi: Long): DataFrame = {
-    val meta = readMeta(spark, outDir)
-    val isOldRow =
-      if (meta.columns.contains("data_files")) col("data_files").isNull else lit(true)
-    val parts = meta
-      .filter(col("column") === column &&
-        (isOldRow || (col("value_lo") <= hi && col("value_hi") >= lo)))
-      .select("__part").distinct()
-    scanParts(spark, outDir, meta, parts)
-  }
+                          column: String, lo: Long, hi: Long): DataFrame =
+    readSurviving(spark, outDir)(_.survivingLong(column, lo, hi))
 
   /** string RANGE-probe pruning: parts whose truncated byte-string zone
-    * maps intersect [lo, hi] (unsigned-lexicographic; null str_hi =
-    * unbounded above). Old-era rows kept; all-null parts pruned. */
+    * maps intersect [lo, hi] (unsigned-lexicographic) */
   def readDataPrunedRange(spark: SparkSession, outDir: String,
                           column: String, lo: String, hi: String): DataFrame = {
-    val loB = lit(lo.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val hiB = lit(hi.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val meta = readMeta(spark, outDir)
-    val isOldRow =
-      if (meta.columns.contains("data_files")) col("data_files").isNull else lit(true)
-    val admits = col("str_lo").isNotNull &&
-      col("str_lo") <= hiB && (col("str_hi").isNull || col("str_hi") >= loB)
-    val parts = meta
-      .filter(col("column") === column && (isOldRow || admits))
-      .select("__part").distinct()
-    scanParts(spark, outDir, meta, parts)
+    def utf8(v: String) = v.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    readSurviving(spark, outDir)(_.survivingStr(column, utf8(lo), utf8(hi)))
   }
 
   /** IS NULL-probe pruning: only parts whose manifest null_value_count for
-    * `column` is > 0 can contain null rows — an all-non-null column's parts
-    * are never opened (Iceberg null_value_counts manifest skipping).
-    * Old-era rows (count not recorded) are conservatively kept. */
-  def readDataPrunedIsNull(spark: SparkSession, outDir: String, column: String): DataFrame = {
-    import spark.implicits._
-    scanParts(spark, outDir, readMeta(spark, outDir),
-      survivingPartsIsNull(spark, outDir, column).toSeq.toDF("__part"))
-  }
+    * `column` admits null rows are opened ([[ManifestView.survivingIsNull]],
+    * Iceberg null_value_counts manifest skipping) */
+  def readDataPrunedIsNull(spark: SparkSession, outDir: String, column: String): DataFrame =
+    readSurviving(spark, outDir)(_.survivingIsNull(column))
 
-  // ---- collected surviving-part sets (the ManifestPruneRule planner hook
-  // consults these at optimization time; same admit logic as the
-  // readDataPruned* readers, with the same old-era conservatism) ----
+  // ---- surviving-part sets of the current manifest view: the rule the
+  // readDataPruned* readers apply, which the ManifestPruneRule planner hook
+  // consults at optimization time ----
 
   /** every committed part id */
   def allParts(spark: SparkSession, outDir: String): Array[Int] =
@@ -3485,20 +3212,18 @@ object EncodePipeline {
   def analyzeTable(spark: SparkSession, outDir: String): Int = {
     val schema = readSchemaFile(spark, outDir).getOrElse(throw new IllegalStateException(
       s"analyzeTable($outDir): no schema.json — only self-describing tables analyze"))
-    val raw = rawManifest(spark, outDir)
+    val view = manifestView(spark, outDir, None)
     val maxG = currentGen(spark, outDir)
-    if (!raw.columns.contains("data_files")) return maxG // nothing tracked
+    val files = view.dataFiles.map(f => s"$outDir/data/${fileSuffix(f)}")
+    if (files.isEmpty) return maxG // nothing tracked
     val t0 = System.currentTimeMillis()
-    val cur = readMeta(spark, outDir).filter(col("__part") >= 0)
+    val cur = view.toDF(spark).filter(col("__part") >= 0)
     val tracked = cur.filter(col("data_files").isNotNull && size(col("data_files")) > 0)
-    val files = tracked.select(explode(col("data_files")).as("f")).distinct()
-      .collect().map(r => s"$outDir/data/${fileSuffix(r.getString(0))}")
-    if (files.isEmpty) return maxG
     // driver-side kernels (same single-JVM pattern as the metadata job):
     // shared-dictionary blobs need the registry for their string bounds
-    try Codecs.registerDicts(loadDicts(spark, outDir)) catch { case _: Exception => }
+    loadDicts(spark, outDir) // registers them
     val written = spark.read.option("mergeSchema", "true")
-      .option("basePath", s"$outDir/data").parquet(files.toSeq: _*)
+      .option("basePath", s"$outDir/data").parquet(files: _*)
     // only columns that exist in the committed files are recomputable
     // (ALTER TABLE ADD COLUMNS before any insert leaves no e_ column)
     val avail = written.columns.toSet

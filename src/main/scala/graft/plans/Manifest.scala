@@ -70,6 +70,33 @@ final class Manifest(val schema: StructType, rows: Array[Row], srcFiles: Array[S
     raw.filter(r => !isNull(r, i) && r.getBoolean(i)).map(genOf).sorted
   }
 
+  /** the generations of main history — main rows and publish markers, not
+    * a branch's unpublished commits — newest first */
+  lazy val mainGens: Seq[Int] = raw.filter(r => iRef < 0 || r.isNullAt(iRef) || !isNull(r, iPubTo))
+    .map(genOf).distinct.sorted.reverse
+
+  /** what publishing `branch` (creation base `base`) lands — None when it
+    * has nothing unpublished ([[EncodePipeline.fastForward]]). The branch's
+    * last sync point is the generation of its last publish marker (its
+    * base before any). */
+  def publishPlan(branch: String, base: Int): Option[Manifest.PublishPlan] = {
+    if (iRef < 0) return None // no branch commits ever
+    def ofBranch(r: Row) = !r.isNullAt(iRef) && r.getString(iRef) == branch
+    def isPub(r: Row) = !isNull(r, iPubTo)
+    val pubs = raw.filter(r => ofBranch(r) && isPub(r))
+    val from = (base +: pubs.map(_.getInt(iPubTo))).max
+    val sync = (base +: pubs.map(genOf)).max
+    val staged = raw.filter(r => ofBranch(r) && !isPub(r) && genOf(r) > from).map(genOf)
+    // main commits since the sync point: main rows, or other branches'
+    // publish markers (those changed main too)
+    val mainAfter = raw.filter(r => genOf(r) > sync &&
+      (r.isNullAt(iRef) || (isPub(r) && !ofBranch(r))))
+    staged.maxOption.map(to => Manifest.PublishPlan(from, to, sync, mainAfter.nonEmpty,
+      // only commits that re-list content (parts >= 0) raise a floor that
+      // could hide the staged rows; a pure marker generation does not
+      mainAfter.exists(r => !additive(r) && part(r) >= 0)))
+  }
+
   /** manifest file → the highest generation it holds */
   lazy val genOfSrcFile: Map[String, Int] =
     srcFiles.indices.groupBy(srcFiles(_)).map { case (f, is) => f -> is.map(i => genOf(rows(i))).max }
@@ -201,6 +228,18 @@ object Manifest {
       rows.map(_.getString(i)))
   }
 
+  /** a branch publish: generations (from exclusive, to inclusive) become
+    * main-visible; `mainAdvanced` = main committed since the branch's sync
+    * point, `mainReplaced` = one of those commits replaced content */
+  final case class PublishPlan(from: Int, to: Int, syncPoint: Int,
+                               mainAdvanced: Boolean, mainReplaced: Boolean)
+
+  /** whether the rollback `markers` (marker gen N, target T) abandon a
+    * delete vector committed at generation `g`: a rollback undoes every
+    * vector committed strictly inside (T, N) */
+  def abandoned(markers: Seq[(Int, Int)], g: Int): Boolean =
+    markers.exists { case (n, t) => g > t && g < n }
+
   /** rough driver-heap footprint of a cell value */
   def approxBytes(v: Any): Long = v match {
     case null => 8L
@@ -246,7 +285,7 @@ object Manifest {
 final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row]) {
   import Manifest._
 
-  def toDF(spark: SparkSession): DataFrame = m.toDF(spark, rows)
+  def toDF(spark: SparkSession, rs: Seq[Row] = rows): DataFrame = m.toDF(spark, rs)
 
   /** every committed part id (marker rows included), ascending */
   lazy val parts: Array[Int] = rows.map(m.part).distinct.sorted.toArray
@@ -311,6 +350,66 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
       (tracked.flatMap(r => r.getSeq[String](m.iFiles).map(m.part(r) -> _)).distinct,
         old.map(m.part).distinct)
     }
+
+  /** path of every data file the tracked rows list, once each */
+  lazy val dataFiles: Seq[String] = trackedFiles.map(_._2).distinct
+
+  /** parts holding one of the data files `suffixes` ("__part=p/name") */
+  def partsHolding(suffixes: Set[String]): Seq[Int] =
+    trackedFiles.collect { case (p, f) if suffixes(EncodePipeline.fileSuffix(f)) => p }
+      .distinct.sorted
+
+  /** parts [[EncodePipeline.compact]] rewrites: every row file-tracked, and
+    * at least `minFiles` distinct data files (append fragmentation) or a
+    * column with more blocks than ceil(rows / blockSize) (under-filled
+    * blocks). A part's rows are (column × commit)-grained. */
+  def compactCandidates(blockSize: Int, minFiles: Int): Seq[Int] = {
+    def sum(rs: Seq[Row], c: String) = rs.iterator.map(m.longAt(_, m.at(c)).getOrElse(0L)).sum
+    rows.groupBy(m.part).toSeq.collect { case (p, rs) if !rs.exists(oldRow) &&
+        (rs.flatMap(_.getSeq[String](m.iFiles)).distinct.size >= minFiles ||
+          rs.groupBy(m.column).values.exists(cs =>
+            sum(cs, "blocks") > math.ceil(sum(cs, "rows").toDouble / blockSize))) => p
+    }.sorted
+  }
+
+  /** [[EncodePipeline.compactSmallFiles]]'s plan over the parts whose every
+    * row is file-tracked. A commit is the rows sharing one part's file
+    * list; it is small when it holds fewer than `blockSize` rows or, with
+    * `maxSmallBytes` > 0, at most that many encoded bytes. Parts with at
+    * least `minSmall` small commits are packed. Returns (packed parts, the
+    * files of their small commits, their other rows, which carry forward). */
+  def smallFilePlan(blockSize: Int, maxSmallBytes: Long,
+                    minSmall: Int): (Seq[Int], Seq[String], Seq[Row]) = {
+    def files(r: Row) = r.getSeq[String](m.iFiles)
+    def small(rs: Seq[Row]) =
+      rs.flatMap(m.longAt(_, m.at("rows"))).maxOption.exists(_ < blockSize) ||
+        maxSmallBytes > 0L && {
+          val bytes = rs.flatMap(m.longAt(_, m.at("encoded_bytes")))
+          bytes.nonEmpty && bytes.sum <= maxSmallBytes
+        }
+    val byPart = rows.groupBy(m.part).filterNot(_._2.exists(oldRow))
+    val smallSets = byPart.map { case (p, rs) =>
+      p -> rs.groupBy(files).collect { case (fs, cs) if small(cs) => fs }.toSet
+    }.filter(_._2.size >= minSmall)
+    val packed = smallSets.keys.toSeq.sorted
+    (packed, smallSets.values.flatten.flatten.toSeq.distinct,
+      packed.flatMap(p => byPart(p).filterNot(r => smallSets(p)(files(r)))))
+  }
+
+  /** the attained [min, max] of long `column` over the data parts; None
+    * when no row has values or one with values recorded no bounds */
+  def attainedBounds(column: String): Option[(Long, Long)] = {
+    val (iMin, iMax, iRows, iNulls) =
+      (m.at("value_min"), m.at("value_max"), m.at("rows"), m.at("null_value_count"))
+    if (iMin < 0) return None
+    val rs = rows.filter(r => m.part(r) >= 0 && m.column(r) == column &&
+      m.longAt(r, iRows).exists(_ > 0))
+    val statless = rs.exists(r => m.isNull(r, iMin) &&
+      m.longAt(r, iNulls).getOrElse(0L) < m.longAt(r, iRows).get)
+    if (statless) None
+    else for (lo <- rs.flatMap(m.longAt(_, iMin)).minOption;
+              hi <- rs.flatMap(m.longAt(_, iMax)).maxOption) yield (lo, hi)
+  }
 
   /** suffixes ("__part=p/name") of every tracked data file */
   lazy val fileSuffixes: Set[String] =

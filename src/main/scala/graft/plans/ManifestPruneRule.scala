@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
 
 import graft.functions._
 
-/** Manifest pruning as a PLANNER hook (tier 2 of the Iceberg-parity skip
-  * path; the readDataPruned* readers are the explicit tier 1): a `Filter`
+/** Manifest pruning as a PLANNER hook (Iceberg-parity manifest skipping
+  * inside ordinary queries over the encoded `data` directory): a `Filter`
   * whose condition carries encoded-domain probes (`blob_contains` /
   * `blob_count_eq > 0` / `blob_contains_between(_str)` /
   * `blob_null_count > 0` — the forms EncodedFilterRule itself produces from
@@ -22,9 +22,10 @@ import graft.functions._
   * partition pruning turns the injected predicate into "never open the
   * pruned part directories" — bytes read ∝ surviving parts, with no code
   * change in the query. The lookup answers from the driver-held
-  * [[Manifest]] in plain Scala, so optimizing a query starts no Spark job;
-  * old-era manifest rows (no zone maps recorded) are conservatively kept,
-  * mirroring the tier-1 readers.
+  * [[Manifest]] in plain Scala ([[ManifestView.survivingLong]] and its
+  * siblings, the rule the readDataPruned* readers apply too), so optimizing
+  * a query starts no Spark job; old-era manifest rows (no zone maps
+  * recorded) are conservatively kept.
   *
   * Guards: skipped when the condition already references `__part` (also the
   * fixed-point idempotency guard), when no conjunct is a recognizable probe,

@@ -522,8 +522,7 @@ class GraftCdcMicroBatchStream(spark: SparkSession, outDir: String,
   /** per micro-batch, so shared dictionaries committed by later appends are
     * re-broadcast each batch (same contract as the plain streaming source) */
   override def createReaderFactory(): PartitionReaderFactory = {
-    val dicts = try EncodePipeline.loadDicts(spark, outDir)
-                catch { case _: Exception => Map.empty[Long, Codecs.DictTable] }
+    val dicts = EncodePipeline.loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
     GraftReaderFactory(Bridge.hadoopConfBroadcast(spark),
       GraftScan.planWithMeta(srcSchema, fullSchema), dictsBc, -1)
@@ -1539,9 +1538,7 @@ class GraftMicroBatchStream(spark: SparkSession, outDir: String,
   /** called once per micro-batch (MicroBatchScanExec), so shared
     * dictionaries committed by later appends are re-broadcast each batch */
   override def createReaderFactory(): PartitionReaderFactory = {
-    val dicts =
-      try EncodePipeline.loadDicts(spark, outDir)
-      catch { case _: Exception => Map.empty[Long, Codecs.DictTable] }
+    val dicts = EncodePipeline.loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
     GraftReaderFactory(Bridge.hadoopConfBroadcast(spark),
       GraftScan.planWithMeta(tableSchema, required), dictsBc, -1)

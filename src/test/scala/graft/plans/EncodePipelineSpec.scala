@@ -203,6 +203,50 @@ class EncodePipelineSpec extends SparkTestBase {
     assert(EncodePipeline.readData(spark, out).count() === before)
   }
 
+  test("pruned readers read the manifest file list: an orphan data file changes no result") {
+    val docs = WebDocGen.dataset(spark, 400, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 128)
+    // the orphan of the test above: a copy of a committed data file under
+    // a new name inside its part directory
+    val partDir = new java.io.File(s"$out/data").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("__part=")).head
+    val dataFile = partDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    java.nio.file.Files.copy(dataFile.toPath,
+      partDir.toPath.resolve("part-99999-orphan.snappy.parquet"))
+    val part = partDir.getName.stripPrefix("__part=").toInt
+    def blocks(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, Int)] =
+      df.select("__part", "__block", "__cnt").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+    def readDataOf(parts: Array[Int]) =
+      blocks(EncodePipeline.readData(spark, out).filter(col("__part").isin(parts.toSeq: _*)))
+    val url = EncodePipeline.decode(EncodePipeline.readData(spark, out)
+        .filter(col("__part") === part), docs.schema)
+      .select("url").head().getString(0)
+    val u = url.getBytes("UTF-8")
+    val (lo, hi) = ("", "\u00ff")
+    val ts = WebDocGen.BaseMicros + 100L * WebDocGen.StepMicros
+    val pruned = Seq(
+      "point" -> (EncodePipeline.readDataPruned(spark, out, "url", url),
+        EncodePipeline.survivingPartsStr(spark, out, "url", u, u)),
+      "range" -> (EncodePipeline.readDataPrunedRange(spark, out, "url", lo, hi),
+        EncodePipeline.survivingPartsStr(spark, out, "url", lo.getBytes("UTF-8"), hi.getBytes("UTF-8"))),
+      "long" -> (EncodePipeline.readDataPruned(spark, out, "warc_ts", ts),
+        EncodePipeline.survivingPartsLong(spark, out, "warc_ts", ts, ts)),
+      "long range" -> (EncodePipeline.readDataPrunedRange(spark, out, "warc_ts", Long.MinValue, Long.MaxValue),
+        EncodePipeline.survivingPartsLong(spark, out, "warc_ts", Long.MinValue, Long.MaxValue)),
+      "is null" -> (EncodePipeline.readDataPrunedIsNull(spark, out, "lang"),
+        EncodePipeline.survivingPartsIsNull(spark, out, "lang")))
+    pruned.foreach { case (name, (df, parts)) =>
+      assert(blocks(df) === readDataOf(parts), name)
+    }
+    assert(blocks(pruned(1)._2._1) === blocks(EncodePipeline.readData(spark, out)))
+    // a lookup decodes its url exactly once
+    val hits = EncodePipeline.decode(EncodePipeline.readDataPruned(spark, out, "url", url),
+      docs.schema).filter(col("url") === url)
+    assert(hits.count() === 1L)
+  }
+
   test("mixed-era metadata (pre-data_files rows) reads per-row, losing no parts") {
     // a directory whose early waves were committed by a pre-data_files /
     // pre-string-bounds version and later waves by the current one: the old

@@ -102,4 +102,51 @@ class SharedDictPipelineSpec extends SparkTestBase {
     val summary = EncodePipeline.verifyRoundTrip(docs, decoded, "url").head()
     assert(summary.getLong(1) === 0L)
   }
+
+  test("an unreadable dicts/ fails decode, time travel, a stream and DML; no dicts/ still reads") {
+    val docs = docsWithHost(600)
+    val plain = tmpDir()
+    EncodePipeline.run(docs, "url", plain, partitions = 4, blockSize = 128)
+    assert(!new java.io.File(s"$plain/dicts").exists())
+    assert(EncodePipeline.decodeShared(spark, plain, docs.schema).count() === 600L)
+
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 128,
+      useHostPartitioner = true, sharedDictCols = Seq("host"))
+    assert(EncodePipeline.decodeShared(spark, out, docs.schema).count() === 600L)
+    java.nio.file.Files.write(new java.io.File(s"$out/dicts", "part-99999-garbage.parquet").toPath,
+      "not a parquet file".getBytes("UTF-8"))
+    def failsOnGarbage(name: String)(body: => Any): Unit = {
+      val e = intercept[Exception](body)
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("garbage")), s"$name: $e")
+    }
+    failsOnGarbage("decodeShared")(EncodePipeline.decodeShared(spark, out, docs.schema).count())
+    failsOnGarbage("decodeSharedAt")(
+      EncodePipeline.decodeSharedAt(spark, out, docs.schema, 0).count())
+    failsOnGarbage("deleteWhere")(
+      EncodePipeline.deleteWhere(spark, out, docs.schema, "url", col("url") === "absent"))
+    val q = spark.readStream.format("graft").load(out).select("url")
+      .writeStream.format("memory").queryName("graft_garbage_dicts").outputMode("append").start()
+    try failsOnGarbage("readStream")(q.processAllAvailable())
+    finally q.stop()
+  }
+
+  test("with a 1-byte metadata cache budget a shared-dictionary table decodes bit-identically") {
+    val docs = docsWithHost(1500)
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 128,
+      useHostPartitioner = true, sharedDictCols = Seq("host"))
+    val codecs = EncodePipeline.readData(spark, out)
+      .select(graft.functions.blob_codec(col("e_host"))).distinct().collect().map(_.getString(0))
+    assert(codecs.exists(_.startsWith("shared")), codecs.toSeq)
+    val saved = EncodePipeline.metaCacheBudget
+    EncodePipeline.metaCacheBudget = 1L
+    try {
+      val s = EncodePipeline.verifyRoundTrip(docs,
+        EncodePipeline.decodeShared(spark, out, docs.schema), "url").head()
+      assert(s.getLong(0) === 1500L && s.getLong(1) === 0L)
+      assert(!EncodePipeline.dirCached(s"$out/dicts"))
+    } finally EncodePipeline.metaCacheBudget = saved
+  }
 }

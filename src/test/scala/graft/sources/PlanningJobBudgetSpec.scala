@@ -9,7 +9,8 @@ import graft.plans.EncodePipeline
 /** Planning a `format("graft")` read consults only the driver-held
   * manifest: once the table's metadata is cached, building the physical
   * plan of a lookup, a range aggregate or a full aggregate starts no Spark
-  * job — the data scan is the first job a query runs. */
+  * job — the data scan is the first job a query runs. The pruned encoded
+  * readers and the maintenance planners decide from the same manifest. */
 class PlanningJobBudgetSpec extends SparkTestBase {
 
   private def tmpDir(): String = {
@@ -52,5 +53,47 @@ class PlanningJobBudgetSpec extends SparkTestBase {
     val (parts, j3) = Jobs.counted(spark)(EncodePipeline.survivingPartsStr(spark, out, "url", b, b))
     assert((j1, j2, j3) === ((0, 0, 0)))
     assert(gen === 0 && bid === 0L && parts.nonEmpty)
+  }
+
+  test("a warm manifest cache decides compact, vacuum, createTag and pruned readers with 0 jobs") {
+    val docs = WebDocGen.dataset(spark, 2000, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 128, bloomCols = Seq("url"))
+    def zeroJobs[T](name: String)(body: => T): T = {
+      val (r, jobs) = Jobs.counted(spark)(body)
+      assert(jobs === 0, s"$name started $jobs Spark jobs")
+      r
+    }
+    // warm the caches: a first compact or vacuum may still rewrite or reclaim
+    EncodePipeline.compact(spark, out, docs.schema, blockSize = 128)
+    EncodePipeline.vacuum(spark, out)
+    assert(EncodePipeline.readData(spark, out).count() > 0L)
+    assert(zeroJobs("compact")(EncodePipeline.compact(spark, out, docs.schema, blockSize = 128))
+      .isEmpty)
+    assert(zeroJobs("vacuum")(EncodePipeline.vacuum(spark, out)) === 0)
+    assert(zeroJobs("vacuum(retainLast = 3)")(EncodePipeline.vacuum(spark, out, retainLast = 3)) === 0)
+    val gen = EncodePipeline.currentGen(spark, out)
+    assert(zeroJobs("createTag")(EncodePipeline.createTag(spark, out, "t1")) === gen)
+
+    val url = docs.select("url").head().getString(0)
+    val ts = WebDocGen.BaseMicros + 100L * WebDocGen.StepMicros
+    val readers: Seq[(String, () => DataFrame)] = Seq(
+      "readDataPruned(long)" -> (() => EncodePipeline.readDataPruned(spark, out, "warc_ts", ts)),
+      "readDataPruned(string)" -> (() => EncodePipeline.readDataPruned(spark, out, "url", url)),
+      "readDataPrunedRange(long)" -> (() =>
+        EncodePipeline.readDataPrunedRange(spark, out, "warc_ts", ts, ts + 1000000L)),
+      "readDataPrunedRange(string)" -> (() =>
+        EncodePipeline.readDataPrunedRange(spark, out, "url", "a", "z")),
+      "readDataPrunedIsNull" -> (() => EncodePipeline.readDataPrunedIsNull(spark, out, "lang")))
+    readers.foreach { case (name, r) => zeroJobs(name)(r()) }
+    assert(EncodePipeline.decode(readers(1)._2(), docs.schema)
+      .filter(col("url") === url).count() === 1L)
+
+    // a vacuum over committed delete vectors classifies them from the
+    // cached deletes/ rows
+    assert(EncodePipeline.deleteWhereLazy(spark, out, docs.schema, col("url") === url) === 1L)
+    EncodePipeline.vacuum(spark, out)
+    assert(zeroJobs("vacuum with delete vectors")(EncodePipeline.vacuum(spark, out)) === 0)
+    assert(EncodePipeline.decodeShared(spark, out, docs.schema).count() === 1999L)
   }
 }
