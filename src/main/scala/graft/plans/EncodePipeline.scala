@@ -405,36 +405,11 @@ object EncodePipeline {
     decode(enc, sourceSchema, dicts, keepPart = false)
 
   /** `keepPart = true` carries the physical __part id through to the
-    * decoded rows — rewrite paths ([[deleteWhere]]) use it to put
-    * surviving rows back exactly where they came from, independent of
-    * which partitioner originally placed them. */
+    * decoded rows — the placement tests use it to check which part each
+    * row landed in, independent of which partitioner placed it. */
   def decode(enc: DataFrame, sourceSchema: StructType,
              dicts: Option[Map[Long, Codecs.DictTable]],
-             keepPart: Boolean): DataFrame =
-    decodeEx(enc, sourceSchema, dicts, keepPart, lineage = false, Map.empty)
-
-  /** merge-on-read scan lineage: prepends `__part`, `__file` (data-file
-    * "__part=p/name" id), `__block`, and `__pos` (the row's ORIGINAL in-block ordinal,
-    * stable under delete-vector application) to the decoded rows — the
-    * coordinates [[deleteWhereLazy]] anchors position-delete bitmaps to. */
-  def decodeWithLineage(enc: DataFrame, sourceSchema: StructType,
-                        dicts: Option[Map[Long, Codecs.DictTable]],
-                        deletes: Map[(String, Int), Array[Byte]]): DataFrame =
-    decodeEx(enc, sourceSchema, dicts, keepPart = true, lineage = true, deletes)
-
-  private def decodeEx(enc0: DataFrame, sourceSchema: StructType,
-             dicts: Option[Map[Long, Codecs.DictTable]],
-             keepPart: Boolean, lineage: Boolean,
-             deletes: Map[(String, Int), Array[Byte]]): DataFrame = {
-    val needFile = lineage || deletes.nonEmpty
-    // data-file id: the "__part=p/name" suffix (same normalization as
-    // [[fileSuffix]]) — unique per file, stable under table relocation —
-    // the anchor delete vectors key on. Callers reading through
-    // [[readDataKeepFile]] arrive with it attached (Spark rejects
-    // input_file_name() above a multi-source join).
-    val enc = if (needFile && !enc0.columns.contains("__fname"))
-      enc0.withColumn("__fname", regexp_extract(input_file_name(), "[^/]+/[^/]+$", 0))
-    else enc0
+             keepPart: Boolean): DataFrame = {
     val plans = plan(sourceSchema)
     val ps = plans.toArray
     // string-kind columns restore as StringType directly: values are
@@ -443,11 +418,7 @@ object EncodePipeline {
     // decode loop. Binary-kind columns still need owned arrays
     // (InternalRow's binary accessor returns Array[Byte]).
     val lead =
-      (if (keepPart) Seq(StructField("__part", IntegerType, nullable = false)) else Nil) ++
-      (if (lineage) Seq(
-        StructField("__file", StringType, nullable = false),
-        StructField("__block", IntegerType, nullable = false),
-        StructField("__pos", IntegerType, nullable = false)) else Nil)
+      if (keepPart) Seq(StructField("__part", IntegerType, nullable = false)) else Nil
     val canonSchema = StructType(
       lead ++
       plans.map(p =>
@@ -463,15 +434,11 @@ object EncodePipeline {
     val needed =
       Seq("__cnt") ++
       (if (keepPart) Seq("__part") else Nil) ++
-      (if (needFile) Seq("__fname", "__block") else Nil) ++
       plans.map("e_" + _.name).filter(enc.columns.contains)
     val encP = enc.select(needed.distinct.map(col): _*)
     val encSchema = encP.schema
     val partIdx = if (keepPart) encSchema.fieldIndex("__part") else -1
-    val fnameIdx = if (needFile) encSchema.fieldIndex("__fname") else -1
-    val blockIdx = if (needFile) encSchema.fieldIndex("__block") else -1
     val off = lead.length
-    val lineageAt = if (keepPart) 1 else 0
     // by-NAME resolution with -1 for absent columns (schema evolution: a
     // target schema may carry columns the table — or some of its parts,
     // when read with mergeSchema — never wrote; they decode as all-null)
@@ -481,73 +448,31 @@ object EncodePipeline {
     // JVM-wide content-addressed registry before the first blob is decoded —
     // the same registry stand-alone kernel expressions resolve against
     val dictsBc = dicts.filter(_.nonEmpty).map(enc.sparkSession.sparkContext.broadcast(_))
-    // delete vectors travel by broadcast too: bitmaps exist only for blocks
-    // with deletes, so the map is ∝ deleted rows, not table size
-    val delBc = if (deletes.isEmpty) None
-                else Some(enc.sparkSession.sparkContext.broadcast(deletes))
-    val emitLineage = lineage
     val rdd = Bridge.toRdd(encP).mapPartitions { rows =>
       dictsBc.foreach(b => Codecs.registerDicts(b.value))
-      val delMap = delBc.map(_.value).orNull
       val nCols = ps.length
       rows.flatMap { r =>
-        val longVals = new Array[Array[Long]](nCols)
-        val longNulls = new Array[Array[Boolean]](nCols)
-        val strViews = new Array[Codecs.StrView](nCols)
-        val binVals = new Array[Array[Array[Byte]]](nCols)
-        val allNull = new Array[Boolean](nCols)
         val n = r.getInt(cntIdx)
-        var c = 0
-        while (c < nCols) {
-          if (eIdx(c) < 0 || r.isNullAt(eIdx(c))) {
-            allNull(c) = true // column absent from this part's era
-          } else {
-            val blob = r.getBinary(eIdx(c))
-            if (ps(c).kind == 'l') {
-              val (v, nu) = Codecs.decodeLongsN(blob)
-              longVals(c) = v; longNulls(c) = nu
-              require(v.length == n, s"block count mismatch: ${v.length} != $n")
-            } else if (ps(c).kind == 's') {
-              strViews(c) = Codecs.decodeStrsView(blob)
-              require(strViews(c).n == n, s"block count mismatch: ${strViews(c).n} != $n")
-            } else {
-              binVals(c) = Codecs.decodeStrsN(blob)
-              require(binVals(c).length == n, s"block count mismatch: ${binVals(c).length} != $n")
-            }
-          }
-          c += 1
-        }
+        val db = decodeBlock(ps, n)(c =>
+          if (eIdx(c) < 0 || r.isNullAt(eIdx(c))) null else r.getBinary(eIdx(c)))
         val partVal: Any = if (partIdx >= 0) Integer.valueOf(r.getInt(partIdx)) else null
-        val fname = if (fnameIdx >= 0) r.getUTF8String(fnameIdx).toString else null
-        val blockId = if (blockIdx >= 0) r.getInt(blockIdx) else -1
-        val fnameU = if (emitLineage)
-          org.apache.spark.unsafe.types.UTF8String.fromString(fname) else null
-        val bm: Array[Byte] =
-          if (delMap == null) null else delMap.getOrElse((fname, blockId), null)
-        (0 until n).iterator
-          .filter(i => bm == null || !bitSet(bm, i))
-          .map { i =>
+        (0 until n).iterator.map { i =>
           val vals = new Array[Any](nCols + off)
           if (partIdx >= 0) vals(0) = partVal
-          if (emitLineage) {
-            vals(lineageAt) = fnameU
-            vals(lineageAt + 1) = Integer.valueOf(blockId)
-            vals(lineageAt + 2) = Integer.valueOf(i)
-          }
           var c2 = 0
           while (c2 < nCols) {
             vals(c2 + off) =
-              if (allNull(c2)) null
+              if (db.allNull(c2)) null
               else ps(c2).kind match {
                 case 'l' =>
-                  if (longNulls(c2) != null && longNulls(c2)(i)) null
-                  else java.lang.Long.valueOf(longVals(c2)(i))
+                  if (db.longNulls(c2) != null && db.longNulls(c2)(i)) null
+                  else java.lang.Long.valueOf(db.longVals(c2)(i))
                 case 's' =>
-                  val v = strViews(c2)
+                  val v = db.strViews(c2)
                   val len = v.lens(i)
                   if (len < 0) null
                   else org.apache.spark.unsafe.types.UTF8String.fromBytes(v.buf, v.offs(i), len)
-                case _ => binVals(c2)(i)
+                case _ => db.binVals(c2)(i)
               }
             c2 += 1
           }
@@ -560,10 +485,48 @@ object EncodePipeline {
         plans.map(p => restoreCol(p, col(p.name))): _*)
   }
 
-  /** bit `i` of a position-delete bitmap (little-endian within bytes);
-    * positions beyond the stored bytes are not deleted */
-  private def bitSet(bm: Array[Byte], i: Int): Boolean =
-    (i >> 3) < bm.length && (bm(i >> 3) & (1 << (i & 7))) != 0
+  /** one block's columns decoded by kind: `longVals`/`longNulls` for
+    * long-kind columns, `strViews` for string-kind, `binVals` for binary;
+    * `allNull` marks a column the block stores no blob for */
+  private[graft] final class DecodedBlock(val n: Int, nCols: Int) {
+    val longVals = new Array[Array[Long]](nCols)
+    val longNulls = new Array[Array[Boolean]](nCols)
+    val strViews = new Array[Codecs.StrView](nCols)
+    val binVals = new Array[Array[Array[Byte]]](nCols)
+    val allNull = new Array[Boolean](nCols)
+  }
+
+  /** decode one block of `n` rows: `blob(c)` is column c's encoded blob, or
+    * null when the block has none (a column absent from the file's era
+    * decodes as all-null). Every decoded column must hold exactly `n`
+    * values. The one block decoder of [[decode]] and the `format("graft")`
+    * readers. */
+  private[graft] def decodeBlock(cols: Array[ColPlan], n: Int)(
+      blob: Int => Array[Byte]): DecodedBlock = {
+    val db = new DecodedBlock(n, cols.length)
+    var c = 0
+    while (c < cols.length) {
+      val b = blob(c)
+      if (b == null) db.allNull(c) = true
+      else {
+        val m = cols(c).kind match {
+          case 'l' =>
+            val (v, nu) = Codecs.decodeLongsN(b)
+            db.longVals(c) = v; db.longNulls(c) = nu
+            v.length
+          case 's' =>
+            db.strViews(c) = Codecs.decodeStrsView(b)
+            db.strViews(c).n
+          case _ =>
+            db.binVals(c) = Codecs.decodeStrsN(b)
+            db.binVals(c).length
+        }
+        require(m == n, s"block count mismatch: $m != $n")
+      }
+      c += 1
+    }
+    db
+  }
 
   /** per-(part, column) metrics: rows, blocks, raw vs encoded bytes, codecs,
     * plus header-derived value bounds for long-kind columns (the zone-map /
@@ -740,7 +703,7 @@ object EncodePipeline {
     readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)))
 
   private def readDataWithMeta(spark: SparkSession, outDir: String,
-                               meta: ManifestView, keepFile: Boolean = false,
+                               meta: ManifestView,
                                parts: Option[Set[Int]] = None): DataFrame = {
     import spark.implicits._
     def keep(p: Int) = parts.forall(_(p))
@@ -748,18 +711,9 @@ object EncodePipeline {
     // directories are never read
     val data = parts.fold(readDataDir(spark, outDir))(ps =>
       readDataDir(spark, outDir).filter(col("__part").isin(ps.toSeq.sorted: _*)))
-    // input_file_name() must sit directly above the single data relation
-    // (Spark rejects it over a multi-source join). The "__part=p/name"
-    // suffix is what delete vectors key on — the BASENAME alone is NOT
-    // unique: one partitionBy task writes the same part-NNNNN-<jobUUID>
-    // name into every __part directory it lands rows in.
-    def withName(df: DataFrame): DataFrame =
-      if (keepFile) df.withColumn("__fname",
-        regexp_extract(input_file_name(), "[^/]+/[^/]+$", 0))
-      else df
     if (!meta.tracksFiles) {
       // pure pre-data_files metadata: part-level committed-set filtering
-      return withName(data)
+      return data
         .join(broadcast(meta.parts.toSeq.filter(keep).toDF("__part")), Seq("__part"), "left_semi")
     }
     // MIXED metadata (a pre-data_files directory resumed by this version)
@@ -770,21 +724,17 @@ object EncodePipeline {
     // a part in BOTH eras (re-commit anomaly): part-level wins (superset)
     val files = meta.trackedFiles.collect { case (p, f) if keep(p) && !oldParts(p) => f }.distinct
     // mergeSchema (readDataDir): parts written before a column was added
-    // lack its e_/r_ fields; the union schema carries them as null
-    val byFile = withName(data)
+    // lack its e_/r_ fields; the union schema carries them as null.
+    // input_file_name() must sit directly above the single data relation
+    // (Spark rejects it over a multi-source join).
+    val byFile = data
       .withColumn("__file", input_file_name())
       .join(broadcast(files.toDF("__file")), Seq("__file"), "left_semi")
       .drop("__file")
     if (oldParts.isEmpty) byFile
-    else byFile.unionByName(withName(data)
+    else byFile.unionByName(data
       .join(broadcast(oldParts.toSeq.toDF("__part")), Seq("__part"), "left_semi"))
   }
-
-  /** [[readData]] with the data-file "__part=p/name" id attached as
-    * `__fname` — the form [[decodeEx]] needs for delete-vector application
-    * and lineage */
-  private[plans] def readDataKeepFile(spark: SparkSession, outDir: String): DataFrame =
-    readDataWithMeta(spark, outDir, manifestView(spark, outDir, None), keepFile = true)
 
   // ---------------- batch append (streaming-grade commits) ----------------
 
@@ -1170,16 +1120,8 @@ object EncodePipeline {
     requireNoLiveDeletes(spark, outDir, "deleteWhere")
     val t0 = System.currentTimeMillis()
     val meta = manifestView(spark, outDir, None)
-    val dicts = loadDicts(spark, outDir)
-    // `parts` scopes the ENCODED read so parquet partition pruning keeps
-    // the rewrite pass from decoding untouched parts (a filter after decode
-    // sits above the RDD boundary and prunes nothing)
-    def decoded(parts: Seq[Int] = Nil) = decode(
-      (if (parts.isEmpty) readData(spark, outDir)
-       else readData(spark, outDir).filter(col("__part").isin(parts: _*))),
-      sourceSchema, if (dicts.isEmpty) None else Some(dicts), keepPart = true)
     val hit = coalesce(pred, lit(false))
-    val byPart = decoded().groupBy(col("__part"))
+    val byPart = decodeParts(spark, outDir, sourceSchema, None).groupBy(col("__part"))
       .agg(sum(hit.cast("long")).as("n_del"), count(lit(1)).as("n_all"))
       .filter(col("n_del") > 0)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
@@ -1189,7 +1131,7 @@ object EncodePipeline {
     val fullParts = byPart.filter(t => t._2 == t._3).map(_._1).toSeq.sorted
     val liveParts = cands.filterNot(fullParts.toSet)
     val newRows = if (liveParts.isEmpty) None else {
-      val survivors = decoded(liveParts).filter(!hit)
+      val survivors = decodeParts(spark, outDir, sourceSchema, Some(liveParts)).filter(!hit)
       val encOut = encode(survivors, key, math.max(1, liveParts.length),
         blockSize, partExpr = Some(col("__part")))
       Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
@@ -1245,23 +1187,15 @@ object EncodePipeline {
     requireNoLiveDeletes(spark, outDir, "updateWhere")
     val t0 = System.currentTimeMillis()
     val meta = manifestView(spark, outDir, None)
-    val dicts = loadDicts(spark, outDir)
-    // `parts` scopes the ENCODED read so parquet partition pruning keeps
-    // the rewrite pass from decoding untouched parts (a filter after decode
-    // sits above the RDD boundary and prunes nothing)
-    def decoded(parts: Seq[Int] = Nil) = decode(
-      (if (parts.isEmpty) readData(spark, outDir)
-       else readData(spark, outDir).filter(col("__part").isin(parts: _*))),
-      sourceSchema, if (dicts.isEmpty) None else Some(dicts), keepPart = true)
     val hit = coalesce(pred, lit(false))
-    val byPart = decoded().groupBy(col("__part"))
+    val byPart = decodeParts(spark, outDir, sourceSchema, None).groupBy(col("__part"))
       .agg(sum(hit.cast("long")).as("n_upd"))
       .filter(col("n_upd") > 0)
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     if (byPart.isEmpty) return 0L
     val cands = byPart.map(_._1).toSeq.sorted
     requireFileTracked(meta, cands, "updateWhere")
-    val rewritten = decoded(cands)
+    val rewritten = decodeParts(spark, outDir, sourceSchema, Some(cands))
       .select(col("__part") +: sourceSchema.fields.toSeq.map { f =>
         set.get(f.name) match {
           case Some(v) => when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
@@ -1299,9 +1233,7 @@ object EncodePipeline {
     val cands = meta.trackedFiles.map(_._1).distinct.sorted
     if (cands.isEmpty) return Nil
     requireFileTracked(meta, cands, "rewriteSorted")
-    val dicts = loadDicts(spark, outDir)
-    val dec = decode(readData(spark, outDir), sourceSchema,
-      if (dicts.isEmpty) None else Some(dicts), keepPart = true)
+    val dec = decodeParts(spark, outDir, sourceSchema, None)
     val enc0 = encode(dec, key, math.max(1, cands.length), blockSize,
       partExpr = Some(col("__part")), sortCols = sortCols)
     // inherit the table's Bloom-filter convention (appendCommit's rule):
@@ -1391,30 +1323,23 @@ object EncodePipeline {
     val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
     if (batchCommitted(spark, outDir, bid)) return (0L, 0L)
     val meta = manifestView(spark, outDir, None)
-    val dicts = loadDicts(spark, outDir)
-    // `parts` scopes the ENCODED read so parquet partition pruning keeps
-    // the rewrite pass from decoding untouched parts (a filter after decode
-    // sits above the RDD boundary and prunes nothing)
-    def decoded(parts: Seq[Int] = Nil) = decode(
-      (if (parts.isEmpty) readData(spark, outDir)
-       else readData(spark, outDir).filter(col("__part").isin(parts: _*))),
-      sourceSchema, if (dicts.isEmpty) None else Some(dicts), keepPart = true)
     val nUp = updates.count()
     // the common merge is updates ≪ table: broadcast the key set so the
     // probe and rewrite joins never shuffle the decoded table on key
     val upKeys0 = updates.select(col(key)).distinct()
     val upKeys = if (nUp <= 500000) broadcast(upKeys0) else upKeys0
-    val byPart = decoded().join(upKeys, Seq(key), "left_semi")
+    val byPart = decodeParts(spark, outDir, sourceSchema, None).join(upKeys, Seq(key), "left_semi")
       .groupBy(col("__part")).agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     val nReplaced = byPart.map(_._2).sum
     val cands = byPart.map(_._1).toSeq.sorted
     val matchedKeys =
       if (byPart.isEmpty) 0L
-      else upKeys.join(decoded(cands).select(col(key)), Seq(key), "left_semi").count()
+      else upKeys.join(decodeParts(spark, outDir, sourceSchema, Some(cands)).select(col(key)),
+        Seq(key), "left_semi").count()
     if (byPart.nonEmpty) {
       requireFileTracked(meta, cands, "mergeByKey")
-      val survivors = decoded(cands)
+      val survivors = decodeParts(spark, outDir, sourceSchema, Some(cands))
         .join(upKeys, Seq(key), "left_anti")
         // anti-join reorders the lead column; restore canonical order
         .select(col("__part") +: sourceSchema.fieldNames.toSeq.map(col): _*)
@@ -1485,16 +1410,14 @@ object EncodePipeline {
          else !col("__file").isin(excludeFiles.toSeq: _*)))
       .select(col("__file"), col("__block"), col("__pos"))
 
-  /** the table decoded with row lineage (__file/__block/__pos), committed
-    * delete vectors applied — the input both predicate- and join-shaped
-    * deletes filter */
+  /** the table decoded with row lineage — the scan's `_file`/`_block`/`_pos`
+    * coordinates as `__file`/`__block`/`__pos` — committed delete vectors
+    * applied: the input both predicate- and join-shaped deletes filter */
   private def decodeLineage(spark: SparkSession, outDir: String,
-                            sourceSchema: StructType): DataFrame = {
-    val dicts = loadDicts(spark, outDir)
-    decodeEx(readDataKeepFile(spark, outDir), sourceSchema,
-      if (dicts.isEmpty) None else Some(dicts),
-      keepPart = false, lineage = true, loadDeletes(spark, outDir))
-  }
+                            sourceSchema: StructType): DataFrame =
+    graftRead(spark, outDir, sourceSchema).select(
+      Seq(col("_file").as("__file"), col("_block").as("__block"), col("_pos").as("__pos")) ++
+        sourceSchema.fieldNames.toSeq.map(col): _*)
 
   /** the position bitmaps (file, block, bitmap, n) of lineage-coordinate
     * `hits`, persisted, and the number of rows they delete. A [[Txn]]
@@ -1859,14 +1782,9 @@ object EncodePipeline {
     val meta = manifestView(spark, outDir, None)
     val cands = meta.partsHolding(dv.keySet.map(_._1))
     require(cands.nonEmpty, "live delete vectors but no owning parts — corrupt manifest?")
-    val dicts = loadDicts(spark, outDir)
-    // scope the ENCODED read to the owning parts: partition pruning keeps
-    // the fold from decoding untouched parts
-    val survivors = decodeEx(
-        readDataKeepFile(spark, outDir).filter(col("__part").isin(cands: _*)),
-        sourceSchema, if (dicts.isEmpty) None else Some(dicts),
-        keepPart = true, lineage = false, dv)
-      .persist()
+    // the owning parts' live rows: the scan applies the vectors and never
+    // opens the other parts' files
+    val survivors = decodeParts(spark, outDir, sourceSchema, Some(cands)).persist()
     val liveParts = survivors.select("__part").distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
     val fullParts = cands.filterNot(liveParts.toSet)
@@ -2291,16 +2209,12 @@ object EncodePipeline {
     * changelog-scan representation). A row inserted and deleted inside the
     * window is no net change and does not appear.
     *
-    * Scale path: when the window is append/merge-on-read-shaped — every
-    * file present at `fromGen` is still present at `toGen` and no rollback
-    * landed inside the window — the scan touches ONLY the delta: rows of
-    * files added in the window (with the window's own delete vectors
-    * applied), plus rows of pre-existing files whose positions the
-    * window's vectors newly masked (decoded via lineage and semi-joined on
-    * the exact (file, block, pos) diff — only affected files open). Any
-    * rewrite in the window (compaction, COW DML, materialize, rollback)
-    * falls back to the semantically-equivalent full snapshot diff
-    * (`exceptAll` both ways).
+    * A window [[planChangeFeedWindow]] can plan at file grain (append and
+    * merge-on-read commits only) reads `format("graft").option("changesFrom",
+    * …)`, which opens only the window's added files and vector-diff blocks.
+    * Any rewrite in the window (compaction, COW DML, materialize, rollback)
+    * reads the semantically-equivalent full snapshot diff (`exceptAll` both
+    * ways).
     *
     * `fromGen = -1` reads "since before the table existed": the window's
     * changes include the base snapshot itself as inserts (full-history
@@ -2310,64 +2224,20 @@ object EncodePipeline {
                          fromGen: Int, toGen: Int): DataFrame = {
     require(fromGen >= -1 && fromGen <= toGen,
       s"readChangesBetween: need -1 <= fromGen <= toGen, got ($fromGen, $toGen)")
-    val dicts = loadDicts(spark, outDir)
-    val dictsOpt = if (dicts.isEmpty) None else Some(dicts)
-    def empty(): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sourceSchema)
-    def filesAt(g: Int): Option[Map[String, String]] =
-      fileInventoryAt(spark, outDir, g)
-    def readFiles(paths: Seq[String]): DataFrame =
-      spark.read.option("basePath", s"$outDir/data")
-        .option("mergeSchema", "true").parquet(paths: _*)
-        .withColumn("__fname", regexp_extract(input_file_name(), "[^/]+/[^/]+$", 0))
-    val rbInWindow = rollbackMarkers(spark, outDir)
-      .exists { case (n, _) => n > fromGen && n <= toGen }
-    val fast =
-      if (rbInWindow) None
-      else for { ff <- filesAt(fromGen); ft <- filesAt(toGen)
-                 if ff.keySet.subsetOf(ft.keySet) } yield (ff, ft)
-    fast match {
-      case Some((ff, ft)) =>
-        val dvFrom = loadDeletes(spark, outDir, fromGen)
-        val dvTo = loadDeletes(spark, outDir, toGen)
-        val newSfx = (ft.keySet -- ff.keySet).toSeq.sorted
-        val ins =
-          if (newSfx.isEmpty) empty()
-          else {
-            val sfxSet = newSfx.toSet
-            decodeEx(readFiles(newSfx.map(ft)), sourceSchema, dictsOpt,
-              keepPart = false, lineage = false,
-              dvTo.filter { case ((f, _), _) => sfxSet.contains(f) })
-          }
-        val diff = dvTo.toSeq.collect {
-          case ((f, b), bm) if ff.contains(f) =>
-            (f, b, diffPositions(bm, dvFrom.getOrElse((f, b), Array.emptyByteArray)))
-        }.filter(_._3.nonEmpty)
-        val del =
-          if (diff.isEmpty) empty()
-          else {
-            val affected = diff.map(_._1).toSet
-            // decode the affected files at their FROM state (old vectors
-            // applied; the bit diff already excludes re-deletes) and keep
-            // exactly the newly-masked coordinates
-            val dec = decodeEx(readFiles(affected.toSeq.sorted.map(ff)),
-              sourceSchema, dictsOpt, keepPart = false, lineage = true,
-              dvFrom.filter { case ((f, _), _) => affected.contains(f) })
-            val spark2 = spark
-            import spark2.implicits._
-            val coords = diff.flatMap { case (f, b, ps) => ps.map(p => (f, b, p)) }
-              .toDF("__file", "__block", "__pos")
-            dec.join(broadcast(coords), Seq("__file", "__block", "__pos"), "left_semi")
-              .drop("__file", "__block", "__pos")
-          }
-        ins.withColumn("_change_type", lit("insert"))
-          .unionByName(del.withColumn("_change_type", lit("delete")))
-      case None =>
-        val from = if (fromGen < 0) empty()
-                   else decodeSharedAt(spark, outDir, sourceSchema, fromGen)
-        val to = decodeSharedAt(spark, outDir, sourceSchema, toGen)
-        to.exceptAll(from).withColumn("_change_type", lit("insert"))
-          .unionByName(from.exceptAll(to).withColumn("_change_type", lit("delete")))
+    if (planChangeFeedWindow(spark, outDir, fromGen, toGen).isRight) {
+      loadDicts(spark, outDir)
+      spark.read.format("graft")
+        .schema(StructType(sourceSchema.fields.map(_.copy(nullable = true)))
+          .add("_change_type", StringType, nullable = false))
+        .option("changesFrom", fromGen.toLong).option("changesTo", toGen.toLong)
+        .load(outDir)
+    } else {
+      val from = if (fromGen < 0) spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sourceSchema)
+        else decodeSharedAt(spark, outDir, sourceSchema, fromGen)
+      val to = decodeSharedAt(spark, outDir, sourceSchema, toGen)
+      to.exceptAll(from).withColumn("_change_type", lit("insert"))
+        .unionByName(from.exceptAll(to).withColumn("_change_type", lit("delete")))
     }
   }
 
@@ -2396,58 +2266,60 @@ object EncodePipeline {
                                     deletes: Seq[ChangeFeedFile])
 
   /** driver-side file-grain plan of the net row-level changes in generation
-    * window (fromGen, toGen] — the streaming analog of
-    * [[readChangesBetween]]'s fast path, as explicit per-file work units a
-    * MicroBatchStream can plan: `inserts` = files added in the window, read
-    * with the window-end delete vectors applied (a row inserted and deleted
-    * inside the window is no net change and never streams); `deletes` =
-    * pre-existing files whose positions the window's vectors newly masked,
-    * read keeping ONLY those positions (the bit diff excludes re-deletes,
-    * so every kept position was live at the window start). fromGen = -1
-    * plans the whole table as inserts (full-history stream start). Windows
-    * containing a rollback or a file rewrite (compaction, copy-on-write
-    * DML, overwrite) cannot be planned at file grain and throw — the batch
+    * window (fromGen, toGen] — what the streaming change feed and the batch
+    * `option("changesFrom", …)` read, as explicit per-file work units:
+    * `inserts` = files added in the window, read with the window-end delete
+    * vectors applied (a row inserted and deleted inside the window is no
+    * net change and never appears); `deletes` = pre-existing files whose
+    * positions the window's vectors newly masked, read keeping ONLY those
+    * positions (the bit diff excludes re-deletes, so every kept position
+    * was live at the window start). fromGen = -1 plans the whole table as
+    * inserts (full-history stream start). Windows containing a rollback or
+    * a file rewrite (compaction, copy-on-write DML, overwrite) cannot be
+    * planned at file grain: Left carries the reason — the batch
     * [[readChangesBetween]] snapshot diff covers those windows; a stream
     * must restart past them, Delta CDF's semantics for rewritten history. */
   def planChangeFeedWindow(spark: SparkSession, outDir: String,
-                           fromGen: Int, toGen: Int): ChangeFeedWindow = {
+                           fromGen: Int, toGen: Int): Either[String, ChangeFeedWindow] = {
     require(fromGen >= -1 && fromGen <= toGen,
       s"planChangeFeedWindow: need -1 <= fromGen <= toGen, got ($fromGen, $toGen)")
-    if (fromGen == toGen) return ChangeFeedWindow(Nil, Nil)
+    if (fromGen == toGen) return Right(ChangeFeedWindow(Nil, Nil))
     if (rollbackMarkers(spark, outDir).exists { case (n, _) => n > fromGen && n <= toGen })
-      throw new IllegalStateException(
+      return Left(
         s"change feed window ($fromGen, $toGen] contains a rollback — file-grain CDC " +
         "cannot cross it; read the window with batch readChangesBetween (snapshot " +
         "diff) and restart the stream at the rollback generation or later")
-    def inv(g: Int): Map[String, String] = fileInventoryAt(spark, outDir, g).getOrElse(
-      throw new IllegalStateException(
+    def inv(g: Int): Either[String, Map[String, String]] =
+      fileInventoryAt(spark, outDir, g).toRight(
         s"change feed: generation $g has parts that predate data-file tracking — " +
-        "only file-tracked tables can stream changes"))
-    val ff = inv(fromGen)
-    val ft = inv(toGen)
-    if (!ff.keySet.subsetOf(ft.keySet))
-      throw new IllegalStateException(
+        "only file-tracked tables can stream changes")
+    for {
+      ff <- inv(fromGen)
+      ft <- inv(toGen)
+      _ <- Either.cond(ff.keySet.subsetOf(ft.keySet), (),
         s"change feed window ($fromGen, $toGen] rewrote ${(ff.keySet -- ft.keySet).size} " +
         "already-streamed data files (compaction / copy-on-write DML / overwrite) — " +
         "rows would reprocess; read the window with batch readChangesBetween and " +
         "restart the stream at a later generation")
-    // fromGen = -1 scopes to "no vectors yet" (gen <= -1 matches none)
-    val dvFrom = loadDeletes(spark, outDir, fromGen)
-    val dvTo = loadDeletes(spark, outDir, toGen)
-    val newSfx = (ft.keySet -- ff.keySet).toSeq.sorted
-    val inserts = newSfx.map { s =>
-      ChangeFeedFile(partOfSuffix(s), ft(s),
-        dvTo.collect { case ((f, b), bm) if f == s => b -> bm }, null)
+    } yield {
+      // fromGen = -1 scopes to "no vectors yet" (gen <= -1 matches none)
+      val dvFrom = loadDeletes(spark, outDir, fromGen)
+      val dvTo = loadDeletes(spark, outDir, toGen)
+      val newSfx = (ft.keySet -- ff.keySet).toSeq.sorted
+      val inserts = newSfx.map { s =>
+        ChangeFeedFile(partOfSuffix(s), ft(s),
+          dvTo.collect { case ((f, b), bm) if f == s => b -> bm }, null)
+      }
+      val diff = dvTo.toSeq.collect {
+        case ((f, b), bm) if ff.contains(f) =>
+          (f, b, diffPositions(bm, dvFrom.getOrElse((f, b), Array.emptyByteArray)))
+      }.filter(_._3.nonEmpty)
+      val deletes = diff.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, items) =>
+        ChangeFeedFile(partOfSuffix(f), ff(f), Map.empty,
+          items.map { case (_, b, ps) => b -> ps }.toMap)
+      }
+      ChangeFeedWindow(inserts, deletes)
     }
-    val diff = dvTo.toSeq.collect {
-      case ((f, b), bm) if ff.contains(f) =>
-        (f, b, diffPositions(bm, dvFrom.getOrElse((f, b), Array.emptyByteArray)))
-    }.filter(_._3.nonEmpty)
-    val deletes = diff.groupBy(_._1).toSeq.sortBy(_._1).map { case (f, items) =>
-      ChangeFeedFile(partOfSuffix(f), ff(f), Map.empty,
-        items.map { case (_, b, ps) => b -> ps }.toMap)
-    }
-    ChangeFeedWindow(inserts, deletes)
   }
 
   /** "__part=3/part-xyz.parquet" → 3 */
@@ -2865,19 +2737,14 @@ object EncodePipeline {
     override def next(): InternalRow = { advance(); out.dequeue() }
   }
 
-  /** decode a table written with shared dictionaries: loads the dictionary
-    * side-structure (registering it in this JVM for stand-alone kernels) and
-    * threads it through distributed decode via broadcast, and applies any
-    * merge-on-read delete vectors ([[deleteWhereLazy]]) at scan time. Works
-    * equally on tables WITHOUT a dicts/deletes side-structure. */
+  /** the table decoded: `spark.read.format("graft")` with `sourceSchema`
+    * as its schema. Loads the dictionary side-structure first, registering
+    * it in this JVM for stand-alone kernels; the scan broadcasts it to the
+    * readers and applies merge-on-read delete vectors ([[deleteWhereLazy]]).
+    * Works equally on tables WITHOUT a dicts/deletes side-structure. */
   def decodeShared(spark: SparkSession, outDir: String, sourceSchema: StructType): DataFrame = {
-    val dicts = loadDicts(spark, outDir)
-    val deletes = loadDeletes(spark, outDir)
-    val rd = if (deletes.isEmpty) readData(spark, outDir)
-             else readDataKeepFile(spark, outDir)
-    decodeEx(rd, sourceSchema,
-      if (dicts.isEmpty) None else Some(dicts),
-      keepPart = false, lineage = false, deletes)
+    loadDicts(spark, outDir)
+    graftRead(spark, outDir, sourceSchema)
   }
 
   /** snapshot read honoring merge-on-read history: the table as of
@@ -2887,13 +2754,33 @@ object EncodePipeline {
     * expires file history. */
   def decodeSharedAt(spark: SparkSession, outDir: String,
                      sourceSchema: StructType, gen: Int): DataFrame = {
-    val dicts = loadDicts(spark, outDir)
-    val deletes = loadDeletes(spark, outDir, gen)
-    val rd = readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)),
-      keepFile = deletes.nonEmpty)
-    decodeEx(rd, sourceSchema,
-      if (dicts.isEmpty) None else Some(dicts),
-      keepPart = false, lineage = false, deletes)
+    loadDicts(spark, outDir)
+    graftRead(spark, outDir, sourceSchema, Some(gen))
+  }
+
+  /** `format("graft")` over `outDir` at generation `gen` (None = current),
+    * read as `sourceSchema` with every column nullable: a column some part
+    * never wrote decodes as null */
+  private def graftRead(spark: SparkSession, outDir: String, sourceSchema: StructType,
+                        gen: Option[Int] = None): DataFrame = {
+    val r = spark.read.format("graft")
+      .schema(StructType(sourceSchema.fields.map(_.copy(nullable = true))))
+    gen.fold(r)(g => r.option("gen", g.toLong)).load(outDir)
+  }
+
+  /** the current table decoded with each row's `__part` (its `_file` id's
+    * part, the [[partOfSuffix]] rule) ahead of the source columns — the
+    * read of every copy-on-write rewrite. `parts` limits it by `_file`
+    * prefix, which the scan turns into a part set at plan time, so the
+    * other parts' files are never opened. Live delete vectors apply. */
+  private def decodeParts(spark: SparkSession, outDir: String, sourceSchema: StructType,
+                          parts: Option[Seq[Int]]): DataFrame = {
+    val all = graftRead(spark, outDir, sourceSchema)
+    val scoped = parts.fold(all)(ps => all.filter(ps.map(p =>
+      col("_file").startsWith(s"__part=$p/")).foldLeft(lit(false))(_ || _)))
+    scoped.select(
+      substring_index(substring_index(col("_file"), "/", 1), "=", -1).cast(IntegerType).as("__part") +:
+        sourceSchema.fieldNames.toSeq.map(col): _*)
   }
 
   // ---------------- driver-side metadata-directory cache ----------------
@@ -2913,7 +2800,8 @@ object EncodePipeline {
   // data files on every call. The cache is bounded by an estimate of the
   // driver-heap bytes its entries hold (least recently used entries leave
   // first); a directory larger than the whole budget is read on every call
-  // and never cached. The same cache holds each data file's block Bloom
+  // and never cached. The same cache holds each table's data-directory
+  // relation ([[readDataDir]]) and each data file's block Bloom
   // filters once a point lookup has read them ([[cachedFileIndex]]).
   private final class DirRows(val schema: StructType, val rows: Array[org.apache.spark.sql.Row]) {
     def at(c: String): Int = schema.fieldNames.indexOf(c)
@@ -3003,14 +2891,9 @@ object EncodePipeline {
   private[graft] def dirCached(dir: String): Boolean =
     dirCache.synchronized(dirCache.containsKey(dir))
 
-  /** cached data-directory RELATION (a plan, not rows): a parquet relation
-    * pins the exact file set + merged schema discovered at creation, so it
-    * is keyed by the recursive listing signature and rebuilt whenever any
-    * data file lands or is vacuumed. Reuse skips the per-call listing and
-    * mergeSchema footer-inference jobs; every query over it still scans
-    * the data files themselves. */
-  private val dataRelCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, SparkSession, DataFrame)]()
+  /** a data directory's parquet relation as the metadata cache holds it,
+    * with the session it was built in */
+  private final class DataRel(val spark: SparkSession, val df: DataFrame)
 
   private def dataListingSig(fs: org.apache.hadoop.fs.FileSystem,
                              p: org.apache.hadoop.fs.Path): String =
@@ -3020,16 +2903,22 @@ object EncodePipeline {
         s"${s.getPath.getName}/${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
     }.sorted.mkString("|")
 
+  /** the data directory as one parquet RELATION (a plan, not rows), held in
+    * the metadata cache: the relation pins the exact file set + merged
+    * schema discovered at creation, so it is keyed by the recursive listing
+    * signature and rebuilt whenever any data file lands or is vacuumed, or
+    * when another session asks. Reuse skips the per-call listing and
+    * mergeSchema footer-inference jobs; every query over it still scans
+    * the data files themselves. Its estimated heap bytes grow with the
+    * listing (one file status per data file). */
   private[plans] def readDataDir(spark: SparkSession, outDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/data")
+    val dir = s"$outDir/data"
+    val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = dataListingSig(fs, p)
-    val hit = dataRelCache.get(outDir)
-    if (hit != null && hit._1 == sig && (hit._2 eq spark)) hit._3
-    else {
-      val df = spark.read.option("mergeSchema", "true").parquet(s"$outDir/data")
-      if (dataRelCache.size > 256) dataRelCache.clear()
-      dataRelCache.put(outDir, (sig, spark, df))
+    cacheHit[DataRel](dir, sig).filter(_.spark eq spark).map(_.df).getOrElse {
+      val df = spark.read.option("mergeSchema", "true").parquet(dir)
+      cachePut(dir, sig, new DataRel(spark, df), 1024L + 4L * sig.length)
       df
     }
   }
@@ -3065,23 +2954,6 @@ object EncodePipeline {
     m.toDF(spark, m.raw)
   }
 
-  /** the current generation-resolved manifest, with the schema merged
-    * across metadata-version eras: a resumed pre-upgrade directory holds
-    * meta files missing the newer columns (data_files/str_lo/...), which
-    * read as null. */
-  private[graft] def readMeta(spark: SparkSession, outDir: String): DataFrame =
-    readMetaAt(spark, outDir, None)
-
-  private[graft] def readMetaAt(spark: SparkSession, outDir: String,
-                         upTo: Option[Int]): DataFrame =
-    readMetaAt(spark, outDir, upTo, None)
-
-  /** the manifest as of generation `upTo` on main or `branch`, as a
-    * driver-local relation; resolution rule: [[Manifest.view]] */
-  private[graft] def readMetaAt(spark: SparkSession, outDir: String,
-                         upTo: Option[Int], branch: Option[String]): DataFrame =
-    manifestView(spark, outDir, upTo, branch).toDF(spark)
-
   /** null out branch provenance on manifest rows a REPLACING commit carries
     * forward verbatim ([[rollbackTo]], [[compactSmallFiles]]; [[analyzeTable]]
     * scrubs via its own flag list): the rows were main-visible when copied,
@@ -3107,12 +2979,31 @@ object EncodePipeline {
 
   /** manifest-level pruning: read only committed parts whose zone maps
     * admit `value` in `column` ([[ManifestView.survivingLong]]) — the
-    * Iceberg manifest-skipping pattern; within surviving parts the Bloom
-    * filters skip blocks ([[bloomFilterBlocks]]). */
+    * Iceberg manifest-skipping pattern — and some current file of which
+    * the Bloom filters admit it ([[bloomParts]]); within those parts the
+    * Bloom filters skip blocks ([[bloomFilterBlocks]]). */
   def readDataPruned(spark: SparkSession, outDir: String,
                      column: String, value: Long): DataFrame =
-    bloomFilterBlocks(readSurviving(spark, outDir)(_.survivingLong(column, value, value)),
+    bloomFilterBlocks(readSurviving(spark, outDir)(v => bloomParts(spark, outDir, v, column,
+      graft.core.Bloom.hashLong(value), v.survivingLong(column, value, value))),
       column, lit(value))
+
+  /** the `parts` holding a current data file whose block Bloom filters on
+    * `column` may hold a value of hash `h` — the rule `format("graft")`
+    * plans files by ([[graft.sources.GraftPruning.fileAdmits]]). Parts read
+    * by directory (untracked) stay; so do all of `parts` when the table
+    * keeps no `bm_<column>` filters. */
+  private def bloomParts(spark: SparkSession, outDir: String, view: ManifestView,
+                         column: String, h: Long, parts: Array[Int]): Array[Int] =
+    if (!dataDirColumns(spark, outDir).contains(s"bm_$column")) parts
+    else {
+      val probe = Array(graft.sources.GraftPruning.BloomProbe(column, Array(h)))
+      val conf = spark.sparkContext.hadoopConfiguration
+      val untracked = view.untrackedParts.toSet
+      val admitted = view.trackedFiles.collect { case (p, f) if parts.contains(p) &&
+        graft.sources.GraftPruning.fileAdmits(f, probe, conf) => p }.toSet
+      parts.filter(p => untracked(p) || admitted(p))
+    }
 
   /** block-level Bloom skipping inside zone-surviving parts: when the table
     * opted `column` into bloom filters at encode time (run(bloomCols=...)),
@@ -3128,11 +3019,13 @@ object EncodePipeline {
     else df.filter(coalesce(bloom_maybe(col(s"bm_$column"), value), lit(true)))
 
   /** string-column manifest pruning: parts whose truncated byte-string zone
-    * maps admit `value` ([[ManifestView.survivingStr]]) */
+    * maps admit `value` ([[ManifestView.survivingStr]]) and whose Bloom
+    * filters may hold it ([[bloomParts]]) */
   def readDataPruned(spark: SparkSession, outDir: String,
                      column: String, value: String): DataFrame = {
     val vb = value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    bloomFilterBlocks(readSurviving(spark, outDir)(_.survivingStr(column, vb, vb)),
+    bloomFilterBlocks(readSurviving(spark, outDir)(v => bloomParts(spark, outDir, v, column,
+      graft.core.Bloom.hashBytes(vb), v.survivingStr(column, vb, vb))),
       column, lit(vb))
   }
 

@@ -338,20 +338,30 @@ class GraftMetaTable(outDir: String, which: String, metaSchema: StructType)
 /** `spark.read.format("graft").option("changesFrom", g)[.option("changesTo",
   * h)]` — net row-level change capture between two snapshots as a readable
   * table: the source rows plus `_change_type` ("insert" / "delete"; an
-  * update is its delete + insert pair). Backed by
-  * [[EncodePipeline.readChangesBetween]], so append/merge-on-read windows
-  * read only the delta files and vector-diff blocks; rewrite windows fall
-  * back to a snapshot diff. Served through the V1Scan bridge (a CDC feed is
-  * a change stream, not a pushdown target — filters/limits apply above). */
+  * update is its delete + insert pair). An append/merge-on-read window is a
+  * V2 batch over the file-grain plan the streaming change feed reads
+  * ([[GraftChanges]]): only the window's added files and vector-diff blocks
+  * open. A rewrite window is served by [[EncodePipeline.readChangesBetween]]'s
+  * snapshot diff through the V1Scan bridge. Either way filters and limits
+  * apply above the scan. */
 class GraftChangesTable(outDir: String, fullSchema: StructType,
                         fromGen: Int, toGen: Int) extends Table with SupportsRead {
   override def name(): String = s"graft_changes.`$outDir`@[$fromGen,$toGen]"
   override def schema(): StructType = fullSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new V1Scan {
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val spark = SparkSession.active
+    val scan: Scan = EncodePipeline.planChangeFeedWindow(spark, outDir, fromGen, toGen) match {
+      case Right(w) => new Scan with Batch {
+        override def readSchema(): StructType = fullSchema
+        override def toBatch: Batch = this
+        override def planInputPartitions(): Array[InputPartition] = GraftChanges.partitionsOf(w)
+        override def createReaderFactory(): PartitionReaderFactory =
+          GraftChanges.readerFactory(spark, outDir, fullSchema)
+        override def description(): String = s"GraftChangesScan $outDir ($fromGen, $toGen]"
+      }
+      case Left(_) => new V1Scan {
         override def readSchema(): StructType = fullSchema
         override def toV1TableScan[T <: sources.BaseRelation with sources.TableScan](
             context: org.apache.spark.sql.SQLContext): T =
@@ -359,15 +369,40 @@ class GraftChangesTable(outDir: String, fullSchema: StructType,
             override def sqlContext: org.apache.spark.sql.SQLContext = context
             override def schema: StructType = fullSchema
             override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-              val spark = context.sparkSession
               val src = StructType(fullSchema.filterNot(_.name == "_change_type"))
-              EncodePipeline.readChangesBetween(spark, outDir, src, fromGen, toGen)
+              EncodePipeline.readChangesBetween(context.sparkSession, outDir, src, fromGen, toGen)
                 .select(fullSchema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
                 .rdd
             }
           }).asInstanceOf[T]
       }
     }
+    () => scan
+  }
+}
+
+/** the file-grain change plan as V2 input partitions and their reader
+  * factory: shared by the batch [[GraftChangesTable]] and the streaming
+  * [[GraftCdcMicroBatchStream]] */
+private[sources] object GraftChanges {
+  def partitionsOf(w: EncodePipeline.ChangeFeedWindow): Array[InputPartition] =
+    (w.inserts.map(f => GraftInputPartition(f.path, f.part, f.deletes,
+        keepOnly = null, changeType = "insert")) ++
+     w.deletes.map(f => GraftInputPartition(f.path, f.part, Map.empty,
+        keepOnly = f.keepOnly, changeType = "delete")))
+      .toArray[InputPartition]
+
+  /** dictionaries load per call, so a stream re-broadcasts those committed
+    * by later appends each batch (same contract as the plain streaming
+    * source) */
+  def readerFactory(spark: SparkSession, outDir: String,
+                    fullSchema: StructType): PartitionReaderFactory = {
+    val dicts = EncodePipeline.loadDicts(spark, outDir)
+    val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
+    GraftReaderFactory(Bridge.hadoopConfBroadcast(spark),
+      GraftScan.planWithMeta(StructType(fullSchema.filterNot(_.name == "_change_type")),
+        fullSchema), dictsBc, -1)
+  }
 }
 
 /** `SELECT * FROM cat.db.t.changes` — the table's full CHANGELOG as a SQL
@@ -472,8 +507,6 @@ class GraftCdcMicroBatchStream(spark: SparkSession, outDir: String,
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private val srcSchema = StructType(fullSchema.filterNot(_.name == "_change_type"))
-
   /** default = stream from NOW (startingGen g streams g's own changes too,
     * hence the -1: windows are exclusive at the start) */
   override def initialOffset(): Offset = GraftCdcOffset(
@@ -508,25 +541,15 @@ class GraftCdcMicroBatchStream(spark: SparkSession, outDir: String,
   override def reportLatestOffset(): Offset =
     GraftCdcOffset(EncodePipeline.currentGen(spark, outDir))
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val g0 = start.asInstanceOf[GraftCdcOffset].gen
-    val g1 = end.asInstanceOf[GraftCdcOffset].gen
-    val w = EncodePipeline.planChangeFeedWindow(spark, outDir, g0, g1)
-    (w.inserts.map(f => GraftInputPartition(f.path, f.part, f.deletes,
-        keepOnly = null, changeType = "insert")) ++
-     w.deletes.map(f => GraftInputPartition(f.path, f.part, Map.empty,
-        keepOnly = f.keepOnly, changeType = "delete")))
-      .toArray[InputPartition]
-  }
+  /** a window that cannot be planned at file grain fails the stream */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+    EncodePipeline.planChangeFeedWindow(spark, outDir,
+      start.asInstanceOf[GraftCdcOffset].gen, end.asInstanceOf[GraftCdcOffset].gen)
+      .fold(reason => throw new IllegalStateException(reason), GraftChanges.partitionsOf)
 
-  /** per micro-batch, so shared dictionaries committed by later appends are
-    * re-broadcast each batch (same contract as the plain streaming source) */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val dicts = EncodePipeline.loadDicts(spark, outDir)
-    val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
-    GraftReaderFactory(Bridge.hadoopConfBroadcast(spark),
-      GraftScan.planWithMeta(srcSchema, fullSchema), dictsBc, -1)
-  }
+  /** per micro-batch ([[GraftChanges.readerFactory]]) */
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftChanges.readerFactory(spark, outDir, fullSchema)
 }
 
 class GraftTable(outDir: String, tableSchema: StructType,
@@ -728,7 +751,7 @@ object GraftTable {
   * can possibly hold matching rows. Bounds are supersets (string zone bounds
   * truncate), so callers always keep the filter residual. None = cannot
   * reason about this filter (prune nothing). */
-private[sources] object GraftPruning {
+private[graft] object GraftPruning {
 
   /** canonical-long of a filter literal for a long-kind column, or None */
   private def canonLong(dt: DataType, v: Any): Option[Long] = (dt, v) match {
@@ -948,6 +971,8 @@ private[sources] object GraftPruning {
                    filters: Array[Filter]): Array[String] =
     filters.collect { case sources.IsNull(c) if kinds.contains(c) => c }.distinct
 
+  private val PartPrefix = """__part=(\d+)/""".r
+
   def survivorsOf(spark: SparkSession, outDir: String,
                   kinds: Map[String, EncodePipeline.ColPlan],
                   f: Filter): Option[Set[Int]] = {
@@ -982,6 +1007,10 @@ private[sources] object GraftPruning {
       case sources.LessThanOrEqual(c, v) => oneSided(c, v, loSide = false)
       case sources.IsNull(c) if kinds.contains(c) =>
         Some(EncodePipeline.survivingPartsIsNull(spark, outDir, c).toSet)
+      // a `_file` id prefix naming one part: "__part=<p>/" keeps part p
+      // (unless the table has a real `_file` column, which shadows it)
+      case sources.StringStartsWith("_file", PartPrefix(p)) if !kinds.contains("_file") =>
+        Some(Set(p.toInt))
       case sources.StringStartsWith(c, p) if kinds.get(c).exists(_.kind != 'l') =>
         val pb = p.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         strRange(c, pb, prefixSucc(pb).orNull)
@@ -1545,25 +1574,18 @@ class GraftMicroBatchStream(spark: SparkSession, outDir: String,
   }
 }
 
-object GraftReaderFactory {
-  /** operational knob: -Dgraft.columnar=false falls back to the row-based
-    * readers (debug / A-B comparison); vectorized is the default. */
-  def columnarDefault: Boolean =
-    sys.props.getOrElse("graft.columnar", "true").toBoolean
-}
-
 case class GraftReaderFactory(conf: Bridge.HadoopConfBroadcast,
                               cols: Array[EncodePipeline.ColPlan],
                               dicts: Option[org.apache.spark.broadcast.Broadcast[Map[Long, Codecs.DictTable]]],
                               limit: Int,
-                              columnar: Boolean = GraftReaderFactory.columnarDefault,
                               probes: Array[GraftPruning.BloomProbe] = Array.empty,
                               rangeProbes: Array[GraftPruning.RangeProbe] = Array.empty,
                               nullProbes: Array[String] = Array.empty)
     extends PartitionReaderFactory {
+  /** every partition reads columnar ([[GraftColumnarReader]]) */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], this)
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+    throw new UnsupportedOperationException("graft scans read columnar batches only")
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarReader(partition.asInstanceOf[GraftInputPartition], this)
@@ -1575,13 +1597,6 @@ case class GraftReaderFactory(conf: Bridge.HadoopConfBroadcast,
 private[graft] object ReaderDiag {
   val blocksDecoded = new java.util.concurrent.atomic.AtomicLong()
 }
-
-/** one decoded block's column arrays, before delete-vector filtering */
-private[sources] final class DecodedBlock(
-    val block: Int, val n: Int,
-    val longVals: Array[Array[Long]], val longNulls: Array[Array[Boolean]],
-    val strViews: Array[Codecs.StrView], val binVals: Array[Array[Array[Byte]]],
-    val allNull: Array[Boolean])
 
 /** one parquet data file opened once: its footer schema, then the records
   * of a projection of it as example-API `Group`s, row group by row group.
@@ -1622,12 +1637,19 @@ private[sources] final class GroupFile(path: Path, conf: Configuration)
   override def close(): Unit = reader.close()
 }
 
-/** shared machinery for the row and columnar readers over one data file:
-  * parquet Group rows (one per block) → blob decode → per-block delete-
-  * vector survivor index. Only the projected columns' blobs are requested
-  * from parquet (column pruning reaches the file bytes). */
-private[sources] abstract class GraftFileReaderBase(
-    p: GraftInputPartition, f: GraftReaderFactory) {
+/** VECTORIZED reader: one ColumnarBatch per block, each column a read-only
+  * [[GraftVector]] VIEW over the decode kernel's arrays — zero copies, no
+  * per-row InternalRow, no per-value boxing; Spark's ColumnarToRow /
+  * whole-stage codegen consumes the vectors directly (the same shape its
+  * own vectorized parquet reader feeds it). Strings stay UTF8String views
+  * over the block's shared StrView buffer. Delete-vector survivors apply
+  * through a position indirection (`_pos` reports the ORIGINAL block
+  * position); blocks with no deletes skip the indirection entirely. Only
+  * the projected columns' blobs are requested from parquet (column pruning
+  * reaches the file bytes). The only reader of graft data files. */
+class GraftColumnarReader(p: GraftInputPartition, f: GraftReaderFactory)
+    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   f.dicts.foreach(b => Codecs.registerDicts(b.value))
 
@@ -1635,14 +1657,14 @@ private[sources] abstract class GraftFileReaderBase(
   // projection from the FILE's own schema (mergeSchema eras differ per file;
   // a column this file predates simply decodes as all-null)
   private val fileSchema: MessageType = file.schema
-  protected val present: Array[Boolean] =
+  private val present: Array[Boolean] =
     f.cols.map(c => c.kind != 'm' && fileSchema.containsField("e_" + c.name))
   // the part-qualified data-file id (what `_file` reports and delete
   // vectors key on), computed once per file
-  protected val fileSuffixU8: UTF8String =
+  private val fileSuffixU8: UTF8String =
     UTF8String.fromString(EncodePipeline.fileSuffix(p.path))
   // change-feed reads: the partition-constant _change_type value
-  protected val changeTypeU8: UTF8String =
+  private val changeTypeU8: UTF8String =
     if (p.changeType == null) null else UTF8String.fromString(p.changeType)
   // bloom block probes active for THIS file: pushed equality/In conjuncts
   // whose bm_<col> filter column exists in the file's era. A block is read
@@ -1723,10 +1745,14 @@ private[sources] abstract class GraftFileReaderBase(
     true
   }
 
-  def close(): Unit = file.close()
+  override def close(): Unit = file.close()
 
-  /** decode the next block's projected blobs; null at end of file */
-  protected def nextBlock(): DecodedBlock = {
+  /** the id of the block [[nextBlock]] last returned */
+  private var block: Int = -1
+
+  /** decode the next block's projected blobs; null at end of file.
+    * Metadata columns have no blob and decode as all-null. */
+  private def nextBlock(): EncodePipeline.DecodedBlock = {
     // change-feed delete partitions touch only their diff blocks
     def wanted(g: Group): Boolean =
       p.keepOnly == null || p.keepOnly.contains(g.getInteger("__block", 0))
@@ -1737,51 +1763,24 @@ private[sources] abstract class GraftFileReaderBase(
       g = file.read()
     if (g == null) return null
     ReaderDiag.blocksDecoded.incrementAndGet()
-    val n = g.getInteger("__cnt", 0)
-    val block = g.getInteger("__block", 0)
-    val nCols = f.cols.length
-    val longVals = new Array[Array[Long]](nCols)
-    val longNulls = new Array[Array[Boolean]](nCols)
-    val strViews = new Array[Codecs.StrView](nCols)
-    val binVals = new Array[Array[Array[Byte]]](nCols)
-    val allNull = new Array[Boolean](nCols)
-    var c = 0
-    while (c < nCols) {
+    block = g.getInteger("__block", 0)
+    EncodePipeline.decodeBlock(f.cols, g.getInteger("__cnt", 0)) { c =>
       val name = "e_" + f.cols(c).name
-      if (f.cols(c).kind == 'm') {
-        () // metadata column: synthesized per row, no blob behind it
-      } else if (!present(c) || g.getFieldRepetitionCount(name) == 0) {
-        allNull(c) = true // column absent from this file's era
-      } else {
-        val blob = g.getBinary(name, 0).getBytes
-        f.cols(c).kind match {
-          case 'l' =>
-            val (v, nu) = Codecs.decodeLongsN(blob)
-            require(v.length == n, s"block count mismatch: ${v.length} != $n")
-            longVals(c) = v; longNulls(c) = nu
-          case 's' =>
-            strViews(c) = Codecs.decodeStrsView(blob)
-            require(strViews(c).n == n, s"block count mismatch: ${strViews(c).n} != $n")
-          case _ =>
-            binVals(c) = Codecs.decodeStrsN(blob)
-            require(binVals(c).length == n, s"block count mismatch: ${binVals(c).length} != $n")
-        }
-      }
-      c += 1
+      if (!present(c) || g.getFieldRepetitionCount(name) == 0) null
+      else g.getBinary(name, 0).getBytes
     }
-    new DecodedBlock(block, n, longVals, longNulls, strViews, binVals, allNull)
   }
 
   /** positions surviving this block's delete vector, in block order;
     * null = no vector for this block, every position survives (callers
     * treat null as identity — no per-block allocation on the common path) */
-  protected def liveIdx(db: DecodedBlock): Array[Int] = {
+  private def liveIdx(db: EncodePipeline.DecodedBlock): Array[Int] = {
     if (p.keepOnly != null)
       // change-feed delete partitions: emit ONLY the newly-masked positions
       // (the window's bit diff excludes re-deletes, so every kept position
       // was live at the window start — no vector to subtract)
-      return p.keepOnly.getOrElse(db.block, Array.empty[Int])
-    val bm = p.deletes.getOrElse(db.block, null)
+      return p.keepOnly.getOrElse(block, Array.empty[Int])
+    val bm = p.deletes.getOrElse(block, null)
     if (bm == null) null
     else {
       val out = new Array[Int](db.n)
@@ -1794,87 +1793,6 @@ private[sources] abstract class GraftFileReaderBase(
       java.util.Arrays.copyOf(out, m)
     }
   }
-}
-
-/** row-based reader: one GenericInternalRow per surviving row (fallback
-  * path; the vectorized [[GraftColumnarReader]] is the default). */
-class GraftPartitionReader(p: GraftInputPartition, f: GraftReaderFactory)
-    extends GraftFileReaderBase(p, f) with PartitionReader[InternalRow] {
-
-  private var emitted = 0
-  private var rowIter: Iterator[InternalRow] = Iterator.empty
-
-  override def next(): Boolean = {
-    if (f.limit >= 0 && emitted >= f.limit) return false
-    while (!rowIter.hasNext) {
-      val db = nextBlock()
-      if (db == null) return false
-      rowIter = rowsOf(db)
-    }
-    emitted += 1
-    true
-  }
-
-  private var current: InternalRow = _
-  override def get(): InternalRow = { current = rowIter.next(); current }
-
-  private def rowsOf(db: DecodedBlock): Iterator[InternalRow] = {
-    val nCols = f.cols.length
-    val live = liveIdx(db)
-    val idx: Iterator[Int] =
-      if (live == null) (0 until db.n).iterator else live.iterator
-    idx.map { i =>
-      val vals = new Array[Any](nCols)
-      var c2 = 0
-      while (c2 < nCols) {
-        vals(c2) =
-          if (db.allNull(c2)) null
-          else f.cols(c2).kind match {
-            case 'm' => f.cols(c2).name match {
-              case "_file" => fileSuffixU8
-              case "_block" => db.block
-              case "_pos" => i
-              case "_change_type" => changeTypeU8
-            }
-            case 'l' =>
-              if (db.longNulls(c2) != null && db.longNulls(c2)(i)) null
-              else restoreLong(f.cols(c2).sourceType, db.longVals(c2)(i))
-            case 's' =>
-              val v = db.strViews(c2)
-              val len = v.lens(i)
-              if (len < 0) null else UTF8String.fromBytes(v.buf, v.offs(i), len)
-            case _ => db.binVals(c2)(i)
-          }
-        c2 += 1
-      }
-      new GenericInternalRow(vals): InternalRow
-    }
-  }
-
-  /** canonical long → the source type's InternalRow representation */
-  private def restoreLong(dt: DataType, v: Long): Any = dt match {
-    case LongType | TimestampType | TimestampNTZType => v
-    case IntegerType | DateType => v.toInt
-    case ShortType => v.toShort
-    case ByteType => v.toByte
-    case DoubleType => java.lang.Double.longBitsToDouble(v)
-    case FloatType => java.lang.Double.longBitsToDouble(v).toFloat
-    case other => throw new IllegalArgumentException(s"unsupported restore type $other")
-  }
-}
-
-/** VECTORIZED reader: one ColumnarBatch per block, each column a read-only
-  * [[GraftVector]] VIEW over the decode kernel's arrays — zero copies, no
-  * per-row InternalRow, no per-value boxing; Spark's ColumnarToRow /
-  * whole-stage codegen consumes the vectors directly (the same shape its
-  * own vectorized parquet reader feeds it). Strings stay UTF8String views
-  * over the block's shared StrView buffer. Delete-vector survivors apply
-  * through a position indirection (`_pos` reports the ORIGINAL block
-  * position); blocks with no deletes skip the indirection entirely. */
-class GraftColumnarReader(p: GraftInputPartition, f: GraftReaderFactory)
-    extends GraftFileReaderBase(p, f)
-    with PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private var batch: ColumnarBatch = _
   private var emitted = 0
@@ -1901,19 +1819,20 @@ class GraftColumnarReader(p: GraftInputPartition, f: GraftReaderFactory)
 
   override def get(): ColumnarBatch = batch
 
-  private def buildVectors(db: DecodedBlock, live: Array[Int], m: Int): Array[ColumnVector] = {
+  private def buildVectors(db: EncodePipeline.DecodedBlock, live: Array[Int],
+                           m: Int): Array[ColumnVector] = {
     val out = new Array[ColumnVector](f.cols.length)
     var c = 0
     while (c < f.cols.length) {
       out(c) =
-        if (db.allNull(c)) new GraftAllNullVector(f.cols(c).sourceType, m)
+        if (f.cols(c).kind == 'm') f.cols(c).name match {
+          case "_file" => new GraftConstStringVector(fileSuffixU8)
+          case "_block" => new GraftConstIntVector(block)
+          case "_pos" => new GraftPosVector(live)
+          case "_change_type" => new GraftConstStringVector(changeTypeU8)
+        }
+        else if (db.allNull(c)) new GraftAllNullVector(f.cols(c).sourceType, m)
         else f.cols(c).kind match {
-          case 'm' => f.cols(c).name match {
-            case "_file" => new GraftConstStringVector(fileSuffixU8)
-            case "_block" => new GraftConstIntVector(db.block)
-            case "_pos" => new GraftPosVector(live)
-            case "_change_type" => new GraftConstStringVector(changeTypeU8)
-          }
           case 'l' =>
             new GraftLongsVector(f.cols(c).sourceType, db.longVals(c), db.longNulls(c), live)
           case 's' => new GraftStringVector(db.strViews(c), live)

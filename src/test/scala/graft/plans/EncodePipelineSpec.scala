@@ -573,6 +573,51 @@ class EncodePipelineSpec extends SparkTestBase {
     assert(afterAppend.count() < EncodePipeline.readData(spark, out).count() / 4)
   }
 
+  test("readDataPruned drops the parts whose files' Bloom filters reject the probe") {
+    val docs = WebDocGen.dataset(spark, 1600, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 8, blockSize = 128, bloomCols = Seq("url"))
+    assert(EncodePipeline.allParts(spark, out).length === 8)
+    // an absent url: the url zone maps keep parts, the files' filters keep none
+    val u = docs.select("url").head().getString(0)
+    val absent = u + "/absent"
+    assert(docs.filter(col("url") === absent).isEmpty)
+    val ab = absent.getBytes("UTF-8")
+    assert(EncodePipeline.survivingPartsStr(spark, out, "url", ab, ab).nonEmpty)
+    val (rows, _, tasks) = graft.Jobs.work(spark)(
+      EncodePipeline.readDataPruned(spark, out, "url", absent).collect())
+    assert(rows.isEmpty && tasks === 0, s"$tasks tasks")
+    // a present url decodes the rows it names, from fewer parts
+    val hit = EncodePipeline.readDataPruned(spark, out, "url", u)
+    assert(hit.select("__part").distinct().count() < 8L)
+    def ofUrl(df: org.apache.spark.sql.DataFrame) = df.filter(col("url") === u)
+      .select(col("url"), col("warc_ts"), col("text"), col("lang"), md5(col("html")))
+      .collect().map(_.toString).toSeq
+    assert(ofUrl(EncodePipeline.decode(hit, docs.schema)) === ofUrl(docs))
+  }
+
+  test("with a 1-byte metadata cache budget readData and readDataPruned return the same blocks") {
+    val docs = WebDocGen.dataset(spark, 600, 4).toDF()
+    val out = tmpDir()
+    val u = docs.select("url").head().getString(0)
+    def blocks(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, Int)] =
+      df.select("__part", "__block", "__cnt").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+    def reads() = (blocks(EncodePipeline.readData(spark, out)),
+      blocks(EncodePipeline.readDataPruned(spark, out, "url", u)))
+    val saved = EncodePipeline.metaCacheBudget
+    EncodePipeline.metaCacheBudget = 1L
+    val uncached = try {
+      EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64, bloomCols = Seq("url"))
+      val r = reads()
+      assert(!EncodePipeline.dirCached(s"$out/data"))
+      r
+    } finally EncodePipeline.metaCacheBudget = saved
+    assert(uncached._2.nonEmpty && uncached._2.size < uncached._1.size)
+    assert(reads() === uncached)
+    assert(EncodePipeline.dirCached(s"$out/data"))
+  }
+
   test("double columns: alp picked for decimal scores, tzfor for float upcasts, bit-exact") {
     import spark.implicits._
     // decimal quality scores (3 places) and float-upcast similarity values —

@@ -126,7 +126,8 @@ class ManifestSpec extends SparkTestBase {
     val top = EncodePipeline.currentGen(spark, out)
     assert(top >= 5)
     for (upTo <- None +: (0 to top).map(Some(_)); branch <- Seq(None, Some("audit"))) {
-      val got = sortedKeys(EncodePipeline.readMetaAt(spark, out, upTo, branch).collect().toSeq)
+      val got = sortedKeys(
+        EncodePipeline.manifestView(spark, out, upTo, branch).toDF(spark).collect().toSeq)
       val want = sortedKeys(ReadMetaOracle.resolve(raw, upTo, branch.map(_ -> base)).collect().toSeq)
       assert(got === want, s"upTo $upTo branch $branch")
     }
@@ -136,7 +137,8 @@ class ManifestSpec extends SparkTestBase {
     val docs = WebDocGen.dataset(spark, 300, 4).toDF()
     val out = tmpDir()
     val meta = s"$out/meta"
-    def readBack(): Seq[String] = sortedKeys(EncodePipeline.readMeta(spark, out).collect().toSeq)
+    def readBack(): Seq[String] =
+      sortedKeys(EncodePipeline.manifestView(spark, out, None).toDF(spark).collect().toSeq)
     val budget = EncodePipeline.metaCacheBudget
     EncodePipeline.metaCacheBudget = 1L
     val overBudget = try {

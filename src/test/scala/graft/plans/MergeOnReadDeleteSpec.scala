@@ -28,6 +28,25 @@ class MergeOnReadDeleteSpec extends SparkTestBase {
       .map(f => f.getAbsolutePath -> f.length()).toMap
   }
 
+  test("materializeDeletes decodes only the blocks of the part its vectors sit in") {
+    val docs = WebDocGen.dataset(spark, 800, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64)
+    val enc = EncodePipeline.readData(spark, out)
+    val part = enc.select("__part").head().getInt(0)
+    val partUrls = EncodePipeline.decode(enc.filter(col("__part") === part), docs.schema)
+      .select("url").limit(3).collect().map(_.getString(0)).toSeq
+    assert(EncodePipeline.deleteWhereLazy(spark, out, docs.schema,
+      col("url").isin(partUrls: _*)) === 3L)
+    val partBlocks = enc.filter(col("__part") === part).count()
+    assert(partBlocks < enc.count())
+    graft.sources.ReaderDiag.blocksDecoded.set(0)
+    assert(EncodePipeline.materializeDeletes(spark, out, docs.schema, "url") === 3L)
+    assert(graft.sources.ReaderDiag.blocksDecoded.get() === partBlocks)
+    assert(sortedRows(EncodePipeline.decodeShared(spark, out, docs.schema)) ===
+      sortedRows(docs.filter(!col("url").isin(partUrls: _*))))
+  }
+
   test("lazy delete rewrites ZERO data bytes; scans apply the vectors") {
     val docs = WebDocGen.dataset(spark, 500, 4).toDF()
     val out = tmpDir()

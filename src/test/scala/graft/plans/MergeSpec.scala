@@ -97,7 +97,7 @@ class MergeSpec extends SparkTestBase {
     assert(sortedRows(EncodePipeline.decodeShared(spark, out, docs.schema)) === expect)
     // replayed batchId: no-op, (0, 0)
     val bid = {
-      val m = EncodePipeline.readMeta(spark, out)
+      val m = EncodePipeline.manifestView(spark, out, None).toDF(spark)
       m.agg(max(coalesce(col("batch_id"), lit(-1L)))).head().getLong(0)
     }
     assert(EncodePipeline.mergeByKeyLazy(spark, out, docs.schema, "url",

@@ -162,6 +162,37 @@ class SnapshotSpec extends SparkTestBase {
       .count() === 0L)
   }
 
+  test("readChangesBetween plans append/MOR windows as a graft scan, rewrite windows as a diff") {
+    val all = WebDocGen.dataset(spark, 400, 4).toDF()
+    val base = all.filter(pmod(xxhash64(col("url")), lit(2)) === 0)
+    val added = all.filter(pmod(xxhash64(col("url")), lit(2)) === 1)
+    val out = tmpDir()
+    EncodePipeline.run(base, "url", out, partitions = 4, blockSize = 64) // gen 0
+    assert(EncodePipeline.appendCommit(added, "url", out, 4, 64, batchId = 1L)) // gen 1
+    assert(EncodePipeline.deleteWhereLazy(spark, out, all.schema, col("lang") === "fr") > 0)
+    def graftScans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.inputPlan
+        case p => p
+      }.flatMap(_.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+          if b.scan.description().startsWith("GraftChangesScan") => b
+      })
+    def hasExcept(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectFirst {
+        case e: org.apache.spark.sql.catalyst.plans.logical.Except => e
+      }.nonEmpty
+    val fast = EncodePipeline.readChangesBetween(spark, out, all.schema, 0, 2) // gen 2: MOR
+    assert(graftScans(fast).nonEmpty && !hasExcept(fast))
+    EncodePipeline.materializeDeletes(spark, out, all.schema, "url") // gen 3
+    val nDel = EncodePipeline.deleteWhere(spark, out, all.schema, "url",
+      col("lang") === "de") // gen 4: copy-on-write
+    assert(nDel > 0)
+    val slow = EncodePipeline.readChangesBetween(spark, out, all.schema, 3, 4)
+    assert(graftScans(slow).isEmpty && hasExcept(slow))
+    assert(slow.filter(col("_change_type") === "delete").count() === nDel)
+  }
+
   test("readChangesBetween: rewrite windows fall back to the snapshot diff") {
     val docs = WebDocGen.dataset(spark, 400, 4).toDF()
     val out = tmpDir()

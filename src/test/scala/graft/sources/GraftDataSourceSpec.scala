@@ -182,17 +182,34 @@ class GraftDataSourceSpec extends SparkTestBase {
     }.nonEmpty, "expected the scan to feed Spark vectorized batches")
     val colRows = q.orderBy("url").collect()
     assert(colRows.length === 600 - killed)
-    // A/B: the row-based fallback must produce bit-identical results
-    System.setProperty("graft.columnar", "false")
-    try {
-      val rq = spark.read.format("graft").load(out)
-      assert(rq.queryExecution.executedPlan.collectFirst {
-        case c: org.apache.spark.sql.execution.ColumnarToRowExec => c
-      }.isEmpty, "row fallback should not plan a ColumnarToRow")
-      assert(rq.orderBy("url").collect().toSeq === colRows.toSeq)
-    } finally System.setProperty("graft.columnar", "true")
+    // the columnar rows are exactly the input minus the killed rows
+    assert(colRows.toSeq === d.filter(pmod(xxhash64(col("url")), lit(7)) =!= 0)
+      .orderBy("url").collect().toSeq)
     // limit pushdown caps the batch tail mid-block
     assert(spark.read.format("graft").load(out).limit(5).collect().length === 5)
+  }
+
+  test("a _file prefix read plans only that part's files") {
+    val d = docs(800)
+    val out = tmpDir()
+    EncodePipeline.run(d, "url", out, partitions = 4, blockSize = 64)
+    val files = EncodePipeline.currentFiles(spark, out)
+    assert(files.map(_._1).distinct.size === 4)
+    val part = files.head._1
+    val q = spark.read.format("graft").load(out)
+      .filter(col("_file").startsWith(s"__part=$part/"))
+    val planned = scanOf(q).get.toBatch.planInputPartitions()
+      .map(_.asInstanceOf[GraftInputPartition])
+    assert(planned.map(_.path).sorted.toSeq === files.filter(_._1 == part).map(_._2).sorted)
+    // an OR of prefixes plans the union of the parts
+    val two = files.map(_._1).distinct.sorted.take(2)
+    val q2 = spark.read.format("graft").load(out).filter(
+      two.map(p => col("_file").startsWith(s"__part=$p/")).reduce(_ || _))
+    assert(scanOf(q2).get.toBatch.planInputPartitions()
+      .map(_.asInstanceOf[GraftInputPartition].part).toSet === two.toSet)
+    // the rows are exactly the part's rows
+    assert(q.count() === EncodePipeline.readData(spark, out)
+      .filter(col("__part") === part).agg(sum(col("__cnt"))).head().getLong(0))
   }
 
   test("null-slot vector getters are defensive (non-nullable read schemas)") {
@@ -455,14 +472,6 @@ class GraftDataSourceSpec extends SparkTestBase {
     ReaderDiag.blocksDecoded.set(0)
     assert(spark.read.format("graft").load(out).filter(col("fp") === 12345L).isEmpty)
     assert(ReaderDiag.blocksDecoded.get() <= totalBlocks / 4)
-
-    // row fallback takes the same skip path
-    System.setProperty("graft.columnar", "false")
-    try {
-      ReaderDiag.blocksDecoded.set(0)
-      assert(spark.read.format("graft").load(out).filter(col("fp") === target).count() === 1L)
-      assert(ReaderDiag.blocksDecoded.get() < totalBlocks / 4)
-    } finally System.setProperty("graft.columnar", "true")
   }
 
   test("block zone maps in the V2 scan: pushed ranges skip blocks by blob bounds") {
