@@ -106,39 +106,69 @@ object EncodePipeline {
   }
 
   private[graft] def writePartSpec(spark: SparkSession, outDir: String,
-                                   spec: PartSpec): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/partspec.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val esc = spec.key.replace("\\", "\\\\").replace("\"", "\\\"")
-      val o = fs.create(p, true)
-      o.write((s"""{"kind":"${spec.kind}","key":"$esc",""" +
-        s""""partitions":${spec.partitions},"salts":${spec.salts}}""")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      o.close()
-    } catch { case _: Exception => }
+                                   spec: PartSpec): Unit = {
+    val esc = spec.key.replace("\\", "\\\\").replace("\"", "\\\"")
+    writeSideFile(spark, outDir, "partspec.json", s"""{"kind":"${spec.kind}","key":"$esc",""" +
+      s""""partitions":${spec.partitions},"salts":${spec.salts}}""")
+  }
 
   /** the persisted placement spec, if this table recorded one */
   def readPartSpec(spark: SparkSession, outDir: String): Option[PartSpec] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/partspec.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val s = new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        in.close()
-        val re = ("\\{\"kind\":\"(hash|host)\",\"key\":\"(.*)\"," +
-          "\"partitions\":(\\d+),\"salts\":(\\d+)\\}").r
-        s match {
-          case re(kind, key, parts, salts) =>
-            Some(PartSpec(kind, key.replace("\\\"", "\"").replace("\\\\", "\\"),
-              parts.toInt, salts.toInt))
-          case _ => None
-        }
+    readSideFile(spark, outDir, "partspec.json") { s =>
+      val re = ("\\{\"kind\":\"(hash|host)\",\"key\":\"(.*)\"," +
+        "\"partitions\":(\\d+),\"salts\":(\\d+)\\}").r
+      s match {
+        case re(kind, key, parts, salts) =>
+          PartSpec(kind, key.replace("\\\"", "\"").replace("\\\\", "\\"), parts.toInt, salts.toInt)
+        case _ => throw new IllegalArgumentException("not a placement spec")
       }
-    } catch { case _: Exception => None }
+    }
+
+  // ================== side files at the table root ==================
+  // partspec.json, schema.json, refs.json and commit_times.json: small JSON
+  // files read and written whole through the two functions below.
+
+  /** `outDir/<name>`, parsed by `parse`; None when the file is absent. An
+    * unreadable file throws an IOException and an unparsable one an
+    * IllegalStateException, each naming the file. */
+  private def readSideFile[T](spark: SparkSession, outDir: String, name: String)(
+      parse: String => T): Option[T] = {
+    val p = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val text =
+        try {
+          val in = fs.open(p)
+          try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+          finally in.close()
+        } catch { case e: java.io.IOException => throw new java.io.IOException(s"cannot read $p", e) }
+      try Some(parse(text))
+      catch { case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(s"cannot parse $p: ${e.getMessage}", e) }
+    }
+  }
+
+  /** (over)write `outDir/<name>` with `text` — not atomic; errors propagate */
+  private def writeSideFile(spark: SparkSession, outDir: String, name: String,
+                            text: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+    val o = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try o.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally o.close()
+  }
+
+  /** the flat `{"name": number, ...}` object of refs.json and commit_times.json */
+  private def parseFlat(text: String): Seq[(String, Long)] = {
+    val entry = """\s*"([^"]+)"\s*:\s*(\d+)\s*"""
+    require(text.trim.matches(s"\\{(?:$entry(?:,$entry)*)?\\s*\\}"),
+      "not a flat {\"name\": number} object")
+    entry.r.findAllMatchIn(text).map(m => m.group(1) -> m.group(2).toLong).toSeq
+  }
+
+  private def writeFlat(spark: SparkSession, outDir: String, name: String,
+                        entries: Seq[(String, Long)]): Unit =
+    writeSideFile(spark, outDir, name,
+      entries.map { case (k, v) => s""""$k": $v""" }.mkString("{", ", ", "}"))
 
   // ================== shared (per-partition) dictionaries ==================
   // Low-cardinality string columns (lang, host, content_type, …) repeat
@@ -689,8 +719,8 @@ object EncodePipeline {
   /** read back the committed blocks — exactly the data files the manifest
     * recorded at commit time (Iceberg semantics: the file list IS the table;
     * orphan files from crashed waves are invisible even when they share a
-    * committed part directory). Falls back to part-level committed-set
-    * filtering for metadata written before the file-path column existed. */
+    * committed part directory). A manifest with rows from before file
+    * tracking throws, naming [[analyzeTable]] ([[Manifest.filesOf]]). */
   def readData(spark: SparkSession, outDir: String): DataFrame =
     readDataWithMeta(spark, outDir, manifestView(spark, outDir, None))
 
@@ -706,34 +736,19 @@ object EncodePipeline {
                                meta: ManifestView,
                                parts: Option[Set[Int]] = None): DataFrame = {
     import spark.implicits._
-    def keep(p: Int) = parts.forall(_(p))
+    val files = meta.files.collect { case (p, f) if parts.forall(_(p)) => f }.distinct
     // a part restriction is a partition filter: the other part
     // directories are never read
     val data = parts.fold(readDataDir(spark, outDir))(ps =>
       readDataDir(spark, outDir).filter(col("__part").isin(ps.toSeq.sorted: _*)))
-    if (!meta.tracksFiles) {
-      // pure pre-data_files metadata: part-level committed-set filtering
-      return data
-        .join(broadcast(meta.parts.toSeq.filter(keep).toDF("__part")), Seq("__part"), "left_semi")
-    }
-    // MIXED metadata (a pre-data_files directory resumed by this version)
-    // is handled PER ROW: parts committed by the old version carry null
-    // data_files and must fall back to part-level filtering — exploding
-    // their null lists away would silently drop every old-wave part.
-    val oldParts = meta.untrackedParts.filter(keep).toSet
-    // a part in BOTH eras (re-commit anomaly): part-level wins (superset)
-    val files = meta.trackedFiles.collect { case (p, f) if keep(p) && !oldParts(p) => f }.distinct
     // mergeSchema (readDataDir): parts written before a column was added
     // lack its e_/r_ fields; the union schema carries them as null.
     // input_file_name() must sit directly above the single data relation
     // (Spark rejects it over a multi-source join).
-    val byFile = data
+    data
       .withColumn("__file", input_file_name())
       .join(broadcast(files.toDF("__file")), Seq("__file"), "left_semi")
       .drop("__file")
-    if (oldParts.isEmpty) byFile
-    else byFile.unionByName(data
-      .join(broadcast(oldParts.toSeq.toDF("__part")), Seq("__part"), "left_semi"))
   }
 
   // ---------------- batch append (streaming-grade commits) ----------------
@@ -792,22 +807,10 @@ object EncodePipeline {
     // in the part the original run chose (keeps the co-partitioning invariant
     // storage-partitioned joins rely on). Specless / re-keyed: plain hash.
     val spec = readPartSpec(spark, outDir).filter(_.key == key)
-    val enc0 = spec match {
+    val enc = withBlooms(spark, outDir, spec match {
       case Some(ps) => encode(df, key, ps.partitions, blockSize, Some(ps.expr))
       case None => encode(df, key, partitions, blockSize)
-    }
-    // bloom convention is inherited from the table: an append to a table
-    // whose data files carry bm_<col> filters builds them for its own blocks
-    // too, so point-lookup block skipping keeps working across appends
-    val inheritedBloom: Seq[String] =
-      if (before.isEmpty) Nil
-      else try {
-        dataDirColumns(spark, outDir).collect {
-          case c if c.startsWith("bm_") => c.stripPrefix("bm_")
-        }
-      } catch { case _: Exception => Nil }
-    val enc = inheritedBloom.filter(c => enc0.columns.contains(s"e_$c"))
-      .foldLeft(enc0)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
+    })
     enc.write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
     val after = snapshot()
     val newPaths = after.toSeq.flatMap { case (dir, names) =>
@@ -889,16 +892,11 @@ object EncodePipeline {
     * schema.json is re-stamped and old generations read through the by-name
     * null-fill evolution path. If `key` differs from the persisted placement
     * law the law is re-stamped too: the table is new content, only its
-    * history is shared. Requires file-tracked metadata (tables that predate
-    * `data_files` fall back to the legacy delete+re-run overwrite at the
-    * connector layer). Returns the new current generation. */
+    * history is shared. Returns the new current generation. */
   def replaceCommit(df: DataFrame, key: String, outDir: String, partitions: Int,
                     blockSize: Int = 4096, bloomCols: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
     val t0 = System.currentTimeMillis()
-    require(manifestOf(spark, outDir).has("data_files"),
-      s"replaceCommit($outDir): this table predates file-tracked metadata " +
-        "(no data_files column) — overwrite it with the legacy delete+run path")
     val before = manifestView(spark, outDir, None)
 
     // placement: reuse the persisted law when the key matches (keeps the
@@ -908,22 +906,12 @@ object EncodePipeline {
     val newRows: Option[DataFrame] =
       if (df.isEmpty) None
       else {
-        val (enc0, p) = spec match {
+        val (enc, p) = spec match {
           case Some(ps) => (encode(df, key, ps.partitions, blockSize,
             Some(ps.expr)), ps.partitions)
           case None => (encode(df, key, partitions, blockSize), partitions)
         }
-        // bloom convention: explicit request unioned with the table's
-        // existing bm_<col> convention (appendCommit's inheritance rule)
-        val inherited: Seq[String] = try {
-          dataDirColumns(spark, outDir).collect {
-            case c if c.startsWith("bm_") => c.stripPrefix("bm_")
-          }
-        } catch { case _: Exception => Nil }
-        val enc = (inherited ++ bloomCols).distinct
-          .filter(c => enc0.columns.contains(s"e_$c"))
-          .foldLeft(enc0)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
-        Some(landAndDescribe(spark, outDir, df.schema, enc, 0 until p, t0)
+        Some(landAndDescribe(spark, outDir, df.schema, enc, 0 until p, t0, bloomCols)
           .withColumn("additive", lit(false))
           .withColumn("overwrite", lit(true)))
       }
@@ -957,9 +945,7 @@ object EncodePipeline {
     *
     * Candidates: parts whose current manifest lists >= `minFiles` data
     * files (append fragmentation) or more blocks than ceil(rows/blockSize)
-    * (under-filled blocks from small writes). Parts with any part-level
-    * (null data_files) tracking are never rewritten — those readers scan
-    * whole directories and would double-count. Shared-dict blobs decode
+    * (under-filled blocks from small writes). Shared-dict blobs decode
     * through the side-structure and re-encode self-contained. Single
     * maintenance writer assumed (Iceberg parity). Returns compacted ids. */
   def compact(spark: SparkSession, outDir: String, sourceSchema: StructType,
@@ -1024,11 +1010,13 @@ object EncodePipeline {
 
   /** land freshly-encoded block rows beside the existing files and return
     * manifest rows (sans `gen`) describing exactly the bytes this run put
-    * on disk. The before/after name diff isolates this run's output from
-    * both the current generation and any crashed-attempt orphans. */
+    * on disk. The files carry Bloom filters for `bloomCols` and the
+    * table's convention ([[withBlooms]]). The before/after name diff
+    * isolates this run's output from both the current generation and any
+    * crashed-attempt orphans. */
   private def landAndDescribe(spark: SparkSession, outDir: String,
       sourceSchema: StructType, encOut: DataFrame, cands: Seq[Int],
-      t0: Long): DataFrame = {
+      t0: Long, bloomCols: Seq[String] = Nil): DataFrame = {
     // file names present per part BEFORE the write: everything else found
     // afterwards is this run's output (names are globally unique); orphans
     // of crashed attempts are in the before-set and stay excluded
@@ -1041,7 +1029,7 @@ object EncodePipeline {
         .filterNot(_.startsWith("_")).toSet
     }
     val before = cands.map(p => p -> partFilesOnDisk(p)).toMap
-    encOut.write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
+    withBlooms(spark, outDir, encOut, bloomCols).write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
 
     // identify this run's files by name diff, read exactly them back (the
     // manifest must describe the bytes on disk, not the pre-write plan)
@@ -1127,7 +1115,6 @@ object EncodePipeline {
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     if (byPart.isEmpty) return 0L
     val cands = byPart.map(_._1).toSeq.sorted
-    requireFileTracked(meta, cands, "deleteWhere")
     val fullParts = byPart.filter(t => t._2 == t._3).map(_._1).toSeq.sorted
     val liveParts = cands.filterNot(fullParts.toSet)
     val newRows = if (liveParts.isEmpty) None else {
@@ -1147,7 +1134,7 @@ object EncodePipeline {
   private def tombstoneRows(spark: SparkSession, meta: ManifestView, fullParts: Seq[Int],
                             t0: Long): Option[DataFrame] =
     if (fullParts.isEmpty) None else Some(
-      meta.toDF(spark).filter(col("data_files").isNotNull && col("__part").isin(fullParts: _*))
+      meta.toDF(spark).filter(col("__part").isin(fullParts: _*))
         .select(col("__part"), col("column")).distinct()
         .withColumn("rows", lit(0L))
         .withColumn("blocks", lit(0L))
@@ -1186,7 +1173,6 @@ object EncodePipeline {
     require(bad.isEmpty, s"updateWhere assigns unknown columns: ${bad.mkString(", ")}")
     requireNoLiveDeletes(spark, outDir, "updateWhere")
     val t0 = System.currentTimeMillis()
-    val meta = manifestView(spark, outDir, None)
     val hit = coalesce(pred, lit(false))
     val byPart = decodeParts(spark, outDir, sourceSchema, None).groupBy(col("__part"))
       .agg(sum(hit.cast("long")).as("n_upd"))
@@ -1194,7 +1180,6 @@ object EncodePipeline {
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     if (byPart.isEmpty) return 0L
     val cands = byPart.map(_._1).toSeq.sorted
-    requireFileTracked(meta, cands, "updateWhere")
     val rewritten = decodeParts(spark, outDir, sourceSchema, Some(cands))
       .select(col("__part") +: sourceSchema.fields.toSeq.map { f =>
         set.get(f.name) match {
@@ -1209,7 +1194,7 @@ object EncodePipeline {
     byPart.map(_._2).sum
   }
 
-  /** re-cluster the table: copy-on-write rewrite of every file-tracked part
+  /** re-cluster the table: copy-on-write rewrite of every part holding files
     * with rows re-sorted by `sortCols` before re-encoding — the Iceberg
     * rewrite-with-sort-order maintenance. Clustering is what makes the
     * block zone maps, Bloom filters, and manifest bounds SELECTIVE on
@@ -1219,33 +1204,22 @@ object EncodePipeline {
     * locality at once (Morton order). Commits exactly like [[compact]]:
     * one replacing manifest append at the next generation — time travel,
     * vacuum, and every reader behave identically. Refuses live delete
-    * vectors ([[materializeDeletes]] first) and part-level (pre-tracking)
-    * parts. Returns the rewritten part ids. */
+    * vectors ([[materializeDeletes]] first). The rewritten files keep the
+    * table's Bloom filters ([[withBlooms]]). Returns the rewritten part
+    * ids. */
   def rewriteSorted(spark: SparkSession, outDir: String,
                     sourceSchema: StructType, key: String,
                     sortCols: Seq[Column], blockSize: Int = 4096): Seq[Int] = {
     require(sortCols.nonEmpty, "rewriteSorted needs at least one sort column")
     requireNoLiveDeletes(spark, outDir, "rewriteSorted")
     val t0 = System.currentTimeMillis()
-    val meta = manifestView(spark, outDir, None)
     // tombstoned (empty-file-list) parts have nothing to re-cluster and
     // would make the rewrite 'wrote no files' — skip them, like compact
-    val cands = meta.trackedFiles.map(_._1).distinct.sorted
+    val cands = manifestView(spark, outDir, None).files.map(_._1).distinct.sorted
     if (cands.isEmpty) return Nil
-    requireFileTracked(meta, cands, "rewriteSorted")
     val dec = decodeParts(spark, outDir, sourceSchema, None)
-    val enc0 = encode(dec, key, math.max(1, cands.length), blockSize,
+    val encOut = encode(dec, key, math.max(1, cands.length), blockSize,
       partExpr = Some(col("__part")), sortCols = sortCols)
-    // inherit the table's Bloom-filter convention (appendCommit's rule):
-    // clustering exists to IMPROVE block skipping — silently dropping the
-    // bm_ columns would trade range pruning for point-lookup pruning
-    val inheritedBloom: Seq[String] = try {
-      dataDirColumns(spark, outDir).collect {
-        case c if c.startsWith("bm_") => c.stripPrefix("bm_")
-      }
-    } catch { case _: Exception => Nil }
-    val encOut = inheritedBloom.filter(c => enc0.columns.contains(s"e_$c"))
-      .foldLeft(enc0)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
     commit(spark, outDir, Txn(rows = Seq(
       landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0))))
     cands
@@ -1289,13 +1263,6 @@ object EncodePipeline {
       Seq(graft.functions.zorder_key(zCols.map(asLong), los, his)), blockSize)
   }
 
-  /** part-level (null data_files) parts are read as whole directories and
-    * cannot be selectively superseded — shared guard of every copy-on-write
-    * rewrite */
-  private def requireFileTracked(meta: ManifestView, cands: Seq[Int], op: String): Unit =
-    require(!cands.exists(meta.untrackedParts.toSet),
-      s"$op requires file-tracked parts; compact() the table first")
-
   /** MERGE INTO by key (upsert): `updates` rows whose `key` matches an
     * existing row REPLACE it — a copy-on-write rewrite of exactly the parts
     * containing matches (fully-replaced parts tombstone) — and the rest
@@ -1338,7 +1305,6 @@ object EncodePipeline {
       else upKeys.join(decodeParts(spark, outDir, sourceSchema, Some(cands)).select(col(key)),
         Seq(key), "left_semi").count()
     if (byPart.nonEmpty) {
-      requireFileTracked(meta, cands, "mergeByKey")
       val survivors = decodeParts(spark, outDir, sourceSchema, Some(cands))
         .join(upKeys, Seq(key), "left_anti")
         // anti-join reorders the lead column; restore canonical order
@@ -1805,19 +1771,12 @@ object EncodePipeline {
   /** the ref registry: `outDir/refs.json` — {"<name>": <generation>}.
     * TAGS store under their plain name; BRANCHES under "branch:<name>"
     * (user names are restricted to [A-Za-z0-9._-], so the prefix cannot
-    * collide). Names are charset-restricted at write time, so the regex
-    * parse below is faithful (no JSON escapes can occur). Atomic rewrite;
-    * single maintenance writer assumed ([[compact]]'s contract). */
-  private def readRefs(spark: SparkSession, outDir: String): Map[String, Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/refs.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val txt = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    """"([^"]+)"\s*:\s*(\d+)""".r.findAllMatchIn(txt)
-      .map(m => m.group(1) -> m.group(2).toInt).toMap
-  }
+    * collide). Names are charset-restricted at write time, so the flat
+    * parse is faithful (no JSON escapes can occur). Single maintenance
+    * writer assumed ([[compact]]'s contract). */
+  private def readRefs(spark: SparkSession, outDir: String): Map[String, Int] =
+    readSideFile(spark, outDir, "refs.json")(parseFlat(_).map { case (n, g) => n -> g.toInt })
+      .fold(Map.empty[String, Int])(_.toMap)
 
   /** tags only: name → pinned generation */
   def readTags(spark: SparkSession, outDir: String): Map[String, Int] =
@@ -1835,16 +1794,13 @@ object EncodePipeline {
     }
 
   private def writeRefs(spark: SparkSession, outDir: String,
-                        tags: Map[String, Int]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/refs.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (tags.isEmpty) { fs.delete(p, false); return }
-    val o = fs.create(p, true)
-    o.write(tags.toSeq.sortBy(_._1)
-      .map { case (n, g) => s""""$n": $g""" }.mkString("{", ", ", "}")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    o.close()
-  }
+                        tags: Map[String, Int]): Unit =
+    if (tags.nonEmpty)
+      writeFlat(spark, outDir, "refs.json", tags.toSeq.sortBy(_._1).map { case (n, g) => n -> g.toLong })
+    else {
+      val p = new org.apache.hadoop.fs.Path(s"$outDir/refs.json")
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, false)
+    }
 
   /** pin a generation under a name — the Iceberg TAG: `option("tag", name)`
     * reads resolve it, and [[vacuum]] PROTECTS every data file the tagged
@@ -1996,18 +1952,14 @@ object EncodePipeline {
 
   /** delete data files no current manifest row — and no TAGGED snapshot —
     * references: superseded generations and crashed-attempt orphans.
-    * Part-level-tracked parts (null data_files) are untouched: their whole
-    * directory IS the table. `retainLast` additionally protects the file
-    * sets of the most recent N generations (Iceberg expire_snapshots
-    * retain-last parity: time travel within the retention window survives
-    * the vacuum; 1 = current only, the historical default). Returns the
-    * number of files deleted. Single maintenance writer assumed, like
-    * [[compact]]. */
+    * `retainLast` additionally protects the file sets of the most recent N
+    * generations (Iceberg expire_snapshots retain-last parity: time travel
+    * within the retention window survives the vacuum; 1 = current only,
+    * the historical default). Returns the number of files deleted. Single
+    * maintenance writer assumed, like [[compact]]. */
   def vacuum(spark: SparkSession, outDir: String, retainLast: Int = 1): Int = {
     val m = manifestOf(spark, outDir)
     val view = m.view(None, None)
-    if (!view.tracksFiles) return 0
-    val untracked = view.untrackedParts.toSet
     // tagged snapshots pin their file sets (Iceberg: refs block expiry);
     // a retention window pins the last N generations' snapshots the same
     // way. Retention counts MAIN-history snapshot points only: an
@@ -2023,8 +1975,7 @@ object EncodePipeline {
     // reclaimable.
     val branchFiles: Iterator[String] = {
       val branches = readBranches(spark, outDir)
-      m.raw.iterator.filter(r => m.inBranchWindow(r, branches) && !m.isNull(r, m.iFiles))
-        .flatMap(_.getSeq[String](m.iFiles))
+      m.raw.iterator.filter(m.inBranchWindow(_, branches)).flatMap(m.filesOf)
     }
     val referenced = (view +: tagGens.map(g => m.view(Some(g), None)))
       .flatMap(_.dataFiles).map(fileSuffix).toSet ++ branchFiles.map(fileSuffix)
@@ -2034,8 +1985,7 @@ object EncodePipeline {
     var deleted = 0
     fs.listStatus(dataPath).filter(_.isDirectory).foreach { d =>
       val dirName = d.getPath.getName
-      if (dirName.startsWith("__part=") &&
-          !untracked.contains(dirName.stripPrefix("__part=").toInt)) {
+      if (dirName.startsWith("__part=")) {
         fs.listStatus(d.getPath).filter(_.isFile).foreach { f =>
           val name = f.getPath.getName
           if (!name.startsWith("_") && !referenced.contains(s"$dirName/$name")) {
@@ -2150,8 +2100,6 @@ object EncodePipeline {
     require(gen >= 0, s"rollbackTo: generation must be >= 0, got $gen")
     val facts = manifestOf(spark, outDir)
     if (!facts.has("gen")) return 0 // single-generation table
-    require(facts.has("data_files"),
-      "rollbackTo needs file-tracked metadata; this table predates data_files")
     val maxG = facts.currentGen
     if (gen >= maxG) return maxG
     val t0 = System.currentTimeMillis()
@@ -2241,12 +2189,11 @@ object EncodePipeline {
     }
   }
 
-  /** file inventory (suffix → absolute path) at a generation; None when any
-    * visible part predates file tracking — those cannot be diffed by file.
-    * g = -1 reads as "before the table existed" (empty inventory). */
-  private[graft] def fileInventoryAt(spark: SparkSession, outDir: String,
-                                     g: Int): Option[Map[String, String]] =
-    if (g < 0) Some(Map.empty) else manifestView(spark, outDir, Some(g)).inventory
+  /** file inventory (suffix → absolute path) at a generation. g = -1 reads
+    * as "before the table existed" (empty inventory). */
+  private def fileInventoryAt(spark: SparkSession, outDir: String,
+                              g: Int): Map[String, String] =
+    if (g < 0) Map.empty else manifestView(spark, outDir, Some(g)).inventory
 
   /** the table's current (maximum committed) generation — 0 on tables that
     * predate generation tagging. The streaming change feed polls this as
@@ -2289,19 +2236,13 @@ object EncodePipeline {
         s"change feed window ($fromGen, $toGen] contains a rollback — file-grain CDC " +
         "cannot cross it; read the window with batch readChangesBetween (snapshot " +
         "diff) and restart the stream at the rollback generation or later")
-    def inv(g: Int): Either[String, Map[String, String]] =
-      fileInventoryAt(spark, outDir, g).toRight(
-        s"change feed: generation $g has parts that predate data-file tracking — " +
-        "only file-tracked tables can stream changes")
-    for {
-      ff <- inv(fromGen)
-      ft <- inv(toGen)
-      _ <- Either.cond(ff.keySet.subsetOf(ft.keySet), (),
-        s"change feed window ($fromGen, $toGen] rewrote ${(ff.keySet -- ft.keySet).size} " +
-        "already-streamed data files (compaction / copy-on-write DML / overwrite) — " +
-        "rows would reprocess; read the window with batch readChangesBetween and " +
-        "restart the stream at a later generation")
-    } yield {
+    val (ff, ft) = (fileInventoryAt(spark, outDir, fromGen), fileInventoryAt(spark, outDir, toGen))
+    if (!ff.keySet.subsetOf(ft.keySet)) return Left(
+      s"change feed window ($fromGen, $toGen] rewrote ${(ff.keySet -- ft.keySet).size} " +
+      "already-streamed data files (compaction / copy-on-write DML / overwrite) — " +
+      "rows would reprocess; read the window with batch readChangesBetween and " +
+      "restart the stream at a later generation")
+    Right {
       // fromGen = -1 scopes to "no vectors yet" (gen <= -1 matches none)
       val dvFrom = loadDeletes(spark, outDir, fromGen)
       val dvTo = loadDeletes(spark, outDir, toGen)
@@ -2338,30 +2279,15 @@ object EncodePipeline {
     if (i >= 0) uri.substring(i + 6) else uri
   }
 
-  /** the table's CURRENT data files as (part, absolute path) — generation-
-    * resolved via [[manifestView]]: tracked commits contribute exactly their
-    * recorded file lists (orphans invisible), pre-file-tracking parts
-    * contribute their whole directory, mirroring [[readData]].
-    * The `format("graft")` connector plans one input partition per entry. */
+  /** the table's data files at a read point as (part, absolute path),
+    * ordered by path — exactly the file lists the generation-resolved
+    * manifest rows record ([[manifestView]]; orphans invisible), like
+    * [[readData]]. The `format("graft")` connector plans one input
+    * partition per entry. */
   def currentFiles(spark: SparkSession, outDir: String,
                    gen: Option[Int] = None,
-                   branch: Option[String] = None): Seq[(Int, String)] = {
-    val view = manifestView(spark, outDir, gen, branch)
-    val conf = spark.sparkContext.hadoopConfiguration
-    def listPartDir(p: Int): Seq[(Int, String)] = {
-      val dir = new org.apache.hadoop.fs.Path(s"$outDir/data/__part=$p")
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.startsWith("part-"))
-        .map(s => p -> s.getPath.toString)
-    }
-    val out = view.trackedFiles ++ view.untrackedParts.flatMap(listPartDir)
-    // defensive dedupe by suffix (a dir-listed file that is also tracked
-    // must plan once). NB: .values first — mapping the Map to (part, path)
-    // tuples would re-key by part id and collapse to one file per part.
-    out.groupBy { case (_, f) => fileSuffix(f) }.values.map(_.head).toSeq.sortBy(_._2)
-  }
+                   branch: Option[String] = None): Seq[(Int, String)] =
+    manifestView(spark, outDir, gen, branch).files.sortBy(_._2)
 
   /** next free append batch id: max committed + 1, or 0 on a table that
     * has never tracked one. Ad-hoc appenders (the connector's SaveMode
@@ -2488,27 +2414,13 @@ object EncodePipeline {
     * [[rewriteManifests]] so TIMESTAMP AS OF survives manifest compaction
     * (Iceberg keeps snapshot timestamps in table metadata for the same
     * reason; file mtimes only carry them while one commit = one file). */
-  private def readCommitTimesFile(spark: SparkSession, outDir: String): Map[Int, Long] = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/commit_times.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val txt = try new String(in.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-    """"(\d+)"\s*:\s*(\d+)""".r.findAllMatchIn(txt)
-      .map(m => m.group(1).toInt -> m.group(2).toLong).toMap
-  }
+  private def readCommitTimesFile(spark: SparkSession, outDir: String): Map[Int, Long] =
+    readSideFile(spark, outDir, "commit_times.json")(parseFlat(_).map { case (g, t) => g.toInt -> t })
+      .fold(Map.empty[Int, Long])(_.toMap)
 
   private def writeCommitTimesFile(spark: SparkSession, outDir: String,
-                                   times: Map[Int, Long]): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$outDir/commit_times.json")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val o = fs.create(p, true)
-    o.write(times.toSeq.sortBy(_._1)
-      .map { case (g, t) => s""""$g": $t""" }.mkString("{", ", ", "}")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    o.close()
-  }
+                                   times: Map[Int, Long]): Unit =
+    writeFlat(spark, outDir, "commit_times.json", times.toSeq.sortBy(_._1).map { case (g, t) => g.toString -> t })
 
   /** Iceberg rewrite-manifests parity: compact the manifest DIRECTORY.
     * Every commit is one atomic single-file parquet append under
@@ -2575,28 +2487,11 @@ object EncodePipeline {
     * schema evolution). Advisory: readers can always pass a schema. */
   private[graft] def writeSchemaFile(spark: SparkSession, outDir: String,
                                      schema: StructType): Unit =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/schema.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val o = fs.create(p, true)
-      o.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      o.close()
-    } catch { case _: Exception => }
+    writeSideFile(spark, outDir, "schema.json", schema.json)
 
   /** the persisted decoded schema, if this table recorded one */
   def readSchemaFile(spark: SparkSession, outDir: String): Option[StructType] =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/schema.json")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val bytes = org.apache.commons.io.IOUtils.toByteArray(in)
-        in.close()
-        Some(DataType.fromJson(new String(bytes,
-          java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType])
-      }
-    } catch { case _: Exception => None }
+    readSideFile(spark, outDir, "schema.json")(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** block-stream re-blocker: consumes (__part, __block)-sorted encoded
     * block rows, concatenates each part's decoded values in block order
@@ -2923,11 +2818,41 @@ object EncodePipeline {
     }
   }
 
-  /** the data directory's merged column names (bm_ convention probes);
-    * empty when the directory does not exist yet */
-  private[plans] def dataDirColumns(spark: SparkSession, outDir: String): Seq[String] =
-    try readDataDir(spark, outDir).columns.toSeq
-    catch { case _: Exception => Nil }
+  /** `enc` plus a `bm_<c>` Bloom filter column for each column `c` it
+    * encodes among `cols` and the table's convention
+    * ([[bloomConvention]]): the rule every write that lands files beside
+    * the table's own applies, so point lookups keep skipping files and
+    * blocks across appends and rewrites */
+  private def withBlooms(spark: SparkSession, outDir: String, enc: DataFrame,
+                         cols: Seq[String] = Nil): DataFrame =
+    (bloomConvention(spark, outDir) ++ cols).distinct
+      .filter(c => enc.columns.contains(s"e_$c") && !enc.columns.contains(s"bm_$c"))
+      .foldLeft(enc)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
+
+  /** the columns the table's current data files keep `bm_<col>` Bloom
+    * filters for. Each file's footer is read once on the driver and its
+    * column names held in the metadata cache under the file's path (the
+    * write-once rule of [[cachedFileIndex]]). A table with no data file
+    * yet has none; a read error propagates. */
+  private def bloomConvention(spark: SparkSession, outDir: String): Seq[String] =
+    if (!hasManifest(spark, outDir)) Nil
+    else manifestView(spark, outDir, None).dataFiles.flatMap(footerColumns(spark, _))
+      .collect { case c if c.startsWith("bm_") => c.stripPrefix("bm_") }.distinct
+
+  /** data file `path`'s column names, from its footer */
+  private def footerColumns(spark: SparkSession, path: String): Array[String] = {
+    val key = s"$path#columns"
+    cacheHit[Array[String]](key, "").getOrElse {
+      val pf = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
+      import scala.jdk.CollectionConverters._
+      val cols = try pf.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toArray
+        finally pf.close()
+      cachePut(key, "", cols, 64L + cols.iterator.map(Manifest.approxBytes).sum)
+      cols
+    }
+  }
 
   /** the table's manifest snapshot — the cached stand-in for
     * `spark.read.option("mergeSchema", "true").parquet(outDir/meta)`, read
@@ -2936,7 +2861,7 @@ object EncodePipeline {
   private[graft] def manifestOf(spark: SparkSession, outDir: String): Manifest = {
     val dir = manifestDir(spark, outDir).fold(s"$outDir/meta")(_.toString)
     cachedDir(spark, dir) { (schema, rows) =>
-      val m = Manifest.fromDir(schema, rows)
+      val m = Manifest.fromDir(outDir, schema, rows)
       (m, m.approxBytes)
     }
   }
@@ -2990,19 +2915,17 @@ object EncodePipeline {
 
   /** the `parts` holding a current data file whose block Bloom filters on
     * `column` may hold a value of hash `h` — the rule `format("graft")`
-    * plans files by ([[graft.sources.GraftPruning.fileAdmits]]). Parts read
-    * by directory (untracked) stay; so do all of `parts` when the table
-    * keeps no `bm_<column>` filters. */
+    * plans files by ([[graft.sources.GraftPruning.fileAdmits]]). All of
+    * `parts` stay when the table keeps no `bm_<column>` filters. */
   private def bloomParts(spark: SparkSession, outDir: String, view: ManifestView,
                          column: String, h: Long, parts: Array[Int]): Array[Int] =
-    if (!dataDirColumns(spark, outDir).contains(s"bm_$column")) parts
+    if (!bloomConvention(spark, outDir).contains(column)) parts
     else {
       val probe = Array(graft.sources.GraftPruning.BloomProbe(column, Array(h)))
       val conf = spark.sparkContext.hadoopConfiguration
-      val untracked = view.untrackedParts.toSet
-      val admitted = view.trackedFiles.collect { case (p, f) if parts.contains(p) &&
+      val admitted = view.files.collect { case (p, f) if parts.contains(p) &&
         graft.sources.GraftPruning.fileAdmits(f, probe, conf) => p }.toSet
-      parts.filter(p => untracked(p) || admitted(p))
+      parts.filter(admitted)
     }
 
   /** block-level Bloom skipping inside zone-surviving parts: when the table
@@ -3079,12 +3002,13 @@ object EncodePipeline {
     * sketches — for the table's CURRENT rows by re-reading the committed
     * block files, WITHOUT touching a data byte, and commit the refreshed
     * rows as ONE replacing generation (a metadata-only snapshot, kind
-    * "analyze" in the history). This is the upgrade path for tables whose
-    * commits predate a statistics column (null counts r4, exact value stats
-    * r5, ndv_sketch r5-final): [[tableStats]] refuses pre-era rows rather
-    * than undercount; analyze recomputes them in place — compact() is no
-    * longer the only upgrade, and unlike compact it preserves the exact
-    * on-disk layout (block boundaries, clustering, bloom siblings).
+    * "analyze" in the history). This is the one upgrade for old manifest
+    * eras: rows from before a statistics column (null counts r4, exact
+    * value stats r5, ndv_sketch r5-final), which [[tableStats]] refuses
+    * rather than undercount, and rows from before file tracking, which
+    * every reader refuses ([[Manifest.filesOf]]). Unlike compact it
+    * preserves the exact on-disk layout (block boundaries, clustering,
+    * bloom siblings).
     *
     * Semantics and edges:
     *   - data files are re-listed verbatim, so vacuum reclaims nothing and
@@ -3092,57 +3016,81 @@ object EncodePipeline {
     *     unchanged files; manifest stats stay "as stored", the same contract
     *     every commit writes — tableStats' live-vector refusal is about
     *     serving, not storing);
+    *   - a part with rows from before file tracking gets the `part-*` files
+    *     its directory holds, listed once — the files the part-level
+    *     readers read — and its rows are recomputed like the others;
     *   - multi-commit parts collapse to one row per (part, column), like a
     *     compaction's manifest does; batch replay detection is unaffected
     *     because appendCommit checks the RAW manifest, where the old
     *     batch-tagged rows remain;
-    *   - rows analyze cannot recompute — untracked (pre-data_files era)
-    *     parts, tombstoned-empty parts, manifest columns absent from the
-    *     current schema — carry forward VERBATIM at the new generation;
+    *   - rows analyze cannot recompute — tombstoned-empty parts, manifest
+    *     columns absent from the current schema — carry forward VERBATIM at
+    *     the new generation;
     *   - time travel below the analyze generation sees the old rows.
     * Returns the new generation, or the current one when there is nothing
     * readable to analyze. */
   def analyzeTable(spark: SparkSession, outDir: String): Int = {
+    import spark.implicits._
     val schema = readSchemaFile(spark, outDir).getOrElse(throw new IllegalStateException(
       s"analyzeTable($outDir): no schema.json — only self-describing tables analyze"))
-    val view = manifestView(spark, outDir, None)
-    val maxG = currentGen(spark, outDir)
-    val files = view.dataFiles.map(f => s"$outDir/data/${fileSuffix(f)}")
-    if (files.isEmpty) return maxG // nothing tracked
+    val m = manifestOf(spark, outDir)
+    val view = m.view(None, None)
+    val cur = view.rows.filter(m.part(_) >= 0)
+    // the parts with a row from before file tracking, and their directories' files
+    val listed = cur.filter(m.isNull(_, m.iFiles)).map(m.part).distinct
+    val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val listedPaths = listed.flatMap { p =>
+      val dir = new org.apache.hadoop.fs.Path(s"$outDir/data/__part=$p")
+      if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.map(_.getPath.getName).filter(_.startsWith("part-"))
+        .map(n => s"$dir/$n")
+    }
+    // the other parts' recorded lists (every column of a commit carries the same one)
+    val recorded = cur.filterNot(r => listed.contains(m.part(r))).groupBy(m.part)
+      .map { case (p, rs) => p -> rs.flatMap(m.filesOf).distinct.sorted }.filter(_._2.nonEmpty)
+    val files = recorded.values.flatten.map(f => s"$outDir/data/${fileSuffix(f)}").toSeq ++ listedPaths
+    if (files.isEmpty) return m.currentGen // nothing readable
     val t0 = System.currentTimeMillis()
-    val cur = view.toDF(spark).filter(col("__part") >= 0)
-    val tracked = cur.filter(col("data_files").isNotNull && size(col("data_files")) > 0)
+    val curDF = {
+      val d = view.toDF(spark, cur)
+      if (m.has("data_files")) d else d.withColumn("data_files", lit(null).cast("array<string>"))
+    }
     // driver-side kernels (same single-JVM pattern as the metadata job):
     // shared-dictionary blobs need the registry for their string bounds
     loadDicts(spark, outDir) // registers them
     val written = spark.read.option("mergeSchema", "true")
-      .option("basePath", s"$outDir/data").parquet(files: _*)
+      .option("basePath", s"$outDir/data").parquet(files.distinct: _*)
+    // a listed part's files, named as input_file_name() names them — how
+    // every commit records its files
+    val partFiles = (recorded.toSeq ++ (if (listed.isEmpty) Nil
+      else written.filter(col("__part").isin(listed: _*))
+        .select(col("__part"), input_file_name()).distinct().collect()
+        .groupBy(_.getInt(0)).map { case (p, rs) => p -> rs.map(_.getString(1)).toSeq.sorted }))
+      .toDF("__part", "data_files")
     // only columns that exist in the committed files are recomputable
     // (ALTER TABLE ADD COLUMNS before any insert leaves no e_ column)
     val avail = written.columns.toSet
     val schemaAvail = StructType(schema.fields.filter(f => avail.contains("e_" + f.name)))
+    val recomputable = schemaAvail.fields.map(_.name).toSeq
     val refreshed: Option[DataFrame] = if (schemaAvail.isEmpty) None else {
-      val fresh = metadata(written, schemaAvail)
-      // per-part current file list = the union across the part's rows
-      // (every column of a commit carries the same list)
-      val partFiles = tracked.select(col("__part"), explode(col("data_files")).as("f"))
-        .distinct().groupBy(col("__part"))
-        .agg(sort_array(collect_set(col("f"))).as("data_files"))
       // refresh EXACTLY the (part, column) pairs current today — metadata()
       // emits rows for every schema column, but a part that predates an
       // added column has no manifest row for it and must not gain one
-      val pairs = tracked.select(col("__part"), col("column")).distinct()
-      Some(fresh.join(pairs, Seq("__part", "column"), "left_semi")
+      val pairs = curDF.filter(col("data_files").isNull || size(col("data_files")) > 0)
+        .select(col("__part"), col("column")).distinct()
+      Some(metadata(written, schemaAvail)
+        .join(pairs, Seq("__part", "column"), "left_semi")
         .join(partFiles, Seq("__part"))
         .withColumn("wave", lit(-1))
         .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
         .withColumn("attempt", lit(1)))
     }
-    // carried verbatim: untracked/empty rows, plus tracked rows whose
-    // column analyze could not recompute (absent from every data file)
-    val recomputable = schemaAvail.fields.map(_.name).toSet
-    val carried = cur.filter(col("data_files").isNull ||
-      size(col("data_files")) === 0 || !col("column").isin(recomputable.toSeq: _*))
+    // carried verbatim: empty (tombstoned) rows, plus rows whose column
+    // analyze could not recompute (absent from every data file) — those of
+    // a listed part take its files
+    val carried = curDF.filter(size(col("data_files")) === 0 || !col("column").isin(recomputable: _*))
+      .join(partFiles.withColumnRenamed("data_files", "__listed"), Seq("__part"), "left")
+      .withColumn("data_files", coalesce(col("data_files"), col("__listed"))).drop("__listed")
     val combined0 = refreshed.map(_.unionByName(carried, allowMissingColumns = true))
       .getOrElse(carried)
     // scrub inherited commit-kind flags: this generation is an ANALYZE
@@ -3170,8 +3118,8 @@ object EncodePipeline {
     * Correctness gates (throws IllegalStateException rather than answer
     * wrong): live merge-on-read delete vectors make every stat stale —
     * materializeDeletes() first; manifest rows predating the exact-stats /
-    * null-count columns can hide values — compact() (which re-encodes under
-    * the current metadata version) upgrades such tables. Schema-evolution
+    * null-count columns can hide values — [[analyzeTable]] upgrades such
+    * tables. Schema-evolution
     * parts that predate a column count as all-null for it, matching decode.
     */
   def tableStats(spark: SparkSession, outDir: String, sourceSchema: StructType): DataFrame = {
@@ -3181,7 +3129,7 @@ object EncodePipeline {
     val m = manifestOf(spark, outDir)
     if (!m.has("null_value_count"))
       throw new IllegalStateException(
-        "tableStats: manifest predates null_value_counts; compact() to upgrade")
+        "tableStats: manifest predates null_value_counts; analyzeTable() to upgrade")
     val view = manifestView(spark, outDir, None)
     val totals = view.columnTotals(_ => true)
     // totals per part: the widest column's row count (schema evolution can
@@ -3192,7 +3140,7 @@ object EncodePipeline {
       val t = totals.getOrElse(p.name, Manifest.NoRows)
       if (!t.nullsKnown)
         throw new IllegalStateException(
-          s"tableStats: column ${p.name} has manifest rows without null counts (pre-upgrade era); compact() first")
+          s"tableStats: column ${p.name} has manifest rows without null counts (pre-upgrade era); analyzeTable() first")
       val nullsTotal = (totalRows - t.rows) + t.nulls // absent-era rows decode as null
       val nValues = t.rows - t.nulls
       val (vMin, vMax, vSum): (Any, Any, Any) =
@@ -3200,7 +3148,7 @@ object EncodePipeline {
         else {
           if (t.vCount != nValues)
             throw new IllegalStateException(
-              s"tableStats: column ${p.name} has manifest rows without exact value stats (pre-upgrade era); compact() first")
+              s"tableStats: column ${p.name} has manifest rows without exact value stats (pre-upgrade era); analyzeTable() first")
           // exact cross-part total; unknown or outside Long → null
           (t.vMin.get, t.vMax.get,
            t.vSum.filter(_.isValidLong).map(v => java.lang.Long.valueOf(v.toLong)).orNull)

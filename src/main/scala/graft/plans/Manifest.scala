@@ -13,10 +13,11 @@ import graft.core.Kmv
   * plain Scala, so planning a read starts no Spark job (the Iceberg model:
   * manifests are driver-resident).
   *
-  * `rows` are the stored rows, `srcFiles(i)` the manifest file row i came
-  * from (commit instants derive from it). Columns absent from older
-  * manifest eras read as null. */
-final class Manifest(val schema: StructType, rows: Array[Row], srcFiles: Array[String]) {
+  * `table` names the table in errors, `rows` are the stored rows,
+  * `srcFiles(i)` the manifest file row i came from (commit instants derive
+  * from it). Columns absent from older manifest eras read as null. */
+final class Manifest(val table: String, val schema: StructType, rows: Array[Row],
+                     srcFiles: Array[String]) {
   private val index: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
   def has(c: String): Boolean = index.contains(c)
   private[plans] def at(c: String): Int = index.getOrElse(c, -1)
@@ -40,6 +41,17 @@ final class Manifest(val schema: StructType, rows: Array[Row], srcFiles: Array[S
   /** the row's generation: pre-generation (null) rows read as 0 */
   private def genOf(r: Row): Int = intOr(r, iGen, 0)
   private def additive(r: Row): Boolean = !isNull(r, iAdd) && r.getBoolean(iAdd)
+
+  /** the data files row `r` records — the one way any code finds a table's
+    * data files. A marker row (part < 0) records none. A data row from
+    * before file tracking records no list: it throws, naming
+    * [[EncodePipeline.analyzeTable]], the upgrade that records one. */
+  private[plans] def filesOf(r: Row): Seq[String] =
+    if (!isNull(r, iFiles)) r.getSeq[String](iFiles)
+    else if (part(r) < 0) Nil
+    else throw new IllegalStateException(s"graft table $table: part ${part(r)} has manifest " +
+      "rows from before data-file tracking, which record no file list; upgrade the table " +
+      "with EncodePipeline.analyzeTable or CALL <catalog>.system.analyze")
 
   /** the stored rows, unresolved (the raw manifest) */
   val raw: IndexedSeq[Row] = scala.collection.immutable.ArraySeq.unsafeWrapArray(rows)
@@ -219,11 +231,11 @@ object Manifest {
   /** the per-row source-file column the metadata-directory reader attaches */
   val SrcFile = "__src_file"
 
-  /** a manifest from rows read with a [[SrcFile]] column */
-  def fromDir(schema: StructType, rows: Array[Row]): Manifest = {
+  /** table `table`'s manifest from rows read with a [[SrcFile]] column */
+  def fromDir(table: String, schema: StructType, rows: Array[Row]): Manifest = {
     val i = schema.fieldIndex(SrcFile)
     val keep = schema.fields.indices.filter(_ != i)
-    new Manifest(StructType(keep.map(schema.fields(_))),
+    new Manifest(table, StructType(keep.map(schema.fields(_))),
       rows.map(r => Row.fromSeq(keep.map(r.get))),
       rows.map(_.getString(i)))
   }
@@ -290,15 +302,14 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
   /** every committed part id (marker rows included), ascending */
   lazy val parts: Array[Int] = rows.map(m.part).distinct.sorted.toArray
 
-  /** whether this manifest era records data-file lists at all */
-  def tracksFiles: Boolean = m.iFiles >= 0
-
-  /** rows written before data-file tracking or zone maps: bounds unknown */
-  private def oldRow(r: Row): Boolean = m.isNull(r, m.iFiles)
-
-  private def partsWhere(column: String)(admits: Row => Boolean): Array[Int] =
-    rows.iterator.filter(r => m.column(r) == column && (oldRow(r) || admits(r)))
+  /** the parts with a `column` row `admits`. Zone maps are read only where
+    * the rows record their files: a view with rows from before file
+    * tracking throws ([[files]]), since those rows' bounds may be unknown. */
+  private def partsWhere(column: String)(admits: Row => Boolean): Array[Int] = {
+    files
+    rows.iterator.filter(r => m.column(r) == column && admits(r))
       .map(m.part).toSeq.distinct.sorted.toArray
+  }
 
   /** parts whose long zone maps intersect [lo, hi]. The exact attained
     * stats (value_min/value_max) win over the representable codec-domain
@@ -341,53 +352,49 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
     parts.filterNot(proved)
   }
 
-  /** (part, file path) of every file the tracked rows list, and the parts of
-    * rows from before file tracking (read by listing their directory) */
-  lazy val (trackedFiles, untrackedParts): (Seq[(Int, String)], Seq[Int]) =
-    if (!tracksFiles) (Nil, parts.toSeq)
-    else {
-      val (old, tracked) = rows.partition(oldRow)
-      (tracked.flatMap(r => r.getSeq[String](m.iFiles).map(m.part(r) -> _)).distinct,
-        old.map(m.part).distinct)
-    }
+  /** (part, file path) of every data file the rows record, once each
+    * ([[Manifest.filesOf]]: throws on a view with rows from before file
+    * tracking) */
+  lazy val files: Seq[(Int, String)] =
+    rows.flatMap(r => m.filesOf(r).map(m.part(r) -> _)).distinct
 
-  /** path of every data file the tracked rows list, once each */
-  lazy val dataFiles: Seq[String] = trackedFiles.map(_._2).distinct
+  /** path of every data file the rows record, once each */
+  lazy val dataFiles: Seq[String] = files.map(_._2).distinct
 
   /** parts holding one of the data files `suffixes` ("__part=p/name") */
   def partsHolding(suffixes: Set[String]): Seq[Int] =
-    trackedFiles.collect { case (p, f) if suffixes(EncodePipeline.fileSuffix(f)) => p }
+    files.collect { case (p, f) if suffixes(EncodePipeline.fileSuffix(f)) => p }
       .distinct.sorted
 
-  /** parts [[EncodePipeline.compact]] rewrites: every row file-tracked, and
-    * at least `minFiles` distinct data files (append fragmentation) or a
-    * column with more blocks than ceil(rows / blockSize) (under-filled
-    * blocks). A part's rows are (column × commit)-grained. */
+  /** parts [[EncodePipeline.compact]] rewrites: at least `minFiles` distinct
+    * data files (append fragmentation) or a column with more blocks than
+    * ceil(rows / blockSize) (under-filled blocks). A part's rows are
+    * (column × commit)-grained. */
   def compactCandidates(blockSize: Int, minFiles: Int): Seq[Int] = {
     def sum(rs: Seq[Row], c: String) = rs.iterator.map(m.longAt(_, m.at(c)).getOrElse(0L)).sum
-    rows.groupBy(m.part).toSeq.collect { case (p, rs) if !rs.exists(oldRow) &&
-        (rs.flatMap(_.getSeq[String](m.iFiles)).distinct.size >= minFiles ||
+    rows.groupBy(m.part).toSeq.collect { case (p, rs) if
+        (rs.flatMap(m.filesOf).distinct.size >= minFiles ||
           rs.groupBy(m.column).values.exists(cs =>
             sum(cs, "blocks") > math.ceil(sum(cs, "rows").toDouble / blockSize))) => p
     }.sorted
   }
 
-  /** [[EncodePipeline.compactSmallFiles]]'s plan over the parts whose every
-    * row is file-tracked. A commit is the rows sharing one part's file
-    * list; it is small when it holds fewer than `blockSize` rows or, with
-    * `maxSmallBytes` > 0, at most that many encoded bytes. Parts with at
-    * least `minSmall` small commits are packed. Returns (packed parts, the
-    * files of their small commits, their other rows, which carry forward). */
+  /** [[EncodePipeline.compactSmallFiles]]'s plan. A commit is the rows
+    * sharing one part's file list; it is small when it holds fewer than
+    * `blockSize` rows or, with `maxSmallBytes` > 0, at most that many
+    * encoded bytes. Parts with at least `minSmall` small commits are
+    * packed. Returns (packed parts, the files of their small commits, their
+    * other rows, which carry forward). */
   def smallFilePlan(blockSize: Int, maxSmallBytes: Long,
                     minSmall: Int): (Seq[Int], Seq[String], Seq[Row]) = {
-    def files(r: Row) = r.getSeq[String](m.iFiles)
+    def files(r: Row) = m.filesOf(r)
     def small(rs: Seq[Row]) =
       rs.flatMap(m.longAt(_, m.at("rows"))).maxOption.exists(_ < blockSize) ||
         maxSmallBytes > 0L && {
           val bytes = rs.flatMap(m.longAt(_, m.at("encoded_bytes")))
           bytes.nonEmpty && bytes.sum <= maxSmallBytes
         }
-    val byPart = rows.groupBy(m.part).filterNot(_._2.exists(oldRow))
+    val byPart = rows.groupBy(m.part)
     val smallSets = byPart.map { case (p, rs) =>
       p -> rs.groupBy(files).collect { case (fs, cs) if small(cs) => fs }.toSet
     }.filter(_._2.size >= minSmall)
@@ -411,9 +418,8 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
               hi <- rs.flatMap(m.longAt(_, iMax)).maxOption) yield (lo, hi)
   }
 
-  /** suffixes ("__part=p/name") of every tracked data file */
-  lazy val fileSuffixes: Set[String] =
-    trackedFiles.iterator.map(f => EncodePipeline.fileSuffix(f._2)).toSet
+  /** suffixes ("__part=p/name") of every data file */
+  lazy val fileSuffixes: Set[String] = inventory.keySet
 
   /** per-(part, column) sums and sketch merges (no particular order) */
   lazy val partColumns: Seq[PartColumn] = {
@@ -464,12 +470,7 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
       p -> (cs.map(_.rows).max, cs.map(_.rawBytes).sum)
     }
 
-  /** file inventory (suffix → path) of the data parts; None when any part
-    * predates file tracking (it cannot be diffed by file) */
-  lazy val inventory: Option[Map[String, String]] = {
-    val data = rows.filter(m.part(_) >= 0)
-    if (!tracksFiles || data.exists(oldRow)) None
-    else Some(data.flatMap(_.getSeq[String](m.iFiles))
-      .map(f => EncodePipeline.fileSuffix(f) -> f).toMap)
-  }
+  /** file inventory (suffix → path) of every data file */
+  lazy val inventory: Map[String, String] =
+    dataFiles.map(f => EncodePipeline.fileSuffix(f) -> f).toMap
 }

@@ -24,8 +24,8 @@ import graft.functions._
   * change in the query. The lookup answers from the driver-held
   * [[Manifest]] in plain Scala ([[ManifestView.survivingLong]] and its
   * siblings, the rule the readDataPruned* readers apply too), so optimizing
-  * a query starts no Spark job; old-era manifest rows (no zone maps
-  * recorded) are conservatively kept.
+  * a query starts no Spark job; a manifest with rows from before file
+  * tracking throws there, and the query runs unpruned.
   *
   * Guards: skipped when the condition already references `__part` (also the
   * fixed-point idempotency guard), when no conjunct is a recognizable probe,

@@ -163,9 +163,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   // as a transform — `graft_part_hash_<P>(col)` / `graft_part_host_<P>_<S>
   // (col)` (the same name-encoded functions the scan reports for
   // storage-partitioned joins) — and wins over the properties.
-  // REPLACE TABLE AS SELECT commits a REPLACING SNAPSHOT on file-tracked
-  // tables (replaceCommit — old generations stay time-travelable until
-  // vacuum), physical replace only on pre-tracking dirs.
+  // REPLACE TABLE AS SELECT commits a REPLACING SNAPSHOT (replaceCommit —
+  // old generations stay time-travelable until vacuum); only a dir without
+  // a manifest is replaced physically.
 
   override def stageCreate(ident: Identifier, columns: Array[V2Column],
                            partitions: Array[Transform],
@@ -352,7 +352,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
   * directory. Atomicity is the pipeline's own: a fresh CREATE becomes
   * visible at its schema.json + manifest commit (commitStagedChanges has
   * nothing left to flip — abort before that removes the half-built dir); a
-  * REPLACE of a file-tracked table is [[EncodePipeline.replaceCommit]]'s
+  * REPLACE of an existing table is [[EncodePipeline.replaceCommit]]'s
   * single-file manifest append (abort before it leaves the old snapshot
   * intact and only unreferenced orphan files, which vacuum reclaims). */
 private[sources] class GraftStagedTable(
@@ -383,14 +383,13 @@ private[sources] class GraftStagedTable(
                 val spark = data.sparkSession
                 val parts = partitionsOpt
                   .getOrElse(spark.sessionState.conf.numShufflePartitions)
-                if (replaceExisting && GraftDataSource.fileTracked(spark, dir)) {
+                if (replaceExisting && EncodePipeline.hasManifest(spark, dir)) {
                   // REPLACE TABLE AS SELECT = a replacing snapshot; empty
                   // query results are fine (a zero-file marker generation)
                   EncodePipeline.replaceCommit(data, key, dir, parts, blockSize,
                     bloomCols = bloomCols)
                 } else {
-                  if (replaceExisting) {
-                    // pre-file-tracking dir: legacy physical replace
+                  if (replaceExisting) { // a half-created dir: no history to keep
                     val p = new Path(dir)
                     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
                       .delete(p, true)

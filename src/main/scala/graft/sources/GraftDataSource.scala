@@ -91,13 +91,6 @@ object GraftDataSource {
       "the audit gate — unset the conf or publish first"))
   }
 
-  /** whether the table's manifest is file-tracked (carries `data_files`) —
-    * the prerequisite for snapshot-preserving overwrite; pre-tracking
-    * tables overwrite by physical replace */
-  private[sources] def fileTracked(spark: SparkSession, outDir: String): Boolean =
-    EncodePipeline.hasManifest(spark, outDir) &&
-      EncodePipeline.manifestOf(spark, outDir).has("data_files")
-
   /** parse a TIMESTAMP AS OF operand: epoch millis, an ISO-8601 instant
     * (`2026-08-20T00:00:00Z`), or a session-local SQL timestamp
     * (`2026-08-20 00:00:00`) */
@@ -127,11 +120,10 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     * `sharedDictCols` (comma-separated). SaveMode semantics are the file-
     * source ones: Append lands an exactly-once tracked commit (batchId =
     * max committed + 1, or the `batchId` option for replay-keyed callers);
-    * Overwrite commits a REPLACING snapshot on file-tracked tables (old
-    * generations stay time-travelable until vacuum; see
-    * [[EncodePipeline.replaceCommit]]) and physically replaces the
-    * directory only on pre-tracking tables; ErrorIfExists/Ignore check the
-    * manifest. */
+    * Overwrite commits a REPLACING snapshot (old generations stay
+    * time-travelable until vacuum; see [[EncodePipeline.replaceCommit]]),
+    * and replaces the directory physically only when it holds no manifest
+    * (a half-created one); ErrorIfExists/Ignore check the manifest. */
   override def createRelation(sqlContext: org.apache.spark.sql.SQLContext,
                               mode: org.apache.spark.sql.SaveMode,
                               parameters: Map[String, String],
@@ -180,15 +172,13 @@ class GraftDataSource extends TableProvider with DataSourceRegister
           case None =>
             EncodePipeline.appendCommit(data, key, outDir, partitions, blockSize, batchId)
         }
-      case Overwrite if exists && GraftDataSource.fileTracked(spark, outDir) =>
+      case Overwrite if exists =>
         // overwrite as a SNAPSHOT (Iceberg INSERT OVERWRITE parity): the
         // old generations stay readable via option("gen") / rollbackTo;
         // vacuum reclaims them when history is expired deliberately
         EncodePipeline.replaceCommit(data, key, outDir, partitions, blockSize,
           bloomCols = bloomCols)
-      case Overwrite =>
-        // pre-file-tracking table (or half-created dir): the legacy
-        // physical replace — no history survives
+      case Overwrite => // a half-created dir: no history to keep
         val dir = new org.apache.hadoop.fs.Path(outDir)
         dir.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(dir, true)
         EncodePipeline.run(data, key, outDir, partitions, blockSize,
@@ -566,8 +556,7 @@ class GraftTable(outDir: String, tableSchema: StructType,
   /** the persisted placement law as a named transform (DESCRIBE shows it;
     * the scan re-reports it as KeyGroupedPartitioning for join planning) */
   override def partitioning(): Array[Transform] =
-    (try EncodePipeline.readPartSpec(SparkSession.active, outDir)
-     catch { case _: Exception => None })
+    EncodePipeline.readPartSpec(SparkSession.active, outDir)
       .map(s => Array(GraftPartFunction.transformOf(s))).getOrElse(Array.empty)
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
@@ -622,10 +611,10 @@ class GraftTable(outDir: String, tableSchema: StructType,
                 if (overwrite || legacyOverwrite) {
                   GraftDataSource.refuseMainMutation(spark, branchPin,
                     "INSERT OVERWRITE")
-                  if (GraftDataSource.fileTracked(spark, outDir))
+                  if (EncodePipeline.hasManifest(spark, outDir))
                     // INSERT OVERWRITE as a snapshot — history stays readable
                     EncodePipeline.replaceCommit(data, key, outDir, partitions)
-                  else {
+                  else { // a half-created dir: no history to keep
                     val p = new Path(outDir)
                     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
                     EncodePipeline.run(data, key, outDir, partitions)
@@ -1294,9 +1283,7 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
     * (the transform must resolve against the scan output) and rows exist. */
   override def outputPartitioning():
       org.apache.spark.sql.connector.read.partitioning.Partitioning = {
-    val spec = try EncodePipeline.readPartSpec(spark, outDir)
-               catch { case _: Exception => None }
-    spec.filter(s => required.fieldNames.contains(s.key)) match {
+    EncodePipeline.readPartSpec(spark, outDir).filter(s => required.fieldNames.contains(s.key)) match {
       case Some(s) if plannedParts.nonEmpty =>
         new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
           Array(GraftPartFunction.transformOf(s)),

@@ -7,9 +7,10 @@ import graft.SparkTestBase
 import graft.sources.{GraftCatalog, WebDocGen}
 
 /** The commit primitive: every table operation lands as exactly one
-  * manifest file at one new generation, no generation is held by two
-  * commits, no-ops write nothing, an unreadable manifest is never taken
-  * for a new table, and readers never move manifest directories. */
+  * manifest file at one new generation whose rows all record their
+  * data-file lists, no generation is held by two commits, no-ops write
+  * nothing, an unreadable manifest is never taken for a new table, and
+  * readers never move manifest directories. */
 class CommitSpec extends SparkTestBase {
 
   private lazy val warehouse: String = {
@@ -38,6 +39,13 @@ class CommitSpec extends SparkTestBase {
     else df.select(coalesce(col("gen"), lit(-1))).distinct().collect().map(_.getInt(0)).toSet
   }
 
+  /** rows of manifest file `file` that record no data-file list */
+  private def withoutFiles(file: String): Long = {
+    val df = spark.read.parquet(file)
+    if (df.columns.contains("data_files")) df.filter(col("data_files").isNull).count()
+    else df.count()
+  }
+
   private def fresh(from: Long, n: Int): DataFrame = {
     import spark.implicits._
     spark.range(from, from + n).map(i => WebDocGen.make(i)).toDF()
@@ -50,6 +58,7 @@ class CommitSpec extends SparkTestBase {
     EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64, waves = 2)
     // the base run: one gen-less file per wave
     assert(parquetFiles(s"$out/meta").toSeq.map(gensOf) === Seq(Set(-1), Set(-1)))
+    assert(parquetFiles(s"$out/meta").toSeq.map(withoutFiles) === Seq(0L, 0L))
     assert(EncodePipeline.currentGen(spark, out) === 0)
     val urls = docs.select("url").orderBy("url").collect().map(_.getString(0))
     def byUrl(from: Int, until: Int) = col("url").isin(urls.slice(from, until).toSeq: _*)
@@ -118,6 +127,7 @@ class CommitSpec extends SparkTestBase {
         assert(added.size === n)
         assert(gen() === g0 + n)
         assert(added.toSeq.map(gensOf).sortBy(_.head) === (g0 + 1 to g0 + n).map(Set(_)))
+        assert(added.toSeq.map(withoutFiles).sum === 0L)
       }
     }
     // no generation is held by two commits: one per file, each file its own

@@ -247,13 +247,12 @@ class EncodePipelineSpec extends SparkTestBase {
     assert(hits.count() === 1L)
   }
 
-  test("mixed-era metadata (pre-data_files rows) reads per-row, losing no parts") {
-    // a directory whose early waves were committed by a pre-data_files /
-    // pre-string-bounds version and later waves by the current one: the old
-    // rows carry NO data_files / str bounds. readData must fall back to
-    // part-level filtering for exactly those rows (not silently drop them),
-    // and string pruning must treat their null str_lo as "unknown", not
-    // "no values".
+  test("analyzeTable upgrades part-level rows; until then every read refuses") {
+    // a directory whose first wave was committed by a pre-data_files /
+    // pre-string-bounds version and whose second wave by the current one:
+    // the old rows carry NO data_files / str bounds. Every read and
+    // operation refuses it with one error naming the upgrade; analyzeTable
+    // lists those parts' directories once and recomputes their rows.
     val docs = sf("documents").select(col("doc_id"), col("lang"), col("source"))
     val out = tmpDir()
     EncodePipeline.run(docs, "doc_id", out, partitions = 8, blockSize = 128, waves = 2,
@@ -279,16 +278,31 @@ class EncodePipelineSpec extends SparkTestBase {
     }
     rmTree(metaPath)
     java.nio.file.Files.move(java.nio.file.Paths.get(mixed), metaPath)
-    // every committed part stays visible; round-trip still bit-identical
-    val data = EncodePipeline.readData(spark, out)
-    val decoded = EncodePipeline.decode(data, docs.schema)
+    def refused(what: String)(body: => Any): Unit = withClue(s"$what: ") {
+      val e = intercept[Exception](body)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toSeq
+      assert(msgs.exists(m => m.contains("analyzeTable") && m.contains(out)), msgs)
+    }
+    refused("readData")(EncodePipeline.readData(spark, out))
+    refused("format(graft)")(spark.read.format("graft").load(out).collect())
+    refused("compact")(EncodePipeline.compact(spark, out, docs.schema))
+    val g = EncodePipeline.analyzeTable(spark, out)
+    assert(g === 1)
+    // every committed row is back, bit-identical
+    val decoded = EncodePipeline.decodeShared(spark, out, docs.schema)
     assert(decoded.count() === total)
     assert(EncodePipeline.verifyRoundTrip(docs, decoded, "doc_id").head().getLong(1) === 0L)
-    // absent string probe: current-era parts prune away; old-era parts are
-    // conservatively KEPT (bounds unknown), not skipped as "no values"
-    val prunedParts = EncodePipeline.readDataPruned(spark, out, "lang", "zz")
-      .select("__part").distinct().collect().map(_.getInt(0)).toSet
-    assert(prunedParts === wave0Parts)
+    // the recomputed string bounds prune: an absent probe opens no part
+    val zz = "zz".getBytes("UTF-8")
+    assert(EncodePipeline.survivingPartsStr(spark, out, "lang", zz, zz).isEmpty)
+    assert(EncodePipeline.readDataPruned(spark, out, "lang", "zz").count() === 0L)
+    // the wave-0 parts list their files, which hold their blocks
+    val files = EncodePipeline.manifestView(spark, out, None).files
+    assert(wave0Parts.subsetOf(files.map(_._1).toSet))
+    assert(files.forall { case (p, f) => f.contains(s"/data/__part=$p/") })
+    // time travel below the upgrade lands on the part-level view
+    refused("time travel")(EncodePipeline.decodeSharedAt(spark, out, docs.schema, 0).collect())
   }
 
   test("salted host partitioner splits hot hosts across partitions") {

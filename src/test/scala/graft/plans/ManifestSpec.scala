@@ -11,7 +11,8 @@ import graft.sources.WebDocGen
 
 /** The driver-held manifest snapshot: its Scala generation resolution
   * returns the same row multiset as the Spark SQL formulation of the rule
-  * ([[ReadMetaOracle]]) at every read generation and branch, and the
+  * ([[ReadMetaOracle]]) at every read generation and branch, a view with
+  * rows from before file tracking refuses to list files, and the
   * metadata-directory cache keeps to its byte budget. */
 class ManifestSpec extends SparkTestBase {
 
@@ -87,23 +88,38 @@ class ManifestSpec extends SparkTestBase {
 
   test("Scala resolution returns the oracle's row multiset on generated manifests") {
     var compared = 0
+    var (refused, listed) = (0, 0)
     for (era <- eras; seed <- 1L to 3L) {
       val (hist, nGen) = history(seed * 31 + era.length)
       val schema = StructType(era.map(full(_)))
       val rows = hist.map(h => Row.fromSeq(era.map(h.getOrElse(_, null)))).toArray
-      val m = new Manifest(schema, rows, Array.fill(rows.length)("file:/t/meta/m.parquet"))
+      val m = new Manifest("t", schema, rows, Array.fill(rows.length)("file:/t/meta/m.parquet"))
       val df = m.toDF(spark, m.raw)
       val rnd = new scala.util.Random(seed)
       val upTos = Seq(None, Some(0), Some(1 + rnd.nextInt(nGen)), Some(nGen))
       val branches = Seq(None, Some("b1" -> (rnd.nextInt(nGen + 1) - 1)), Some("b2" -> -1))
       for (upTo <- upTos; branch <- branches) {
-        val got = sortedKeys(m.view(upTo, branch).rows)
+        val view = m.view(upTo, branch)
+        val got = sortedKeys(view.rows)
         val want = sortedKeys(ReadMetaOracle.resolve(df, upTo, branch).collect().toSeq)
-        assert(got === want, s"era ${era.mkString(",")} seed $seed upTo $upTo branch $branch")
+        val clue = s"era ${era.mkString(",")} seed $seed upTo $upTo branch $branch"
+        assert(got === want, clue)
+        // the file accessor: a visible data row without a list refuses the
+        // view, naming the upgrade; otherwise it lists every recorded file
+        val recorded = view.rows.filter(_.getInt(0) >= 0).map(r => Option(r.getSeq[String](3)))
+        if (recorded.contains(None)) {
+          val e = intercept[IllegalStateException](view.files)
+          assert(e.getMessage.contains("analyzeTable"), clue)
+          refused += 1
+        } else {
+          assert(view.dataFiles.toSet === recorded.flatten.flatten.toSet, clue)
+          listed += 1
+        }
         compared += 1
       }
     }
     assert(compared === eras.length * 3 * 12)
+    assert(refused > 0 && listed > 0)
   }
 
   test("readMetaAt matches the oracle on a table with appends, a branch, MOR deletes and a rollback") {

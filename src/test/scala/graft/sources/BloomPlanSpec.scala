@@ -154,6 +154,29 @@ class BloomPlanSpec extends SparkTestBase {
     assert(q.collect().map(_.getString(0)).toSeq === Seq(url1))
   }
 
+  test("compacted files keep the table's filters: a lookup still plans only admitting files") {
+    val d = docs(1200)
+    val out = tmpDir()
+    build(d, out)
+    import spark.implicits._
+    (1 to 3).foreach { b =>
+      val small = spark.range(5000 + 20 * b, 5020 + 20 * b).map(i => WebDocGen.make(i)).toDF()
+      assert(EncodePipeline.appendCommit(small, "url", out, partitions = 4, blockSize = 128,
+        batchId = b.toLong))
+    }
+    assert(EncodePipeline.compact(spark, out, d.schema, blockSize = 128).nonEmpty)
+    val all = files(out)
+    all.foreach(f => assert(spark.read.parquet(f).columns.contains("bm_url"), f))
+    val doc = d.orderBy(col("warc_ts")).head()
+    val url = doc.getString(0)
+    val expected = admitting(out, Seq(url))
+    assert(expected.nonEmpty && expected.size < all.size, s"${expected.size} of ${all.size}")
+    val q = lookup(out, url)
+    assert(planned(q) === expected)
+    val rows = q.collect()
+    assert(rows.length === 1 && sameDoc(rows.head, doc))
+  }
+
   test("a table deleted and rebuilt at the same path never gets a stale filter") {
     val d = docs(1200)
     val out = tmpDir() + "/t"

@@ -601,6 +601,19 @@ class GraftDataSourceSpec extends SparkTestBase {
     finally rdr.close()
   }
 
+  test("a garbage schema.json fails the load with a parse error naming the file") {
+    val out = tmpDir()
+    EncodePipeline.run(docs(200), "url", out, partitions = 2, blockSize = 64)
+    // written through the table's file system, so its checksum matches
+    val p = new org.apache.hadoop.fs.Path(s"$out/schema.json")
+    val o = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try o.write("{not a schema".getBytes("UTF-8")) finally o.close()
+    val e = intercept[Exception](spark.read.format("graft").load(out).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(m => m.contains("cannot parse") && m.contains(s"$out/schema.json")), msgs)
+  }
+
   test("an unreadable dicts/ fails the read; a table without dicts/ still reads") {
     val d = docs(300)
     val out = tmpDir()
