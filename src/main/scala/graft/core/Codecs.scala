@@ -285,7 +285,6 @@ object Codecs {
   final case class LongStats(count: Int, min: Long, max: Long, runs: Int,
                              maxZigzagDelta: Long, sorted: Boolean,
                              orAll: Long = -1L) {
-    def widthFor: Int = BitPack.bitsNeeded(max - min) // max-min may wrap if range > Long.Max; guarded in analyze
     def widthDelta: Int = BitPack.bitsNeeded(maxZigzagDelta)
     /** trailing zeros common to every value (0 when orAll defaulted). */
     def commonTz: Int = {
@@ -759,8 +758,6 @@ object Codecs {
     new StrIndex(vs.length, codeOf, dist, nd, total, db, rn, ml, pfxSaved, maxLcp)
   }
 
-  def analyzeStrs(vs: Array[Array[Byte]]): StrStats = strIndex(vs).stats
-
   def estimateStr(s: StrStats, fsstRatio: Double): Map[Int, Long] = {
     val codeW = BitPack.bitsNeeded(math.max(s.ndv - 1, 1))
     val lenW = BitPack.bitsNeeded(s.maxLen)
@@ -806,8 +803,6 @@ object Codecs {
     (math.min(1.0, (comp.length.toDouble + table.serializedSize) / sample.length), table)
   }
 
-  def sampleFsstRatio(vs: Array[Array[Byte]]): Double = sampleFsstRatioAndTable(vs)._1
-
   def encodeStrs(vs: Array[Array[Byte]]): Array[Byte] =
     encodeStrsCached(vs, null)._1
 
@@ -835,7 +830,7 @@ object Codecs {
       (encodeFsstWith(vs, table), table)
     else if (best == DictId || best == RleDict)
       (encodeDictWith(vs.length, ix, best), null) // reuse the index — one hash pass total
-    else (encodeStrsAs(vs, best, Some(s)), null)
+    else (encodeStrsAs(vs, best), null)
   }
 
   /** FSST-encode a block with an already-trained table. One shared scratch
@@ -883,7 +878,7 @@ object Codecs {
     BitPack.unpack(r.readBytes(BitPack.packedByteLen(count, lenW)), lenW, count).map(_.toInt)
   }
 
-  def encodeStrsAs(vs: Array[Array[Byte]], id: Int, stats: Option[StrStats] = None): Array[Byte] = {
+  def encodeStrsAs(vs: Array[Array[Byte]], id: Int): Array[Byte] = {
     val w = new ByteWriter(64)
     id match {
       case ConstStr =>
@@ -1406,7 +1401,6 @@ object Codecs {
   def registerDict(id: Long, dt: DictTable): Unit = sharedDicts.putIfAbsent(id, dt)
   def registerDicts(m: scala.collection.Map[Long, DictTable]): Unit =
     m.foreach { case (k, v) => registerDict(k, v) }
-  def registeredDict(id: Long): DictTable = sharedDicts.get(id)
 
   /** A shared dictionary: values sorted unsigned-lexicographic, no
     * duplicates. Broadcast-friendly; the concatenated view buffer and the
@@ -2060,7 +2054,7 @@ object Codecs {
         val ref = r.readLong()
         (ref, packedHi(ref, width))
       case RleLong =>
-        val nRuns = r.readInt()
+        r.readInt() // run count
         val valW = r.readByte() & 0xff
         r.readByte()
         val ref = r.readLong()

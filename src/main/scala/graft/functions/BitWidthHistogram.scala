@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Encoder, Encoders, TypedColumn}
+import org.apache.spark.sql.{Encoder, TypedColumn}
 import org.apache.spark.sql.expressions.Aggregator
 
 /** Typed UDAF surface (SURVEY.md §2.3 "UDF/UDAF" item b): one-pass bit-width

@@ -29,8 +29,8 @@ import graft.functions._
   * metadata rows (one per part × column: codec, raw/encoded bytes, row count,
   * wall time, attempt). A part is "committed" iff its metadata rows exist, so
   * a crash between data and metadata writes re-runs that wave's parts
-  * idempotently (data re-append replaces nothing; readers go through
-  * metadata-committed parts only... the dedup filter in `readData`).
+  * idempotently (the wave's dynamic overwrite replaces its orphans, and
+  * readers open only the files the manifest records).
   */
 object EncodePipeline {
 
@@ -470,8 +470,9 @@ object EncodePipeline {
     val partIdx = if (keepPart) encSchema.fieldIndex("__part") else -1
     val off = lead.length
     // by-NAME resolution with -1 for absent columns (schema evolution: a
-    // target schema may carry columns the table — or some of its parts,
-    // when read with mergeSchema — never wrote; they decode as all-null)
+    // target schema may carry columns the table — or some of its files,
+    // read under the union of their schemas — never wrote; they decode as
+    // all-null)
     val eIdx = plans.map(p => encSchema.fieldNames.indexOf("e_" + p.name)).toArray
     val cntIdx = encSchema.fieldIndex("__cnt")
     // dictionaries travel by broadcast (once per executor) and land in the
@@ -694,12 +695,13 @@ object EncodePipeline {
         d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
       // dynamic partition overwrite: a re-run of a crashed wave REPLACES that
       // wave's orphan part directories instead of appending duplicates
-      enc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__part").parquet(s"$outDir/data")
+      val waveFiles = landed(spark, outDir, p => Math.floorMod(p, waves) == w && !committed(p)) {
+        enc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("__part").parquet(s"$outDir/data")
+      }
       if (w == failAtWave) throw new RuntimeException(s"injected failure before metadata commit of wave $w")
-      val written = readDataDir(spark, outDir)
-        .filter(pmod(col("__part"), lit(waves)) === w &&
-          (if (committed.isEmpty) lit(true) else !col("__part").isin(committed.toSeq: _*)))
+      // a wave that wrote no file commits an empty row set
+      val written = if (waveFiles.isEmpty) enc.limit(0) else dataFiles(spark, outDir, waveFiles)
       // Iceberg-manifest parity: record the data files each part committed —
       // readers open exactly the recorded files (orphans from a crashed
       // attempt are invisible even inside a committed part directory)
@@ -722,34 +724,24 @@ object EncodePipeline {
     * committed part directory). A manifest with rows from before file
     * tracking throws, naming [[analyzeTable]] ([[Manifest.filesOf]]). */
   def readData(spark: SparkSession, outDir: String): DataFrame =
-    readDataWithMeta(spark, outDir, manifestView(spark, outDir, None))
+    readView(spark, outDir, manifestView(spark, outDir, None))
 
   /** time travel: the table as of generation `gen` — per part, the rows of
     * the highest generation ≤ gen (a part compacted past `gen` reads its
-    * older files). Superseded files must still exist: [[vacuum]] expires
-    * history, exactly like Iceberg's expire-snapshots. Tables never
-    * compacted have a single generation 0. */
+    * older files). Superseded files must still exist: once [[vacuum]] has
+    * expired that history (exactly like Iceberg's expire-snapshots), the
+    * read fails with an error naming a missing data file rather than
+    * returning fewer rows. Tables never compacted have a single
+    * generation 0. */
   def readDataAt(spark: SparkSession, outDir: String, gen: Int): DataFrame =
-    readDataWithMeta(spark, outDir, manifestView(spark, outDir, Some(gen)))
+    readView(spark, outDir, manifestView(spark, outDir, Some(gen)))
 
-  private def readDataWithMeta(spark: SparkSession, outDir: String,
-                               meta: ManifestView,
-                               parts: Option[Set[Int]] = None): DataFrame = {
-    import spark.implicits._
-    val files = meta.files.collect { case (p, f) if parts.forall(_(p)) => f }.distinct
-    // a part restriction is a partition filter: the other part
-    // directories are never read
-    val data = parts.fold(readDataDir(spark, outDir))(ps =>
-      readDataDir(spark, outDir).filter(col("__part").isin(ps.toSeq.sorted: _*)))
-    // mergeSchema (readDataDir): parts written before a column was added
-    // lack its e_/r_ fields; the union schema carries them as null.
-    // input_file_name() must sit directly above the single data relation
-    // (Spark rejects it over a multi-source join).
-    data
-      .withColumn("__file", input_file_name())
-      .join(broadcast(files.toDF("__file")), Seq("__file"), "left_semi")
-      .drop("__file")
-  }
+  /** the block rows of the files `view` records that `keep` (part, path)
+    * admits, with the columns of all the view's files ([[dataFiles]]) */
+  private def readView(spark: SparkSession, outDir: String, view: ManifestView,
+                       keep: (Int, String) => Boolean = (_, _) => true): DataFrame =
+    dataFiles(spark, outDir, view.files.collect { case (p, f) if keep(p, f) => f }.distinct,
+      layout = view.dataFiles)
 
   // ---------------- batch append (streaming-grade commits) ----------------
 
@@ -791,18 +783,6 @@ object EncodePipeline {
     val t0 = System.currentTimeMillis()
     require(ref.isEmpty || hasManifest(spark, outDir),
       s"branch commit (${ref.getOrElse("")}) needs an existing table at $outDir")
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def snapshot(): Map[String, Set[String]] = {
-      val d = new org.apache.hadoop.fs.Path(s"$outDir/data")
-      if (!fs.exists(d)) Map.empty
-      else fs.listStatus(d).filter(s => s.isDirectory && s.getPath.getName.startsWith("__part="))
-        .map { s =>
-          s.getPath.getName -> fs.listStatus(s.getPath).filter(_.isFile)
-            .map(_.getPath.getName).filterNot(_.startsWith("_")).toSet
-        }.toMap
-    }
-    val before = snapshot()
     // honor the table's persisted placement law: appended rows of a key land
     // in the part the original run chose (keeps the co-partitioning invariant
     // storage-partitioned joins rely on). Specless / re-keyed: plain hash.
@@ -811,11 +791,8 @@ object EncodePipeline {
       case Some(ps) => encode(df, key, ps.partitions, blockSize, Some(ps.expr))
       case None => encode(df, key, partitions, blockSize)
     })
-    enc.write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
-    val after = snapshot()
-    val newPaths = after.toSeq.flatMap { case (dir, names) =>
-      (names -- before.getOrElse(dir, Set.empty)).toSeq.sorted
-        .map(n => s"$outDir/data/$dir/$n")
+    val newPaths = landed(spark, outDir, _ => true) {
+      enc.write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
     }
     if (newPaths.isEmpty) { // empty batch: still commit any staged vectors
       deletes.foreach(d => commit(spark, outDir, Txn(deletes = Some(d))))
@@ -841,9 +818,7 @@ object EncodePipeline {
   private def batchRows(spark: SparkSession, outDir: String, schema: StructType,
                         files: Seq[String], batchId: Long, t0: Long,
                         ref: Option[String] = None): DataFrame = {
-    val written = spark.read.option("basePath", s"$outDir/data")
-      .parquet(files: _*)
-    val rows = metadataEx(written, schema, withFiles = true)
+    val rows = metadataEx(dataFiles(spark, outDir, files), schema, withFiles = true)
       .withColumn("wave", lit(batchId.toInt))
       .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
       .withColumn("attempt", lit(1))
@@ -1010,36 +985,17 @@ object EncodePipeline {
 
   /** land freshly-encoded block rows beside the existing files and return
     * manifest rows (sans `gen`) describing exactly the bytes this run put
-    * on disk. The files carry Bloom filters for `bloomCols` and the
-    * table's convention ([[withBlooms]]). The before/after name diff
-    * isolates this run's output from both the current generation and any
-    * crashed-attempt orphans. */
+    * on disk — its files, read back ([[landed]]). The files carry Bloom
+    * filters for `bloomCols` and the table's convention ([[withBlooms]]). */
   private def landAndDescribe(spark: SparkSession, outDir: String,
       sourceSchema: StructType, encOut: DataFrame, cands: Seq[Int],
       t0: Long, bloomCols: Seq[String] = Nil): DataFrame = {
-    // file names present per part BEFORE the write: everything else found
-    // afterwards is this run's output (names are globally unique); orphans
-    // of crashed attempts are in the before-set and stay excluded
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def partFilesOnDisk(p: Int): Set[String] = {
-      val d = new org.apache.hadoop.fs.Path(s"$outDir/data/__part=$p")
-      if (!fs.exists(d)) Set.empty
-      else fs.listStatus(d).filter(_.isFile).map(_.getPath.getName)
-        .filterNot(_.startsWith("_")).toSet
-    }
-    val before = cands.map(p => p -> partFilesOnDisk(p)).toMap
-    withBlooms(spark, outDir, encOut, bloomCols).write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
-
-    // identify this run's files by name diff, read exactly them back (the
-    // manifest must describe the bytes on disk, not the pre-write plan)
-    val newByPart = cands.map(p => p -> (partFilesOnDisk(p) -- before(p)).toSeq.sorted).toMap
-    val newPaths = newByPart.toSeq.flatMap { case (p, names) =>
-      names.map(n => s"$outDir/data/__part=$p/$n")
+    val newPaths = landed(spark, outDir, cands.toSet) {
+      withBlooms(spark, outDir, encOut, bloomCols).write.mode("append")
+        .partitionBy("__part").parquet(s"$outDir/data")
     }
     require(newPaths.nonEmpty, "rewrite wrote no files")
-    val written = spark.read.option("basePath", s"$outDir/data").parquet(newPaths: _*)
-    metadataEx(written, sourceSchema, withFiles = true)
+    metadataEx(dataFiles(spark, outDir, newPaths), sourceSchema, withFiles = true)
       .withColumn("wave", lit(-1))
       .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
       .withColumn("attempt", lit(1))
@@ -1078,10 +1034,8 @@ object EncodePipeline {
     val maxBlk = readData(spark, outDir).filter(col("__part").isin(cands: _*))
       .groupBy(col("__part")).agg(max(col("__block")).as("mb"))
       .collect().map(r => r.getInt(0) -> (r.getInt(1) + 1)).toMap
-    val enc = spark.read.option("mergeSchema", "true")
-      .option("basePath", s"$outDir/data").parquet(smallPaths: _*)
-    val newRows = rewriteBlocks(spark, outDir, sourceSchema, enc, cands,
-        blockSize, t0, maxBlk)
+    val newRows = rewriteBlocks(spark, outDir, sourceSchema, dataFiles(spark, outDir, smallPaths),
+      cands, blockSize, t0, maxBlk)
     // untouched commits carry forward verbatim at the new generation: same
     // files, same stats, same batch_id (streaming replay detection keeps
     // working); only the packed-away small commits are superseded
@@ -1941,7 +1895,7 @@ object EncodePipeline {
   def readDataBranch(spark: SparkSession, outDir: String,
                      branch: String): DataFrame = {
     branchBase(spark, outDir, branch) // loud on unknown branches
-    readDataWithMeta(spark, outDir, manifestView(spark, outDir, None, Some(branch)))
+    readView(spark, outDir, manifestView(spark, outDir, None, Some(branch)))
   }
 
   /** the generation a tag pins, failing loudly on unknown names */
@@ -2695,9 +2649,10 @@ object EncodePipeline {
   // data files on every call. The cache is bounded by an estimate of the
   // driver-heap bytes its entries hold (least recently used entries leave
   // first); a directory larger than the whole budget is read on every call
-  // and never cached. The same cache holds each table's data-directory
-  // relation ([[readDataDir]]) and each data file's block Bloom
-  // filters once a point lookup has read them ([[cachedFileIndex]]).
+  // and never cached. The same cache holds per-data-file entries under the
+  // write-once rule of [[cachedFileIndex]]: each file's status and footer
+  // schema once an encoded-row read has opened it ([[dataFile]]), and its
+  // block Bloom filters once a point lookup has read them.
   private final class DirRows(val schema: StructType, val rows: Array[org.apache.spark.sql.Row]) {
     def at(c: String): Int = schema.fieldNames.indexOf(c)
   }
@@ -2786,36 +2741,69 @@ object EncodePipeline {
   private[graft] def dirCached(dir: String): Boolean =
     dirCache.synchronized(dirCache.containsKey(dir))
 
-  /** a data directory's parquet relation as the metadata cache holds it,
-    * with the session it was built in */
-  private final class DataRel(val spark: SparkSession, val df: DataFrame)
+  /** a data file as [[dataFiles]] opens it: its status and footer schema */
+  private final class DataFile(val status: org.apache.hadoop.fs.FileStatus, val schema: StructType)
 
-  private def dataListingSig(fs: org.apache.hadoop.fs.FileSystem,
-                             p: org.apache.hadoop.fs.Path): String =
-    fs.listStatus(p).toSeq.flatMap { s =>
-      if (s.isFile) Seq(s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-      else fs.listStatus(s.getPath).filter(_.isFile).toSeq.map(f =>
-        s"${s.getPath.getName}/${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-    }.sorted.mkString("|")
+  /** the metadata-cache key of data file `path`'s [[DataFile]] (its Bloom
+    * filters are cached under the path itself) */
+  private[graft] def footerKey(path: String): String = s"$path#footer"
 
-  /** the data directory as one parquet RELATION (a plan, not rows), held in
-    * the metadata cache: the relation pins the exact file set + merged
-    * schema discovered at creation, so it is keyed by the recursive listing
-    * signature and rebuilt whenever any data file lands or is vacuumed, or
-    * when another session asks. Reuse skips the per-call listing and
-    * mergeSchema footer-inference jobs; every query over it still scans
-    * the data files themselves. Its estimated heap bytes grow with the
-    * listing (one file status per data file). */
-  private[plans] def readDataDir(spark: SparkSession, outDir: String): DataFrame = {
-    val dir = s"$outDir/data"
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sig = dataListingSig(fs, p)
-    cacheHit[DataRel](dir, sig).filter(_.spark eq spark).map(_.df).getOrElse {
-      val df = spark.read.option("mergeSchema", "true").parquet(dir)
-      cachePut(dir, sig, new DataRel(spark, df), 1024L + 4L * sig.length)
-      df
+  /** data file `path`'s [[DataFile]]: one getFileStatus and one footer read
+    * on the driver, no Spark job, held in the metadata cache under the
+    * write-once rule of [[cachedFileIndex]]. A missing file throws
+    * FileNotFoundException naming it. */
+  private def dataFile(spark: SparkSession, path: String): DataFile = {
+    val key = footerKey(path)
+    cacheHit[DataFile](key, "").getOrElse {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val conf = spark.sparkContext.hadoopConfiguration
+      val status = p.getFileSystem(conf).getFileStatus(p)
+      val f = new DataFile(status, Bridge.parquetSchema(status, conf))
+      cachePut(key, "", f, 256L + 4L * path.length + 64L * f.schema.length)
+      f
     }
+  }
+
+  /** the columns every data file holds: the layout of a read that has no
+    * file to take its columns from */
+  private val BlockColumns = Seq(StructField("__block", IntegerType), StructField("__cnt", IntegerType))
+
+  /** the encoded block rows of exactly `files` — data files of `outDir`,
+    * each in its `__part=N` directory — as one parquet relation rooted at
+    * `outDir/data` ([[Bridge.parquetFiles]]). Nothing else under `data/`
+    * is listed or opened; a `__part` filter skips files at planning, and
+    * the planner hooks recognize the table ([[Bridge.fileScanRootPath]]).
+    * Its columns are the by-name union of the footer schemas of `files`
+    * and `layout` (a file lacking a column reads it as null), then
+    * `__part`: `layout` keeps the table's columns on a read that opens few
+    * files or none. The one way any code reads encoded block rows. */
+  private[graft] def dataFiles(spark: SparkSession, outDir: String, files: Seq[String],
+                               layout: Seq[String] = Nil): DataFrame = {
+    val fields = (files ++ layout).distinct.flatMap(dataFile(spark, _).schema.fields)
+      .map(_.copy(nullable = true)).distinctBy(_.name)
+    Bridge.parquetFiles(spark, new org.apache.hadoop.fs.Path(s"$outDir/data"), "__part",
+      files.map(f => partOfSuffix(fileSuffix(f)) -> dataFile(spark, f).status),
+      StructType(if (fields.isEmpty) BlockColumns else fields))
+  }
+
+  /** the data files `write` lands in the part directories of the parts
+    * `inPart` admits: the files those directories hold after it and did
+    * not hold before (write jobs name files uniquely, so a crashed
+    * attempt's orphans stay excluded), skipping what Spark's own listing
+    * skips (`_`/`.` names: markers, checksums) */
+  private def landed(spark: SparkSession, outDir: String, inPart: Int => Boolean)(
+      write: => Unit): Seq[String] = {
+    val data = new org.apache.hadoop.fs.Path(s"$outDir/data")
+    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(): Set[String] = (for {
+      d <- if (fs.exists(data)) fs.listStatus(data).toSeq.map(_.getPath.getName) else Nil
+      if d.startsWith("__part=") && inPart(d.stripPrefix("__part=").toInt)
+      f <- fs.listStatus(new org.apache.hadoop.fs.Path(data, d)).map(_.getPath.getName)
+      if !f.startsWith("_") && !f.startsWith(".")
+    } yield s"$outDir/data/$d/$f").toSet
+    val before = files()
+    write
+    (files() -- before).toSeq.sorted
   }
 
   /** `enc` plus a `bm_<c>` Bloom filter column for each column `c` it
@@ -2830,29 +2818,12 @@ object EncodePipeline {
       .foldLeft(enc)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
 
   /** the columns the table's current data files keep `bm_<col>` Bloom
-    * filters for. Each file's footer is read once on the driver and its
-    * column names held in the metadata cache under the file's path (the
-    * write-once rule of [[cachedFileIndex]]). A table with no data file
-    * yet has none; a read error propagates. */
+    * filters for, from their footer schemas ([[dataFile]]). A table with
+    * no data file yet has none; a read error propagates. */
   private def bloomConvention(spark: SparkSession, outDir: String): Seq[String] =
     if (!hasManifest(spark, outDir)) Nil
-    else manifestView(spark, outDir, None).dataFiles.flatMap(footerColumns(spark, _))
+    else manifestView(spark, outDir, None).dataFiles.flatMap(dataFile(spark, _).schema.fieldNames)
       .collect { case c if c.startsWith("bm_") => c.stripPrefix("bm_") }.distinct
-
-  /** data file `path`'s column names, from its footer */
-  private def footerColumns(spark: SparkSession, path: String): Array[String] = {
-    val key = s"$path#columns"
-    cacheHit[Array[String]](key, "").getOrElse {
-      val pf = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), spark.sparkContext.hadoopConfiguration))
-      import scala.jdk.CollectionConverters._
-      val cols = try pf.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toArray
-        finally pf.close()
-      cachePut(key, "", cols, 64L + cols.iterator.map(Manifest.approxBytes).sum)
-      cols
-    }
-  }
 
   /** the table's manifest snapshot — the cached stand-in for
     * `spark.read.option("mergeSchema", "true").parquet(outDir/meta)`, read
@@ -2892,43 +2863,42 @@ object EncodePipeline {
         if (d.columns.contains(c)) d.withColumn(c, lit(null).cast(t)) else d
       }
 
-  /** the committed blocks of the parts `surviving` picks from the current
-    * manifest view — [[readData]]'s file-list rule, restricted to those
-    * parts, so pruned and plain reads cannot disagree on which files hold
-    * the table. Pruned parts' directories are never opened. */
-  private def readSurviving(spark: SparkSession, outDir: String)(
+  /** the committed blocks of the current view's files in the parts
+    * `surviving` picks that `admits` keeps — [[readData]]'s file-list rule,
+    * restricted, so pruned and plain reads cannot disagree on which files
+    * hold the table. Every other file stays unopened; the columns stay the
+    * table's ([[readView]]). */
+  private def readSurviving(spark: SparkSession, outDir: String,
+                            admits: String => Boolean = _ => true)(
       surviving: ManifestView => Array[Int]): DataFrame = {
     val view = manifestView(spark, outDir, None)
-    readDataWithMeta(spark, outDir, view, parts = Some(surviving(view).toSet))
+    val parts = surviving(view).toSet
+    readView(spark, outDir, view, (p, f) => parts(p) && admits(f))
   }
 
-  /** manifest-level pruning: read only committed parts whose zone maps
-    * admit `value` in `column` ([[ManifestView.survivingLong]]) — the
-    * Iceberg manifest-skipping pattern — and some current file of which
-    * the Bloom filters admit it ([[bloomParts]]); within those parts the
-    * Bloom filters skip blocks ([[bloomFilterBlocks]]). */
+  /** manifest-level pruning: read only the current files of committed parts
+    * whose zone maps admit `value` in `column` ([[ManifestView.survivingLong]])
+    * — the Iceberg manifest-skipping pattern — and whose Bloom filters
+    * admit it ([[bloomAdmits]]); within those files the Bloom filters skip
+    * blocks ([[bloomFilterBlocks]]). */
   def readDataPruned(spark: SparkSession, outDir: String,
                      column: String, value: Long): DataFrame =
-    bloomFilterBlocks(readSurviving(spark, outDir)(v => bloomParts(spark, outDir, v, column,
-      graft.core.Bloom.hashLong(value), v.survivingLong(column, value, value))),
-      column, lit(value))
+    bloomFilterBlocks(readSurviving(spark, outDir,
+      bloomAdmits(spark, column, graft.core.Bloom.hashLong(value)))(
+      _.survivingLong(column, value, value)), column, lit(value))
 
-  /** the `parts` holding a current data file whose block Bloom filters on
-    * `column` may hold a value of hash `h` — the rule `format("graft")`
-    * plans files by ([[graft.sources.GraftPruning.fileAdmits]]). All of
-    * `parts` stay when the table keeps no `bm_<column>` filters. */
-  private def bloomParts(spark: SparkSession, outDir: String, view: ManifestView,
-                         column: String, h: Long, parts: Array[Int]): Array[Int] =
-    if (!bloomConvention(spark, outDir).contains(column)) parts
-    else {
-      val probe = Array(graft.sources.GraftPruning.BloomProbe(column, Array(h)))
-      val conf = spark.sparkContext.hadoopConfiguration
-      val admitted = view.files.collect { case (p, f) if parts.contains(p) &&
-        graft.sources.GraftPruning.fileAdmits(f, probe, conf) => p }.toSet
-      parts.filter(admitted)
-    }
+  /** whether a data file's block Bloom filters on `column` may hold a value
+    * of hash `h` — the rule `format("graft")` plans files by
+    * ([[graft.sources.GraftPruning.fileAdmits]]). A file without
+    * `bm_<column>` filters is kept. */
+  private def bloomAdmits(spark: SparkSession, column: String, h: Long): String => Boolean = {
+    val probe = Array(graft.sources.GraftPruning.BloomProbe(column, Array(h)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    f => !dataFile(spark, f).schema.fieldNames.contains(s"bm_$column") ||
+      graft.sources.GraftPruning.fileAdmits(f, probe, conf)
+  }
 
-  /** block-level Bloom skipping inside zone-surviving parts: when the table
+  /** block-level Bloom skipping inside the admitted files: when the table
     * opted `column` into bloom filters at encode time (run(bloomCols=...)),
     * drop blocks whose bm_<col> filter PROVES the probe value absent — the
     * needle-in-haystack complement of part-level zone maps, which cannot
@@ -2941,15 +2911,16 @@ object EncodePipeline {
     if (!df.columns.contains(s"bm_$column")) df
     else df.filter(coalesce(bloom_maybe(col(s"bm_$column"), value), lit(true)))
 
-  /** string-column manifest pruning: parts whose truncated byte-string zone
-    * maps admit `value` ([[ManifestView.survivingStr]]) and whose Bloom
-    * filters may hold it ([[bloomParts]]) */
+  /** string-column manifest pruning: the current files of parts whose
+    * truncated byte-string zone maps admit `value`
+    * ([[ManifestView.survivingStr]]) and whose Bloom filters may hold it
+    * ([[bloomAdmits]]) */
   def readDataPruned(spark: SparkSession, outDir: String,
                      column: String, value: String): DataFrame = {
     val vb = value.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    bloomFilterBlocks(readSurviving(spark, outDir)(v => bloomParts(spark, outDir, v, column,
-      graft.core.Bloom.hashBytes(vb), v.survivingStr(column, vb, vb))),
-      column, lit(vb))
+    bloomFilterBlocks(readSurviving(spark, outDir,
+      bloomAdmits(spark, column, graft.core.Bloom.hashBytes(vb)))(
+      _.survivingStr(column, vb, vb)), column, lit(vb))
   }
 
   /** RANGE-probe pruning: parts whose zone maps intersect [lo, hi] — the
@@ -3058,8 +3029,7 @@ object EncodePipeline {
     // driver-side kernels (same single-JVM pattern as the metadata job):
     // shared-dictionary blobs need the registry for their string bounds
     loadDicts(spark, outDir) // registers them
-    val written = spark.read.option("mergeSchema", "true")
-      .option("basePath", s"$outDir/data").parquet(files.distinct: _*)
+    val written = dataFiles(spark, outDir, files.distinct)
     // a listed part's files, named as input_file_name() names them — how
     // every commit records its files
     val partFiles = (recorded.toSeq ++ (if (listed.isEmpty) Nil

@@ -7,7 +7,7 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.schema.{MessageType, PrimitiveType, Types}
+import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -120,10 +120,10 @@ case class GraftDeltaWriterFactory(outDir: String, tableSchema: StructType,
                                    conf: Bridge.HadoopConfBroadcast)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
-    new GraftDeltaWriter(this, partitionId, taskId)
+    new GraftDeltaWriter(this, taskId)
 }
 
-class GraftDeltaWriter(f: GraftDeltaWriterFactory, partitionId: Int, taskId: Long)
+class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
     extends DeltaWriter[InternalRow] {
 
   private val plans = EncodePipeline.plan(f.tableSchema).toArray

@@ -1,11 +1,19 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Literal, Predicate}
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, LogicalRelationWithTable, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** The single place this library touches Spark-internal APIs.
   *
@@ -58,9 +66,49 @@ object Bridge {
     * without reaching into internals anywhere else. */
   def fileScanRootPath(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Option[String] =
     plan match {
-      case org.apache.spark.sql.execution.datasources.LogicalRelationWithTable(
-          fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _) =>
+      case LogicalRelationWithTable(fs: HadoopFsRelation, _) =>
         fs.location.rootPaths.headOption.map(_.toString)
       case _ => None
     }
+
+  /** a parquet relation that opens exactly `files`, each given as (value
+    * of the int partition column `partCol`, status), under `root` — the
+    * relation a hive-style `spark.read.parquet(root)` builds, with the
+    * file list supplied instead of listed. Partition filters prune files
+    * by their partition value; nothing is listed and no schema is
+    * inferred. */
+  def parquetFiles(spark: SparkSession, root: Path, partCol: String,
+                   files: Seq[(Int, FileStatus)], dataSchema: StructType): DataFrame = {
+    val index = new FixedFileIndex(root, StructType(Seq(StructField(partCol, IntegerType))), files)
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].baseRelationToDataFrame(
+      HadoopFsRelation(index, index.partitionSchema, dataSchema, None,
+        new ParquetFileFormat(), Map.empty)(spark))
+  }
+
+  /** the Spark schema of parquet file `status`, converted from its footer
+    * under the active session's parquet settings (read on the calling
+    * thread: no Spark job) */
+  def parquetSchema(status: FileStatus, conf: Configuration): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+    try new ParquetToSparkSchemaConverter(SQLConf.get).convert(reader.getFileMetaData.getSchema)
+    finally reader.close()
+  }
+
+  private final class FixedFileIndex(root: Path, val partitionSchema: StructType,
+                                     files: Seq[(Int, FileStatus)]) extends FileIndex {
+    private val byPart = files.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, fs) =>
+      PartitionDirectory(InternalRow(p), fs.map(f => FileStatusWithMetadata(f._2)))
+    }
+    override def rootPaths: Seq[Path] = Seq(root)
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      // the single partition column is ordinal 0 of each directory's values
+      val keep = Predicate.createInterpreted(partitionFilters.foldLeft(Literal.TrueLiteral: Expression)(And)
+        .transform { case a: AttributeReference => BoundReference(0, a.dataType, nullable = true) })
+      byPart.filter(d => keep.eval(d.values))
+    }
+    override def inputFiles: Array[String] = files.map(_._2.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_._2.getLen).sum
+  }
 }

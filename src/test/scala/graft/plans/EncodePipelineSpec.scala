@@ -247,6 +247,60 @@ class EncodePipelineSpec extends SparkTestBase {
     assert(hits.count() === 1L)
   }
 
+  test("crash debris in a committed part directory never fails a read, and vacuum reclaims it") {
+    val docs = WebDocGen.dataset(spark, 800, 4).toDF()
+    val extra = WebDocGen.dataset(spark, 40, 2).toDF().withColumn("url", concat(col("url"), lit("#b")))
+    // two identical tables, fragmented by a small append so compact rewrites
+    def build(out: String): Unit = {
+      EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64, bloomCols = Seq("url"))
+      assert(EncodePipeline.appendCommit(extra, "url", out, partitions = 4, blockSize = 64,
+        batchId = 1L))
+    }
+    val (clean, dirty) = (tmpDir(), tmpDir())
+    build(clean)
+    build(dirty)
+    // the half-written file a crashed writer leaves: not parquet at all
+    val debris = new java.io.File(s"$dirty/data/__part=0/part-00000-crash.snappy.parquet")
+    java.nio.file.Files.write(debris.toPath, "not a parquet file".getBytes("UTF-8"))
+    def blocks(df: org.apache.spark.sql.DataFrame): Seq[(Int, Int, Int)] =
+      df.select("__part", "__block", "__cnt").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq.sorted
+    val url = docs.select("url").head().getString(0)
+    val ts = WebDocGen.BaseMicros + 100L * WebDocGen.StepMicros
+    def reads(out: String): Seq[Seq[(Int, Int, Int)]] = Seq(
+      blocks(EncodePipeline.readData(spark, out)),
+      blocks(EncodePipeline.readDataPruned(spark, out, "url", url)),
+      blocks(EncodePipeline.readDataPruned(spark, out, "warc_ts", ts)),
+      blocks(EncodePipeline.readDataAt(spark, out, 0)))
+    assert(reads(dirty) === reads(clean))
+    val compacted = EncodePipeline.compact(spark, clean, docs.schema, blockSize = 64)
+    assert(compacted.contains(0))
+    assert(EncodePipeline.compact(spark, dirty, docs.schema, blockSize = 64) === compacted)
+    assert(reads(dirty) === reads(clean))
+    assert(debris.exists())
+    EncodePipeline.vacuum(spark, dirty)
+    assert(!debris.exists())
+    assert(blocks(EncodePipeline.readData(spark, dirty)) === blocks(EncodePipeline.readData(spark, clean)))
+  }
+
+  test("readDataAt a generation whose files vacuum reclaimed fails naming a missing file") {
+    val docs = WebDocGen.dataset(spark, 400, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64)
+    assert(EncodePipeline.appendCommit(WebDocGen.dataset(spark, 40, 2).toDF()
+      .withColumn("url", concat(col("url"), lit("#b"))), "url", out, partitions = 4,
+      blockSize = 64, batchId = 1L))
+    assert(EncodePipeline.compact(spark, out, docs.schema, blockSize = 64).nonEmpty)
+    assert(EncodePipeline.vacuum(spark, out) > 0)
+    // the scan opens exactly the recorded files, so it cannot skip one
+    val e = intercept[Exception](EncodePipeline.readDataAt(spark, out, 0).count())
+    val missing = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[java.io.FileNotFoundException] && t.getMessage.contains("data/__part="))
+    assert(missing, e.toString)
+    // the current generation still reads every row
+    assert(EncodePipeline.decode(EncodePipeline.readData(spark, out), docs.schema).count() === 440L)
+  }
+
   test("analyzeTable upgrades part-level rows; until then every read refuses") {
     // a directory whose first wave was committed by a pre-data_files /
     // pre-string-bounds version and whose second wave by the current one:
@@ -619,17 +673,18 @@ class EncodePipelineSpec extends SparkTestBase {
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq.sorted
     def reads() = (blocks(EncodePipeline.readData(spark, out)),
       blocks(EncodePipeline.readDataPruned(spark, out, "url", u)))
+    def entries() = EncodePipeline.currentFiles(spark, out).map(f => EncodePipeline.footerKey(f._2))
     val saved = EncodePipeline.metaCacheBudget
     EncodePipeline.metaCacheBudget = 1L
     val uncached = try {
       EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64, bloomCols = Seq("url"))
       val r = reads()
-      assert(!EncodePipeline.dirCached(s"$out/data"))
+      entries().foreach(k => assert(!EncodePipeline.dirCached(k), k))
       r
     } finally EncodePipeline.metaCacheBudget = saved
     assert(uncached._2.nonEmpty && uncached._2.size < uncached._1.size)
     assert(reads() === uncached)
-    assert(EncodePipeline.dirCached(s"$out/data"))
+    entries().foreach(k => assert(EncodePipeline.dirCached(k), k))
   }
 
   test("double columns: alp picked for decimal scores, tzfor for float upcasts, bit-exact") {

@@ -47,8 +47,8 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("narrow decode reads only the requested columns' blobs") {
     import org.apache.spark.sql.types.{StructType, StructField, StringType}
-    // scan level: a projection over readData pushes through the manifest
-    // semi-join to the parquet scan — ReadSchema carries e_lang, not e_text
+    // scan level: a projection over readData reaches the parquet scan —
+    // ReadSchema carries e_lang, not e_text
     val plan = planOf(EncodePipeline.readData(spark, encDir).select("__cnt", "e_lang"))
     assert(plan.contains("e_lang") && !plan.contains("e_text"), plan)
     // decode level: decodeEx projects to the needed blobs BEFORE the RDD
@@ -114,9 +114,28 @@ class PlanShapeSpec extends SparkTestBase {
     assert(plan.contains("e_lang") && !plan.contains("e_html"), plan)
   }
 
-  test("readData uses a broadcast semi-join against committed parts") {
-    val plan = planOf(EncodePipeline.readData(spark, encDir))
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastExchange"), plan)
+  test("readData's plan has no join and opens only the manifest's files") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_files").toFile.getAbsolutePath
+    val docs = WebDocGen.dataset(spark, 1000, 4).toDF()
+    EncodePipeline.run(docs, "url", dir, partitions = 4, blockSize = 128)
+    (1 to 3).foreach { b =>
+      assert(EncodePipeline.appendCommit(WebDocGen.dataset(spark, 40, 2).toDF()
+        .withColumn("url", concat(col("url"), lit(s"#$b"))), "url", dir, partitions = 4,
+        blockSize = 128, batchId = b.toLong))
+    }
+    assert(EncodePipeline.compact(spark, dir, docs.schema, blockSize = 128).nonEmpty)
+    // superseded files stay on disk until vacuum
+    val onDisk = new java.io.File(s"$dir/data").listFiles().filter(_.isDirectory)
+      .flatMap(_.listFiles()).count(f => !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+    val current = EncodePipeline.currentFiles(spark, dir).size
+    assert(onDisk > current, s"$onDisk on disk, $current current")
+    val df = EncodePipeline.readData(spark, dir)
+    assert(!planOf(df).contains("Join"), planOf(df))
+    val scan = df.queryExecution.executedPlan.collectFirst { case s: FileSourceScanExec => s }
+    assert(scan.isDefined, planOf(df))
+    assert(df.collect().nonEmpty)
+    assert(scan.get.metrics("numFiles").value === current.toLong)
   }
 
   test("decode is join-free and shuffle-free (in-place block expansion)") {
