@@ -29,14 +29,22 @@ import graft.functions._
   * metadata rows (one per part × column: codec, raw/encoded bytes, row count,
   * wall time, attempt). A part is "committed" iff its metadata rows exist, so
   * a crash between data and metadata writes re-runs that wave's parts
-  * idempotently (the wave's dynamic overwrite replaces its orphans, and
-  * readers open only the files the manifest records).
+  * idempotently: the re-run lands fresh files beside the crashed attempt's
+  * orphans, the manifest records only the fresh ones, and readers open only
+  * the files the manifest records. [[vacuum]] reclaims the orphans.
+  *
+  * Writes: every data file lands through [[land]] and every manifest row
+  * describing new files comes from [[describe]]; every copy-on-write
+  * rewrite replaces its parts through [[rewriteParts]].
   */
 object EncodePipeline {
 
   /** per-column canonicalization: every input column becomes long ('l'),
     * string ('s') or binary ('b') before encoding, and is restored on decode. */
   final case class ColPlan(name: String, kind: Char, sourceType: DataType)
+
+  /** rows per block of a write that names no block size */
+  final val DefaultBlockSize = 4096
 
   def plan(schema: StructType): Seq[ColPlan] = schema.fields.toSeq.map { f =>
     f.dataType match {
@@ -280,7 +288,7 @@ object EncodePipeline {
     * `SerializeFromObject` in the plan) — measured at ~80× the kernel cost.
     * Buffers are primitive arrays reused across blocks; nulls are captured in
     * per-column bitmaps (Codecs.encodeLongsN/encodeStrsN). */
-  def encode(df: DataFrame, key: String, partitions: Int, blockSize: Int = 4096,
+  def encode(df: DataFrame, key: String, partitions: Int, blockSize: Int = DefaultBlockSize,
              partExpr: Option[Column] = None,
              sharedDicts: Option[SharedDicts] = None,
              sortCols: Seq[Column] = Nil): DataFrame = {
@@ -297,16 +305,6 @@ object EncodePipeline {
       .repartition(partitions, col("__part"))
       .sortWithinPartitions(col("__part") +: ord: _*)
       .select(col("__part") +: plans.map(canonCol): _*)
-
-    val outFields = Seq(
-      StructField("__part", IntegerType, nullable = false),
-      StructField("__block", IntegerType, nullable = false),
-      StructField("__cnt", IntegerType, nullable = false)
-    ) ++ plans.flatMap(p => Seq(
-      StructField("e_" + p.name, BinaryType, nullable = false),
-      StructField("r_" + p.name, LongType, nullable = false)
-    ))
-    val outSchema = StructType(outFields)
     val ps = plans.toArray
     val bs = blockSize
 
@@ -315,16 +313,29 @@ object EncodePipeline {
     val rdd = Bridge.toRdd(canon).mapPartitions { it =>
       new BlockIterator(it, ps, bs, dictsBc.map(_.value).orNull)
     }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, outSchema)
+    Bridge.internalCreateDataFrame(df.sparkSession, rdd, blockSchema(plans))
   }
+
+  /** the schema of encoded block rows: `__part, __block, __cnt`, then
+    * `e_c` (blob) and `r_c` (raw bytes) per column */
+  private def blockSchema(plans: Seq[ColPlan]): StructType = StructType(Seq(
+      StructField("__part", IntegerType, nullable = false),
+      StructField("__block", IntegerType, nullable = false),
+      StructField("__cnt", IntegerType, nullable = false)
+    ) ++ plans.flatMap(p => Seq(
+      StructField("e_" + p.name, BinaryType, nullable = false),
+      StructField("r_" + p.name, LongType, nullable = false))))
 
   /** row-block accumulator: chunks a sorted partition iterator into blocks,
     * breaking at __part boundaries, and encodes each column with the
-    * auto-selecting codec. Zero per-row allocation: longs land in reused
+    * auto-selecting codec. Input rows are `__part` then the canonical
+    * columns (long, or binary for string/binary kinds); output rows follow
+    * [[blockSchema]]. Zero per-row allocation: longs land in reused
     * primitive arrays; binaries are the one unavoidable copy out of the
-    * UnsafeRow page. */
-  private final class BlockIterator(it: Iterator[InternalRow], plans: Array[ColPlan], blockSize: Int,
-                                    shared: SharedDicts)
+    * UnsafeRow page. The one block encoder of [[encode]] and the
+    * row-level delta writer. */
+  private[graft] final class BlockIterator(it: Iterator[InternalRow], plans: Array[ColPlan],
+                                           blockSize: Int, shared: SharedDicts)
       extends Iterator[InternalRow] {
     private val nCols = plans.length
     private var pending: InternalRow = _ // row.copy() held across next() calls
@@ -646,7 +657,7 @@ object EncodePipeline {
   /** resumable multi-wave run: encode + write data, then commit metadata.
     * Parts whose metadata rows already exist are skipped on re-run. */
   def run(df: DataFrame, key: String, outDir: String, partitions: Int,
-          blockSize: Int = 4096, waves: Int = 1, salts: Int = 4,
+          blockSize: Int = DefaultBlockSize, waves: Int = 1, salts: Int = 4,
           useHostPartitioner: Boolean = false,
           failAtWave: Int = -1 /* test hook: throw before committing wave N's metadata */,
           customPart: Option[Column] = None /* e.g. a range partitioner so the
@@ -658,6 +669,8 @@ object EncodePipeline {
             files carry a per-block bm_<col> Bloom filter for point-lookup
             block skipping (Parquet bloom-filter parity); ~2 bytes/value */): Unit = {
     val spark = df.sparkSession
+    val unknown = bloomCols.filterNot(df.columns.contains)
+    require(unknown.isEmpty, s"bloomCols name no column: ${unknown.mkString(", ")}")
     val committed: Set[Int] =
       if (!hasManifest(spark, outDir)) Set.empty
       else { val m = manifestOf(spark, outDir); m.raw.map(m.part).toSet }
@@ -686,30 +699,15 @@ object EncodePipeline {
       val waveStart = System.currentTimeMillis()
       val inWave = df.filter(pmod(partExpr, lit(waves)) === w &&
         (if (committed.isEmpty) lit(true) else !partExpr.isin(committed.toSeq: _*)))
-      val enc0 = encode(inWave, key, partitions, blockSize, Some(partExpr), shared)
-      // opted-in bloom columns ride as bm_<col> siblings of the blobs (built
-      // here while the block is hot; decode paths ignore unknown columns,
-      // maintenance rewrites drop them — readers coalesce a missing/null
-      // filter to "maybe")
-      val enc = bloomCols.foldLeft(enc0)((d, c) =>
-        d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
-      // dynamic partition overwrite: a re-run of a crashed wave REPLACES that
-      // wave's orphan part directories instead of appending duplicates
-      val waveFiles = landed(spark, outDir, p => Math.floorMod(p, waves) == w && !committed(p)) {
-        enc.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__part").parquet(s"$outDir/data")
-      }
+      val enc = encode(inWave, key, partitions, blockSize, Some(partExpr), shared)
+      // the wave's files land beside any orphans a crashed attempt left in
+      // its part directories; the manifest records only the new ones, so
+      // readers never open the orphans and vacuum reclaims them
+      val waveFiles = land(spark, outDir, enc,
+        p => Math.floorMod(p, waves) == w && !committed(p), bloomCols)
       if (w == failAtWave) throw new RuntimeException(s"injected failure before metadata commit of wave $w")
-      // a wave that wrote no file commits an empty row set
-      val written = if (waveFiles.isEmpty) enc.limit(0) else dataFiles(spark, outDir, waveFiles)
-      // Iceberg-manifest parity: record the data files each part committed —
-      // readers open exactly the recorded files (orphans from a crashed
-      // attempt are invisible even inside a committed part directory)
-      commit(spark, outDir, Txn(base = true, rows = Seq(
-        metadataEx(written, df.schema, withFiles = true)
-          .withColumn("wave", lit(w))
-          .withColumn("wall_millis", lit(System.currentTimeMillis() - waveStart))
-          .withColumn("attempt", lit(1)))))
+      commit(spark, outDir, Txn(base = true,
+        rows = Seq(describe(spark, outDir, df.schema, waveFiles, w, waveStart))))
       w += 1
     }
     writeSchemaFile(spark, outDir, df.schema)
@@ -760,7 +758,7 @@ object EncodePipeline {
     * table, new rows join each part's CURRENT generation so they are not
     * superseded by older compactions. */
   def appendCommit(df: DataFrame, key: String, outDir: String, partitions: Int,
-                   blockSize: Int = 4096, batchId: Long = 0L,
+                   blockSize: Int = DefaultBlockSize, batchId: Long = 0L,
                    ref: Option[String] = None /* commit to a BRANCH: rows
                      stay invisible to main readers until [[fastForward]]
                      publishes them — [[appendToBranch]] */): Boolean = {
@@ -787,19 +785,17 @@ object EncodePipeline {
     // in the part the original run chose (keeps the co-partitioning invariant
     // storage-partitioned joins rely on). Specless / re-keyed: plain hash.
     val spec = readPartSpec(spark, outDir).filter(_.key == key)
-    val enc = withBlooms(spark, outDir, spec match {
+    val enc = spec match {
       case Some(ps) => encode(df, key, ps.partitions, blockSize, Some(ps.expr))
       case None => encode(df, key, partitions, blockSize)
-    })
-    val newPaths = landed(spark, outDir, _ => true) {
-      enc.write.mode("append").partitionBy("__part").parquet(s"$outDir/data")
     }
+    val newPaths = land(spark, outDir, enc, _ => true)
     if (newPaths.isEmpty) { // empty batch: still commit any staged vectors
       deletes.foreach(d => commit(spark, outDir, Txn(deletes = Some(d))))
       return deletes.nonEmpty
     }
-    val gen = commit(spark, outDir, Txn(deletes = deletes,
-      appends = Seq(batchRows(spark, outDir, df.schema, newPaths, batchId, t0, ref))))
+    val gen = commit(spark, outDir, Txn(deletes = deletes, appends = Seq(
+      describe(spark, outDir, df.schema, newPaths, batchId.toInt, t0, Some(batchId), ref))))
     writeSchemaFile(spark, outDir, df.schema)
     // a table CREATED by this commit (gen-less, see [[commit]]) records its
     // placement. Only then: a pre-spec-era table's placement is unknown
@@ -808,22 +804,6 @@ object EncodePipeline {
     if (gen == 0 && spec.isEmpty)
       writePartSpec(spark, outDir, PartSpec("hash", key, partitions, salts = 4))
     true
-  }
-
-  /** manifest rows describing freshly written data files as a tracked batch
-    * (file lists, stats, batch id) — shared by [[appendBatch]] and
-    * [[commitDelta]] so the two cannot drift. Branch commits carry their
-    * ref: invisible to main readers until a publish marker covers their
-    * generation ([[fastForward]]). */
-  private def batchRows(spark: SparkSession, outDir: String, schema: StructType,
-                        files: Seq[String], batchId: Long, t0: Long,
-                        ref: Option[String] = None): DataFrame = {
-    val rows = metadataEx(dataFiles(spark, outDir, files), schema, withFiles = true)
-      .withColumn("wave", lit(batchId.toInt))
-      .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
-      .withColumn("attempt", lit(1))
-      .withColumn("batch_id", lit(batchId))
-    ref.fold(rows)(b => rows.withColumn("ref", lit(b)))
   }
 
   /** driver-side commit for SQL row-level (delta) writes — the tail ends of
@@ -841,8 +821,8 @@ object EncodePipeline {
     import spark.implicits._
     commit(spark, outDir, Txn(
       appends = if (insertedFiles.isEmpty) Nil
-        else Seq(batchRows(spark, outDir, sourceSchema, insertedFiles, batchId,
-          System.currentTimeMillis())),
+        else Seq(describe(spark, outDir, sourceSchema, insertedFiles, batchId.toInt,
+          System.currentTimeMillis(), Some(batchId))),
       deletes = if (deletes.isEmpty) None else Some(deletes.toDF("file", "block", "bitmap"))))
     if (insertedFiles.nonEmpty) writeSchemaFile(spark, outDir, sourceSchema)
   }
@@ -869,7 +849,7 @@ object EncodePipeline {
     * law the law is re-stamped too: the table is new content, only its
     * history is shared. Returns the new current generation. */
   def replaceCommit(df: DataFrame, key: String, outDir: String, partitions: Int,
-                    blockSize: Int = 4096, bloomCols: Seq[String] = Nil): Int = {
+                    blockSize: Int = DefaultBlockSize, bloomCols: Seq[String] = Nil): Int = {
     val spark = df.sparkSession
     val t0 = System.currentTimeMillis()
     val before = manifestView(spark, outDir, None)
@@ -878,32 +858,25 @@ object EncodePipeline {
     // co-partitioning invariant); a re-keyed overwrite derives a fresh hash
     // law and re-stamps it below — every current byte is new content.
     val spec = readPartSpec(spark, outDir).filter(_.key == key)
-    val newRows: Option[DataFrame] =
-      if (df.isEmpty) None
-      else {
-        val (enc, p) = spec match {
-          case Some(ps) => (encode(df, key, ps.partitions, blockSize,
-            Some(ps.expr)), ps.partitions)
-          case None => (encode(df, key, partitions, blockSize), partitions)
-        }
-        Some(landAndDescribe(spark, outDir, df.schema, enc, 0 until p, t0, bloomCols)
-          .withColumn("additive", lit(false))
-          .withColumn("overwrite", lit(true)))
-      }
-    val newParts: Set[Int] = newRows.map(_.select("__part").distinct()
-      .collect().map(_.getInt(0)).toSet).getOrElse(Set.empty)
-    val tombs = tombstoneRows(spark, before,
-        before.parts.toSeq.filter(p => p >= 0 && !newParts(p)), t0)
-      .map(_.withColumn("overwrite", lit(true)))
+    val (enc, p) = spec match {
+      case Some(ps) => (encode(df, key, ps.partitions, blockSize, Some(ps.expr)), ps.partitions)
+      case None => (encode(df, key, partitions, blockSize), partitions)
+    }
+    // every part of the new placement and of the old table is a candidate:
+    // the old parts that receive no new file tombstone
+    val cands = ((0 until p) ++ before.parts.filter(_ >= 0)).distinct
+    val rows = rewriteParts(spark, outDir, df.schema, Some(before), cands, enc, t0, bloomCols)
+      // the new files' rows replace (additive = false); tombstones carry no flag
+      .map(_.withColumn("additive", when(size(col("data_files")) > 0, lit(false)))
+        .withColumn("overwrite", lit(true)))
     // overwrite of an already-empty table by an empty df: still advance the
     // generation (the user asked for a snapshot) via a zero-file marker
-    val marker = if (newRows.isEmpty && tombs.isEmpty)
-      Some(genMarker(spark).withColumn("overwrite", lit(true)))
-    else None
-    val gen = commit(spark, outDir, Txn(rows = Seq(newRows, tombs, marker).flatten))
+    val marker = if (rows.isEmpty) Seq(genMarker(spark).withColumn("overwrite", lit(true))) else Nil
+    // asked before the commit: `df` may read this table
+    val stampSpec = spec.isEmpty && !df.isEmpty
+    val gen = commit(spark, outDir, Txn(rows = rows ++ marker))
     writeSchemaFile(spark, outDir, df.schema)
-    if (spec.isEmpty && newRows.nonEmpty)
-      writePartSpec(spark, outDir, PartSpec("hash", key, partitions, salts = 4))
+    if (stampSpec) writePartSpec(spark, outDir, PartSpec("hash", key, partitions, salts = 4))
     gen
   }
 
@@ -924,27 +897,26 @@ object EncodePipeline {
     * through the side-structure and re-encode self-contained. Single
     * maintenance writer assumed (Iceberg parity). Returns compacted ids. */
   def compact(spark: SparkSession, outDir: String, sourceSchema: StructType,
-              blockSize: Int = 4096, minFiles: Int = 2): Seq[Int] = {
+              blockSize: Int = DefaultBlockSize, minFiles: Int = 2): Seq[Int] = {
     requireNoLiveDeletes(spark, outDir, "compact")
     val t0 = System.currentTimeMillis()
     val cands = manifestView(spark, outDir, None).compactCandidates(blockSize, minFiles)
     if (cands.isEmpty) return Nil
     val enc = readData(spark, outDir).filter(col("__part").isin(cands: _*))
-    commit(spark, outDir, Txn(rows = Seq(
-      rewriteBlocks(spark, outDir, sourceSchema, enc, cands, blockSize, t0))))
+    commit(spark, outDir, Txn(rows =
+      rewriteBlocks(spark, outDir, sourceSchema, enc, cands, blockSize, t0)))
     cands
   }
 
   /** shared rewrite core for [[compact]] and [[compactSmallFiles]]: reblock
-    * `enc`'s block rows to `blockSize`, land the new files beside the old
-    * ones, and return manifest rows (sans `gen`) describing exactly the
-    * bytes this run put on disk. `blockOffset` shifts each part's fresh
-    * block numbering past its existing ids when older files stay current
-    * beside the rewrite (file-subset mode). */
+    * `enc`'s block rows to `blockSize` and replace the parts `cands`
+    * through [[rewriteParts]], which keeps every row. `blockOffset` shifts
+    * each part's fresh block numbering past its existing ids when older
+    * files stay current beside the rewrite (file-subset mode). */
   private def rewriteBlocks(spark: SparkSession, outDir: String,
       sourceSchema: StructType, enc: DataFrame, cands: Seq[Int],
       blockSize: Int, t0: Long,
-      blockOffset: Map[Int, Int] = Map.empty): DataFrame = {
+      blockOffset: Map[Int, Int] = Map.empty): Seq[DataFrame] = {
     val plans = plan(sourceSchema)
     val ps = plans.toArray
     val sorted = enc
@@ -957,13 +929,7 @@ object EncodePipeline {
     // under a newer schema materializes it as all-null blocks (rewrite IS
     // the schema-migration path)
     val eIdx = plans.map(p => s2.fieldNames.indexOf("e_" + p.name)).toArray
-    val outSchema = StructType(Seq(
-      StructField("__part", IntegerType, nullable = false),
-      StructField("__block", IntegerType, nullable = false),
-      StructField("__cnt", IntegerType, nullable = false)
-    ) ++ plans.flatMap(p => Seq(
-      StructField("e_" + p.name, BinaryType, nullable = false),
-      StructField("r_" + p.name, LongType, nullable = false))))
+    val outSchema = blockSchema(plans)
     val dicts = loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
     val bs = blockSize
@@ -980,25 +946,29 @@ object EncodePipeline {
         .drop("__off")
         .select(outSchema.fieldNames.map(col).toSeq: _*)
     }
-    landAndDescribe(spark, outDir, sourceSchema, shifted, cands, t0)
+    rewriteParts(spark, outDir, sourceSchema, None, cands, shifted, t0)
   }
 
-  /** land freshly-encoded block rows beside the existing files and return
-    * manifest rows (sans `gen`) describing exactly the bytes this run put
-    * on disk — its files, read back ([[landed]]). The files carry Bloom
-    * filters for `bloomCols` and the table's convention ([[withBlooms]]). */
-  private def landAndDescribe(spark: SparkSession, outDir: String,
-      sourceSchema: StructType, encOut: DataFrame, cands: Seq[Int],
-      t0: Long, bloomCols: Seq[String] = Nil): DataFrame = {
-    val newPaths = landed(spark, outDir, cands.toSet) {
-      withBlooms(spark, outDir, encOut, bloomCols).write.mode("append")
-        .partitionBy("__part").parquet(s"$outDir/data")
-    }
-    require(newPaths.nonEmpty, "rewrite wrote no files")
-    metadataEx(dataFiles(spark, outDir, newPaths), sourceSchema, withFiles = true)
-      .withColumn("wave", lit(-1))
-      .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
-      .withColumn("attempt", lit(1))
+  /** replace the candidate parts `cands` by `enc`'s block rows: land them
+    * beside the existing files ([[land]], the table's Bloom convention plus
+    * `bloomCols`) and return the manifest rows (sans `gen`) of the commit
+    * that supersedes the parts — the new files' rows ([[describe]]), and,
+    * from `tombstones`' rows, a tombstone for each candidate part of that
+    * view that got no file. Which parts got files is read from the landed
+    * files' part directories, so no Spark job decides it. `tombstones` =
+    * None marks a rewrite that keeps every row: a candidate part that gets
+    * no file then fails the rewrite, naming the parts, and nothing is
+    * returned for the caller to commit. */
+  private def rewriteParts(spark: SparkSession, outDir: String, schema: StructType,
+                           tombstones: Option[ManifestView], cands: Seq[Int], enc: DataFrame,
+                           t0: Long, bloomCols: Seq[String] = Nil): Seq[DataFrame] = {
+    val files = land(spark, outDir, enc, cands.toSet, bloomCols)
+    val filled = files.map(f => partOfSuffix(fileSuffix(f))).toSet
+    val empty = cands.filterNot(filled)
+    require(tombstones.nonEmpty || empty.isEmpty,
+      s"rewrite wrote no files for parts ${empty.mkString(", ")}")
+    (if (files.isEmpty) Nil else Seq(describe(spark, outDir, schema, files, -1, t0))) ++
+      tombstones.flatMap(v => tombstoneRows(spark, v, empty.filter(v.parts.contains), t0))
   }
 
   /** file-subset compaction (bin-packing): within each part, rewrite ONLY
@@ -1021,7 +991,7 @@ object EncodePipeline {
     * is the operator's stated intent. 0 (default) keeps the pure row-count
     * semantics every existing caller relies on. */
   def compactSmallFiles(spark: SparkSession, outDir: String,
-                        sourceSchema: StructType, blockSize: Int = 4096,
+                        sourceSchema: StructType, blockSize: Int = DefaultBlockSize,
                         minSmall: Int = 2, maxSmallBytes: Long = 0L): Seq[Int] = {
     requireNoLiveDeletes(spark, outDir, "compactSmallFiles")
     val t0 = System.currentTimeMillis()
@@ -1040,7 +1010,7 @@ object EncodePipeline {
     // files, same stats, same batch_id (streaming replay detection keeps
     // working); only the packed-away small commits are superseded
     val kept = demoteRef(view.toDF(spark, keptRows))
-    commit(spark, outDir, Txn(rows = Seq(newRows, kept)))
+    commit(spark, outDir, Txn(rows = newRows :+ kept))
     cands
   }
 
@@ -1058,28 +1028,29 @@ object EncodePipeline {
     * Returns the number of rows deleted. */
   def deleteWhere(spark: SparkSession, outDir: String,
                   sourceSchema: StructType, key: String, pred: Column,
-                  blockSize: Int = 4096): Long = {
+                  blockSize: Int = DefaultBlockSize): Long = {
     requireNoLiveDeletes(spark, outDir, "deleteWhere")
     val t0 = System.currentTimeMillis()
     val meta = manifestView(spark, outDir, None)
     val hit = coalesce(pred, lit(false))
     val byPart = decodeParts(spark, outDir, sourceSchema, None).groupBy(col("__part"))
-      .agg(sum(hit.cast("long")).as("n_del"), count(lit(1)).as("n_all"))
+      .agg(sum(hit.cast("long")).as("n_del"))
       .filter(col("n_del") > 0)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+      .collect().map(r => (r.getInt(0), r.getLong(1)))
     if (byPart.isEmpty) return 0L
     val cands = byPart.map(_._1).toSeq.sorted
-    val fullParts = byPart.filter(t => t._2 == t._3).map(_._1).toSeq.sorted
-    val liveParts = cands.filterNot(fullParts.toSet)
-    val newRows = if (liveParts.isEmpty) None else {
-      val survivors = decodeParts(spark, outDir, sourceSchema, Some(liveParts)).filter(!hit)
-      val encOut = encode(survivors, key, math.max(1, liveParts.length),
-        blockSize, partExpr = Some(col("__part")))
-      Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
-    }
-    commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(spark, meta, fullParts, t0)))
+    val survivors = decodeParts(spark, outDir, sourceSchema, Some(cands)).filter(!hit)
+    commit(spark, outDir, Txn(rows = rewriteParts(spark, outDir, sourceSchema, Some(meta), cands,
+      reencode(survivors, key, cands, blockSize), t0)))
     byPart.map(_._2).sum
   }
+
+  /** `rows` (with their `__part`) encoded back into the parts `cands`, each
+    * keeping its placement — the encode of every copy-on-write rewrite */
+  private def reencode(rows: DataFrame, key: String, cands: Seq[Int], blockSize: Int,
+                       sortCols: Seq[Column] = Nil): DataFrame =
+    encode(rows, key, math.max(1, cands.length), blockSize,
+      partExpr = Some(col("__part")), sortCols = sortCols)
 
   /** a part whose every row was removed must still advance generation, or
     * its old rows would stay current: tombstone manifest rows with an EMPTY
@@ -1119,12 +1090,8 @@ object EncodePipeline {
     * rows updated. */
   def updateWhere(spark: SparkSession, outDir: String,
                   sourceSchema: StructType, key: String, pred: Column,
-                  set: Map[String, Column], blockSize: Int = 4096): Long = {
-    require(set.nonEmpty, "updateWhere needs at least one assignment")
-    require(!set.contains(key),
-      s"updateWhere cannot assign the partitioning key '$key' (rows would change parts)")
-    val bad = set.keySet.diff(sourceSchema.fieldNames.toSet)
-    require(bad.isEmpty, s"updateWhere assigns unknown columns: ${bad.mkString(", ")}")
+                  set: Map[String, Column], blockSize: Int = DefaultBlockSize): Long = {
+    requireAssignable("updateWhere", sourceSchema, key, set)
     requireNoLiveDeletes(spark, outDir, "updateWhere")
     val t0 = System.currentTimeMillis()
     val hit = coalesce(pred, lit(false))
@@ -1141,11 +1108,20 @@ object EncodePipeline {
           case None    => col(f.name)
         }
       }: _*)
-    val encOut = encode(rewritten, key, math.max(1, cands.length),
-      blockSize, partExpr = Some(col("__part")))
-    commit(spark, outDir, Txn(rows = Seq(
-      landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0))))
+    commit(spark, outDir, Txn(rows = rewriteParts(spark, outDir, sourceSchema, None, cands,
+      reencode(rewritten, key, cands, blockSize), t0)))
     byPart.map(_._2).sum
+  }
+
+  /** the assignment rule of [[updateWhere]] and [[updateWhereLazy]] (`op`,
+    * named in the messages): at least one assignment, never the
+    * partitioning key (rows would change parts), only columns of `schema` */
+  private def requireAssignable(op: String, schema: StructType, key: String,
+                                set: Map[String, Column]): Unit = {
+    require(set.nonEmpty, s"$op needs at least one assignment")
+    require(!set.contains(key), s"$op cannot assign the partitioning key '$key' (rows would change parts)")
+    val bad = set.keySet.diff(schema.fieldNames.toSet)
+    require(bad.isEmpty, s"$op assigns unknown columns: ${bad.mkString(", ")}")
   }
 
   /** re-cluster the table: copy-on-write rewrite of every part holding files
@@ -1163,7 +1139,7 @@ object EncodePipeline {
     * ids. */
   def rewriteSorted(spark: SparkSession, outDir: String,
                     sourceSchema: StructType, key: String,
-                    sortCols: Seq[Column], blockSize: Int = 4096): Seq[Int] = {
+                    sortCols: Seq[Column], blockSize: Int = DefaultBlockSize): Seq[Int] = {
     require(sortCols.nonEmpty, "rewriteSorted needs at least one sort column")
     requireNoLiveDeletes(spark, outDir, "rewriteSorted")
     val t0 = System.currentTimeMillis()
@@ -1172,10 +1148,8 @@ object EncodePipeline {
     val cands = manifestView(spark, outDir, None).files.map(_._1).distinct.sorted
     if (cands.isEmpty) return Nil
     val dec = decodeParts(spark, outDir, sourceSchema, None)
-    val encOut = encode(dec, key, math.max(1, cands.length), blockSize,
-      partExpr = Some(col("__part")), sortCols = sortCols)
-    commit(spark, outDir, Txn(rows = Seq(
-      landAndDescribe(spark, outDir, sourceSchema, encOut, cands, t0))))
+    commit(spark, outDir, Txn(rows = rewriteParts(spark, outDir, sourceSchema, None, cands,
+      reencode(dec, key, cands, blockSize, sortCols), t0)))
     cands
   }
 
@@ -1188,7 +1162,7 @@ object EncodePipeline {
     * lane. Returns the rewritten part ids. */
   def rewriteZOrdered(spark: SparkSession, outDir: String,
                       sourceSchema: StructType, key: String,
-                      zCols: Seq[String], blockSize: Int = 4096): Seq[Int] = {
+                      zCols: Seq[String], blockSize: Int = DefaultBlockSize): Seq[Int] = {
     require(zCols.nonEmpty && zCols.size <= 8, "rewriteZOrdered takes 1..8 columns")
     val badType = zCols.filterNot(c => sourceSchema.fields
       .exists(f => f.name == c && (f.dataType == LongType || f.dataType == IntegerType ||
@@ -1232,7 +1206,7 @@ object EncodePipeline {
     * assumed. */
   def mergeByKey(spark: SparkSession, outDir: String,
                  sourceSchema: StructType, key: String, updates: DataFrame,
-                 partitions: Int, blockSize: Int = 4096,
+                 partitions: Int, blockSize: Int = DefaultBlockSize,
                  batchId: Long = -1L): (Long, Long) = {
     require(updates.columns.toSet == sourceSchema.fieldNames.toSet,
       s"mergeByKey updates schema ${updates.columns.sorted.mkString(",")} != " +
@@ -1263,17 +1237,8 @@ object EncodePipeline {
         .join(upKeys, Seq(key), "left_anti")
         // anti-join reorders the lead column; restore canonical order
         .select(col("__part") +: sourceSchema.fieldNames.toSeq.map(col): _*)
-        .persist()
-      val liveParts = survivors.select("__part").distinct()
-        .collect().map(_.getInt(0)).toSeq.sorted
-      val fullParts = cands.filterNot(liveParts.toSet)
-      val newRows = if (liveParts.isEmpty) None else {
-        val encOut = encode(survivors, key, math.max(1, liveParts.length),
-          blockSize, partExpr = Some(col("__part")))
-        Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
-      }
-      commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstoneRows(spark, meta, fullParts, t0)))
-      survivors.unpersist()
+      commit(spark, outDir, Txn(rows = rewriteParts(spark, outDir, sourceSchema, Some(meta), cands,
+        reencode(survivors, key, cands, blockSize), t0)))
     }
     appendBatch(updates.select(sourceSchema.fieldNames.map(col).toSeq: _*),
       key, outDir, partitions, blockSize, bid, ref = None, deletes = None)
@@ -1371,13 +1336,8 @@ object EncodePipeline {
   def updateWhereLazy(spark: SparkSession, outDir: String,
                       sourceSchema: StructType, key: String, pred: Column,
                       set: Map[String, Column], partitions: Int,
-                      blockSize: Int = 4096, batchId: Long = -1L): Long = {
-    require(set.nonEmpty, "updateWhereLazy needs at least one assignment")
-    require(!set.contains(key),
-      s"updateWhereLazy cannot assign the partitioning key '$key'")
-    val badCols = set.keySet.diff(sourceSchema.fieldNames.toSet)
-    require(badCols.isEmpty,
-      s"updateWhereLazy assigns unknown columns: ${badCols.mkString(", ")}")
+                      blockSize: Int = DefaultBlockSize, batchId: Long = -1L): Long = {
+    requireAssignable("updateWhereLazy", sourceSchema, key, set)
     val bid = if (batchId >= 0) batchId else nextBatchId(spark, outDir)
     if (batchCommitted(spark, outDir, bid)) return 0L
     val hit = coalesce(pred, lit(false))
@@ -1408,7 +1368,7 @@ object EncodePipeline {
     * rows inserted). */
   def mergeByKeyLazy(spark: SparkSession, outDir: String,
                      sourceSchema: StructType, key: String, updates: DataFrame,
-                     partitions: Int, blockSize: Int = 4096,
+                     partitions: Int, blockSize: Int = DefaultBlockSize,
                      batchId: Long = -1L): (Long, Long) = {
     val missing = sourceSchema.fieldNames.toSet -- updates.columns.toSet
     require(missing.isEmpty, s"mergeByKeyLazy updates miss columns: ${missing.mkString(", ")}")
@@ -1664,7 +1624,7 @@ object EncodePipeline {
     * are inert. Returns the number of rows physically removed. */
   def materializeDeletes(spark: SparkSession, outDir: String,
                          sourceSchema: StructType, key: String,
-                         blockSize: Int = 4096): Long = {
+                         blockSize: Int = DefaultBlockSize): Long = {
     val t0 = System.currentTimeMillis()
     val fs = new org.apache.hadoop.fs.Path(outDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1704,18 +1664,9 @@ object EncodePipeline {
     require(cands.nonEmpty, "live delete vectors but no owning parts — corrupt manifest?")
     // the owning parts' live rows: the scan applies the vectors and never
     // opens the other parts' files
-    val survivors = decodeParts(spark, outDir, sourceSchema, Some(cands)).persist()
-    val liveParts = survivors.select("__part").distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    val fullParts = cands.filterNot(liveParts.toSet)
-    val newRows = if (liveParts.isEmpty) None else {
-      val encOut = encode(survivors, key, math.max(1, liveParts.length),
-        blockSize, partExpr = Some(col("__part")))
-      Some(landAndDescribe(spark, outDir, sourceSchema, encOut, liveParts, t0))
-    }
-    val tombstones = tombstoneRows(spark, meta, fullParts, t0)
-    survivors.unpersist()
-    commit(spark, outDir, Txn(rows = newRows.toSeq ++ tombstones :+ foldMarker))
+    val survivors = decodeParts(spark, outDir, sourceSchema, Some(cands))
+    commit(spark, outDir, Txn(rows = rewriteParts(spark, outDir, sourceSchema, Some(meta), cands,
+      reencode(survivors, key, cands, blockSize), t0) :+ foldMarker))
     fs.delete(new org.apache.hadoop.fs.Path(s"$outDir/deletes"), true)
     nFolded
   }
@@ -1845,7 +1796,7 @@ object EncodePipeline {
     * Branches share the table's schema (schema.json is re-stamped on
     * evolution, exactly as on main — Iceberg parity). */
   def appendToBranch(df: DataFrame, key: String, outDir: String,
-                     partitions: Int, branch: String, blockSize: Int = 4096,
+                     partitions: Int, branch: String, blockSize: Int = DefaultBlockSize,
                      batchId: Long = 0L): Boolean = {
     branchBase(df.sparkSession, outDir, branch) // loud on unknown branches
     appendCommit(df, key, outDir, partitions, blockSize, batchId,
@@ -2744,9 +2695,16 @@ object EncodePipeline {
   /** a data file as [[dataFiles]] opens it: its status and footer schema */
   private final class DataFile(val status: org.apache.hadoop.fs.FileStatus, val schema: StructType)
 
-  /** the metadata-cache key of data file `path`'s [[DataFile]] (its Bloom
-    * filters are cached under the path itself) */
-  private[graft] def footerKey(path: String): String = s"$path#footer"
+  /** the metadata-cache key of data file `path`'s [[DataFile]]: its URI
+    * path, so every spelling of one file (`<outDir>/data/…` as [[land]]
+    * names it, `file:///…` as the manifest records it) shares one entry.
+    * Its Bloom filters are cached under the path itself. */
+  private[graft] def footerKey(path: String): String =
+    s"${new org.apache.hadoop.fs.Path(path).toUri.getPath}#footer"
+
+  /** the metadata cache's keys, least recently used first */
+  private[graft] def cachedKeys: Seq[String] =
+    dirCache.synchronized(dirCache.keySet.toArray(Array.empty[String]).toSeq)
 
   /** data file `path`'s [[DataFile]]: one getFileStatus and one footer read
     * on the driver, no Spark job, held in the metadata cache under the
@@ -2786,13 +2744,17 @@ object EncodePipeline {
       StructType(if (fields.isEmpty) BlockColumns else fields))
   }
 
-  /** the data files `write` lands in the part directories of the parts
-    * `inPart` admits: the files those directories hold after it and did
-    * not hold before (write jobs name files uniquely, so a crashed
-    * attempt's orphans stay excluded), skipping what Spark's own listing
-    * skips (`_`/`.` names: markers, checksums) */
-  private def landed(spark: SparkSession, outDir: String, inPart: Int => Boolean)(
-      write: => Unit): Seq[String] = {
+  /** append `enc`'s block rows to `data/`, partitioned by `__part`, with
+    * the Bloom filters of the table's convention and `bloomCols`
+    * ([[withBlooms]]), and return the files the write added to the part
+    * directories of the parts `inPart` admits: the files those directories
+    * hold after it and did not hold before (write jobs name files uniquely,
+    * so a crashed attempt's orphans stay excluded), skipping what Spark's
+    * own listing skips (`_`/`.` names: markers, checksums). The one write
+    * of data files by Spark's writer; [[describe]] turns its result into
+    * manifest rows. */
+  private def land(spark: SparkSession, outDir: String, enc: DataFrame,
+                   inPart: Int => Boolean, bloomCols: Seq[String] = Nil): Seq[String] = {
     val data = new org.apache.hadoop.fs.Path(s"$outDir/data")
     val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
     def files(): Set[String] = (for {
@@ -2802,8 +2764,33 @@ object EncodePipeline {
       if !f.startsWith("_") && !f.startsWith(".")
     } yield s"$outDir/data/$d/$f").toSet
     val before = files()
-    write
+    withBlooms(spark, outDir, enc, bloomCols).write.mode("append")
+      .partitionBy("__part").parquet(s"$outDir/data")
     (files() -- before).toSeq.sorted
+  }
+
+  /** the manifest rows (sans `gen`) describing data files `files` of
+    * `outDir` as committed by wave `wave`: per (part, column) the
+    * statistics and file list read back from the files themselves
+    * ([[metadataEx]]), the commit's `wall_millis` since `t0` and
+    * `attempt` 1, plus `batch_id` for a tracked batch and `ref` for a
+    * branch commit (invisible to main readers until [[fastForward]]
+    * publishes it). No file gives an empty row set. The one description of
+    * new data files, whether [[land]] or the row-level delta writers
+    * ([[commitDelta]]) wrote them. */
+  private def describe(spark: SparkSession, outDir: String, schema: StructType,
+                       files: Seq[String], wave: Int, t0: Long,
+                       batchId: Option[Long] = None, ref: Option[String] = None): DataFrame = {
+    val blocks =
+      if (files.nonEmpty) dataFiles(spark, outDir, files)
+      else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        blockSchema(plan(schema)))
+    val rows = metadataEx(blocks, schema, withFiles = true)
+      .withColumn("wave", lit(wave))
+      .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
+      .withColumn("attempt", lit(1))
+    val batch = batchId.fold(rows)(id => rows.withColumn("batch_id", lit(id)))
+    ref.fold(batch)(r => batch.withColumn("ref", lit(r)))
   }
 
   /** `enc` plus a `bm_<c>` Bloom filter column for each column `c` it
@@ -2812,7 +2799,7 @@ object EncodePipeline {
     * the table's own applies, so point lookups keep skipping files and
     * blocks across appends and rewrites */
   private def withBlooms(spark: SparkSession, outDir: String, enc: DataFrame,
-                         cols: Seq[String] = Nil): DataFrame =
+                         cols: Seq[String]): DataFrame =
     (bloomConvention(spark, outDir) ++ cols).distinct
       .filter(c => enc.columns.contains(s"e_$c") && !enc.columns.contains(s"bm_$c"))
       .foldLeft(enc)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))

@@ -7,10 +7,12 @@ import scala.collection.mutable
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
@@ -19,7 +21,6 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.Codecs
 import graft.plans.EncodePipeline
 
 /** SQL UPDATE / MERGE INTO / complex DELETE over graft tables — the Iceberg
@@ -100,9 +101,8 @@ class GraftDeltaBatchWrite(outDir: String, tableSchema: StructType,
     val msgs = messages.collect { case m: GraftDeltaMessage => m }
     val files = msgs.flatMap(_.insertedFiles).toSeq.sorted
     val deletes = msgs.flatMap(_.deletes).toSeq
-    val batchId = try EncodePipeline.nextBatchId(spark, outDir)
-                  catch { case _: Exception => 0L }
-    EncodePipeline.commitDelta(spark, outDir, tableSchema, files, deletes, batchId)
+    EncodePipeline.commitDelta(spark, outDir, tableSchema, files, deletes,
+      EncodePipeline.nextBatchId(spark, outDir))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -153,7 +153,7 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
         .bind(StructType(Seq(f.tableSchema(s.key)))).asInstanceOf[GraftPartFunction],
         ki)).toOption
   }
-  private val keyProbe = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+  private val keyProbe = new GenericInternalRow(1)
 
   // ---- delete state: (file, block) -> growable position bitmap ----
   private val bitmaps = mutable.HashMap.empty[(String, Int), Array[Byte]]
@@ -231,8 +231,9 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
 
   /** sort a part's buffered rows by the placement key (keeps PREFIX/dict
     * locality, mirroring the batch encoder's sortWithinPartitions), encode
-    * 4096-value blocks with the shared block kernels, write one parquet
-    * block file under the part's directory */
+    * them into blocks with the batch encoder's own block iterator
+    * ([[EncodePipeline.BlockIterator]]), and write one parquet block file
+    * under the part's directory */
   private def writePartFile(part: Int, rows: mutable.ArrayBuffer[Array[AnyRef]]): String = {
     keyPartFn.foreach { case (_, ki) =>
       val ord: Ordering[Array[AnyRef]] = (a, b) => (a(ki), b(ki)) match {
@@ -246,7 +247,6 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
       }
       rows.sortInPlace()(ord)
     }
-    val blockSize = 4096
     val schema = deltaFileSchema(plans.map(_.name))
     val conf = new org.apache.hadoop.conf.Configuration(f.conf.value)
     GroupWriteSupport.setSchema(schema, conf)
@@ -254,56 +254,16 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
       s"${f.outDir}/data/__part=$part/delta-$taskId-${UUID.randomUUID()}.parquet")
     val writer = ExampleParquetWriter.builder(path).withConf(conf).build()
     val factory = new SimpleGroupFactory(schema)
-    // per-column FSST tables reused across this part file's blocks (the
-    // BlockIterator pattern: one part's output is a pure function of its rows)
-    val fsst = new Array[graft.core.Fsst.SymbolTable](plans.length)
-    try {
-      var block = 0
-      var off = 0
-      val n = rows.length
-      while (off < n) {
-        val m = math.min(blockSize, n - off)
-        val g = factory.newGroup()
-        g.add("__block", block)
-        g.add("__cnt", m)
-        var c = 0
-        while (c < plans.length) {
-          var raw = 0L
-          val blob =
-            if (plans(c).kind == 'l') {
-              val vs = new Array[Long](m)
-              var nulls: Array[Boolean] = null
-              var j = 0
-              while (j < m) {
-                val v = rows(off + j)(c)
-                if (v == null) {
-                  if (nulls == null) nulls = new Array[Boolean](m)
-                  nulls(j) = true
-                } else vs(j) = v.asInstanceOf[java.lang.Long].longValue()
-                j += 1
-              }
-              raw = m * 8L
-              Codecs.encodeLongsN(vs, nulls)
-            } else {
-              val vs = new Array[Array[Byte]](m)
-              var j = 0
-              while (j < m) {
-                vs(j) = rows(off + j)(c).asInstanceOf[Array[Byte]]
-                if (vs(j) != null) raw += vs(j).length
-                j += 1
-              }
-              val (b, table) = Codecs.encodeStrsN(vs, fsst(c))
-              fsst(c) = table
-              b
-            }
-          g.add("e_" + plans(c).name, org.apache.parquet.io.api.Binary.fromConstantByteArray(blob))
-          g.add("r_" + plans(c).name, raw)
-          c += 1
-        }
-        writer.write(g)
-        off += m
-        block += 1
+    val canon = rows.iterator.map(cells => new GenericInternalRow(Array[Any](part) ++ cells): InternalRow)
+    try new EncodePipeline.BlockIterator(canon, plans, EncodePipeline.DefaultBlockSize, null).foreach { b =>
+      val g = factory.newGroup()
+      g.add("__block", b.getInt(1))
+      g.add("__cnt", b.getInt(2))
+      plans.indices.foreach { c =>
+        g.add("e_" + plans(c).name, Binary.fromConstantByteArray(b.getBinary(3 + 2 * c)))
+        g.add("r_" + plans(c).name, b.getLong(4 + 2 * c))
       }
+      writer.write(g)
     } finally writer.close()
     path.toString
   }

@@ -62,7 +62,7 @@ class BloomSpec extends AnyFunSuite {
       val bm = Bloom.ofBlob(blob)
       assert(bm != null, Codecs.codecOf(blob))
       assert(vs.forall(v => Bloom.maybe(bm, Bloom.hashLong(v))), Codecs.codecOf(blob))
-      val absentHits = (1 to 1000).count(i =>
+      val absentHits = (1 to 1000).count(_ =>
         Bloom.maybe(bm, Bloom.hashLong(r.nextLong() | (1L << 62))))
       assert(absentHits < 100, s"${Codecs.codecOf(blob)}: $absentHits/1000 fp")
     }

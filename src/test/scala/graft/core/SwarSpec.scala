@@ -179,7 +179,7 @@ class SwarSpec extends AnyFunSuite {
 
   test("property: subSatU == per-lane max(a-b, 0)") {
     checkAll("subSatU") { (s, a, b) =>
-      assert(s.subSatU(a, b) === perLane(s, a, b)((x, y, w) => math.max(x - y, 0L)))
+      assert(s.subSatU(a, b) === perLane(s, a, b)((x, y, _) => math.max(x - y, 0L)))
     }
   }
 

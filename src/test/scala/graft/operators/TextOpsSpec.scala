@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 
 /** Dedup / similarity / text-analysis operator tests with planted duplicates

@@ -52,7 +52,6 @@ class ClusterSpec extends SparkTestBase {
   }
 
   test("rewriteSorted re-clusters: scattered-column range probes skip blocks") {
-    import spark.implicits._
     val n = 2048
     // keyed and key-sorted by id; sid is a pseudorandom permutation, so
     // pre-rewrite every block spans the whole sid domain
@@ -90,7 +89,6 @@ class ClusterSpec extends SparkTestBase {
   }
 
   test("rewriteSorted keeps Bloom filters and skips tombstoned/empty tables") {
-    import spark.implicits._
     val n = 1024
     val d = spark.range(n).select(col("id"),
       pmod(col("id") * 2654435761L, lit(1000003L)).as("sid")).toDF()

@@ -64,7 +64,6 @@ class CompactionSpec extends SparkTestBase {
     val enc2 = EncodePipeline.encode(docs2, "url", 4, 128)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     enc2.count()
-    val before = filesPerPart(out)
     enc2.write.mode("append").partitionBy("__part").parquet(s"$out/data")
     val after = filesPerPart(out)
     val newFiles = after.keys.map { p =>
@@ -239,6 +238,30 @@ class CompactionSpec extends SparkTestBase {
     // appends' files are reclaimable
     assert(EncodePipeline.vacuum(spark, out) > 0)
     assert(sortedRows(EncodePipeline.decodeShared(spark, out, all.schema)) === expect)
+  }
+
+  test("a row-keeping rewrite whose candidate part lands no file fails, naming it, and commits nothing") {
+    val docs = WebDocGen.dataset(spark, 300, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64)
+    // a committed part 9 whose one recorded file holds no block
+    EncodePipeline.encode(docs.limit(0), "url", 4, 64).drop("__part")
+      .coalesce(1).write.parquet(s"$out/data/__part=9")
+    val empty = new java.io.File(s"$out/data/__part=9").listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith(".")).head
+    spark.read.parquet(s"$out/meta").filter(col("__part") === 0)
+      .withColumn("__part", lit(9))
+      .withColumn("data_files", array(lit("file://" + empty.getAbsolutePath)))
+      .write.mode("append").parquet(s"$out/meta")
+    val expect = sortedRows(EncodePipeline.decodeShared(spark, out, docs.schema))
+    val gen = EncodePipeline.currentGen(spark, out)
+    val e = intercept[IllegalArgumentException] {
+      EncodePipeline.rewriteSorted(spark, out, docs.schema, "url", Seq(col("warc_ts")))
+    }
+    assert(e.getMessage.contains("wrote no files for parts 9"), e.getMessage)
+    assert(EncodePipeline.currentGen(spark, out) === gen)
+    assert(EncodePipeline.currentFiles(spark, out).count(_._1 == 9) === 1)
+    assert(sortedRows(EncodePipeline.decodeShared(spark, out, docs.schema)) === expect)
   }
 
   test("crash-orphan files are invisible and vacuumed") {

@@ -90,6 +90,51 @@ class EncodePipelineSpec extends SparkTestBase {
     assert(summary.getLong(1) === 0L)
   }
 
+  test("a resumed run() lands the crashed wave beside its orphans; vacuum reclaims them") {
+    val docs = WebDocGen.dataset(spark, 1200, 4).toDF()
+    val out = tmpDir()
+    def onDisk(): Set[String] = new java.io.File(s"$out/data").listFiles()
+      .filter(_.getName.startsWith("__part=")).toSet.flatMap { (d: java.io.File) =>
+        d.listFiles().filter(f => f.isFile && f.getName.endsWith(".parquet") &&
+          !f.getName.startsWith(".")).map(f => s"${d.getName}/${f.getName}")
+      }
+    def recorded(): Set[String] =
+      EncodePipeline.currentFiles(spark, out).map(f => EncodePipeline.fileSuffix(f._2)).toSet
+    intercept[RuntimeException] {
+      EncodePipeline.run(docs, "url", out, partitions = 8, blockSize = 128,
+        waves = 3, failAtWave = 1)
+    }
+    // wave 1's files landed but were never committed
+    val orphans = onDisk() -- recorded()
+    assert(orphans.nonEmpty)
+    EncodePipeline.run(docs, "url", out, partitions = 8, blockSize = 128, waves = 3)
+    // the resumed wave landed new files; the orphans stay on disk, unrecorded
+    assert(orphans.subsetOf(onDisk()) && (orphans & recorded()).isEmpty)
+    def urls(): Seq[String] = EncodePipeline.decode(EncodePipeline.readData(spark, out), docs.schema)
+      .select("url").collect().map(_.getString(0)).toSeq.sorted
+    val read = urls()
+    assert(read.length === 1200 && read.distinct.length === 1200)
+    assert(EncodePipeline.vacuum(spark, out) === orphans.size)
+    assert(onDisk() === recorded())
+    assert(urls() === read)
+  }
+
+  test("a data file written and then read holds one footer entry in the metadata cache") {
+    val docs = WebDocGen.dataset(spark, 400, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64)
+    assert(EncodePipeline.appendCommit(docs.withColumn("url", concat(col("url"), lit("#b"))),
+      "url", out, partitions = 4, blockSize = 64, batchId = 1L))
+    EncodePipeline.readData(spark, out).count()
+    val footers = EncodePipeline.cachedKeys.filter(_.endsWith("#footer"))
+    val files = EncodePipeline.currentFiles(spark, out)
+    assert(files.map(_._1).distinct.size === 4 && files.size === 8)
+    files.foreach { case (_, f) =>
+      val spelled = s"$out/data/${EncodePipeline.fileSuffix(f)}#footer"
+      assert(footers.count(_.endsWith(spelled)) === 1, f)
+    }
+  }
+
   test("manifest zone maps prune parts without opening data files") {
     // range-partitioned on event_id (zone maps only prune when the partition
     // key correlates with the column — a hash partitioner would give every
@@ -611,6 +656,12 @@ class EncodePipelineSpec extends SparkTestBase {
     val out = tmpDir()
     EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 128,
       bloomCols = Seq("fp", "url"))
+    // a bloom column that names no column is rejected before anything lands
+    val rejected = tmpDir()
+    intercept[IllegalArgumentException] {
+      EncodePipeline.run(docs, "url", rejected, partitions = 4, bloomCols = Seq("nope"))
+    }
+    assert(new java.io.File(rejected).list().isEmpty)
     val target = docs.select("fp").head().getLong(0)
     val totalBlocks = EncodePipeline.readData(spark, out).count()
     val pruned = EncodePipeline.readDataPruned(spark, out, "fp", target)
@@ -688,7 +739,6 @@ class EncodePipelineSpec extends SparkTestBase {
   }
 
   test("double columns: alp picked for decimal scores, tzfor for float upcasts, bit-exact") {
-    import spark.implicits._
     // decimal quality scores (3 places) and float-upcast similarity values —
     // the two shapes the float-in-long codecs target; id stays delta/for
     val df = spark.range(0, 5000)

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 
@@ -479,7 +478,6 @@ class GraftDataSourceSpec extends SparkTestBase {
     // mod-4 placement makes every PART span the whole domain, so plan-time
     // zone pruning keeps all parts and only block bounds can skip. The key
     // encodes as delta (sorted) — the decode-based bounds path.
-    import spark.implicits._
     val d = spark.range(0, 1600)
       .select((col("id") * 7 + 100000).as("did"),
         concat(lit("https://h"), lpad(col("id").cast("string"), 6, "0"),
@@ -532,7 +530,6 @@ class GraftDataSourceSpec extends SparkTestBase {
   }
 
   test("IN-list and IS NULL block probes skip blocks in the V2 scan") {
-    import spark.implicits._
     // key-sorted parts: nulls of `maybe` concentrate in the low-did blocks,
     // IN-list values sit in a narrow did hull — both probes should reject
     // most blocks of every part while full scans decode all of them

@@ -100,6 +100,20 @@ class GraftRowLevelSpec extends SparkTestBase {
     assert(total === 250L + inserted)
     // every src row left its lang mark exactly once (update or insert)
     assert(xx === src.count())
+    // each inserted file holds the blobs the batch encoder writes for the
+    // same rows in the same part
+    val inserts = dataFiles(dir).keys.filter(_.contains("/delta-")).toSeq.sorted
+    assert(inserts.nonEmpty)
+    def blobs(blocks: org.apache.spark.sql.DataFrame): Seq[Seq[Seq[Byte]]] =
+      blocks.orderBy("__block").select(d.columns.toSeq.map(c => col(s"e_$c")): _*).collect()
+        .map(_.toSeq.map(_.asInstanceOf[Array[Byte]].toSeq)).toSeq
+    inserts.foreach { f =>
+      val part = f.split("/__part=")(1).takeWhile(_ != '/').toInt
+      val written = spark.read.parquet(f)
+      val encoded = EncodePipeline.encode(EncodePipeline.decode(written, d.schema), "url", 1,
+        partExpr = Some(lit(part)))
+      assert(blobs(written) === blobs(encoded), f)
+    }
   }
 
   test("complex DELETE falls back to the delta path (no loud failure)") {

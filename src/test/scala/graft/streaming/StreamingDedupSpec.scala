@@ -10,8 +10,6 @@ import graft.SparkTestBase
   * running duplicate mass (stateful path). */
 class StreamingDedupSpec extends SparkTestBase {
 
-  import org.apache.spark.sql.functions._
-
   /** checkpoints on tmpfs: state-store file creates spawn a chmod process
     * each (see SparkTestBase) — keep them off slow disk */
   private def shmCheckpoint(): String = {
