@@ -1,5 +1,15 @@
 package graft.plans
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.Types
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -33,9 +43,11 @@ import graft.functions._
   * orphans, the manifest records only the fresh ones, and readers open only
   * the files the manifest records. [[vacuum]] reclaims the orphans.
   *
-  * Writes: every data file lands through [[land]] and every manifest row
-  * describing new files comes from [[describe]]; every copy-on-write
-  * rewrite replaces its parts through [[rewriteParts]].
+  * Writes: every data file is written by [[writeBlocks]] on an executor,
+  * which names the files it writes and reports them; [[land]] runs it for
+  * the table-level writes and the row-level delta writers run it in their
+  * tasks. Every manifest row describing new files comes from [[describe]];
+  * every copy-on-write rewrite replaces its parts through [[rewriteParts]].
   */
 object EncodePipeline {
 
@@ -434,6 +446,56 @@ object EncodePipeline {
     }
   }
 
+  /** write block rows ([[blockSchema]] layout, in runs of equal `__part`)
+    * as data files of `outDir`: one snappy parquet file per run, at
+    * `<outDir>/data/__part=N/<prefix>-<UUID>.parquet`, holding `__block,
+    * __cnt`, then `e_c, r_c` for each of `cols` (the rows' columns, in
+    * order), then `bm_c` = [[graft.core.Bloom.ofBlob]]`(e_c)` for each of
+    * `bloomCols` among `cols`. Returns the paths it wrote: the task that
+    * writes a file names it, so no listing ever has to find it. The one
+    * writer of data files, for [[land]] and the row-level delta writers. */
+  private[graft] def writeBlocks(rows: Iterator[InternalRow], conf: Configuration,
+                                 outDir: String, prefix: String, cols: Seq[String],
+                                 bloomCols: Seq[String]): Seq[String] = {
+    val blooms = bloomCols.distinct.map(cols.indexOf).filter(_ >= 0)
+    // required as in [[blockSchema]]; a Bloom filter is null for an all-null block
+    val b = Types.buildMessage()
+    b.addField(Types.required(PrimitiveTypeName.INT32).named("__block"))
+    b.addField(Types.required(PrimitiveTypeName.INT32).named("__cnt"))
+    cols.foreach { c =>
+      b.addField(Types.required(PrimitiveTypeName.BINARY).named("e_" + c))
+      b.addField(Types.required(PrimitiveTypeName.INT64).named("r_" + c))
+    }
+    blooms.foreach(c => b.addField(Types.optional(PrimitiveTypeName.BINARY).named("bm_" + cols(c))))
+    val schema = b.named("graft_block")
+    val groups = new SimpleGroupFactory(schema)
+    val files = scala.collection.mutable.ArrayBuffer.empty[String]
+    var writer: ParquetWriter[Group] = null
+    var part = 0
+    try rows.foreach { r =>
+      if (writer == null || r.getInt(0) != part) {
+        if (writer != null) writer.close()
+        part = r.getInt(0)
+        files += s"$outDir/data/__part=$part/$prefix-${java.util.UUID.randomUUID()}.parquet"
+        writer = ExampleParquetWriter.builder(new Path(files.last)).withConf(conf)
+          .withType(schema).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+      }
+      val g = groups.newGroup()
+      g.add(0, r.getInt(1))
+      g.add(1, r.getInt(2))
+      cols.indices.foreach { c =>
+        g.add(2 + 2 * c, Binary.fromConstantByteArray(r.getBinary(3 + 2 * c)))
+        g.add(3 + 2 * c, r.getLong(4 + 2 * c))
+      }
+      blooms.iterator.zipWithIndex.foreach { case (c, i) =>
+        val bm = graft.core.Bloom.ofBlob(r.getBinary(3 + 2 * c))
+        if (bm != null) g.add(2 + 2 * cols.length + i, Binary.fromConstantByteArray(bm))
+      }
+      writer.write(g)
+    } finally if (writer != null) writer.close()
+    files.toSeq
+  }
+
   /** decode block rows back into the original schema — join-free: each block
     * row expands in place to its `__cnt` source rows. Same InternalRow-level
     * path as encode (no external-Row boxing), then a cheap projection
@@ -703,8 +765,7 @@ object EncodePipeline {
       // the wave's files land beside any orphans a crashed attempt left in
       // its part directories; the manifest records only the new ones, so
       // readers never open the orphans and vacuum reclaims them
-      val waveFiles = land(spark, outDir, enc,
-        p => Math.floorMod(p, waves) == w && !committed(p), bloomCols)
+      val waveFiles = land(spark, outDir, enc, bloomCols)
       if (w == failAtWave) throw new RuntimeException(s"injected failure before metadata commit of wave $w")
       commit(spark, outDir, Txn(base = true,
         rows = Seq(describe(spark, outDir, df.schema, waveFiles, w, waveStart))))
@@ -789,7 +850,7 @@ object EncodePipeline {
       case Some(ps) => encode(df, key, ps.partitions, blockSize, Some(ps.expr))
       case None => encode(df, key, partitions, blockSize)
     }
-    val newPaths = land(spark, outDir, enc, _ => true)
+    val newPaths = land(spark, outDir, enc)
     if (newPaths.isEmpty) { // empty batch: still commit any staged vectors
       deletes.foreach(d => commit(spark, outDir, Txn(deletes = Some(d))))
       return deletes.nonEmpty
@@ -910,9 +971,15 @@ object EncodePipeline {
 
   /** shared rewrite core for [[compact]] and [[compactSmallFiles]]: reblock
     * `enc`'s block rows to `blockSize` and replace the parts `cands`
-    * through [[rewriteParts]], which keeps every row. `blockOffset` shifts
-    * each part's fresh block numbering past its existing ids when older
-    * files stay current beside the rewrite (file-subset mode). */
+    * through [[rewriteParts]], which keeps every row. Each part's blocks,
+    * in block order, expand into their rows ([[decodeBlock]]; a column
+    * absent from a file's era decodes as all-null, so rewrite IS the
+    * schema-migration path) and re-encode through [[BlockIterator]] with
+    * no shared dictionaries: the within-part key order the encoder
+    * established is kept, and shared-dict blobs re-encode self-contained.
+    * `blockOffset` shifts each part's fresh block numbering past its
+    * existing ids when older files stay current beside the rewrite
+    * (file-subset mode). */
   private def rewriteBlocks(spark: SparkSession, outDir: String,
       sourceSchema: StructType, enc: DataFrame, cands: Seq[Int],
       blockSize: Int, t0: Long,
@@ -925,28 +992,47 @@ object EncodePipeline {
     val s2 = sorted.schema
     val partIdx = s2.fieldIndex("__part")
     val cntIdx = s2.fieldIndex("__cnt")
-    // -1 = column absent from every file of this table era: compaction
-    // under a newer schema materializes it as all-null blocks (rewrite IS
-    // the schema-migration path)
     val eIdx = plans.map(p => s2.fieldNames.indexOf("e_" + p.name)).toArray
-    val outSchema = blockSchema(plans)
     val dicts = loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None else Some(spark.sparkContext.broadcast(dicts))
     val bs = blockSize
     val rdd = Bridge.toRdd(sorted).mapPartitions { it =>
       dictsBc.foreach(b => Codecs.registerDicts(b.value))
-      new ReblockIterator(it, ps, bs, partIdx, cntIdx, eIdx)
+      // one row object refilled per source row: BlockIterator copies each
+      // row's values out before asking for the next
+      val row = new GenericInternalRow(1 + ps.length)
+      val canon = it.flatMap { r =>
+        val n = r.getInt(cntIdx)
+        val db = decodeBlock(ps, n)(c =>
+          if (eIdx(c) < 0 || r.isNullAt(eIdx(c))) null else r.getBinary(eIdx(c)))
+        val part = r.getInt(partIdx)
+        Iterator.tabulate(n) { i =>
+          row.update(0, part)
+          var c = 0
+          while (c < ps.length) {
+            row.update(c + 1,
+              if (db.allNull(c)) null
+              else ps(c).kind match {
+                case 'l' =>
+                  if (db.longNulls(c) != null && db.longNulls(c)(i)) null else db.longVals(c)(i)
+                case 's' =>
+                  val v = db.strViews(c)
+                  if (v.lens(i) < 0) null
+                  else java.util.Arrays.copyOfRange(v.buf, v.offs(i), v.offs(i) + v.lens(i))
+                case _ => db.binVals(c)(i)
+              })
+            c += 1
+          }
+          row: InternalRow
+        }
+      }
+      new BlockIterator(canon, ps, bs, null).map { b =>
+        b.asInstanceOf[GenericInternalRow].update(1, b.getInt(1) + blockOffset.getOrElse(b.getInt(0), 0))
+        b
+      }
     }
-    val fresh = Bridge.internalCreateDataFrame(spark, rdd, outSchema)
-    val shifted = if (blockOffset.isEmpty) fresh else {
-      val offs = spark.createDataFrame(blockOffset.toSeq).toDF("__part", "__off")
-      fresh.join(broadcast(offs), Seq("__part"), "left")
-        .withColumn("__block",
-          (col("__block") + coalesce(col("__off"), lit(0))).cast("int"))
-        .drop("__off")
-        .select(outSchema.fieldNames.map(col).toSeq: _*)
-    }
-    rewriteParts(spark, outDir, sourceSchema, None, cands, shifted, t0)
+    rewriteParts(spark, outDir, sourceSchema, None, cands,
+      Bridge.internalCreateDataFrame(spark, rdd, blockSchema(plans)), t0)
   }
 
   /** replace the candidate parts `cands` by `enc`'s block rows: land them
@@ -962,7 +1048,7 @@ object EncodePipeline {
   private def rewriteParts(spark: SparkSession, outDir: String, schema: StructType,
                            tombstones: Option[ManifestView], cands: Seq[Int], enc: DataFrame,
                            t0: Long, bloomCols: Seq[String] = Nil): Seq[DataFrame] = {
-    val files = land(spark, outDir, enc, cands.toSet, bloomCols)
+    val files = land(spark, outDir, enc, bloomCols)
     val filled = files.map(f => partOfSuffix(fileSuffix(f))).toSet
     val empty = cands.filterNot(filled)
     require(tombstones.nonEmpty || empty.isEmpty,
@@ -1135,7 +1221,7 @@ object EncodePipeline {
     * one replacing manifest append at the next generation — time travel,
     * vacuum, and every reader behave identically. Refuses live delete
     * vectors ([[materializeDeletes]] first). The rewritten files keep the
-    * table's Bloom filters ([[withBlooms]]). Returns the rewritten part
+    * table's Bloom filters ([[bloomConvention]]). Returns the rewritten part
     * ids. */
   def rewriteSorted(spark: SparkSession, outDir: String,
                     sourceSchema: StructType, key: String,
@@ -1728,20 +1814,13 @@ object EncodePipeline {
 
   /** every data file the manifest lists at generation `g` must still be on
     * disk: [[vacuum]] expires history, and pinning or restoring a
-    * generation whose files are gone would commit a lie. One listStatus per
-    * part directory, not one exists() call per file. */
+    * generation whose files are gone would commit a lie. One exists() call
+    * per recorded file; no directory is listed. */
   private def requireFilesOnDisk(spark: SparkSession, outDir: String, g: Int, op: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(outDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val needed = manifestView(spark, outDir, Some(g)).dataFiles.map(fileSuffix)
-    val onDisk: Set[String] = needed.map(_.takeWhile(_ != '/')).distinct.flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$outDir/data/$d")
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.filter(_.isFile).map(s => s"$d/${s.getPath.getName}")
-    }.toSet
-    val missing = needed.filterNot(onDisk)
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val missing = manifestView(spark, outDir, Some(g)).dataFiles.filterNot(f => fs.exists(new Path(f)))
     require(missing.isEmpty, s"$op: ${missing.length} data files of generation $g " +
-      s"were vacuumed (first: ${missing.headOption.getOrElse("")})")
+      s"were vacuumed (first: ${missing.headOption.map(fileSuffix).getOrElse("")})")
   }
 
   /** drop a tag; its generation becomes expirable again. Returns whether
@@ -2398,145 +2477,6 @@ object EncodePipeline {
   def readSchemaFile(spark: SparkSession, outDir: String): Option[StructType] =
     readSideFile(spark, outDir, "schema.json")(DataType.fromJson(_).asInstanceOf[StructType])
 
-  /** block-stream re-blocker: consumes (__part, __block)-sorted encoded
-    * block rows, concatenates each part's decoded values in block order
-    * (preserving the within-part key sort the encoder established — PREFIX
-    * stays effective), and re-emits full `blockSize` blocks through the
-    * same auto-selecting codecs. Memory is bounded by ~2 blocks per column;
-    * rows are never materialized. */
-  private final class ReblockIterator(it: Iterator[InternalRow], plans: Array[ColPlan],
-      blockSize: Int, partIdx: Int, cntIdx: Int, eIdx: Array[Int])
-      extends Iterator[InternalRow] {
-    private val nCols = plans.length
-    private val out = new scala.collection.mutable.Queue[InternalRow]()
-    private var curPart = Int.MinValue
-    private var started = false
-    private var blockOut = 0
-    private var pend = 0
-    private var cap = blockSize * 2
-    private val longP = new Array[Array[Long]](nCols)
-    private val nullP = new Array[Array[Boolean]](nCols)
-    private val binP = new Array[Array[Array[Byte]]](nCols)
-    private val fsstCache = new Array[graft.core.Fsst.SymbolTable](nCols)
-    locally {
-      var c = 0
-      while (c < nCols) {
-        if (plans(c).kind == 'l') { longP(c) = new Array[Long](cap); nullP(c) = new Array[Boolean](cap) }
-        else binP(c) = new Array[Array[Byte]](cap)
-        c += 1
-      }
-    }
-
-    private def ensure(n: Int): Unit = if (n > cap) {
-      val nc = math.max(n, cap * 2)
-      var c = 0
-      while (c < nCols) {
-        if (plans(c).kind == 'l') {
-          longP(c) = java.util.Arrays.copyOf(longP(c), nc)
-          nullP(c) = java.util.Arrays.copyOf(nullP(c), nc)
-        } else binP(c) = java.util.Arrays.copyOf(binP(c), nc)
-        c += 1
-      }
-      cap = nc
-    }
-
-    private def appendBlock(r: InternalRow): Unit = {
-      val m = r.getInt(cntIdx)
-      ensure(pend + m)
-      var c = 0
-      while (c < nCols) {
-        // an absent/null blob is a pre-evolution block: all-null values
-        if (eIdx(c) < 0 || r.isNullAt(eIdx(c))) {
-          if (plans(c).kind == 'l') {
-            java.util.Arrays.fill(longP(c), pend, pend + m, 0L)
-            java.util.Arrays.fill(nullP(c), pend, pend + m, true)
-          } else {
-            java.util.Arrays.fill(binP(c).asInstanceOf[Array[AnyRef]], pend, pend + m, null)
-          }
-        } else {
-          val blob = r.getBinary(eIdx(c))
-          if (plans(c).kind == 'l') {
-            val (v, nu) = Codecs.decodeLongsN(blob)
-            require(v.length == m, s"block count mismatch: ${v.length} != $m")
-            System.arraycopy(v, 0, longP(c), pend, m)
-            if (nu != null) System.arraycopy(nu, 0, nullP(c), pend, m)
-            else java.util.Arrays.fill(nullP(c), pend, pend + m, false)
-          } else {
-            val vs = Codecs.decodeStrsN(blob)
-            require(vs.length == m, s"block count mismatch: ${vs.length} != $m")
-            System.arraycopy(vs, 0, binP(c), pend, m)
-          }
-        }
-        c += 1
-      }
-      pend += m
-    }
-
-    private def emit(n: Int): Unit = {
-      val vals = new Array[Any](3 + nCols * 2)
-      vals(0) = curPart; vals(1) = blockOut; vals(2) = n
-      var c = 0
-      while (c < nCols) {
-        if (plans(c).kind == 'l') {
-          val vs = java.util.Arrays.copyOf(longP(c), n)
-          var hasNull = false
-          var j = 0
-          while (j < n && !hasNull) { hasNull = nullP(c)(j); j += 1 }
-          vals(3 + c * 2) = Codecs.encodeLongsN(vs,
-            if (hasNull) java.util.Arrays.copyOf(nullP(c), n) else null)
-          vals(4 + c * 2) = n * 8L
-        } else {
-          val vs = java.util.Arrays.copyOf(binP(c), n)
-          val (blob, table) = Codecs.encodeStrsN(vs, fsstCache(c))
-          fsstCache(c) = table
-          vals(3 + c * 2) = blob
-          var raw = 0L
-          var j = 0
-          while (j < n) { if (vs(j) != null) raw += vs(j).length; j += 1 }
-          vals(4 + c * 2) = raw
-        }
-        c += 1
-      }
-      out.enqueue(new GenericInternalRow(vals))
-      val rem = pend - n
-      var c2 = 0
-      while (c2 < nCols) {
-        if (plans(c2).kind == 'l') {
-          System.arraycopy(longP(c2), n, longP(c2), 0, rem)
-          System.arraycopy(nullP(c2), n, nullP(c2), 0, rem)
-        } else {
-          System.arraycopy(binP(c2), n, binP(c2), 0, rem)
-          java.util.Arrays.fill(binP(c2).asInstanceOf[Array[AnyRef]], rem, pend, null)
-        }
-        c2 += 1
-      }
-      pend = rem
-      blockOut += 1
-    }
-
-    private def advance(): Unit = {
-      while (out.isEmpty && (it.hasNext || pend > 0)) {
-        if (it.hasNext) {
-          val r = it.next()
-          val p = r.getInt(partIdx)
-          if (!started) { curPart = p; started = true }
-          if (p != curPart) {
-            if (pend > 0) emit(pend) // final short block of the previous part
-            curPart = p; blockOut = 0
-            java.util.Arrays.fill(fsstCache.asInstanceOf[Array[AnyRef]], null)
-          }
-          appendBlock(r)
-          while (pend >= blockSize) emit(blockSize)
-        } else {
-          emit(pend)
-        }
-      }
-    }
-
-    override def hasNext: Boolean = { advance(); out.nonEmpty }
-    override def next(): InternalRow = { advance(); out.dequeue() }
-  }
-
   /** the table decoded: `spark.read.format("graft")` with `sourceSchema`
     * as its schema. Loads the dictionary side-structure first, registering
     * it in this JVM for stand-alone kernels; the scan broadcasts it to the
@@ -2670,12 +2610,12 @@ object EncodePipeline {
 
   /** a data file's driver-side index (the scan keeps its block Bloom
     * filters here), held in the metadata cache under the file's path and
-    * the same byte budget. Every write path names data files uniquely per
-    * job (Spark's job UUID, or a random UUID for row-level delta files) and
-    * never rewrites one in place, so the path alone identifies the bytes: a
-    * table rebuilt at the same path writes new names. `load` runs on a miss
-    * and returns the index with its estimated heap bytes. None when the
-    * index is not cached because it is larger than the whole budget. */
+    * the same byte budget. [[writeBlocks]] names every data file with a
+    * random UUID and never rewrites one in place, so the path alone
+    * identifies the bytes: a table rebuilt at the same path writes new
+    * names. `load` runs on a miss and returns the index with its estimated
+    * heap bytes. None when the index is not cached because it is larger
+    * than the whole budget. */
   private[graft] def cachedFileIndex[T <: AnyRef](path: String)(load: => (T, Long))(
       implicit tag: scala.reflect.ClassTag[T]): Option[T] =
     cacheHit[T](path, "").orElse {
@@ -2696,8 +2636,8 @@ object EncodePipeline {
   private final class DataFile(val status: org.apache.hadoop.fs.FileStatus, val schema: StructType)
 
   /** the metadata-cache key of data file `path`'s [[DataFile]]: its URI
-    * path, so every spelling of one file (`<outDir>/data/…` as [[land]]
-    * names it, `file:///…` as the manifest records it) shares one entry.
+    * path, so every spelling of one file (`<outDir>/data/…` as
+    * [[writeBlocks]] names it, `file:///…` as the manifest records it) shares one entry.
     * Its Bloom filters are cached under the path itself. */
   private[graft] def footerKey(path: String): String =
     s"${new org.apache.hadoop.fs.Path(path).toUri.getPath}#footer"
@@ -2744,29 +2684,20 @@ object EncodePipeline {
       StructType(if (fields.isEmpty) BlockColumns else fields))
   }
 
-  /** append `enc`'s block rows to `data/`, partitioned by `__part`, with
-    * the Bloom filters of the table's convention and `bloomCols`
-    * ([[withBlooms]]), and return the files the write added to the part
-    * directories of the parts `inPart` admits: the files those directories
-    * hold after it and did not hold before (write jobs name files uniquely,
-    * so a crashed attempt's orphans stay excluded), skipping what Spark's
-    * own listing skips (`_`/`.` names: markers, checksums). The one write
-    * of data files by Spark's writer; [[describe]] turns its result into
-    * manifest rows. */
+  /** write `enc`'s block rows as new data files of `outDir` ([[writeBlocks]]
+    * on the executors, one Spark job), with the Bloom filters of the
+    * table's convention ([[bloomConvention]]) and `bloomCols`, and return
+    * the paths the write tasks report, sorted. Files already in the part
+    * directories, or put there by anyone else during the write, are never
+    * among them; a failed task's files stay unrecorded orphans that
+    * [[vacuum]] reclaims. [[describe]] turns the result into manifest rows. */
   private def land(spark: SparkSession, outDir: String, enc: DataFrame,
-                   inPart: Int => Boolean, bloomCols: Seq[String] = Nil): Seq[String] = {
-    val data = new org.apache.hadoop.fs.Path(s"$outDir/data")
-    val fs = data.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(): Set[String] = (for {
-      d <- if (fs.exists(data)) fs.listStatus(data).toSeq.map(_.getPath.getName) else Nil
-      if d.startsWith("__part=") && inPart(d.stripPrefix("__part=").toInt)
-      f <- fs.listStatus(new org.apache.hadoop.fs.Path(data, d)).map(_.getPath.getName)
-      if !f.startsWith("_") && !f.startsWith(".")
-    } yield s"$outDir/data/$d/$f").toSet
-    val before = files()
-    withBlooms(spark, outDir, enc, bloomCols).write.mode("append")
-      .partitionBy("__part").parquet(s"$outDir/data")
-    (files() -- before).toSeq.sorted
+                   bloomCols: Seq[String] = Nil): Seq[String] = {
+    val conf = Bridge.hadoopConfBroadcast(spark)
+    val cols = enc.columns.toSeq.collect { case c if c.startsWith("e_") => c.stripPrefix("e_") }
+    val blooms = bloomConvention(spark, outDir) ++ bloomCols
+    Bridge.toRdd(enc).mapPartitions(it =>
+      writeBlocks(it, conf.value, outDir, "part", cols, blooms).iterator).collect().toSeq.sorted
   }
 
   /** the manifest rows (sans `gen`) describing data files `files` of
@@ -2776,8 +2707,8 @@ object EncodePipeline {
     * `attempt` 1, plus `batch_id` for a tracked batch and `ref` for a
     * branch commit (invisible to main readers until [[fastForward]]
     * publishes it). No file gives an empty row set. The one description of
-    * new data files, whether [[land]] or the row-level delta writers
-    * ([[commitDelta]]) wrote them. */
+    * new data files: `files` are the paths [[writeBlocks]] reported, whether
+    * [[land]] or the row-level delta writers ([[commitDelta]]) ran it. */
   private def describe(spark: SparkSession, outDir: String, schema: StructType,
                        files: Seq[String], wave: Int, t0: Long,
                        batchId: Option[Long] = None, ref: Option[String] = None): DataFrame = {
@@ -2793,21 +2724,10 @@ object EncodePipeline {
     ref.fold(batch)(r => batch.withColumn("ref", lit(r)))
   }
 
-  /** `enc` plus a `bm_<c>` Bloom filter column for each column `c` it
-    * encodes among `cols` and the table's convention
-    * ([[bloomConvention]]): the rule every write that lands files beside
-    * the table's own applies, so point lookups keep skipping files and
-    * blocks across appends and rewrites */
-  private def withBlooms(spark: SparkSession, outDir: String, enc: DataFrame,
-                         cols: Seq[String]): DataFrame =
-    (bloomConvention(spark, outDir) ++ cols).distinct
-      .filter(c => enc.columns.contains(s"e_$c") && !enc.columns.contains(s"bm_$c"))
-      .foldLeft(enc)((d, c) => d.withColumn(s"bm_$c", blob_bloom(col(s"e_$c"))))
-
   /** the columns the table's current data files keep `bm_<col>` Bloom
     * filters for, from their footer schemas ([[dataFile]]). A table with
     * no data file yet has none; a read error propagates. */
-  private def bloomConvention(spark: SparkSession, outDir: String): Seq[String] =
+  private[graft] def bloomConvention(spark: SparkSession, outDir: String): Seq[String] =
     if (!hasManifest(spark, outDir)) Nil
     else manifestView(spark, outDir, None).dataFiles.flatMap(dataFile(spark, _).schema.fieldNames)
       .collect { case c if c.startsWith("bm_") => c.stripPrefix("bm_") }.distinct
@@ -2890,10 +2810,10 @@ object EncodePipeline {
     * drop blocks whose bm_<col> filter PROVES the probe value absent — the
     * needle-in-haystack complement of part-level zone maps, which cannot
     * prune a hash-scattered column at all (every part spans the domain).
-    * Missing column / null filters (mixed-era files, all-null blocks,
-    * maintenance rewrites, delta-written files) coalesce to "maybe" = kept;
-    * no false negatives by [[graft.core.Bloom]]'s contract, so the result
-    * contract is unchanged: every block that can match survives. */
+    * Missing column / null filters (mixed-era files, all-null blocks)
+    * coalesce to "maybe" = kept; no false negatives by
+    * [[graft.core.Bloom]]'s contract, so the result contract is unchanged:
+    * every block that can match survives. */
   private def bloomFilterBlocks(df: DataFrame, column: String, value: Column): DataFrame =
     if (!df.columns.contains(s"bm_$column")) df
     else df.filter(coalesce(bloom_maybe(col(s"bm_$column"), value), lit(true)))

@@ -218,7 +218,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with FunctionCat
       useHost = law.exists(_.kind == "host"),
       partitionsOpt = law.map(_.partitions).orElse(prop("partitions").map(_.toInt)),
       salts = law.map(_.salts).getOrElse(4),
-      blockSize = prop("blockSize").map(_.toInt).getOrElse(4096),
+      blockSize = prop("blockSize").map(_.toInt).getOrElse(EncodePipeline.DefaultBlockSize),
       sharedDictCols = cols("sharedDictCols"),
       bloomCols = cols("bloomCols"),
       replaceExisting = replaceExisting)

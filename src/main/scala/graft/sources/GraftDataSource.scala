@@ -116,7 +116,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     * SupportsWrite, so Spark routes writes here) delegating to the encode
     * pipeline's commit protocol. Options: `key` (partitioning key column;
     * default first column), `partitions` (default session
-    * spark.sql.shuffle.partitions), `blockSize` (default 4096),
+    * spark.sql.shuffle.partitions), `blockSize` (default [[EncodePipeline.DefaultBlockSize]]),
     * `sharedDictCols` (comma-separated). SaveMode semantics are the file-
     * source ones: Append lands an exactly-once tracked commit (batchId =
     * max committed + 1, or the `batchId` option for replay-keyed callers);
@@ -135,7 +135,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister
     val key = parameters.getOrElse("key", data.schema.fieldNames.head)
     val partitions = parameters.get("partitions").map(_.toInt)
       .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val blockSize = parameters.get("blockSize").map(_.toInt).getOrElse(4096)
+    val blockSize = parameters.get("blockSize").map(_.toInt).getOrElse(EncodePipeline.DefaultBlockSize)
     val sharedDictCols = parameters.get("sharedDictCols")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
     // bloomCols only shapes table CREATION — appends inherit the bm_<col>

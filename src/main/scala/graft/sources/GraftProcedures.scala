@@ -83,7 +83,7 @@ object GraftProcedures {
   private def procs(root: String): Map[String, UnboundProcedure] = Map(
     "compact" -> new Proc("compact",
       Seq(Arg("table", StringType),
-        Arg("block_size", IntegerType, Some("4096")),
+        Arg("block_size", IntegerType, Some(EncodePipeline.DefaultBlockSize.toString)),
         Arg("min_files", IntegerType, Some("2"))),
       StructType(Seq(StructField("parts_rewritten", IntegerType, nullable = false)))) {
       override protected def run(in: InternalRow): InternalRow = {
@@ -94,7 +94,7 @@ object GraftProcedures {
     },
     "compact_small_files" -> new Proc("compact_small_files",
       Seq(Arg("table", StringType),
-        Arg("block_size", IntegerType, Some("4096")),
+        Arg("block_size", IntegerType, Some(EncodePipeline.DefaultBlockSize.toString)),
         Arg("min_small", IntegerType, Some("2")),
         Arg("max_small_bytes", LongType, Some("0"))),
       StructType(Seq(StructField("parts_packed", IntegerType, nullable = false)))) {
@@ -137,7 +137,7 @@ object GraftProcedures {
     },
     "materialize_deletes" -> new Proc("materialize_deletes",
       Seq(Arg("table", StringType),
-        Arg("block_size", IntegerType, Some("4096"))),
+        Arg("block_size", IntegerType, Some(EncodePipeline.DefaultBlockSize.toString))),
       StructType(Seq(StructField("rows_folded", LongType, nullable = false)))) {
       override protected def run(in: InternalRow): InternalRow = {
         val dir = dirOf(root, in.getUTF8String(0).toString)
@@ -148,7 +148,7 @@ object GraftProcedures {
     },
     "rewrite_sorted" -> new Proc("rewrite_sorted",
       Seq(Arg("table", StringType), Arg("sort_cols", StringType),
-        Arg("block_size", IntegerType, Some("4096"))),
+        Arg("block_size", IntegerType, Some(EncodePipeline.DefaultBlockSize.toString))),
       StructType(Seq(StructField("parts_rewritten", IntegerType, nullable = false)))) {
       override protected def run(in: InternalRow): InternalRow = {
         val dir = dirOf(root, in.getUTF8String(0).toString)
@@ -201,7 +201,7 @@ object GraftProcedures {
     },
     "rewrite_zordered" -> new Proc("rewrite_zordered",
       Seq(Arg("table", StringType), Arg("z_cols", StringType),
-        Arg("block_size", IntegerType, Some("4096"))),
+        Arg("block_size", IntegerType, Some(EncodePipeline.DefaultBlockSize.toString))),
       StructType(Seq(StructField("parts_rewritten", IntegerType, nullable = false)))) {
       override protected def run(in: InternalRow): InternalRow = {
         val dir = dirOf(root, in.getUTF8String(0).toString)

@@ -1,15 +1,8 @@
 package graft.sources
 
-import java.util.UUID
-
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.{MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -35,14 +28,15 @@ import graft.plans.EncodePipeline
   *   - updates are REPRESENTED AS DELETE + INSERT (representUpdateAsDelete
   *     AndInsert): executor [[GraftDeltaWriter]]s turn delete actions into
   *     per-(file, block) position bitmaps and insert actions into freshly
-  *     ENCODED block files, placed by the table's persisted placement law
-  *     (so DML keeps co-partitioning and storage-partitioned joins intact);
-  *   - the driver commit replays the proven commit tails: inserted files
-  *     manifest-append as a tracked batch FIRST, then the bitmaps land as a
-  *     gen-tagged delete-vector snapshot (same non-atomic-but-crash-safe
-  *     window as updateWhereLazy, documented there). ZERO existing data
-  *     bytes are rewritten; maintenance (materializeDeletes/compact) folds
-  *     later.
+  *     ENCODED block files ([[EncodePipeline.writeBlocks]], with the
+  *     table's Bloom filters), placed by the table's persisted placement
+  *     law (so DML keeps co-partitioning and storage-partitioned joins
+  *     intact);
+  *   - the driver commit ([[EncodePipeline.commitDelta]]) records the
+  *     inserted files as a tracked batch and the bitmaps as delete vectors
+  *     in ONE transaction: a crash before it lands leaves only invisible
+  *     orphans. ZERO existing data bytes are rewritten; maintenance
+  *     (materializeDeletes/compact) folds later.
   *
   * Scale shape: delete state is one bitmap fragment per touched block per
   * writer (≤ blockSize/8 bytes), merged driver-side exactly like
@@ -93,6 +87,7 @@ class GraftDeltaBatchWrite(outDir: String, tableSchema: StructType,
     GraftDeltaWriterFactory(outDir, tableSchema, info.schema(),
       info.rowIdSchema().orElse(null),
       EncodePipeline.readPartSpec(spark, outDir),
+      EncodePipeline.bloomConvention(spark, outDir),
       Bridge.hadoopConfBroadcast(spark))
   }
 
@@ -117,6 +112,7 @@ class GraftDeltaBatchWrite(outDir: String, tableSchema: StructType,
 case class GraftDeltaWriterFactory(outDir: String, tableSchema: StructType,
                                    dataSchema: StructType, rowIdSchema: StructType,
                                    spec: Option[EncodePipeline.PartSpec],
+                                   bloomCols: Seq[String],
                                    conf: Bridge.HadoopConfBroadcast)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
@@ -219,9 +215,13 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
   }
 
   override def commit(): WriterCommitMessage = {
-    val files = inserts.toSeq.sortBy(_._1).map { case (part, rows) =>
-      writePartFile(part, rows)
+    val canon = inserts.toSeq.sortBy(_._1).iterator.flatMap { case (part, rows) =>
+      sortByKey(rows)
+      rows.iterator.map(cells => new GenericInternalRow(Array[Any](part) ++ cells): InternalRow)
     }
+    val files = EncodePipeline.writeBlocks(
+      new EncodePipeline.BlockIterator(canon, plans, EncodePipeline.DefaultBlockSize, null),
+      f.conf.value, f.outDir, s"delta-$taskId", plans.map(_.name).toSeq, f.bloomCols)
     GraftDeltaMessage(files,
       bitmaps.toSeq.map { case ((file, block), bm) => (file, block, bm) })
   }
@@ -230,11 +230,8 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
   override def close(): Unit = { inserts.clear(); bitmaps.clear() }
 
   /** sort a part's buffered rows by the placement key (keeps PREFIX/dict
-    * locality, mirroring the batch encoder's sortWithinPartitions), encode
-    * them into blocks with the batch encoder's own block iterator
-    * ([[EncodePipeline.BlockIterator]]), and write one parquet block file
-    * under the part's directory */
-  private def writePartFile(part: Int, rows: mutable.ArrayBuffer[Array[AnyRef]]): String = {
+    * locality, mirroring the batch encoder's sortWithinPartitions) */
+  private def sortByKey(rows: mutable.ArrayBuffer[Array[AnyRef]]): Unit =
     keyPartFn.foreach { case (_, ki) =>
       val ord: Ordering[Array[AnyRef]] = (a, b) => (a(ki), b(ki)) match {
         case (null, null) => 0
@@ -247,36 +244,4 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
       }
       rows.sortInPlace()(ord)
     }
-    val schema = deltaFileSchema(plans.map(_.name))
-    val conf = new org.apache.hadoop.conf.Configuration(f.conf.value)
-    GroupWriteSupport.setSchema(schema, conf)
-    val path = new Path(
-      s"${f.outDir}/data/__part=$part/delta-$taskId-${UUID.randomUUID()}.parquet")
-    val writer = ExampleParquetWriter.builder(path).withConf(conf).build()
-    val factory = new SimpleGroupFactory(schema)
-    val canon = rows.iterator.map(cells => new GenericInternalRow(Array[Any](part) ++ cells): InternalRow)
-    try new EncodePipeline.BlockIterator(canon, plans, EncodePipeline.DefaultBlockSize, null).foreach { b =>
-      val g = factory.newGroup()
-      g.add("__block", b.getInt(1))
-      g.add("__cnt", b.getInt(2))
-      plans.indices.foreach { c =>
-        g.add("e_" + plans(c).name, Binary.fromConstantByteArray(b.getBinary(3 + 2 * c)))
-        g.add("r_" + plans(c).name, b.getLong(4 + 2 * c))
-      }
-      writer.write(g)
-    } finally writer.close()
-    path.toString
-  }
-
-  private def deltaFileSchema(names: Array[String]): MessageType = {
-    val b = Types.buildMessage()
-    b.addField(Types.optional(PrimitiveTypeName.INT32).named("__block"))
-    b.addField(Types.optional(PrimitiveTypeName.INT32).named("__cnt"))
-    names.foreach { n =>
-      b.addField(Types.optional(PrimitiveTypeName.BINARY).named("e_" + n))
-      b.addField(Types.optional(PrimitiveTypeName.INT64).named("r_" + n))
-    }
-    b.named("graft_delta")
-  }
 }
-

@@ -20,8 +20,9 @@ import graft.plans.EncodePipeline
   *   - executors buffer each task's rows, place them by the table's
   *     PERSISTED placement law (so streamed appends keep the co-partitioning
   *     invariant storage-partitioned joins rely on), sort each part's buffer
-  *     by the key, and encode 4096-value blocks with the shared block
-  *     kernels into law-placed `delta-*` parquet block files
+  *     by the key, and encode blocks with the shared block kernels into
+  *     law-placed `delta-*` parquet block files carrying the table's Bloom
+  *     filters
   *     ([[GraftDeltaWriter]] — the exact writers SQL UPDATE/MERGE use);
   *   - the driver commit is ONE single-file manifest append recording the
   *     epoch's files as a tracked batch ([[EncodePipeline.commitDelta]] with
@@ -45,10 +46,9 @@ import graft.plans.EncodePipeline
   * streaming pipelines closed under the format.
   *
   * Scope: Append output mode only (Complete/Update need truncate-per-epoch
-  * or upsert semantics — refused loudly). Delta block files carry no bloom
-  * sibling columns and no shared-dict references (self-contained blobs);
-  * readers coalesce both to "maybe"/inline per documented mixed-era rules,
-  * and compactSmallFiles() folds small epochs into full blocks later.
+  * or upsert semantics — refused loudly). Delta block files carry no
+  * shared-dict references (self-contained blobs), and compactSmallFiles()
+  * folds small epochs into full blocks later.
   */
 class GraftStreamingWrite(outDir: String, tableSchema: StructType,
                           info: LogicalWriteInfo) extends StreamingWrite {
@@ -72,7 +72,8 @@ class GraftStreamingWrite(outDir: String, tableSchema: StructType,
       } else None // pre-spec-era table: placement unknown, part 0 (exact zone maps)
     }
     GraftStreamingWriterFactory(GraftDeltaWriterFactory(outDir, schema,
-      info.schema(), rowIdSchema = null, spec, Bridge.hadoopConfBroadcast(spark)))
+      info.schema(), rowIdSchema = null, spec, EncodePipeline.bloomConvention(spark, outDir),
+      Bridge.hadoopConfBroadcast(spark)))
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {

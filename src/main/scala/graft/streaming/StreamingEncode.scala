@@ -32,9 +32,9 @@ object StreamingEncode {
     * cycle rather than failing the query. */
   def start(spark: SparkSession, inDir: String, outDir: String,
             schema: org.apache.spark.sql.types.StructType, key: String,
-            partitions: Int, blockSize: Int = 4096,
+            partitions: Int, blockSize: Int = EncodePipeline.DefaultBlockSize,
             checkpoint: Option[String] = None,
-            compactEvery: Int = 0, compactBlockSize: Int = 4096): StreamingQuery = {
+            compactEvery: Int = 0, compactBlockSize: Int = EncodePipeline.DefaultBlockSize): StreamingQuery = {
     spark.readStream
       .schema(schema)
       .parquet(inDir)

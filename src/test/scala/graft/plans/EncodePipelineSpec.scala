@@ -119,6 +119,38 @@ class EncodePipelineSpec extends SparkTestBase {
     assert(urls() === read)
   }
 
+  test("a file put in a part directory during an append is never recorded; vacuum reclaims it") {
+    val docs = WebDocGen.dataset(spark, 400, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 64)
+    val before = EncodePipeline.currentFiles(spark, out)
+    val src = new java.io.File(new java.net.URI(before.head._2))
+    val copy = new java.io.File(s"$out/data/__part=0/part-copied-during-append.parquet")
+    // the filter drops a copy of a current data file into part 0 on its
+    // first call, i.e. while the append's write runs (without adaptive
+    // execution the filter runs inside the write job)
+    val copyOnce = udf { (_: String) =>
+      if (!copy.exists())
+        scala.util.Try(java.nio.file.Files.copy(src.toPath, copy.toPath))
+      true
+    }
+    val extra = docs.withColumn("url", concat(col("url"), lit("#b")))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try assert(EncodePipeline.appendCommit(extra.filter(copyOnce(col("url"))), "url", out,
+      partitions = 4, blockSize = 64, batchId = 1L))
+    finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(copy.exists())
+    val after = EncodePipeline.currentFiles(spark, out).map(f => EncodePipeline.fileSuffix(f._2))
+    assert(!after.contains("__part=0/" + copy.getName))
+    assert(after.size > before.size)
+    val urls = EncodePipeline.decodeShared(spark, out, docs.schema)
+      .select("url").collect().map(_.getString(0)).toSeq.sorted
+    assert(urls === docs.union(extra).select("url").collect().map(_.getString(0)).toSeq.sorted)
+    assert(EncodePipeline.vacuum(spark, out) === 1)
+    assert(!copy.exists())
+  }
+
   test("a data file written and then read holds one footer entry in the metadata cache") {
     val docs = WebDocGen.dataset(spark, 400, 4).toDF()
     val out = tmpDir()

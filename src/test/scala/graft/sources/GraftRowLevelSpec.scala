@@ -1,8 +1,10 @@
 package graft.sources
 
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 
 import graft.SparkTestBase
+import graft.core.Bloom
 import graft.plans.EncodePipeline
 
 /** SQL UPDATE / MERGE INTO / complex DELETE through the catalog — the
@@ -114,6 +116,37 @@ class GraftRowLevelSpec extends SparkTestBase {
         partExpr = Some(lit(part)))
       assert(blobs(written) === blobs(encoded), f)
     }
+  }
+
+  test("SQL MERGE INTO on a Bloom table: inserted files carry the filters, lookups skip the rest") {
+    val d = WebDocGen.dataset(spark, 250, 4).toDF()
+    val dir = s"$warehouse/db/mb"
+    EncodePipeline.run(d, "url", dir, partitions = 4, blockSize = 64, bloomCols = Seq("url"))
+    d.orderBy("url").limit(40).withColumn("url", concat(col("url"), lit("#new")))
+      .createOrReplaceTempView("mb_src")
+    spark.sql(
+      """MERGE INTO rlo.db.mb t USING mb_src s ON t.url = s.url
+        |WHEN MATCHED THEN UPDATE SET lang = s.lang
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val inserts = dataFiles(dir).keys.filter(_.contains("/delta-")).toSeq
+    assert(inserts.nonEmpty)
+    inserts.foreach(f => assert(spark.read.parquet(f).columns.contains("bm_url"), f))
+    val url = spark.table("mb_src").head().getString(0)
+    val h = Bloom.hashBytes(url.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val all = EncodePipeline.currentFiles(spark, dir).map(_._2)
+    // the files whose stored filters may hold `url`
+    val admitting = all.filter { f =>
+      spark.read.parquet(f).select("bm_url").collect()
+        .exists(r => r.isNullAt(0) || Bloom.maybe(r.getAs[Array[Byte]](0), h))
+    }.toSet
+    assert(admitting.size === 1)
+    val q = spark.read.format("graft").load(dir).filter(col("url") === url)
+    val scan = q.queryExecution.optimizedPlan.collectFirst {
+      case r: DataSourceV2ScanRelation => r.scan.asInstanceOf[GraftScan]
+    }.get
+    assert(scan.planInputPartitions().map(_.asInstanceOf[GraftInputPartition].path).toSet === admitting)
+    assert(scan.description().contains(s" BloomFiles: 1/${all.size}"), scan.description())
+    assert(q.collect().map(_.getString(0)).toSeq === Seq(url))
   }
 
   test("complex DELETE falls back to the delta path (no loud failure)") {
