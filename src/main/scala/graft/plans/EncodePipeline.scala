@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.ParquetWriter
@@ -446,39 +446,67 @@ object EncodePipeline {
     }
   }
 
+  /** fold block row `r` ([[blockSchema]] layout of `cols`) into `acc`,
+    * one column's statistics ([[Manifest.Stats]]) per slot (null = none
+    * yet): the one statistics fold, of the writers and of [[metadata]]. A
+    * null blob is a block of a file written before ALTER TABLE ADD COLUMNS
+    * added the column ([[Manifest.Stats.absent]]). */
+  private def foldBlock(r: InternalRow, cols: Seq[ColPlan], acc: Array[Manifest.Stats]): Unit =
+    cols.indices.foreach { c =>
+      val st = if (r.isNullAt(3 + 2 * c)) Manifest.Stats.absent(r.getInt(2))
+        else Manifest.Stats.ofBlock(cols(c).kind == 'l', r.getBinary(3 + 2 * c), r.getInt(2),
+          r.getLong(4 + 2 * c))
+      acc(c) = if (acc(c) == null) st else acc(c).merge(st)
+    }
+
   /** write block rows ([[blockSchema]] layout, in runs of equal `__part`)
     * as data files of `outDir`: one snappy parquet file per run, at
     * `<outDir>/data/__part=N/<prefix>-<UUID>.parquet`, holding `__block,
     * __cnt`, then `e_c, r_c` for each of `cols` (the rows' columns, in
     * order), then `bm_c` = [[graft.core.Bloom.ofBlob]]`(e_c)` for each of
-    * `bloomCols` among `cols`. Returns the paths it wrote: the task that
-    * writes a file names it, so no listing ever has to find it. The one
+    * `bloomCols` among `cols`. Each block's statistics are folded
+    * ([[Manifest.Stats]]) as it is written, and each file is reported with
+    * its path as the manifest records it ([[recordedPath]]) and its
+    * per-column statistics: the task that writes a file describes it, so
+    * no listing has to find it and no read has to measure it. The one
     * writer of data files, for [[land]] and the row-level delta writers. */
   private[graft] def writeBlocks(rows: Iterator[InternalRow], conf: Configuration,
-                                 outDir: String, prefix: String, cols: Seq[String],
-                                 bloomCols: Seq[String]): Seq[String] = {
-    val blooms = bloomCols.distinct.map(cols.indexOf).filter(_ >= 0)
+                                 outDir: String, prefix: String, cols: Seq[ColPlan],
+                                 bloomCols: Seq[String]): Seq[Manifest.FileStats] = {
+    val names = cols.map(_.name)
+    val blooms = bloomCols.distinct.map(names.indexOf).filter(_ >= 0)
     // required as in [[blockSchema]]; a Bloom filter is null for an all-null block
     val b = Types.buildMessage()
     b.addField(Types.required(PrimitiveTypeName.INT32).named("__block"))
     b.addField(Types.required(PrimitiveTypeName.INT32).named("__cnt"))
-    cols.foreach { c =>
+    names.foreach { c =>
       b.addField(Types.required(PrimitiveTypeName.BINARY).named("e_" + c))
       b.addField(Types.required(PrimitiveTypeName.INT64).named("r_" + c))
     }
-    blooms.foreach(c => b.addField(Types.optional(PrimitiveTypeName.BINARY).named("bm_" + cols(c))))
+    blooms.foreach(c => b.addField(Types.optional(PrimitiveTypeName.BINARY).named("bm_" + names(c))))
     val schema = b.named("graft_block")
     val groups = new SimpleGroupFactory(schema)
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
+    val fs = new Path(outDir).getFileSystem(conf)
+    val files = scala.collection.mutable.ArrayBuffer.empty[Manifest.FileStats]
+    var stats: Array[Manifest.Stats] = null
     var writer: ParquetWriter[Group] = null
+    var path: Path = null
     var part = 0
+    def close(): Unit = if (writer != null) {
+      writer.close()
+      writer = null
+      files += Manifest.FileStats(recordedPath(path, fs), part, names.zip(stats))
+    }
+    // a failed write closes its open file, keeping the write's own error,
+    // and reports nothing: its files stay unrecorded orphans
     try rows.foreach { r =>
       if (writer == null || r.getInt(0) != part) {
-        if (writer != null) writer.close()
+        close()
         part = r.getInt(0)
-        files += s"$outDir/data/__part=$part/$prefix-${java.util.UUID.randomUUID()}.parquet"
-        writer = ExampleParquetWriter.builder(new Path(files.last)).withConf(conf)
+        path = new Path(s"$outDir/data/__part=$part/$prefix-${java.util.UUID.randomUUID()}.parquet")
+        writer = ExampleParquetWriter.builder(path).withConf(conf)
           .withType(schema).withCompressionCodec(CompressionCodecName.SNAPPY).build()
+        stats = new Array(cols.length)
       }
       val g = groups.newGroup()
       g.add(0, r.getInt(1))
@@ -487,14 +515,24 @@ object EncodePipeline {
         g.add(2 + 2 * c, Binary.fromConstantByteArray(r.getBinary(3 + 2 * c)))
         g.add(3 + 2 * c, r.getLong(4 + 2 * c))
       }
+      foldBlock(r, cols, stats)
       blooms.iterator.zipWithIndex.foreach { case (c, i) =>
         val bm = graft.core.Bloom.ofBlob(r.getBinary(3 + 2 * c))
         if (bm != null) g.add(2 + 2 * cols.length + i, Binary.fromConstantByteArray(bm))
       }
       writer.write(g)
-    } finally if (writer != null) writer.close()
+    } catch { case e: Throwable => if (writer != null) scala.util.Try(writer.close()); throw e }
+    close()
     files.toSeq
   }
+
+  /** how the manifest spells data file `path` of `fs`: its URI qualified
+    * by `fs`, as `fs` names the files it lists and `input_file_name()`
+    * names a file Spark reads (`file:///…` on the local file system),
+    * spelled without a file-system call. The writers report their files
+    * this way and [[analyzeTable]] spells the files it lists this way. */
+  private[graft] def recordedPath(path: Path, fs: FileSystem): String =
+    fs.makeQualified(Path.getPathWithoutSchemeAndAuthority(fs.makeQualified(path))).toUri.toString
 
   /** decode block rows back into the original schema — join-free: each block
     * row expands in place to its `__cnt` source rows. Same InternalRow-level
@@ -632,88 +670,26 @@ object EncodePipeline {
     db
   }
 
-  /** per-(part, column) metrics: rows, blocks, raw vs encoded bytes, codecs,
-    * plus header-derived value bounds for long-kind columns (the zone-map /
-    * Iceberg-manifest `lower_bound`/`upper_bound` parity columns — readers
-    * can skip whole parts whose [value_lo, value_hi] misses a predicate
-    * without touching data files). */
-  def metadata(enc: DataFrame, sourceSchema: StructType): DataFrame =
-    metadataEx(enc, sourceSchema, withFiles = false)
-
-  /** [[metadata]] plus the per-part `data_files` list computed IN THE SAME
-    * aggregation pass (`withFiles = true`; `enc` must then be a single
-    * parquet relation so input_file_name() binds). Every data file holds
-    * whole blocks — all columns of a part's blocks live in the same files —
-    * so the per-(part, column) file set equals the per-part file set the
-    * old separate partFiles pass computed, and the commit paths save one
-    * full scan of the freshly written data. */
-  private def metadataEx(enc: DataFrame, sourceSchema: StructType,
-                         withFiles: Boolean): DataFrame = {
+  /** per-(part, column) metrics of `enc`'s block rows: rows, blocks, raw vs
+    * encoded bytes, codecs, header-derived value bounds for long-kind
+    * columns (the zone-map / Iceberg-manifest `lower_bound`/`upper_bound`
+    * parity columns — readers can skip whole parts whose [value_lo,
+    * value_hi] misses a predicate without touching data files), exact
+    * value statistics, string bounds, null counts and NDV sketches: the
+    * statistics columns of a manifest row ([[Manifest.statsSchema]]). The
+    * statistics fold ([[Manifest.Stats]]) runs over each task's blocks and
+    * the tasks' results merge on the driver, which returns them as a local
+    * relation: one Spark job over `enc`, and no data file is opened beyond
+    * what computing `enc` reads. */
+  def metadata(enc: DataFrame, sourceSchema: StructType): DataFrame = {
     val plans = plan(sourceSchema)
-    val nullRange = lit(null).cast("struct<lo:bigint,hi:bigint>")
-    val nullRangeS = lit(null).cast("struct<lo:binary,hi:binary>")
-    val nullStats = lit(null).cast("struct<min:bigint,max:bigint,sum:bigint,cnt:bigint>")
-    val perCol = plans.map { p =>
-      struct(lit(p.name).as("column"), col("e_" + p.name).as("blob"), col("r_" + p.name).as("raw"),
-        (if (p.kind == 'l') blob_range(col("e_" + p.name)) else nullRange).as("rng"),
-        (if (p.kind != 'l') blob_range_str(col("e_" + p.name)) else nullRangeS).as("rng_s"),
-        // EXACT attained stats (long-kind only): the scan-free aggregate
-        // columns. blob_range stays the pruning zone map (representable
-        // bounds, era-stable semantics); these serve min/max/sum/count.
-        (if (p.kind == 'l') blob_stats(col("e_" + p.name)) else nullStats).as("st"),
-        blob_null_count(col("e_" + p.name)).as("nulls"),
-        // NDV sketch per block (Iceberg Puffin theta-sketch parity at our
-        // manifest grain); null = unknowable → coalesced to explicit poison
-        // so the merge can distinguish it from an Aggregator-skipped row
-        coalesce(blob_ndv_sketch(col("e_" + p.name)),
-          lit(graft.core.Kmv.poison)).as("ndv"))
-    }
-    // string upper bounds: a null block hi (upper-truncation impossible)
-    // means unbounded above and must dominate the part max — max() would
-    // silently ignore it
-    val hiUnbounded = max(when(col("c.rng_s").isNotNull && col("c.rng_s.hi").isNull, 1).otherwise(0)) === 1
-    val lead =
-      if (withFiles) Seq(col("__part"), col("__cnt"), input_file_name().as("__ifile"))
-      else Seq(col("__part"), col("__cnt"))
-    val fileAgg =
-      if (withFiles) Seq(sort_array(collect_set(col("__ifile"))).as("data_files"))
-      else Nil
-    val aggs = Seq(
-        sum(col("__cnt")).as("rows"),
-        count(lit(1)).as("blocks"),
-        sum(col("c.raw")).as("raw_bytes"),
-        sum(octet_length(col("c.blob"))).as("encoded_bytes"),
-        sort_array(collect_set(blob_codec(col("c.blob")))).as("codecs"),
-        min(col("c.rng.lo")).as("value_lo"),
-        max(col("c.rng.hi")).as("value_hi"),
-        min(col("c.st.min")).as("value_min"),
-        max(col("c.st.max")).as("value_max"),
-        // null = unknown (never a wrapped number): poisoned by any block
-        // whose own sum overflowed (st present, sum null), and try_sum
-        // nulls out a part-level overflow instead of ANSI-throwing —
-        // far-future-timestamp parts encode fine, they just decline the
-        // scan-free SUM path
-        when(max((col("c.st").isNotNull && col("c.st.sum").isNull).cast("int")) === 1,
-          lit(null).cast(LongType))
-          .otherwise(try_sum(col("c.st.sum"))).as("value_sum"),
-        sum(col("c.st.cnt")).as("value_count"),
-        min(col("c.rng_s.lo")).as("str_lo"),
-        when(hiUnbounded, lit(null).cast(BinaryType)).otherwise(max(col("c.rng_s.hi"))).as("str_hi"),
-        // Iceberg null_value_counts parity: exact per-(part, column) null
-        // count from the null-wrapper bitmap headers (no payload decode)
-        sum(col("c.nulls")).as("null_value_count"),
-        // per-(part, column) KMV distinct sketch (union of the block
-        // sketches); the 1-byte poison marker — some block was unenumerable,
-        // NDV unknown — lands as SQL NULL in the manifest
-        graft.functions.KmvMerge.of(col("c.ndv")).as("ndv_sketch_raw")
-        ) ++ fileAgg
-    enc.select(lead :+ explode(array(perCol: _*)).as("c"): _*)
-      .groupBy(col("__part"), col("c.column"))
-      .agg(aggs.head, aggs.tail: _*)
-      .withColumn("ndv_sketch",
-        when(octet_length(col("ndv_sketch_raw")) <= 1, lit(null).cast(BinaryType))
-          .otherwise(col("ndv_sketch_raw")))
-      .drop("ndv_sketch_raw")
+    val parts = Bridge.toRdd(enc.select(blockSchema(plans).fieldNames.toSeq.map(col): _*))
+      .mapPartitions { it =>
+        val acc = scala.collection.mutable.HashMap.empty[Int, Array[Manifest.Stats]]
+        it.foreach(r => foldBlock(r, plans, acc.getOrElseUpdate(r.getInt(0), new Array(plans.length))))
+        acc.iterator.map { case (p, st) => Manifest.FileStats(null, p, plans.map(_.name).zip(st)) }
+      }.collect().toSeq
+    statsRows(enc.sparkSession, parts, enc.schema("__part").nullable, files = false)
   }
 
   /** resumable multi-wave run: encode + write data, then commit metadata.
@@ -751,7 +727,6 @@ object EncodePipeline {
         if (d.tables.isEmpty) None
         else {
           writeDicts(spark, outDir, d)
-          Codecs.registerDicts(d.tables) // driver-side kernels (metadata job)
           Some(d)
         }
       }
@@ -765,12 +740,16 @@ object EncodePipeline {
       // the wave's files land beside any orphans a crashed attempt left in
       // its part directories; the manifest records only the new ones, so
       // readers never open the orphans and vacuum reclaims them
-      val waveFiles = land(spark, outDir, enc, bloomCols)
+      val waveFiles = land(spark, outDir, enc, df.schema, bloomCols)
       if (w == failAtWave) throw new RuntimeException(s"injected failure before metadata commit of wave $w")
       commit(spark, outDir, Txn(base = true,
-        rows = Seq(describe(spark, outDir, df.schema, waveFiles, w, waveStart))))
+        rows = Seq(describe(spark, waveFiles, w, waveStart))))
       w += 1
     }
+    // the encoding tasks fold their statistics from blob headers and never
+    // resolve a dictionary; registered only now, for stand-alone kernel
+    // expressions this JVM evaluates on the table's blobs ([[loadDicts]])
+    shared.foreach(d => Codecs.registerDicts(d.tables))
     writeSchemaFile(spark, outDir, df.schema)
     if (customPart.isEmpty)
       writePartSpec(spark, outDir,
@@ -850,14 +829,14 @@ object EncodePipeline {
       case Some(ps) => encode(df, key, ps.partitions, blockSize, Some(ps.expr))
       case None => encode(df, key, partitions, blockSize)
     }
-    val newPaths = land(spark, outDir, enc)
-    if (newPaths.isEmpty) { // empty batch: still commit any staged vectors
+    val newFiles = land(spark, outDir, enc, df.schema)
+    if (newFiles.isEmpty) { // empty batch: still commit any staged vectors
       deletes.foreach(d => commit(spark, outDir, Txn(deletes = Some(d))))
       return deletes.nonEmpty
     }
     val gen = commit(spark, outDir, Txn(deletes = deletes, appends = Seq(
-      describe(spark, outDir, df.schema, newPaths, batchId.toInt, t0, Some(batchId), ref))))
-    writeSchemaFile(spark, outDir, df.schema)
+      describe(spark, newFiles, batchId.toInt, t0, Some(batchId), ref))))
+    writeAppendedSchema(spark, outDir, df.schema)
     // a table CREATED by this commit (gen-less, see [[commit]]) records its
     // placement. Only then: a pre-spec-era table's placement is unknown
     // (host/custom), so stamping "hash" on it would lie to the
@@ -869,23 +848,24 @@ object EncodePipeline {
 
   /** driver-side commit for SQL row-level (delta) writes — the tail ends of
     * [[appendCommit]] and [[deleteWhereLazy]] replayed over files/bitmaps
-    * the executors produced: `insertedFiles` (already under `data/__part=p/`)
-    * commit as a tracked batch and `deletes` as positional vectors, in ONE
+    * the executors produced: `insertedFiles` (already under `data/__part=p/`,
+    * with the statistics their writers reported) commit as a tracked batch
+    * and `deletes` as positional vectors, in ONE
     * transaction ([[commit]]) — a crash before it lands leaves only
     * invisible orphans (untracked data files, inert vectors; [[vacuum]]
     * reclaims both). */
   def commitDelta(spark: SparkSession, outDir: String, sourceSchema: StructType,
-                  insertedFiles: Seq[String],
+                  insertedFiles: Seq[Manifest.FileStats],
                   deletes: Seq[(String, Int, Array[Byte])],
                   batchId: Long): Unit = {
     if (insertedFiles.isEmpty && deletes.isEmpty) return
     import spark.implicits._
     commit(spark, outDir, Txn(
       appends = if (insertedFiles.isEmpty) Nil
-        else Seq(describe(spark, outDir, sourceSchema, insertedFiles, batchId.toInt,
+        else Seq(describe(spark, insertedFiles, batchId.toInt,
           System.currentTimeMillis(), Some(batchId))),
       deletes = if (deletes.isEmpty) None else Some(deletes.toDF("file", "block", "bitmap"))))
-    if (insertedFiles.nonEmpty) writeSchemaFile(spark, outDir, sourceSchema)
+    if (insertedFiles.nonEmpty) writeAppendedSchema(spark, outDir, sourceSchema)
   }
 
   /** OVERWRITE as a snapshot (Iceberg INSERT OVERWRITE parity): replace the
@@ -1048,12 +1028,12 @@ object EncodePipeline {
   private def rewriteParts(spark: SparkSession, outDir: String, schema: StructType,
                            tombstones: Option[ManifestView], cands: Seq[Int], enc: DataFrame,
                            t0: Long, bloomCols: Seq[String] = Nil): Seq[DataFrame] = {
-    val files = land(spark, outDir, enc, bloomCols)
-    val filled = files.map(f => partOfSuffix(fileSuffix(f))).toSet
+    val files = land(spark, outDir, enc, schema, bloomCols)
+    val filled = files.map(_.part).toSet
     val empty = cands.filterNot(filled)
     require(tombstones.nonEmpty || empty.isEmpty,
       s"rewrite wrote no files for parts ${empty.mkString(", ")}")
-    (if (files.isEmpty) Nil else Seq(describe(spark, outDir, schema, files, -1, t0))) ++
+    (if (files.isEmpty) Nil else Seq(describe(spark, files, -1, t0))) ++
       tombstones.flatMap(v => tombstoneRows(spark, v, empty.filter(v.parts.contains), t0))
   }
 
@@ -1144,7 +1124,7 @@ object EncodePipeline {
     * directory) */
   private def tombstoneRows(spark: SparkSession, meta: ManifestView, fullParts: Seq[Int],
                             t0: Long): Option[DataFrame] =
-    if (fullParts.isEmpty) None else Some(
+    if (fullParts.isEmpty) None else Some(stamped(
       meta.toDF(spark).filter(col("__part").isin(fullParts: _*))
         .select(col("__part"), col("column")).distinct()
         .withColumn("rows", lit(0L))
@@ -1157,10 +1137,7 @@ object EncodePipeline {
         .withColumn("str_lo", lit(null).cast("binary"))
         .withColumn("str_hi", lit(null).cast("binary"))
         .withColumn("null_value_count", lit(0L))
-        .withColumn("data_files", array().cast("array<string>"))
-        .withColumn("wave", lit(-1))
-        .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
-        .withColumn("attempt", lit(1)))
+        .withColumn("data_files", array().cast("array<string>")), -1, t0))
 
   /** copy-on-write row-level UPDATE (Iceberg COW parity): rewrite ONLY the
     * parts containing matching rows — every row of an affected part
@@ -1531,13 +1508,8 @@ object EncodePipeline {
         d.withColumn("gen", lit(g)).withColumn("additive", lit(true)))) ++
       marker.map(stamp)
     require(sets.nonEmpty, s"commit($outDir): empty transaction")
-    val all = sets.reduce(_.unionByName(_, allowMissingColumns = true))
-    // one file: coalesce keeps a driver-local row set one task, while
-    // repartition keeps an aggregation over data files parallel up to the
-    // single-task write
-    val local = all.queryExecution.analyzed.collectLeaves()
-      .forall(_.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
-    (if (local) all.coalesce(1) else all.repartition(1))
+    // one file, written by one task: every row set is driver-local
+    sets.reduce(_.unionByName(_, allowMissingColumns = true)).coalesce(1)
       .write.mode("append").parquet(s"$outDir/meta")
     gen.getOrElse(0)
   }
@@ -2473,6 +2445,14 @@ object EncodePipeline {
                                      schema: StructType): Unit =
     writeSideFile(spark, outDir, "schema.json", schema.json)
 
+  /** persist `schema` after a commit that added rows to the table: a
+    * column the recorded schema holds nullable stays nullable, and a
+    * column it lacks is nullable, since the earlier files' rows read it as
+    * null. Only a table with no recorded schema takes `schema` as is. */
+  private def writeAppendedSchema(spark: SparkSession, outDir: String, schema: StructType): Unit =
+    writeSchemaFile(spark, outDir, readSchemaFile(spark, outDir).fold(schema)(old => StructType(
+      schema.map(f => f.copy(nullable = f.nullable || old.find(_.name == f.name).forall(_.nullable))))))
+
   /** the persisted decoded schema, if this table recorded one */
   def readSchemaFile(spark: SparkSession, outDir: String): Option[StructType] =
     readSideFile(spark, outDir, "schema.json")(DataType.fromJson(_).asInstanceOf[StructType])
@@ -2684,44 +2664,57 @@ object EncodePipeline {
       StructType(if (fields.isEmpty) BlockColumns else fields))
   }
 
-  /** write `enc`'s block rows as new data files of `outDir` ([[writeBlocks]]
-    * on the executors, one Spark job), with the Bloom filters of the
-    * table's convention ([[bloomConvention]]) and `bloomCols`, and return
-    * the paths the write tasks report, sorted. Files already in the part
-    * directories, or put there by anyone else during the write, are never
-    * among them; a failed task's files stay unrecorded orphans that
-    * [[vacuum]] reclaims. [[describe]] turns the result into manifest rows. */
-  private def land(spark: SparkSession, outDir: String, enc: DataFrame,
-                   bloomCols: Seq[String] = Nil): Seq[String] = {
+  /** write `enc`'s block rows, the encoding of `schema`'s columns, as new
+    * data files of `outDir` ([[writeBlocks]] on the executors, one Spark
+    * job), with the Bloom filters of the table's convention
+    * ([[bloomConvention]]) and `bloomCols`, and return the files the write
+    * tasks report, with their statistics. Files already in
+    * the part directories, or put there by anyone else during the write,
+    * are never among them; a failed task's files stay unrecorded orphans
+    * that [[vacuum]] reclaims. [[describe]] turns the result into manifest
+    * rows. */
+  private def land(spark: SparkSession, outDir: String, enc: DataFrame, schema: StructType,
+                   bloomCols: Seq[String] = Nil): Seq[Manifest.FileStats] = {
     val conf = Bridge.hadoopConfBroadcast(spark)
-    val cols = enc.columns.toSeq.collect { case c if c.startsWith("e_") => c.stripPrefix("e_") }
     val blooms = bloomConvention(spark, outDir) ++ bloomCols
     Bridge.toRdd(enc).mapPartitions(it =>
-      writeBlocks(it, conf.value, outDir, "part", cols, blooms).iterator).collect().toSeq.sorted
+      writeBlocks(it, conf.value, outDir, "part", plan(schema), blooms).iterator).collect().toSeq
   }
 
-  /** the manifest rows (sans `gen`) describing data files `files` of
-    * `outDir` as committed by wave `wave`: per (part, column) the
-    * statistics and file list read back from the files themselves
-    * ([[metadataEx]]), the commit's `wall_millis` since `t0` and
-    * `attempt` 1, plus `batch_id` for a tracked batch and `ref` for a
-    * branch commit (invisible to main readers until [[fastForward]]
-    * publishes it). No file gives an empty row set. The one description of
-    * new data files: `files` are the paths [[writeBlocks]] reported, whether
+  /** the manifest rows (sans `gen`) describing new data files `files` as
+    * committed by wave `wave`: per (part, column) the files' statistics,
+    * merged ([[Manifest.Stats.merge]]), and their paths, the commit's
+    * `wall_millis` since `t0` and `attempt` 1, plus `batch_id` for a
+    * tracked batch and `ref` for a branch commit (invisible to main readers
+    * until [[fastForward]] publishes it). Built on the driver as a local
+    * relation from what the writers reported: no Spark job, no data file
+    * opened. No file gives an empty row set. The one description of new
+    * data files: `files` are what [[writeBlocks]] reported, whether
     * [[land]] or the row-level delta writers ([[commitDelta]]) ran it. */
-  private def describe(spark: SparkSession, outDir: String, schema: StructType,
-                       files: Seq[String], wave: Int, t0: Long,
+  private def describe(spark: SparkSession, files: Seq[Manifest.FileStats], wave: Int, t0: Long,
                        batchId: Option[Long] = None, ref: Option[String] = None): DataFrame = {
-    val blocks =
-      if (files.nonEmpty) dataFiles(spark, outDir, files)
-      else spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        blockSchema(plan(schema)))
-    val rows = metadataEx(blocks, schema, withFiles = true)
-      .withColumn("wave", lit(wave))
-      .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
-      .withColumn("attempt", lit(1))
-    val batch = batchId.fold(rows)(id => rows.withColumn("batch_id", lit(id)))
+    val described = stamped(statsRows(spark, files, partNullable = true, files = true), wave, t0)
+    val batch = batchId.fold(described)(id => described.withColumn("batch_id", lit(id)))
     ref.fold(batch)(r => batch.withColumn("ref", lit(r)))
+  }
+
+  /** `rows` as manifest rows of commit wave `wave` begun at `t0`, in its
+    * first attempt */
+  private def stamped(rows: DataFrame, wave: Int, t0: Long): DataFrame =
+    rows.withColumn("wave", lit(wave))
+      .withColumn("wall_millis", lit(System.currentTimeMillis() - t0)).withColumn("attempt", lit(1))
+
+  /** one row per (part, column) of `stats`, merged, as a local relation
+    * of [[Manifest.statsSchema]]: with `files`, each row lists the paths of
+    * the files it merges (read only then) */
+  private def statsRows(spark: SparkSession, stats: Seq[Manifest.FileStats], partNullable: Boolean,
+                        files: Boolean): DataFrame = {
+    val rows = stats.flatMap(f => f.columns.map { case (c, st) => (f.part, c) -> (f.path, st) })
+      .groupMap(_._1)(_._2).toSeq.sortBy(_._1).map { case ((p, c), fs) =>
+        org.apache.spark.sql.Row.fromSeq(Seq(p, c) ++ fs.map(_._2).reduce(_ merge _)
+          .cells(Option.when(files)(fs.map(_._1).distinct.sorted)))
+      }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), Manifest.statsSchema(partNullable, files))
   }
 
   /** the columns the table's current data files keep `bm_<col>` Bloom
@@ -2914,59 +2907,44 @@ object EncodePipeline {
     val m = manifestOf(spark, outDir)
     val view = m.view(None, None)
     val cur = view.rows.filter(m.part(_) >= 0)
-    // the parts with a row from before file tracking, and their directories' files
+    // the parts with a row from before file tracking, and their directories'
+    // files, spelled as the writers spell theirs ([[recordedPath]])
     val listed = cur.filter(m.isNull(_, m.iFiles)).map(m.part).distinct
-    val fs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val listedPaths = listed.flatMap { p =>
-      val dir = new org.apache.hadoop.fs.Path(s"$outDir/data/__part=$p")
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.map(_.getPath.getName).filter(_.startsWith("part-"))
-        .map(n => s"$dir/$n")
-    }
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def inPart(p: Int) = Option(fs.globStatus(new Path(s"$outDir/data/__part=$p/part-*"))).toSeq.flatten
+    val listedFiles = listed.map(p => p -> inPart(p).map(st => recordedPath(st.getPath, fs)).sorted)
+      .filter(_._2.nonEmpty)
     // the other parts' recorded lists (every column of a commit carries the same one)
     val recorded = cur.filterNot(r => listed.contains(m.part(r))).groupBy(m.part)
       .map { case (p, rs) => p -> rs.flatMap(m.filesOf).distinct.sorted }.filter(_._2.nonEmpty)
-    val files = recorded.values.flatten.map(f => s"$outDir/data/${fileSuffix(f)}").toSeq ++ listedPaths
+    val partFiles = recorded.toSeq ++ listedFiles
+    val files = partFiles.flatMap(_._2).map(f => s"$outDir/data/${fileSuffix(f)}").distinct
     if (files.isEmpty) return m.currentGen // nothing readable
     val t0 = System.currentTimeMillis()
     val curDF = {
       val d = view.toDF(spark, cur)
       if (m.has("data_files")) d else d.withColumn("data_files", lit(null).cast("array<string>"))
     }
-    // driver-side kernels (same single-JVM pattern as the metadata job):
-    // shared-dictionary blobs need the registry for their string bounds
-    loadDicts(spark, outDir) // registers them
-    val written = dataFiles(spark, outDir, files.distinct)
-    // a listed part's files, named as input_file_name() names them — how
-    // every commit records its files
-    val partFiles = (recorded.toSeq ++ (if (listed.isEmpty) Nil
-      else written.filter(col("__part").isin(listed: _*))
-        .select(col("__part"), input_file_name()).distinct().collect()
-        .groupBy(_.getInt(0)).map { case (p, rs) => p -> rs.map(_.getString(1)).toSeq.sorted }))
-      .toDF("__part", "data_files")
+    val written = dataFiles(spark, outDir, files)
+    val partFilesDF = partFiles.toDF("__part", "data_files")
     // only columns that exist in the committed files are recomputable
     // (ALTER TABLE ADD COLUMNS before any insert leaves no e_ column)
-    val avail = written.columns.toSet
-    val schemaAvail = StructType(schema.fields.filter(f => avail.contains("e_" + f.name)))
-    val recomputable = schemaAvail.fields.map(_.name).toSeq
+    val schemaAvail = StructType(schema.fields.filter(f => written.columns.contains("e_" + f.name)))
     val refreshed: Option[DataFrame] = if (schemaAvail.isEmpty) None else {
       // refresh EXACTLY the (part, column) pairs current today — metadata()
       // emits rows for every schema column, but a part that predates an
       // added column has no manifest row for it and must not gain one
       val pairs = curDF.filter(col("data_files").isNull || size(col("data_files")) > 0)
         .select(col("__part"), col("column")).distinct()
-      Some(metadata(written, schemaAvail)
-        .join(pairs, Seq("__part", "column"), "left_semi")
-        .join(partFiles, Seq("__part"))
-        .withColumn("wave", lit(-1))
-        .withColumn("wall_millis", lit(System.currentTimeMillis() - t0))
-        .withColumn("attempt", lit(1)))
+      Some(stamped(metadata(written, schemaAvail).join(pairs, Seq("__part", "column"), "left_semi")
+        .join(partFilesDF, Seq("__part")), -1, t0))
     }
     // carried verbatim: empty (tombstoned) rows, plus rows whose column
     // analyze could not recompute (absent from every data file) — those of
     // a listed part take its files
-    val carried = curDF.filter(size(col("data_files")) === 0 || !col("column").isin(recomputable: _*))
-      .join(partFiles.withColumnRenamed("data_files", "__listed"), Seq("__part"), "left")
+    val carried = curDF.filter(size(col("data_files")) === 0 ||
+        !col("column").isin(schemaAvail.fieldNames.toSeq: _*))
+      .join(partFilesDF.withColumnRenamed("data_files", "__listed"), Seq("__part"), "left")
       .withColumn("data_files", coalesce(col("data_files"), col("__listed"))).drop("__listed")
     val combined0 = refreshed.map(_.unionByName(carried, allowMissingColumns = true))
       .getOrElse(carried)

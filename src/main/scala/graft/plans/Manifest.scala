@@ -1,9 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
-import graft.core.Kmv
+import graft.core.{Codecs, Kmv}
 
 /** An immutable driver-side snapshot of one table's manifest: every row of
   * `outDir/meta` as read, built once per listing signature of that
@@ -262,17 +262,98 @@ object Manifest {
     case _ => 16L
   }
 
-  /** per-(part, column) sums over a view's rows, the grain table
-    * statistics and scan estimates merge from */
-  final case class PartColumn(part: Int, column: String, rows: Long, rawBytes: Long,
-                              unknownNulls: Long, nulls: Long,
-                              vMin: Option[Long], vMax: Option[Long],
-                              // None = unknown: some commit with values has
-                              // no recorded sum, or the total overflows
-                              vSum: Option[Long], vCount: Long,
-                              // merged KMV sketch (poison = unknown); null
-                              // when the manifest predates sketches
-                              sketch: Array[Byte])
+  /** one column's statistics over a set of its blocks — one block, one
+    * data file, or one part's new files — as the (part, column) manifest
+    * row records them (Iceberg `DataFile` metrics at the block grain):
+    * rows, blocks, raw and encoded bytes, codecs; for long-kind columns the
+    * header-derived representable bounds `lo`/`hi` and the exact attained
+    * `min`/`max`, non-null `count` and `sum` (None = unknown: a block's or
+    * the total's sum overflows); for string and binary columns the
+    * truncated bounds `strLo`/`strHi` (null = no values; a null `strHi`
+    * beside a `strLo` = unbounded above); null count; KMV `sketch`
+    * (poison = unknown). [[merge]] is associative and commutative, so
+    * block statistics roll up to a file's, and files' to a part's, in any
+    * order. */
+  final case class Stats(rows: Long, blocks: Long, rawBytes: Long, encodedBytes: Long,
+                         codecs: Set[String], lo: Option[Long], hi: Option[Long],
+                         min: Option[Long], max: Option[Long], count: Long, sum: Option[Long],
+                         strLo: Array[Byte], strHi: Array[Byte], nulls: Long, sketch: Array[Byte]) {
+    private def unboundedHi = strLo != null && strHi == null
+
+    def merge(o: Stats): Stats = {
+      def cmp(a: Array[Byte], b: Array[Byte]) = java.util.Arrays.compareUnsigned(a, b)
+      Stats(rows + o.rows, blocks + o.blocks, rawBytes + o.rawBytes,
+        encodedBytes + o.encodedBytes, codecs ++ o.codecs,
+        (lo ++ o.lo).reduceOption(_ min _), (hi ++ o.hi).reduceOption(_ max _),
+        (min ++ o.min).reduceOption(_ min _), (max ++ o.max).reduceOption(_ max _), count + o.count,
+        for (a <- sum; b <- o.sum; s <- scala.util.Try(Math.addExact(a, b)).toOption) yield s,
+        if (strLo == null || (o.strLo != null && cmp(o.strLo, strLo) < 0)) o.strLo else strLo,
+        if (unboundedHi || o.unboundedHi) null
+        else if (strHi == null || (o.strHi != null && cmp(o.strHi, strHi) > 0)) o.strHi else strHi,
+        nulls + o.nulls, Kmv.merge(sketch, o.sketch))
+    }
+
+    /** the manifest cells after `__part` and `column` ([[statsSchema]]
+      * order), with `files` as the `data_files` cell when given; an
+      * unknown sketch is a null cell */
+    def cells(files: Option[Seq[String]]): Seq[Any] = {
+      def opt(v: Option[Long]): Any = v.getOrElse(null)
+      Seq(rows, blocks, rawBytes, encodedBytes, codecs.toSeq.sorted,
+        opt(lo), opt(hi), opt(min), opt(max),
+        if (count == 0L) null else opt(sum), if (count == 0L) null else count,
+        strLo, strHi, nulls) ++ files :+ (if (Kmv.isPoison(sketch)) null else sketch)
+    }
+  }
+
+  object Stats {
+    /** the statistics of one encoded block of `rows` values (`raw` input
+      * bytes) of a long-kind (`long`) or string/binary column: the kernels
+      * the `blob_*` SQL functions call, read from the blob's headers where
+      * they can be. None of them resolves a shared dictionary. */
+    def ofBlock(long: Boolean, blob: Array[Byte], rows: Int, raw: Long): Stats = {
+      val range = if (long) Option(Codecs.rangeOfLong(blob)) else None
+      val st = if (long) Option(Codecs.statsOfLong(blob)) else None
+      val (strLo, strHi) = Option(if (long) null else Codecs.rangeOfStr(blob)).getOrElse((null, null))
+      Stats(rows, 1L, raw, blob.length, Set(Codecs.codecOf(blob)),
+        range.map(_._1), range.map(_._2), st.map(_.min), st.map(_.max),
+        st.fold(0L)(_.count), st.fold(Option(0L))(s => Option.when(s.sumValid)(s.sum)),
+        strLo, strHi, Codecs.nullCountOf(blob), Option(Kmv.ofBlob(blob)).getOrElse(Kmv.poison))
+    }
+
+    /** the statistics of a block of `rows` rows with no blob for the
+      * column, as a file written before ALTER TABLE ADD COLUMNS added it
+      * reads: `rows` nulls, so no bytes, codec or values and no distinct
+      * value, which is how the reader decodes the block */
+    def absent(rows: Int): Stats = Stats(rows, 1L, 0L, 0L, Set.empty, None, None, None, None,
+      0L, Some(0L), null, null, rows, Kmv.empty)
+  }
+
+  /** the schema of (part, column) statistics rows: with `files`, each row
+    * lists the data files it describes */
+  def statsSchema(partNullable: Boolean, files: Boolean): StructType = StructType(Seq(
+    StructField("__part", IntegerType, partNullable), StructField("column", StringType, nullable = false),
+    StructField("rows", LongType), StructField("blocks", LongType, nullable = false),
+    StructField("raw_bytes", LongType), StructField("encoded_bytes", LongType),
+    StructField("codecs", ArrayType(StringType, containsNull = false), nullable = false),
+    StructField("value_lo", LongType), StructField("value_hi", LongType),
+    StructField("value_min", LongType), StructField("value_max", LongType),
+    StructField("value_sum", LongType), StructField("value_count", LongType),
+    StructField("str_lo", BinaryType), StructField("str_hi", BinaryType),
+    StructField("null_value_count", LongType)) ++
+    (if (files) Seq(StructField("data_files", ArrayType(StringType, containsNull = false),
+      nullable = false)) else Nil) :+
+    StructField("ndv_sketch", BinaryType))
+
+  /** a data file as the task that wrote it reports it: the path the
+    * manifest records, its part, and each column's statistics over its
+    * blocks */
+  final case class FileStats(path: String, part: Int, columns: Seq[(String, Stats)])
+
+  /** per-(part, column) statistics merged over a view's rows (no
+    * particular order), the grain table statistics and scan estimates
+    * merge from; `unknownNulls` counts the rows with no recorded null
+    * count */
+  final case class PartColumn(part: Int, column: String, stats: Stats, unknownNulls: Long)
 
   /** one column's totals over a set of parts: the rule by which manifest
     * sums become column statistics ([[ManifestView.columnTotals]]) */
@@ -348,7 +429,7 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
   def survivingIsNull(column: String): Array[Int] = {
     if (!m.has("null_value_count")) return parts
     val proved = partColumns.filter(pc => pc.column == column && pc.unknownNulls == 0 &&
-      pc.nulls == 0 && pc.rows == partTotals(pc.part)._1).map(_.part).toSet
+      pc.stats.nulls == 0 && pc.stats.rows == partTotals(pc.part)._1).map(_.part).toSet
     parts.filterNot(proved)
   }
 
@@ -371,12 +452,10 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
     * ceil(rows / blockSize) (under-filled blocks). A part's rows are
     * (column × commit)-grained. */
   def compactCandidates(blockSize: Int, minFiles: Int): Seq[Int] = {
-    def sum(rs: Seq[Row], c: String) = rs.iterator.map(m.longAt(_, m.at(c)).getOrElse(0L)).sum
-    rows.groupBy(m.part).toSeq.collect { case (p, rs) if
-        (rs.flatMap(m.filesOf).distinct.size >= minFiles ||
-          rs.groupBy(m.column).values.exists(cs =>
-            sum(cs, "blocks") > math.ceil(sum(cs, "rows").toDouble / blockSize))) => p
-    }.sorted
+    val underFilled = partColumns.collect {
+      case pc if pc.stats.blocks > math.ceil(pc.stats.rows.toDouble / blockSize) => pc.part }.toSet
+    rows.groupBy(m.part).toSeq.collect { case (p, rs)
+      if rs.flatMap(m.filesOf).distinct.size >= minFiles || underFilled(p) => p }.sorted
   }
 
   /** [[EncodePipeline.compactSmallFiles]]'s plan. A commit is the rows
@@ -421,29 +500,23 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
   /** suffixes ("__part=p/name") of every data file */
   lazy val fileSuffixes: Set[String] = inventory.keySet
 
-  /** per-(part, column) sums and sketch merges (no particular order) */
+  /** per-(part, column) statistics ([[Manifest.Stats.merge]] over the
+    * rows' cells). A row with values but no recorded sum makes the sum
+    * unknown; a null or absent sketch is poison. */
   lazy val partColumns: Seq[PartColumn] = {
-    val (iNulls, iMin, iMax, iSum, iCnt, iSk) = (m.at("null_value_count"),
-      m.at("value_min"), m.at("value_max"), m.at("value_sum"), m.at("value_count"),
-      m.at("ndv_sketch"))
-    val (iRows, iRaw) = (m.at("rows"), m.at("raw_bytes"))
+    val Seq(iRows, iBlocks, iRaw, iEnc, iLo, iHi, iMin, iMax, iSum, iCnt, iNulls, iSk) =
+      Seq("rows", "blocks", "raw_bytes", "encoded_bytes", "value_lo", "value_hi", "value_min",
+        "value_max", "value_sum", "value_count", "null_value_count", "ndv_sketch").map(m.at)
+    def stats(r: Row): Stats = {
+      def long(i: Int) = m.longAt(r, i).getOrElse(0L)
+      val count = long(iCnt)
+      Stats(long(iRows), long(iBlocks), long(iRaw), long(iEnc), Set.empty,
+        m.longAt(r, iLo), m.longAt(r, iHi), m.longAt(r, iMin), m.longAt(r, iMax), count,
+        if (count > 0L && m.isNull(r, iSum)) None else Some(long(iSum)), null, null,
+        long(iNulls), if (m.isNull(r, iSk)) Kmv.poison else r.getAs[Array[Byte]](iSk))
+    }
     rows.groupBy(r => (m.part(r), m.column(r))).toSeq.map { case ((p, c), rs) =>
-      def sumOf(i: Int) = rs.iterator.map(m.longAt(_, i).getOrElse(0L)).sum
-      def present(i: Int) = rs.flatMap(m.longAt(_, i))
-      val sums = present(iSum)
-      // a commit with values but no recorded sum is unknown; so is a total
-      // that overflows a long
-      val sum =
-        if (sums.isEmpty || rs.exists(r => m.longAt(r, iCnt).exists(_ > 0) && m.isNull(r, iSum))) None
-        else sums.foldLeft(Option(0L))((acc, v) =>
-          acc.flatMap(a => scala.util.Try(Math.addExact(a, v)).toOption))
-      val sketch =
-        if (iSk < 0) null
-        else rs.foldLeft(Kmv.empty)((acc, r) =>
-          Kmv.merge(acc, if (r.isNullAt(iSk)) Kmv.poison else r.getAs[Array[Byte]](iSk)))
-      PartColumn(p, c, sumOf(iRows), sumOf(iRaw),
-        rs.count(m.isNull(_, iNulls)), sumOf(iNulls),
-        present(iMin).minOption, present(iMax).maxOption, sum, sumOf(iCnt), sketch)
+      PartColumn(p, c, rs.map(stats).reduce(_ merge _), rs.count(m.isNull(_, iNulls)))
     }
   }
 
@@ -454,20 +527,20 @@ final class ManifestView private[plans] (m: Manifest, val rows: IndexedSeq[Row])
   def columnTotals(keepPart: Int => Boolean): Map[String, ColumnTotal] =
     partColumns.filter(pc => pc.column != null && keepPart(pc.part)).groupBy(_.column)
       .map { case (c, pcs) =>
-        val sums = pcs.map(pc => if (pc.vCount == 0L) Some(BigInt(0)) else pc.vSum.map(BigInt(_)))
-        c -> ColumnTotal(pcs.map(_.rows).sum, pcs.map(_.nulls).sum,
+        val ss = pcs.map(_.stats)
+        val sums = ss.map(s => if (s.count == 0L) Some(BigInt(0)) else s.sum.map(BigInt(_)))
+        c -> ColumnTotal(ss.map(_.rows).sum, ss.map(_.nulls).sum,
           pcs.forall(_.unknownNulls == 0),
-          pcs.flatMap(_.vMin).minOption, pcs.flatMap(_.vMax).maxOption, pcs.map(_.vCount).sum,
+          ss.flatMap(_.min).minOption, ss.flatMap(_.max).maxOption, ss.map(_.count).sum,
           if (sums.contains(None)) None else Some(sums.flatten.sum),
-          if (pcs.exists(_.sketch == null)) None
-          else Option(Kmv.estimate(pcs.map(_.sketch).foldLeft(Kmv.empty)(Kmv.merge))))
+          Option(Kmv.estimate(ss.map(_.sketch).reduce(Kmv.merge))))
       }
 
   /** per part: (rows = its widest column's row count, raw bytes summed over
     * columns) — the scan's size estimate */
   lazy val partTotals: Map[Int, (Long, Long)] =
     partColumns.groupBy(_.part).map { case (p, cs) =>
-      p -> (cs.map(_.rows).max, cs.map(_.rawBytes).sum)
+      p -> (cs.map(_.stats.rows).max, cs.map(_.stats.rawBytes).sum)
     }
 
   /** file inventory (suffix → path) of every data file */

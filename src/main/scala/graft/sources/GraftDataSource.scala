@@ -12,7 +12,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, RecordReader}
+import org.apache.parquet.io.{ColumnIOFactory, MessageColumnIO, ParquetDecodingException, RecordReader}
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -1588,11 +1588,13 @@ private[graft] object ReaderDiag {
 /** one parquet data file opened once: its footer schema, then the records
   * of a projection of it as example-API `Group`s, row group by row group.
   * These are the records `ParquetReader` over `GroupReadSupport` yields,
-  * without that reader's second footer read. */
+  * without that reader's second footer read. Every page read is checked
+  * against the CRC its writer stored, and a page that fails the check, or
+  * fails to decode, throws an error naming this file. */
 private[sources] final class GroupFile(path: Path, conf: Configuration)
     extends java.io.Closeable {
   private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
-    HadoopReadOptions.builder(conf, path).build())
+    HadoopReadOptions.builder(conf, path).usePageChecksumVerification(true).build())
   val schema: MessageType = reader.getFooter.getFileMetaData.getSchema
   private var io: MessageColumnIO = _
   private var converter: GroupRecordConverter = _
@@ -1610,7 +1612,7 @@ private[sources] final class GroupFile(path: Path, conf: Configuration)
   }
 
   /** the next record of the projection; null at end of file */
-  def read(): Group = {
+  def read(): Group = try {
     while (left == 0) {
       val pages = reader.readNextRowGroup()
       if (pages == null) return null
@@ -1619,6 +1621,9 @@ private[sources] final class GroupFile(path: Path, conf: Configuration)
     }
     left -= 1
     records.read()
+  } catch {
+    case e: ParquetDecodingException =>
+      throw new ParquetDecodingException(s"graft data file $path: ${e.getMessage}", e)
   }
 
   override def close(): Unit = reader.close()

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.plans.EncodePipeline
+import graft.plans.{EncodePipeline, Manifest}
 
 /** SQL UPDATE / MERGE INTO / complex DELETE over graft tables — the Iceberg
   * merge-on-read delta-write architecture on Spark's row-level-operation
@@ -74,8 +74,9 @@ class GraftDeltaWrite(outDir: String, tableSchema: StructType,
     new GraftDeltaBatchWrite(outDir, tableSchema, info)
 }
 
-/** one writer task's outcome: data files it wrote, bitmap fragments it built */
-case class GraftDeltaMessage(insertedFiles: Seq[String],
+/** one writer task's outcome: data files it wrote, with their statistics,
+  * and bitmap fragments it built */
+case class GraftDeltaMessage(insertedFiles: Seq[Manifest.FileStats],
                              deletes: Seq[(String, Int, Array[Byte])])
     extends WriterCommitMessage
 
@@ -93,19 +94,16 @@ class GraftDeltaBatchWrite(outDir: String, tableSchema: StructType,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
-    val msgs = messages.collect { case m: GraftDeltaMessage => m }
-    val files = msgs.flatMap(_.insertedFiles).toSeq.sorted
-    val deletes = msgs.flatMap(_.deletes).toSeq
-    EncodePipeline.commitDelta(spark, outDir, tableSchema, files, deletes,
-      EncodePipeline.nextBatchId(spark, outDir))
+    val msgs = messages.collect { case m: GraftDeltaMessage => m }.toSeq
+    EncodePipeline.commitDelta(spark, outDir, tableSchema, msgs.flatMap(_.insertedFiles),
+      msgs.flatMap(_.deletes), EncodePipeline.nextBatchId(spark, outDir))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    messages.collect { case m: GraftDeltaMessage => m }
-      .flatMap(_.insertedFiles)
-      .foreach(f => try fs.delete(new Path(f), false) catch { case _: Exception => () })
+    messages.collect { case m: GraftDeltaMessage => m }.flatMap(_.insertedFiles)
+      .foreach(f => try fs.delete(new Path(f.path), false) catch { case _: Exception => () })
   }
 }
 
@@ -221,7 +219,7 @@ class GraftDeltaWriter(f: GraftDeltaWriterFactory, taskId: Long)
     }
     val files = EncodePipeline.writeBlocks(
       new EncodePipeline.BlockIterator(canon, plans, EncodePipeline.DefaultBlockSize, null),
-      f.conf.value, f.outDir, s"delta-$taskId", plans.map(_.name).toSeq, f.bloomCols)
+      f.conf.value, f.outDir, s"delta-$taskId", plans.toSeq, f.bloomCols)
     GraftDeltaMessage(files,
       bitmaps.toSeq.map { case ((file, block), bm) => (file, block, bm) })
   }

@@ -79,16 +79,16 @@ class GraftStreamingWrite(outDir: String, tableSchema: StructType,
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
     val files = messages.collect { case m: GraftDeltaMessage => m }
-      .flatMap(_.insertedFiles).toSeq.sorted
+      .flatMap(_.insertedFiles).toSeq
     if (EncodePipeline.batchCommitted(spark, outDir, epochId))
-      dropFiles(spark, files) // duplicates of an epoch already in
+      dropFiles(spark, files.map(_.path)) // duplicates of an epoch already in
     else EncodePipeline.commitDelta(spark, outDir, schema, files,
       deletes = Nil, batchId = epochId)
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     dropFiles(SparkSession.active,
-      messages.collect { case m: GraftDeltaMessage => m }.flatMap(_.insertedFiles).toSeq)
+      messages.collect { case m: GraftDeltaMessage => m }.flatMap(_.insertedFiles.map(_.path)).toSeq)
 
   private def dropFiles(spark: SparkSession, files: Seq[String]): Unit = {
     val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)

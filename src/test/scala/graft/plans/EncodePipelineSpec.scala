@@ -428,10 +428,18 @@ class EncodePipelineSpec extends SparkTestBase {
     val zz = "zz".getBytes("UTF-8")
     assert(EncodePipeline.survivingPartsStr(spark, out, "lang", zz, zz).isEmpty)
     assert(EncodePipeline.readDataPruned(spark, out, "lang", "zz").count() === 0L)
-    // the wave-0 parts list their files, which hold their blocks
+    // the wave-0 parts list their files, which hold their blocks, spelled
+    // exactly as the writer spelled the wave-1 parts' files
     val files = EncodePipeline.manifestView(spark, out, None).files
     assert(wave0Parts.subsetOf(files.map(_._1).toSet))
     assert(files.forall { case (p, f) => f.contains(s"/data/__part=$p/") })
+    val (listed, written) = files.partition(f => wave0Parts(f._1))
+    def root(f: String) = f.substring(0, f.indexOf("/data/__part="))
+    assert(written.nonEmpty && (listed ++ written).map(f => root(f._2)).toSet ===
+      Set(root(written.head._2)))
+    // the spelling input_file_name() gives a file Spark reads
+    Seq(listed.head._2, written.head._2).foreach(f => assert(EncodePipeline
+      .dataFiles(spark, out, Seq(f)).select(input_file_name()).head().getString(0) === f))
     // time travel below the upgrade lands on the part-level view
     refused("time travel")(EncodePipeline.decodeSharedAt(spark, out, docs.schema, 0).collect())
   }

@@ -625,4 +625,33 @@ class GraftDataSourceSpec extends SparkTestBase {
     val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
     assert(chain.exists(t => String.valueOf(t.getMessage).contains("garbage")), e)
   }
+
+  test("a data page that fails its checksum fails the read with an error naming the file") {
+    val out = tmpDir()
+    EncodePipeline.run(docs(400), "url", out, partitions = 2, blockSize = 64)
+    val path = new org.apache.hadoop.fs.Path(EncodePipeline.currentFiles(spark, out).head._2)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the last byte of the e_text chunk lies in its last data page's payload
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    val chunk = try {
+      import scala.jdk.CollectionConverters._
+      reader.getFooter.getBlocks.asScala.head.getColumns.asScala
+        .find(_.getPath.toDotString == "e_text").get
+    } finally reader.close()
+    val at = (chunk.getStartingPos + chunk.getTotalSize - 1).toInt
+    val fs = path.getFileSystem(conf)
+    val bytes = {
+      val in = fs.open(path)
+      try in.readAllBytes() finally in.close()
+    }
+    bytes(at) = (bytes(at) ^ 0x5a).toByte
+    // written through the file system, so only the page checksum disagrees
+    val o = fs.create(path, true)
+    try o.write(bytes) finally o.close()
+    val e = intercept[Exception](spark.read.format("graft").load(out).select("text").collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains(path.getName)), msgs)
+  }
 }

@@ -72,7 +72,8 @@ class GraftStreamingSinkSpec extends SparkTestBase {
     val dup = new java.io.File(s"$out/data/${parts.head}/delta-replay-dup.parquet")
     java.nio.file.Files.write(dup.toPath, Array[Byte](1, 2, 3))
     new GraftStreamingWrite(out, batch1.schema, info)
-      .commit(1L, Array(GraftDeltaMessage(Seq(dup.getAbsolutePath), Nil)))
+      .commit(1L, Array(GraftDeltaMessage(
+        Seq(graft.plans.Manifest.FileStats(dup.getAbsolutePath, 0, Nil)), Nil)))
     assert(!dup.exists(), "replayed epoch must delete its duplicate files")
     assert(spark.read.format("graft").load(out).count() === 500L)
 

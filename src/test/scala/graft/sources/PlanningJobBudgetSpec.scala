@@ -96,4 +96,22 @@ class PlanningJobBudgetSpec extends SparkTestBase {
     assert(zeroJobs("vacuum with delete vectors")(EncodePipeline.vacuum(spark, out)) === 0)
     assert(EncodePipeline.decodeShared(spark, out, docs.schema).count() === 1999L)
   }
+
+  test("appendCommit of 200 rows runs at most 4 Spark jobs: its statistics need none") {
+    val docs = WebDocGen.dataset(spark, 2000, 4).toDF()
+    val out = tmpDir()
+    EncodePipeline.run(docs, "url", out, partitions = 4, blockSize = 128, bloomCols = Seq("url"))
+    def batch(from: Long) = {
+      import spark.implicits._
+      spark.range(from, from + 200).map(i => WebDocGen.make(i)).toDF()
+    }
+    // a first append, then a manifest read, warm the metadata caches
+    assert(EncodePipeline.appendCommit(batch(10000), "url", out, partitions = 4,
+      blockSize = 128, batchId = 1L))
+    assert(EncodePipeline.currentGen(spark, out) === 1)
+    val (added, jobs) = Jobs.counted(spark)(EncodePipeline.appendCommit(batch(20000), "url", out,
+      partitions = 4, blockSize = 128, batchId = 2L))
+    assert(added && jobs <= 4, s"appendCommit started $jobs Spark jobs")
+    assert(spark.read.format("graft").load(out).count() === 2400L)
+  }
 }
