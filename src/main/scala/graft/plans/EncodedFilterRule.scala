@@ -280,9 +280,10 @@ object EncodedFilterRule extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions=graft.plans.GraftExtensions` installs the engine's
-  * optimizer rules and SQL function surface into a session — every codec /
-  * blob expression becomes callable from `spark.sql(...)` and `expr(...)`,
-  * so the pushdown rules fire on SQL-authored predicates too. */
+  * optimizer rules, its empty-scan planner strategy and SQL function
+  * surface into a session — every codec / blob expression becomes callable
+  * from `spark.sql(...)` and `expr(...)`, so the pushdown rules fire on
+  * SQL-authored predicates too. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import graft.functions._
@@ -323,6 +324,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // runs in the same fixed-point batch, AFTER EncodedFilterRule has turned
     // decoded-domain predicates into blob kernels it can recognize
     ext.injectOptimizerRule(session => new ManifestPruneRule(session))
+    ext.injectPlannerStrategy(_ => graft.sources.GraftEmptyScanStrategy)
     fns.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name), builder))
     }

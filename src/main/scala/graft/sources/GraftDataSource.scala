@@ -17,10 +17,14 @@ import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate._
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
@@ -347,8 +351,9 @@ class GraftChangesTable(outDir: String, fullSchema: StructType,
         override def readSchema(): StructType = fullSchema
         override def toBatch: Batch = this
         override def planInputPartitions(): Array[InputPartition] = GraftChanges.partitionsOf(w)
-        override def createReaderFactory(): PartitionReaderFactory =
-          GraftChanges.readerFactory(spark, outDir, fullSchema)
+        // one factory for every copy of the scan's exec node, as GraftScan
+        private lazy val factory = GraftChanges.readerFactory(spark, outDir, fullSchema)
+        override def createReaderFactory(): PartitionReaderFactory = factory
         override def description(): String = s"GraftChangesScan $outDir ($fromGen, $toGen]"
       }
       case Left(_) => new V1Scan {
@@ -1165,8 +1170,14 @@ class GraftScanBuilder(spark: SparkSession, outDir: String, tableSchema: StructT
   override def build(): Scan = aggRow match {
     case Some((schema, row)) => new GraftAggScan(outDir, schema, row)
     case None =>
-      new GraftScan(spark, outDir, tableSchema, required, gen, survivors, pushed, limit,
-        ignoreChanges, allFilters, maxFilesPerTrigger, branch)
+      val scan = new GraftScan(spark, outDir, tableSchema, required, gen, survivors, pushed,
+        limit, ignoreChanges, allFilters, maxFilesPerTrigger, branch)
+      // filters that leave no data file to read make the scan a constant:
+      // an empty local relation, which Spark answers without a job. A read
+      // with no filter (every streaming read) stays a file scan.
+      if (allFilters.nonEmpty && scan.planInputPartitions().isEmpty)
+        new GraftEmptyScan(required, scan.description())
+      else scan
   }
 }
 
@@ -1199,6 +1210,28 @@ class GraftAggScan(outDir: String, aggSchema: StructType, row: InternalRow)
   override def readSchema(): StructType = aggSchema
   override def description(): String =
     s"GraftAggScan $outDir PushedAggregation: [${aggSchema.fieldNames.mkString(", ")}] (manifest-only)"
+}
+
+/** a read whose pushed filters leave no data file: zero rows, described as
+  * the file scan it replaces */
+class GraftEmptyScan(schema: StructType, scanDescription: String) extends LocalScan {
+  override def rows(): Array[InternalRow] = Array.empty
+  override def readSchema(): StructType = schema
+  override def description(): String = scanDescription
+}
+
+/** plans a [[GraftEmptyScan]], with the projection and filters above it, as
+  * one empty local table: Spark collects that on the driver, so an absent
+  * key's lookup runs no job (Spark's own plan of a `LocalScan` puts the
+  * filter above it and runs a job with no task). Installed by
+  * [[graft.plans.GraftExtensions]]. */
+object GraftEmptyScanStrategy extends SparkStrategy {
+  override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case PhysicalOperation(project, _, r: DataSourceV2ScanRelation)
+        if r.scan.isInstanceOf[GraftEmptyScan] =>
+      LocalTableScanExec(project.map(_.toAttribute), Nil, None) :: Nil
+    case _ => Nil
+  }
 }
 
 /** one input partition per data file; blocks are self-contained. The
@@ -1353,7 +1386,10 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
     plannedParts.filter(p => rs.forall(_.contains(p.part))).toArray[InputPartition]
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
+  /** built once: Spark asks each copy of the scan's exec node for it (in
+    * physical planning, adaptive re-planning and query-stage creation), and
+    * every copy shares this one factory and its dictionaries' broadcast */
+  private lazy val readerFactory: PartitionReaderFactory = {
     // absent dicts/ reads as no dictionaries; an unreadable one fails the read
     val dicts = EncodePipeline.loadDicts(spark, outDir)
     val dictsBc = if (dicts.isEmpty) None
@@ -1364,6 +1400,7 @@ class GraftScan(spark: SparkSession, outDir: String, tableSchema: StructType,
       rangeProbes = GraftPruning.rangeProbesOf(kinds, allFilters),
       nullProbes = GraftPruning.nullProbesOf(kinds, allFilters))
   }
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** exact stats from the manifest: decoded size for join sizing, row count
     * minus live delete-vector positions */
@@ -1590,11 +1627,15 @@ private[graft] object ReaderDiag {
   * These are the records `ParquetReader` over `GroupReadSupport` yields,
   * without that reader's second footer read. Every page read is checked
   * against the CRC its writer stored, and a page that fails the check, or
-  * fails to decode, throws an error naming this file. */
+  * fails to decode, throws an error naming this file. Row groups are read
+  * on the calling thread, not with Hadoop's vectored reads (parquet's
+  * default), which the local file system serves on other threads: Spark
+  * reports a task's input bytes from its own thread's file-system counter. */
 private[sources] final class GroupFile(path: Path, conf: Configuration)
     extends java.io.Closeable {
   private val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
-    HadoopReadOptions.builder(conf, path).usePageChecksumVerification(true).build())
+    HadoopReadOptions.builder(conf, path).usePageChecksumVerification(true)
+      .withUseHadoopVectoredIo(false).build())
   val schema: MessageType = reader.getFooter.getFileMetaData.getSchema
   private var io: MessageColumnIO = _
   private var converter: GroupRecordConverter = _

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graftshim
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -55,10 +58,30 @@ object Bridge {
     def value: org.apache.hadoop.conf.Configuration = bc.value.value
   }
 
-  def hadoopConfBroadcast(spark: SparkSession): HadoopConfBroadcast =
-    new HadoopConfBroadcast(spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration)))
+  /** the broadcast of a copy of `sc`'s Hadoop configuration, and the
+    * entries it was copied from */
+  private final case class ConfShipped(sc: java.lang.ref.WeakReference[SparkContext],
+                                       entries: Map[String, String], bc: HadoopConfBroadcast)
+  private var confShipped: Option[ConfShipped] = None
+
+  /** the session's Hadoop configuration as a broadcast: one per
+    * SparkContext, broadcast again only when the entries of
+    * `hadoopConfiguration` differ from those the current broadcast was
+    * copied from (an exact compare, far cheaper than shipping the conf).
+    * The value is a copy, so executors see the conf as it was when copied. */
+  def hadoopConfBroadcast(spark: SparkSession): HadoopConfBroadcast = synchronized {
+    val sc = spark.sparkContext
+    val live = sc.hadoopConfiguration
+    val entries = live.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    confShipped match {
+      case Some(s) if (s.sc.get eq sc) && s.entries == entries => s.bc
+      case _ =>
+        val bc = new HadoopConfBroadcast(sc.broadcast(
+          new org.apache.spark.util.SerializableConfiguration(new Configuration(live))))
+        confShipped = Some(ConfShipped(new java.lang.ref.WeakReference(sc), entries, bc))
+        bc
+    }
+  }
 
   /** root path of a file-source scan node (LogicalRelation over
     * HadoopFsRelation — both private[sql] in Spark 4), or None. Lets

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Jobs, SparkTestBase}
 import graft.plans.EncodePipeline
 import graft.sources.WebDocGen
 
@@ -653,5 +653,25 @@ class GraftDataSourceSpec extends SparkTestBase {
     val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(t => String.valueOf(t.getMessage)).toSeq
     assert(msgs.exists(_.contains(path.getName)), msgs)
+  }
+
+  test("task input metrics count the column chunks a scan reads") {
+    val out = tmpDir()
+    EncodePipeline.run(docs(2000), "url", out, partitions = 2, blockSize = 128)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // the e_text chunks of every data file: what a read of `text` fetches
+    val chunks = EncodePipeline.currentFiles(spark, out).map { case (_, f) =>
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f), conf))
+      try {
+        import scala.jdk.CollectionConverters._
+        reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .filter(_.getPath.toDotString == "e_text").map(_.getTotalSize).sum
+      } finally reader.close()
+    }.sum
+    val (rows, read) = Jobs.inputBytes(spark)(
+      spark.read.format("graft").load(out).select("text").collect())
+    assert(rows.length === 2000)
+    assert(read >= chunks, s"tasks reported $read bytes read; the text chunks hold $chunks")
   }
 }
